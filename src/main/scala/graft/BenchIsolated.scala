@@ -7,15 +7,14 @@ package graft
   * the subprocess the job still runs twice — warmup, then measured. */
 object BenchIsolated {
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar"
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+  /** The parent JVM's own `--add-opens` flags (the launcher reports both
+    * spellings as `--add-opens=…`): the child needs the same module
+    * openings for Spark, and `build.sbt` stays their one definition. */
+  private def addOpens: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.toSeq.filter(_.startsWith("--add-opens"))
+  }
 
   /** Run one warmup+measured replay in a fresh JVM; returns measured
     * seconds (parsed from the child's GRAFT_SECONDS line).
@@ -72,9 +71,8 @@ object ScalingRunner {
         import spark.implicits._
         val t0 = System.nanoTime()
         val blobs = spark.read.parquet(path).select(col("blob")).as[String]
-        val parsed = graft.codec.ConcatJson.parse(
-          graft.codec.ConcatJson.explodeDocs(blobs), spark)
-        val (clean, _) = graft.validate.Validate.route(parsed)
+        val (clean, _) = graft.validate.Validate.route(
+          CdcPipeline.resolveVariants(CdcPipeline.decode(blobs)))
         clean.count()
         (System.nanoTime() - t0) / 1e9
       case _ => Bench.replay(spark, path, n, b)

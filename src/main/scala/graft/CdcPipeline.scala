@@ -30,6 +30,26 @@ object CdcPipeline {
   private[graft] def sourceOk(c: org.apache.spark.sql.Column) =
     (c === "app.change.log") || (lower(c) === "app.change.log")
 
+  /** The wire prefix of every blob batch: fused typed decode
+    * ([[ConcatJson.decodeTyped]]) with unparsable candidates' raw text in
+    * `_corrupt` (what [[Validate]]'s `corrupt_json` rule reads). Columns
+    * keep the raw wire shape: v1 events carry `commit_lang`, and
+    * `commit`/`lang` stay NULL until [[resolveVariants]]. */
+  def decode(blobs: Dataset[String]): DataFrame =
+    ConcatJson.decodeTyped(blobs).toDF()
+      .withColumn("_corrupt", when(col("corrupt"), col("raw")))
+
+  /** Schema-variant resolution (P5): a v2 explicit `commit`/`lang` wins,
+    * the v1 composite `commit_lang = "<commit>#<lang>"` is the fallback
+    * (`data_profiling.py:73-86`). Input: the [[decode]] shape. */
+  def resolveVariants(df: DataFrame): DataFrame = df
+    .withColumn("commit", coalesce(col("commit"),
+      when(col("commit_lang").contains("#"),
+        substring_index(col("commit_lang"), "#", 1))))
+    .withColumn("lang", coalesce(col("lang"),
+      when(col("commit_lang").contains("#"),
+        element_at(split(col("commit_lang"), "#"), -1))))
+
   /** Process one batch of raw concatenated-JSON blobs into the lake.
     * `promote` names payload fields to lift into lake columns (schema
     * evolution); `registry` switches validation from the global rule set
@@ -45,17 +65,7 @@ object CdcPipeline {
     // size `spark.sql.files.maxPartitionBytes` so the scan yields at
     // least one split per core (a shuffle here would double-handle the
     // raw bytes; tuning the scan split size is free).
-    val raw = ConcatJson.decodeTyped(blobs).toDF()
-      .withColumn("_corrupt", when(col("corrupt"), col("raw")))
-    // schema-variant resolution (P5): v2 explicit wins, v1 composite
-    // "<commit>#<lang>" is the fallback (`data_profiling.py:73-86`)
-    def resolve(df: DataFrame): DataFrame = df
-      .withColumn("commit", coalesce(col("commit"),
-        when(col("commit_lang").contains("#"),
-          substring_index(col("commit_lang"), "#", 1))))
-      .withColumn("lang", coalesce(col("lang"),
-        when(col("commit_lang").contains("#"),
-          element_at(split(col("commit_lang"), "#"), -1))))
+    val raw = decode(blobs)
     // registry dispatch validates the RAW wire shape (variants reason
     // about commit_lang vs commit/lang); the global rule set validates
     // post-resolution, where `commit` is already coalesced. The global
@@ -64,9 +74,9 @@ object CdcPipeline {
     val (clean, dirty, obsOpt) = registry match {
       case Some(reg) =>
         val (c, d) = Validate.routeByClass(raw, reg)
-        (resolve(c), d, None)
+        (resolveVariants(c), d, None)
       case None =>
-        val (c, d, obs) = Validate.routeObserved(resolve(raw),
+        val (c, d, obs) = Validate.routeObserved(resolveVariants(raw),
           name = s"validation-$batchId-${java.util.UUID.randomUUID()}")
         (c, d, Some(obs))
     }

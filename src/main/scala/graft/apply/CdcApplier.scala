@@ -102,21 +102,13 @@ object CdcApplier {
   *   Both modes commit the SAME logical table state — the oracle-gated
   *   engine queries are indistinguishable across modes. */
 class CdcApplier(lake: LakeTable, spark: SparkSession,
-    clusterWrite: Boolean = true, clusterPartitions: Int = 0,
-    mergeOnRead: Boolean = false) {
+    clusterPartitions: Int = 0, mergeOnRead: Boolean = false) {
 
   import spark.implicits._
 
   /** Columns that never become lake data. */
   private val metaCols = Set("op", "part", "event_id", "schema_ver", "source")
   private val keyCols = CdcApplier.keyCols
-
-  /** See [[CdcApplier.lwwReduce]]. */
-  def lwwReduce(events: DataFrame): DataFrame = CdcApplier.lwwReduce(events)
-
-  /** See [[CdcApplier.saltedLwwReduce]]. */
-  def saltedLwwReduce(events: DataFrame, salts: Int): DataFrame =
-    CdcApplier.saltedLwwReduce(events, salts)
 
   /** Apply one micro-batch of canonical change events. Expected columns:
     * repo, path, seq, op, part, commit, lang, content [+ promoted extras].
@@ -254,14 +246,12 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
     * anyway, so the file keeps tight key stats — while skipping the
     * RangePartitioner's SAMPLING pass, which executes the whole merge
     * subtree one extra time per micro-batch. Threshold
-    * `spark.graft.smallWriteRows` (default 262144 — a single write task
-    * sorting ≲100 MB); production bulk batches exceed it and keep the
-    * parallel range path. */
+    * [[LakeTable.SmallWriteRows]]; production bulk batches exceed it and
+    * keep the parallel range path. */
   private def clusterForWrite(df: DataFrame, estRows: Long = Long.MaxValue): DataFrame =
-    if (!clusterWrite) df
-    else if (clusterPartitions > 0) // explicit file-count pin always wins
+    if (clusterPartitions > 0) // explicit file-count pin always wins
       df.repartitionByRange(clusterPartitions, col("repo"), col("path"))
-    else if (estRows <= spark.conf.get("spark.graft.smallWriteRows", "262144").toLong)
+    else if (estRows <= LakeTable.SmallWriteRows)
       df.coalesce(1)
     else df.repartitionByRange(col("repo"), col("path"))
 

@@ -82,12 +82,11 @@ class LakeTable(val root: String, spark: SparkSession,
     * `getFileStatus` RPC: at 10^5 files on object storage that is 10^5
     * HEAD requests per query plan, exactly the per-file metadata cost a
     * manifest exists to remove (Iceberg stores `file_size_in_bytes` for
-    * the same reason). `0` marks a pre-r5 entry (callers fall back to
-    * the filesystem for those). */
+    * the same reason). */
   case class FileEntry(path: String, rows: Long, minRepo: String, maxRepo: String,
       minKey: String, maxKey: String,
       minSeq: Long = Long.MinValue, maxSeq: Long = Long.MaxValue,
-      kind: String = "data", bytes: Long = 0L)
+      kind: String = "data", bytes: Long)
 
   /** `renames` is the cumulative column-rename mapping: STORED (old)
     * name → CURRENT name, chain-collapsed (after a→b then b→c it holds
@@ -98,9 +97,8 @@ class LakeTable(val root: String, spark: SparkSession,
     * at manifest granularity. */
   /** Reference to one immutable manifest chunk file plus aggregate stats
     * over its entries, recorded in the MANIFEST — so a reader can decide
-    * whether a chunk is relevant without opening it. `kind` is `"data"`,
-    * `"delete"`, or `"mixed"` (chunks adopted from a pre-segregation
-    * layout). */
+    * whether a chunk is relevant without opening it. `kind` is `"data"`
+    * or `"delete"` ([[writeManifest]] never mixes kinds in one chunk). */
   case class ChunkRef(name: String, n: Int, kind: String,
       minRepo: String, maxRepo: String, minSeq: Long, maxSeq: Long)
 
@@ -112,8 +110,7 @@ class LakeTable(val root: String, spark: SparkSession,
     * micro-batches against a 10^5-file table. `files` materializes
     * lazily, so paths that need only commit metadata (fence checks,
     * lineage) or only a range slice ([[lookupKeys]]) never parse the
-    * whole list. `inlineFiles` carries a pre-chunking manifest's inline
-    * list (still readable; its next commit chunks it once). */
+    * whole list. */
   /** `saved` is the STICKY batch-fence map: unlike `applied` (trimmed to
     * the newest [[appliedWindow]] entries, backstopped by the offsets
     * watermark), entries here are never trimmed — the fence for
@@ -126,18 +123,14 @@ class LakeTable(val root: String, spark: SparkSession,
       lineage: Map[String, Long], batchId: String = "",
       renames: Map[String, String] = Map.empty,
       chunkRefs: Seq[ChunkRef] = Nil,
-      inlineFiles: Option[Seq[FileEntry]] = None,
       saved: Map[String, String] = Map.empty) {
-    lazy val files: Seq[FileEntry] =
-      inlineFiles.getOrElse(chunkRefs.flatMap(c => readChunk(c.name)))
+    lazy val files: Seq[FileEntry] = chunkRefs.flatMap(c => readChunk(c.name))
     def dataFiles: Seq[FileEntry] = files.filter(_.kind == "data")
-    /** Delete entries only — reads delete/mixed chunks, never pure-data
-      * ones (delete chunks are few after [[consolidateDeletes]]), so
-      * read-side delete resolution costs O(delete metadata). */
+    /** Delete entries only — reads delete chunks, never data ones (delete
+      * chunks are few after [[consolidateDeletes]]), so read-side delete
+      * resolution costs O(delete metadata). */
     lazy val deleteFiles: Seq[FileEntry] =
-      inlineFiles.map(_.filter(_.kind == "delete")).getOrElse(
-        chunkRefs.filterNot(_.kind == "data")
-          .flatMap(c => readChunk(c.name)).filter(_.kind == "delete"))
+      chunkRefs.filter(_.kind == "delete").flatMap(c => readChunk(c.name))
   }
 
   private val mapper = new ObjectMapper()
@@ -203,15 +196,7 @@ class LakeTable(val root: String, spark: SparkSession,
       olds.map(o => org.apache.spark.sql.types.StructField(o, t, nullable = true))
     }
     val scanSchema = StructType(schema.fields ++ extras)
-    // manifest-backed scan when every entry carries recorded bytes: the
-    // plan is built with ZERO filesystem metadata calls and file-level
-    // predicate pruning from manifest stats (GraftScans); pre-r5 entries
-    // (bytes unknown) fall back to the listing-based reader
-    val df =
-      if (files.nonEmpty && files.forall(_.bytes > 0L))
-        graft.sources.GraftScans.scanEntries(spark, root, files, scanSchema)
-      else spark.read.schema(scanSchema)
-        .parquet(files.map(f => Paths.get(root, f.path).toString): _*)
+    val df = readEntries(files, scanSchema)
     if (extras.isEmpty) df
     else df.select(schema.fields.toSeq.map { f =>
       inv.get(f.name) match {
@@ -221,16 +206,13 @@ class LakeTable(val root: String, spark: SparkSession,
     }: _*)
   }
 
-  /** Scan an explicit manifest-entry subset under `schema` — the
-    * manifest-backed zero-listing path when every entry records bytes
-    * ([[graft.sources.GraftScans]]), the plain reader otherwise. Used by
-    * every engine path that reads a pruned file subset (delete files,
-    * merge-on-read key columns). */
+  /** Scan an explicit manifest-entry subset under `schema` through the
+    * manifest-backed index ([[graft.sources.GraftScans]]): the plan is
+    * built with ZERO filesystem metadata calls and file-level predicate
+    * pruning from manifest stats. Used by every engine path that reads a
+    * pruned file subset (delete files, merge-on-read key columns). */
   private[graft] def readEntries(files: Seq[FileEntry], schema: StructType): DataFrame =
-    if (files.nonEmpty && files.forall(_.bytes > 0L))
-      graft.sources.GraftScans.scanEntries(spark, root, files, schema)
-    else spark.read.schema(schema)
-      .parquet(files.map(f => Paths.get(root, f.path).toString): _*)
+    graft.sources.GraftScans.scanEntries(spark, root, files, schema)
 
   /** Apply a snapshot's merge-on-read delete files to a data scan: a row
     * survives iff NO delete entry for its key carries a strictly newer
@@ -269,13 +251,6 @@ class LakeTable(val root: String, spark: SparkSession,
         .drop("_dmax")
     }
   }
-
-  /** Data files whose [minKey,maxKey] range may contain any of the given
-    * repos — manifest-level pruning, the Iceberg trick that makes
-    * copy-on-write MERGE touch only affected files. Metadata-scale
-    * (file list), evaluated without reading data. */
-  def pruneFiles(snap: Snapshot, changedRepos: Set[String]): (Seq[FileEntry], Seq[FileEntry]) =
-    snap.files.partition(f => changedRepos.exists(r => r >= f.minRepo && r <= f.maxRepo))
 
   /** Distributed file pruning for the apply path: which files' [minRepo,
     * maxRepo] key ranges may contain any repo present in the (distributed,
@@ -574,10 +549,9 @@ class LakeTable(val root: String, spark: SparkSession,
     val major = snap.deleteFiles.nonEmpty
     // byte-targeted selection uses the manifest-recorded file sizes —
     // the operationally honest threshold (a 10^6-row file of tiny rows
-    // can still be a small file); entries without recorded bytes
-    // (pre-r5) fall back to the row criterion alone
+    // can still be a small file)
     def undersized(f: FileEntry): Boolean = f.rows < minRows ||
-      (minBytes > 0 && f.bytes > 0 && f.bytes < minBytes)
+      (minBytes > 0 && f.bytes < minBytes)
     // MAJOR compaction (any merge-on-read delete files present) is
     // TARGETED, not whole-table: rewrite (deletes-resolved) exactly the
     // data files whose [minRepo, maxRepo] overlaps some delete file's
@@ -620,8 +594,7 @@ class LakeTable(val root: String, spark: SparkSession,
     val sized =
       if (shufflePartitions > 0) // explicit file-count pin always wins
         df.repartitionByRange(shufflePartitions, col("repo"), col("path"))
-      else if (singleFile || small.map(_.rows).sum <=
-          spark.conf.get("spark.graft.smallWriteRows", "262144").toLong)
+      else if (singleFile || small.map(_.rows).sum <= LakeTable.SmallWriteRows)
         df.coalesce(1)
       else df.repartitionByRange(col("repo"), col("path"))
     val added = writeDataFiles(sized, s"compact-v${snap.version + 1}")
@@ -667,8 +640,7 @@ class LakeTable(val root: String, spark: SparkSession,
       // the RangePartitioner sampling pass via coalesce(1) (sorted +
       // trivially range-disjoint, like the applier's small-batch path)
       val sized =
-        if (dels.map(_.rows).sum <=
-            spark.conf.get("spark.graft.smallWriteRows", "262144").toLong)
+        if (dels.map(_.rows).sum <= LakeTable.SmallWriteRows)
           merged.coalesce(1)
         else merged.repartitionByRange(col("repo"), col("path"))
       // blooms off: like MoR micro-batch output, delete files are always
@@ -713,7 +685,7 @@ class LakeTable(val root: String, spark: SparkSession,
     }
     currentSnapshot.foreach { snap =>
       if (snap.deleteFiles.isEmpty && smallFileBytes > 0 &&
-        snap.dataFiles.count(f => f.bytes > 0 && f.bytes < smallFileBytes) >= maxSmallFiles)
+        snap.dataFiles.count(_.bytes < smallFileBytes) >= maxSmallFiles)
         out ++= compact(minRows = 1L, minBytes = smallFileBytes)
     }
     out.result()
@@ -726,14 +698,9 @@ class LakeTable(val root: String, spark: SparkSession,
     * so the scan cost tracks the churn since `afterSeq`, not table size —
     * the seq stats play the role of Iceberg's hidden time partitioning.
     * Returns (feed, filesScanned, filesTotal). */
-  /** Data-file count without materializing pure-data chunks. */
+  /** Data-file count from the chunk refs alone (no chunk is parsed). */
   private def dataFileCount(s: Snapshot): Int =
-    if (s.chunkRefs.isEmpty) s.dataFiles.size
-    else s.chunkRefs.iterator.map {
-      case c if c.kind == "data" => c.n
-      case c if c.kind == "delete" => 0
-      case c => readChunk(c.name).count(_.kind == "data")
-    }.sum
+    s.chunkRefs.iterator.filter(_.kind == "data").map(_.n).sum
 
   def readSince(afterSeq: Long, version: Option[Long] = None)
       : (DataFrame, Int, Int) = {
@@ -743,12 +710,10 @@ class LakeTable(val root: String, spark: SparkSession,
         // chunk-level seq prune first: an incremental consumer never
         // parses chunk files whose aggregate maxSeq sits at or below its
         // watermark (steady state: only the chunks of recent commits)
-        val live: Seq[FileEntry] =
-          if (s.chunkRefs.isEmpty) s.dataFiles.filter(_.maxSeq > afterSeq)
-          else s.chunkRefs.filterNot(_.kind == "delete")
-            .filter(_.maxSeq > afterSeq)
-            .flatMap(c => readChunk(c.name))
-            .filter(f => f.kind == "data" && f.maxSeq > afterSeq)
+        val live: Seq[FileEntry] = s.chunkRefs
+          .filter(c => c.kind == "data" && c.maxSeq > afterSeq)
+          .flatMap(c => readChunk(c.name))
+          .filter(_.maxSeq > afterSeq)
         val df =
           if (live.isEmpty)
             spark.createDataFrame(
@@ -900,44 +865,43 @@ class LakeTable(val root: String, spark: SparkSession,
     *     bound when a repo may contain the separator or anything below it
     *     (minRepo="a", minPath="q" gives minKey="a q", which incorrectly
     *     prunes the real key ("a b", "x")). Small key sets prune with a
-    *     direct keys × files scan; past `bulkThreshold` the manifest's
+    *     direct keys × files scan; past [[LakeTable.LookupBulkThreshold]]
+    *     keys the manifest's
     *     [[RepoIntervalIndex]] (sorted minRepo + prefix-max walk) prunes
     *     in O(keys·log files) instead.
     *  2. FILTER: small key sets become an OR-chain of key-equality
     *     predicates pushed down to parquet, where the write-time bloom
     *     filters + column min/max skip non-matching row groups inside
-    *     each scanned file. Past `bulkThreshold` an OR-chain would be a
+    *     each scanned file. Past the threshold an OR-chain would be a
     *     10^4-term predicate (codegen degrades, pushdown gives up), so
     *     bulk sets become a BROADCAST LEFT-SEMI join against the key set
     *     instead — same result, hash-probe per row, no giant predicate.
     * Returns (rows, filesScanned, filesTotal). */
-  def lookupKeys(keys: Seq[(String, String)], version: Option[Long] = None,
-      bulkThreshold: Int = 64): (DataFrame, Int, Int) = {
+  def lookupKeys(keys: Seq[(String, String)], version: Option[Long] = None)
+      : (DataFrame, Int, Int) = {
     val snapOpt = version.map(snapshot).orElse(currentSnapshot)
     snapOpt match {
       case Some(s) =>
-        val bulk = keys.size > bulkThreshold
+        val bulk = keys.size > LakeTable.LookupBulkThreshold
         val repos = keys.map(_._1).distinct
         // two-stage manifest prune: chunk stats (in the manifest itself)
         // decide which chunk FILES to parse at all, then per-file stats
         // decide which data files to scan — a cold point lookup reads
         // O(overlapping chunks) of metadata, not the whole file list
-        val dataF: Seq[FileEntry] =
-          if (s.chunkRefs.isEmpty) s.dataFiles
-          else {
-            val cand = s.chunkRefs.filterNot(_.kind == "delete")
-            val hitChunks =
-              if (keys.isEmpty) Nil
-              else if (!bulk)
-                cand.filter(c => repos.exists(r => r >= c.minRepo && r <= c.maxRepo))
-              else {
-                val ix = RepoIntervalIndex(cand.map(c => (c.minRepo, c.maxRepo)))
-                val hit = new java.util.BitSet(ix.size)
-                repos.foreach(r => ix.collectTouched(r, hit))
-                cand.zipWithIndex.collect { case (c, i) if hit.get(i) => c }
-              }
-            hitChunks.flatMap(c => readChunk(c.name)).filter(_.kind == "data")
-          }
+        val dataF: Seq[FileEntry] = {
+          val cand = s.chunkRefs.filter(_.kind == "data")
+          val hitChunks =
+            if (keys.isEmpty) Nil
+            else if (!bulk)
+              cand.filter(c => repos.exists(r => r >= c.minRepo && r <= c.maxRepo))
+            else {
+              val ix = RepoIntervalIndex(cand.map(c => (c.minRepo, c.maxRepo)))
+              val hit = new java.util.BitSet(ix.size)
+              repos.foreach(r => ix.collectTouched(r, hit))
+              cand.zipWithIndex.collect { case (c, i) if hit.get(i) => c }
+            }
+          hitChunks.flatMap(c => readChunk(c.name))
+        }
         val totalData: Int = dataFileCount(s)
         val live =
           if (keys.isEmpty) Nil
@@ -1120,12 +1084,10 @@ class LakeTable(val root: String, spark: SparkSession,
       e.get("rows").asInstanceOf[Number].longValue(),
       e.get("minRepo").asInstanceOf[String], e.get("maxRepo").asInstanceOf[String],
       e.get("minKey").asInstanceOf[String], e.get("maxKey").asInstanceOf[String],
-      Option(e.get("minSeq")).map(_.asInstanceOf[Number].longValue())
-        .getOrElse(Long.MinValue),
-      Option(e.get("maxSeq")).map(_.asInstanceOf[Number].longValue())
-        .getOrElse(Long.MaxValue),
-      Option(e.get("kind")).map(_.asInstanceOf[String]).getOrElse("data"),
-      Option(e.get("bytes")).map(_.asInstanceOf[Number].longValue()).getOrElse(0L))
+      e.get("minSeq").asInstanceOf[Number].longValue(),
+      e.get("maxSeq").asInstanceOf[Number].longValue(),
+      e.get("kind").asInstanceOf[String],
+      e.get("bytes").asInstanceOf[Number].longValue())
 
   /** Write one immutable manifest chunk (fsynced; a chunk orphaned by a
     * lost commit race is invisible and swept by [[expireSnapshots]]). */
@@ -1146,15 +1108,12 @@ class LakeTable(val root: String, spark: SparkSession,
         classOf[JList[JMap[String, Object]]]).asScala.map(entryFromMap).toSeq
     })
 
-  private def chunkRefOf(name: String, es: Seq[FileEntry]): ChunkRef = {
-    val kind =
-      if (es.forall(_.kind == "data")) "data"
-      else if (es.forall(_.kind == "delete")) "delete"
-      else "mixed"
-    ChunkRef(name, es.size, kind,
+  /** Ref for a fresh chunk; [[writeManifest]] segregates entries by
+    * kind, so `es` is all data or all deletes. */
+  private def chunkRefOf(name: String, es: Seq[FileEntry]): ChunkRef =
+    ChunkRef(name, es.size, es.head.kind,
       es.map(_.minRepo).min, es.map(_.maxRepo).max,
       es.map(_.minSeq).min, es.map(_.maxSeq).max)
-  }
 
   /** Write manifest `version`. The file list is stored as CHUNK files:
     * every chunk of `prevChunks` whose entries all survive IDENTICALLY in
@@ -1202,6 +1161,7 @@ class LakeTable(val root: String, spark: SparkSession,
           chunkRefOf(name, es)
       }.toSeq
     val m = new JLinkedHashMap[String, Object]()
+    m.put("formatVersion", Integer.valueOf(LakeTable.FormatVersion))
     m.put("version", java.lang.Long.valueOf(version))
     m.put("batchId", batchId)
     m.put("schema", schema.json)
@@ -1260,39 +1220,31 @@ class LakeTable(val root: String, spark: SparkSession,
 
   private def readManifest(p: Path, version: Long): Snapshot = {
     val m = mapper.readValue(Files.readString(p), classOf[JMap[String, Object]])
+    // the marker is checked FIRST: a manifest of another layout would
+    // otherwise read as a table with no files, silently
+    val format = m.get("formatVersion")
+    if (format != Integer.valueOf(LakeTable.FormatVersion))
+      throw new LakeTable.ManifestFormatException(p, format)
     val schema = DataType.fromJson(m.get("schema").asInstanceOf[String]).asInstanceOf[StructType]
-    // chunked layout (current: stat-carrying objects; transitional:
-    // bare names, stats recovered by reading the chunk once) or inline
-    // "files" (pre-chunking manifests stay readable; their next commit
-    // re-chunks the list once)
-    val chunkRefs: Seq[ChunkRef] = Option(m.get("chunks"))
-      .map(_.asInstanceOf[JList[Object]].asScala.toSeq.map {
-        case n: String => chunkRefOf(n, readChunk(n))
-        case o =>
-          val e = o.asInstanceOf[JMap[String, Object]]
-          ChunkRef(e.get("name").asInstanceOf[String],
-            e.get("n").asInstanceOf[Number].intValue(),
-            e.get("kind").asInstanceOf[String],
-            e.get("minRepo").asInstanceOf[String],
-            e.get("maxRepo").asInstanceOf[String],
-            e.get("minSeq").asInstanceOf[Number].longValue(),
-            e.get("maxSeq").asInstanceOf[Number].longValue())
-      })
-      .getOrElse(Nil)
-    val inline: Option[Seq[FileEntry]] =
-      if (chunkRefs.nonEmpty || m.get("files") == null) None
-      else Some(m.get("files").asInstanceOf[JList[JMap[String, Object]]]
-        .asScala.map(entryFromMap).toSeq)
+    val chunkRefs: Seq[ChunkRef] = m.get("chunks").asInstanceOf[JList[JMap[String, Object]]]
+      .asScala.toSeq.map { e =>
+        ChunkRef(e.get("name").asInstanceOf[String],
+          e.get("n").asInstanceOf[Number].intValue(),
+          e.get("kind").asInstanceOf[String],
+          e.get("minRepo").asInstanceOf[String],
+          e.get("maxRepo").asInstanceOf[String],
+          e.get("minSeq").asInstanceOf[Number].longValue(),
+          e.get("maxSeq").asInstanceOf[Number].longValue())
+      }
     val offsets = m.get("offsets").asInstanceOf[JMap[String, Object]].asScala
       .map { case (k, v) => k -> v.asInstanceOf[Number].longValue() }.toMap
     // Jackson parses objects into LinkedHashMap: insertion order survives
     // the JSON round-trip, so the sliding-window trim stays FIFO
     val applied = scala.collection.immutable.ListMap.from(
       m.get("applied").asInstanceOf[JMap[String, String]].asScala)
-    val lineage = Option(m.get("lineage")).map(_.asInstanceOf[JMap[String, Object]].asScala
-      .map { case (k, v) => k -> v.asInstanceOf[Number].longValue() }.toMap)
-      .getOrElse(Map.empty[String, Long])
-    val batchId = Option(m.get("batchId")).map(_.asInstanceOf[String]).getOrElse("")
+    val lineage = m.get("lineage").asInstanceOf[JMap[String, Object]].asScala
+      .map { case (k, v) => k -> v.asInstanceOf[Number].longValue() }.toMap
+    val batchId = m.get("batchId").asInstanceOf[String]
     val renames = Option(m.get("renames"))
       .map(_.asInstanceOf[JMap[String, String]].asScala.toMap)
       .getOrElse(Map.empty[String, String])
@@ -1300,7 +1252,7 @@ class LakeTable(val root: String, spark: SparkSession,
       .map(_.asInstanceOf[JMap[String, String]].asScala.toMap)
       .getOrElse(Map.empty[String, String])
     Snapshot(version, schema, offsets, applied, lineage, batchId, renames,
-      chunkRefs, inline, saved)
+      chunkRefs, saved)
   }
 
   /** Lineage / metrics side-table (≙ the reference's PROFILER→ES roll-up,
@@ -1348,6 +1300,32 @@ object LakeTable {
     * optimistic loop (vs. `ConcurrentModificationException`, which marks
     * a REAL conflict after failed revalidation). */
   private[lake] class CommitRace(msg: String) extends RuntimeException(msg)
+
+  /** Layout version of the manifests [[LakeTable.writeManifest]] writes:
+    * chunked file lists, per-chunk kind segregation, recorded file bytes.
+    * A reader accepts exactly this value. */
+  val FormatVersion: Int = 1
+
+  /** A manifest whose `formatVersion` is missing or is not
+    * [[FormatVersion]]: written by another layout, which this reader
+    * would otherwise misread (e.g. as an empty table). */
+  class ManifestFormatException(val file: Path, val found: Any)
+      extends IllegalStateException(
+        s"manifest $file has formatVersion ${Option(found).getOrElse("<missing>")}, " +
+          s"expected $FormatVersion")
+
+  /** Row bound under which a rewrite (applier merge output, compaction,
+    * delete consolidation) takes `coalesce(1)` instead of a range
+    * repartition: one partition is trivially range-disjoint and the
+    * write sorts within partitions, while the RangePartitioner's sampling
+    * pass would execute the whole input subtree once more. ≈ one write
+    * task sorting ≲100 MB. */
+  val SmallWriteRows: Long = 262144L
+
+  /** Key count above which [[LakeTable.lookupKeys]] prunes through the
+    * interval index and filters with a broadcast semi-join instead of a
+    * keys × files scan and an OR-chain predicate. */
+  val LookupBulkThreshold: Int = 64
 
   /** Schema of merge-on-read equality-delete files: the superseded key
     * plus the WINNING (seq, commit) that superseded it. */

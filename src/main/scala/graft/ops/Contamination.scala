@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *  - each side is projected to (doc_id, md5(n-gram)) BEFORE the join, so
   *    the shuffle ships 32-hex-char digests, never the n-gram text — and
   *    the n-grams themselves are distinct per document at the source
-  *    ([[TextAnalysis.wordNgrams]]), so no pre-join dedup shuffle exists;
+  *    ([[TextKernels.wordNgramDigests]]), so no pre-join dedup shuffle exists;
   *  - the eval side is a small fraction of the corpus (benchmarks are
   *    KB–MB against a 100 TB corpus); size-based planning broadcasts its
   *    distinct gram set, making the probe a map-side hash lookup over the
@@ -37,8 +37,8 @@ object Contamination {
     val spark = docs.sparkSession
     import spark.implicits._
     // distinct n-grams are pre-hashed row-locally in the scan stage
-    // ([[TextKernels.wordNgramDigests]] — the interpreted wordNgrams HOF
-    // plus a per-gram md5 expression, fused into one monomorphic loop);
+    // ([[TextKernels.wordNgramDigests]] — one monomorphic loop instead of
+    // an interpreted word-n-gram HOF plus a per-gram md5 expression);
     // the per-doc total rides the exploded rows (constant per id, folded
     // back with max) so the training corpus is scanned exactly ONCE.
     // idCol must be integral (rides the kernel as long).

@@ -1,10 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines: exact,
-  * MinHash+LSH, SimHash, and n-gram Jaccard near-dup detection.
+  * MinHash+LSH with exact n-gram Jaccard verify, SimHash, and
+  * embedding-cosine near-dup detection, plus near-dup clustering.
   *
   * Scale notes (the 100 TB story):
   *  - exact dedup is one hash aggregate on a 64-hex digest — shuffle on
@@ -28,37 +29,6 @@ object Dedup {
     df.select(sha2(col(textCol), 256).as("content_sha"), col(idCol))
       .groupBy(col("content_sha"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_cnt"))
-
-  /** MinHash modulus: 2³¹−1 (Mersenne prime). Minhash value for hash h =
-    * min over shingles of (a·(2h+1) + b) mod M, where (a, b) are the two
-    * 32-bit lanes of the shingle's single md5 — ONE digest per shingle
-    * regardless of `numHashes` (the classic affine-rehash family),
-    * integer-exact and portable to the DuckDB oracle. */
-  private[ops] val MinhashM = 2147483647L
-
-  /** MinHash signature as one Column (convenience/compat). NOTE: inside
-    * higher-order-function lambdas Spark performs no common-subexpression
-    * elimination, so this form re-hashes every shingle per hash function
-    * (profiled: 16× md5 = ~28 s for 5k docs). [[minhashLsh]] instead
-    * explodes shingles to rows and aggregates — use that shape in any hot
-    * path. */
-  def minhashSignature(text: Column, k: Int = 5, numHashes: Int = 16): Column = {
-    val lanes = transform(transform(TextAnalysis.shingles(text, k), s => md5(s)),
-      hx => struct(
-        conv(substring(hx, 1, 8), 16, 10).cast("long").as("a"),
-        conv(substring(hx, 9, 8), 16, 10).cast("long").as("b")))
-    transform(sequence(lit(0), lit(numHashes - 1)), h =>
-      array_min(transform(lanes, p =>
-        pmod(p.getField("a") * (h * 2 + 1) + p.getField("b"), lit(MinhashM)))))
-  }
-
-  /** LSH banding: split the signature into `bands` equal bands, hash each
-    * to a bucket key. Docs sharing any (band, bucket) are candidates. */
-  def lshBuckets(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(b.as("band"),
-        md5(concat_ws("|", transform(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)),
-          x => x.cast("string")))).as("bucket")))
 
   /** Full MinHash+LSH near-dup candidate pairs with exact-Jaccard verify.
     * Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
@@ -161,41 +131,11 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** 64-bit SimHash over whitespace tokens, as a 16-hex-char string
-    * (4 bits per nibble). Per bit: majority vote of ±1 across the
-    * tokens' md5 bits; portable hex-nibble math (conv), identical in any
-    * engine. Pure column expressions — one projection, no UDF. */
-  def simhashHex(text: Column): Column = {
-    val toks = array_distinct(split(trim(text), "\\s+"))
-    // 16 nibbles; nibble j comes from hex char j of each token's md5:
-    // majority vote per bit of the nibble.
-    val nibbles = transform(sequence(lit(0), lit(15)), j => {
-      val votes = aggregate(toks,
-        array(lit(0), lit(0), lit(0), lit(0)),
-        (acc, t) => {
-          val nib = conv(md5(t).substr(j + 1, lit(1)), 16, 10).cast("int")
-          // bit (3-bi) of the nibble, without shiftright-by-Column:
-          transform(acc, (a, bi) =>
-            a + when(floor(nib / pow(lit(2.0), (lit(3) - bi).cast("double")))
-              .cast("int").mod(2) === 1, 1).otherwise(-1))
-        })
-      val packed = aggregate(votes, lit(0),
-        (acc, v) => acc * 2 + when(v > 0, 1).otherwise(0))
-      lower(conv(packed.cast("string"), 10, 16))
-    })
-    // NULL text → NULL signature (concat_ws would silently skip the null
-    // nibble array and emit "", diverging from any SQL oracle whose
-    // unnest of a NULL token list emits no row at all)
-    when(text.isNull, lit(null)).otherwise(concat_ws("", nibbles))
-  }
-
   /** SimHash signatures for a whole table — the hot-path shape (same
     * lesson as [[minhashLsh]]): explode distinct tokens to rows, ONE
     * codegen'd md5 per (doc, token), then a single hash aggregate of 64
     * bit-vote sums (16 nibbles × 4 bits, map-side combined) and a pure
-    * projection packs the hex signature. The Column form [[simhashHex]]
-    * re-hashes every token per nibble (16× md5) inside non-CSE'd array
-    * lambdas — keep it off hot paths. NULL texts yield no row (matches
+    * projection packs the hex signature. NULL texts yield no row (matches
     * a SQL oracle's unnest semantics). Returns (idCol, simhash). */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val spark = df.sparkSession
@@ -334,13 +274,5 @@ object Dedup {
     }
     require(converged, s"label propagation did not converge in $maxIters rounds")
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-  }
-
-  /** Direct n-gram Jaccard similarity between two text columns. */
-  def ngramJaccard(a: Column, b: Column, k: Int = 5): Column = {
-    val sa = TextAnalysis.shingles(a, k)
-    val sb = TextAnalysis.shingles(b, k)
-    size(array_intersect(sa, sb)).cast("double") /
-      size(array_union(sa, sb)).cast("double")
   }
 }

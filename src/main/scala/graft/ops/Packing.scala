@@ -89,7 +89,8 @@ object Packing {
     * Pure scan-stage projection + generate (one explode, no shuffle, no
     * UDF): at 100 TB this pipelines inside whole-stage codegen next to
     * the parquet scan. The token array is bound once per row through a
-    * lambda variable (the wordNgrams O(tokens²) re-evaluation pitfall). */
+    * lambda variable: a higher-order function re-evaluates non-lambda
+    * children per element, which would re-split per window. */
   def tokenWindows(df: DataFrame, idCol: String, textCol: String,
       win: Int, stride: Int): DataFrame = {
     require(win > 0, s"window must be positive: $win")

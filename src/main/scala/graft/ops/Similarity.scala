@@ -4,53 +4,22 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** Similarity search over an embedding column (`array<float>`).
+/** Similarity search over an embedding column (`array<float>`), ranked
+  * on the integer-quantized grid so every result is exact in any engine
+  * (DuckDB-oracle-gated):
   *
-  *  - [[bruteForceTopK]]: exact cosine top-k — broadcast the (small)
-  *    query set against the corpus; one scan, no shuffle of the corpus,
-  *    per-partition top-k before the final k-way merge.
-  *  - [[lshTopK]]: the scale path — random-hyperplane LSH buckets
-  *    (deterministic hyperplanes derived from md5, so results are
-  *    reproducible); candidates = same-bucket rows only, turning the
-  *    cross product into an equi-join. Recall < 1 by construction;
-  *    `probeBits = 1` probes every 1-bit-flip neighbor bucket too
-  *    (multi-probe LSH) to trade candidate cost for recall.
-  *  - [[quantizedDotTopK]]: integer-quantized dot-product ranking —
-  *    exact-arithmetic variant used for the DuckDB oracle gate.
+  *  - [[quantizedDotTopK]]: brute-force top-k by quantized dot product;
+  *  - [[lshTopKQuantized]]: random-hyperplane LSH buckets (deterministic
+  *    hyperplanes derived from md5, so results are reproducible);
+  *    candidates = same-bucket rows only, turning the cross product into
+  *    an equi-join. Recall < 1 by construction; `probeBits = 1` probes
+  *    every 1-bit-flip neighbor bucket too (multi-probe LSH);
+  *  - [[ivfTopKQuantized]]: IVF cells from a deterministic k-means on the
+  *    quantized grid; candidates = the query's nearest cells.
+  *
+  * Per-row vector math runs in [[VectorKernels]].
   */
 object Similarity {
-
-  /** Σ aᵢ·bᵢ in double (left-to-right, deterministic). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Exact top-k cosine neighbors for each query vector.
-    * `queries(qid, qvec)` is broadcast; corpus never shuffles until the
-    * per-query top-k reduction (k rows per query). */
-  def bruteForceTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int): DataFrame = {
-    val joined = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"))
-      .join(broadcast(queries.select(col("qid"), col("qvec"))),
-        col("neighbor_id") =!= col("qid"))
-      .withColumn("cos", cosine(col("vec"), col("qvec")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("neighbor_id"), col("rank"), col("cos"))
-  }
-
-  /** Quantize to integer grid: round(x*1000) as bigint per element. */
-  def quantize(v: Column): Column =
-    transform(v, x => round(x.cast("double") * 1000).cast("long"))
-
-  /** Integer dot product of two quantized vectors — exact in any engine. */
-  def qdot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
 
   /** Top-k by quantized dot product (oracle-parity variant): ranking on
     * exact integers, ties broken by neighbor id. */
@@ -97,57 +66,18 @@ object Similarity {
         col("qdot"))
   }
 
-  /** Deterministic hyperplane sign row: sign(p, i) = +1 iff the first
-    * hex nibble of md5("p/i") ≥ 8 — the exact values the DuckDB oracle
-    * derives with its md5 formula, but computed ONCE on the driver. The
-    * signs are data-independent; evaluating them as md5 Column calls
-    * cost plane × dim digests per ROW (q20's dominant cost, profiled).
-    * They ship to executors as one array literal per plane. */
-  private def planeSignRow(p: Int, dim: Int): Seq[Long] = {
+  /** Deterministic hyperplanes as a dense ±1 matrix: sign(p, i) = +1
+    * iff the first hex nibble of md5("p/i") ≥ 8 — the exact values the
+    * DuckDB oracle derives with its md5 formula, but computed ONCE on the
+    * driver. The signs are data-independent; evaluating them as md5
+    * Column calls cost plane × dim digests per ROW (q20's dominant cost,
+    * profiled). They ship in kernel closures ([[VectorKernels.withBucket]]). */
+  private[graft] def planeSigns(nPlanes: Int, dim: Int): Array[Array[Long]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    (0 until dim).map { i =>
+    Array.tabulate(nPlanes, dim) { (p, i) =>
       val d = md.digest(s"$p/$i".getBytes("UTF-8"))
       if (((d(0) >> 4) & 0xF) >= 8) 1L else -1L
     }
-  }
-
-  /** All hyperplane sign rows as a dense matrix (driver-side, shipped in
-    * kernel closures — see [[VectorKernels.withBucket]]). */
-  private[graft] def planeSigns(nPlanes: Int, dim: Int): Array[Array[Long]] =
-    Array.tabulate(nPlanes)(p => planeSignRow(p, dim).toArray)
-
-  /** Sign-random-projection bucket: `nPlanes`-bit signature of the
-    * vector (bit p = sign of Σᵢ v[i]·h(p,i)). Vectors in the same bucket
-    * are ANN candidates. `dim` = embedding dimensionality; a ragged
-    * vector (length ≠ dim) gets a NULL bucket and drops out of the
-    * equi-join rather than polluting bucket 0. */
-  def lshBucket(vec: Column, nPlanes: Int, dim: Int): Column = {
-    val bits = (0 until nPlanes).map { p =>
-      val signs = typedLit(planeSignRow(p, dim).map(_.toDouble))
-      val proj = aggregate(zip_with(vec, signs, (x, s) => x.cast("double") * s),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj >= 0, lit(1)).otherwise(lit(0))
-    }
-    val packed = bits.zipWithIndex.map { case (b, i) => b * (1 << (nPlanes - 1 - i)) }
-      .reduce(_ + _)
-    when(size(vec) === dim, packed)
-  }
-
-  /** Integer-exact sign-random-projection bucket: same hyperplanes as
-    * [[lshBucket]] but over the quantized vector, so the projection is an
-    * exact integer sum — bit-identical in any engine (oracle-gated). */
-  def lshBucketQ(qvec: Column, nPlanes: Int, dim: Int): Column = {
-    val bits = (0 until nPlanes).map { p =>
-      val signs = typedLit(planeSignRow(p, dim))
-      val proj = aggregate(zip_with(qvec, signs, (x, s) => x * s),
-        lit(0L), (acc, v) => acc + v)
-      when(proj >= 0, lit(1)).otherwise(lit(0))
-    }
-    val packed = bits.zipWithIndex.map { case (b, i) => b * (1 << (nPlanes - 1 - i)) }
-      .reduce(_ + _)
-    // ragged vector → NULL bucket → drops out of the equi-join (a null
-    // projection would otherwise fall through otherwise(0) into bucket 0)
-    when(size(qvec) === dim, packed)
   }
 
   /** Embedding dimensionality probe (one-row driver lookup). */
@@ -156,7 +86,7 @@ object Similarity {
 
   /** Exact integer squared L2 distance between a quantized vector column
     * and a driver-side centroid row. */
-  private def qdist2(qv: Column, centroid: Seq[Long]): Column =
+  private[graft] def qdist2(qv: Column, centroid: Seq[Long]): Column =
     aggregate(zip_with(qv, typedLit(centroid), (x, c) => (x - c) * (x - c)),
       lit(0L), (acc, v) => acc + v)
 
@@ -188,6 +118,7 @@ object Similarity {
   private[ops] def kmeansStep(vecs: DataFrame,
       cents: Seq[(Int, Seq[Long])]): Seq[(Int, Seq[Long])] = {
     val moved = ivfAssign(vecs, cents)
+      .filter(col("cell").isNotNull) // ragged vectors have no cell
       .select(col("cell"), posexplode(col("qv")).as(Seq("pos", "x")))
       .groupBy(col("cell"), col("pos"))
       .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
@@ -292,25 +223,5 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("qid"), col("neighbor_id"), col("rank").cast("int").as("rank"),
         col("qdot"))
-  }
-
-  /** LSH-bucketed ANN top-k: candidates restricted to the query's bucket
-    * (equi-join on bucket id), then exact cosine rank within candidates.
-    * The scale path: shuffle keys are bucket ids, never a cross join. */
-  def lshTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, nPlanes: Int = 12, probeBits: Int = 0): DataFrame = {
-    val dim = dimOf(corpus, col(vecCol))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("vec"),
-      lshBucket(col(vecCol), nPlanes, dim).as("bucket"))
-    val q = queries.select(col("qid"), col("qvec"),
-      explode(probeBuckets(lshBucket(col("qvec"), nPlanes, dim), nPlanes, probeBits))
-        .as("bucket"))
-    val joined = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("qid"))
-      .withColumn("cos", cosine(col("vec"), col("qvec")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("neighbor_id"), col("rank"), col("cos"))
   }
 }

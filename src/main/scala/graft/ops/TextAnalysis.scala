@@ -4,9 +4,12 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text analysis for training-data pipelines: language-ID, quality
-  * scoring, token counting, document fingerprinting. All pure Column
-  * expressions (codegen'd, no UDF, no shuffle) — at 100 TB these run as a
-  * single projection inside the scan stage.
+  * scoring, token counting, document fingerprinting. The per-row scores
+  * are pure Column expressions (codegen'd, no UDF, no shuffle) — at
+  * 100 TB these run as a single projection inside the scan stage; the
+  * shingle-based tables ([[fingerprintTable]], [[shingleTable]]) run
+  * row-local [[TextKernels]], because the Column form of a shingle set
+  * needs interpreted higher-order lambdas.
   *
   * Determinism: ratios are double divisions of exact integer counts
   * (IEEE-identical across engines); fingerprints are md5-hex string
@@ -63,21 +66,6 @@ object TextAnalysis {
       "stop_ratio" -> stopwordRatio(text))
   }
 
-  /** Simple whole-document fingerprint: first 16 hex chars of md5. */
-  def fingerprint64(text: Column): Column = substring(md5(text), 1, 16)
-
-  /** Character k-gram shingles (distinct). `Column.substr(pos,len)` keeps
-    * this inside codegen. */
-  def shingles(text: Column, k: Int = 5): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(text) - (k - 1), lit(1))),
-      i => text.substr(i, lit(k))))
-
-  /** Rolling/shingle fingerprint: minimum md5 over the k-gram set — the
-    * MinHash(1) signature, engine-portable. */
-  def shingleFingerprint(text: Column, k: Int = 5): Column =
-    array_min(transform(shingles(text, k), s => md5(s)))
-
   /** Whole-table fingerprint pass (q15): (idCol, fp64, shingle_fp) via
     * one row-local scan-stage kernel ([[TextKernels.fingerprints]]) —
     * both fingerprints are pure functions of one row's text, so the
@@ -118,25 +106,5 @@ object TextAnalysis {
       .mapPartitions(_.map { case (id, t) =>
         (id, if (t == null) null else TextKernels.shingleSet(t, kk))
       }).toDF(idCol, "sh")
-  }
-
-  /** Distinct word n-grams (whitespace tokens joined by a single space).
-    * Documents with fewer than n tokens yield an empty array; blank text
-    * yields an empty array (split of "" is [""], size 1 < n for n ≥ 2).
-    * Pure Column expression — evaluates inside the scan stage.
-    *
-    * The token array is BOUND ONCE per row through a lambda variable
-    * (`transform(array(split…), w => …)` + `element_at`): naming the
-    * split as a plain `val` inlines it into the per-element lambda, and
-    * higher-order functions re-evaluate non-lambda children per element
-    * — the regex split would run once per OUTPUT n-gram, O(tokens²)
-    * regex work per document (measured 5× slower at sf0.1). */
-  def wordNgrams(text: Column, n: Int): Column = {
-    require(n >= 2, s"word n-grams need n >= 2, got $n")
-    element_at(transform(array(split(trim(text), "\\s+")), w =>
-      when(size(w) >= n,
-        array_distinct(transform(sequence(lit(1), size(w) - (n - 1)),
-          i => array_join(slice(w, i, lit(n)), " "))))
-        .otherwise(array().cast("array<string>"))), 1)
   }
 }

@@ -186,9 +186,9 @@ private[graft] object TextKernels {
     (fp64, minHex)
   }
 
-  /** Distinct word n-grams (tokens joined by one space) as md5-hex
-    * digests — the [[TextAnalysis.wordNgrams]] value set, pre-hashed.
-    * Blank text or fewer than n tokens ⇒ empty. */
+  /** Distinct word n-grams (tokens joined by one space), in
+    * first-occurrence order, as md5-hex digests. Blank text or fewer
+    * than n tokens ⇒ empty. */
   def wordNgramDigests(md: MessageDigest, text: String, n: Int): Array[String] = {
     if (text == null) return Array.empty
     val t = text.trim

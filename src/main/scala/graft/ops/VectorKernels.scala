@@ -24,7 +24,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, ArrayType, StructType}
   *    binary value, matching Catalyst's RoundBase;
   *  - integer dot/distance sums are exact longs, NULL when either side
   *    is NULL or lengths differ (zip_with null-padding semantics);
-  *  - bucket/cell ties and packing mirror the Column forms bit-for-bit.
+  *  - bucket/cell ties and packing mirror the Column forms bit-for-bit
+  *    (the test-side reference expressions and the oracle SQL).
   */
 private[graft] object VectorKernels {
 
@@ -86,7 +87,8 @@ private[graft] object VectorKernels {
 
   /** Append `out` = packed sign-projection bucket of the quantized
     * vector against `signs` (one ±1 row per plane, MSB-first packing);
-    * NULL for ragged vectors (length ≠ dim) — ≡ [[Similarity.lshBucketQ]]. */
+    * NULL for ragged vectors (length ≠ dim), so they drop out of the
+    * bucket equi-join. */
   def withBucket(df: DataFrame, qvCol: String, out: String,
       signs: Array[Array[Long]], dim: Int): DataFrame = {
     val vi = df.schema.fieldIndex(qvCol)
@@ -114,8 +116,11 @@ private[graft] object VectorKernels {
   }
 
   /** Append `out` = nearest centroid id by exact integer squared L2,
-    * ties toward the lower cell id — ≡ the `least(struct(d, c))` pick of
-    * [[Similarity.ivfAssign]]. Centroids must be dense in cell order. */
+    * ties toward the lower cell id (the argmin of [[Similarity.qdist2]]).
+    * NULL for a vector whose length differs from a centroid's — its
+    * distance is NULL under zip_with null-padding, so it drops out of
+    * the cell equi-join like a ragged vector's NULL bucket. Centroids
+    * must be dense in cell order. */
   def withCell(df: DataFrame, qvCol: String, out: String,
       cents: Array[Array[Long]]): DataFrame = {
     val vi = df.schema.fieldIndex(qvCol)
@@ -123,19 +128,21 @@ private[graft] object VectorKernels {
       if (r.isNullAt(vi)) null
       else {
         val v = r.getSeq[Long](vi)
-        var best = Long.MaxValue
-        var bestC = -1
-        var c = 0
-        while (c < cents.length) {
-          val cv = cents(c)
-          var d = 0L
-          var i = 0
-          val n = math.min(v.length, cv.length)
-          while (i < n) { val x = v(i) - cv(i); d += x * x; i += 1 }
-          if (d < best) { best = d; bestC = c }
-          c += 1
+        if (cents.exists(_.length != v.length)) null
+        else {
+          var best = Long.MaxValue
+          var bestC = -1
+          var c = 0
+          while (c < cents.length) {
+            val cv = cents(c)
+            var d = 0L
+            var i = 0
+            while (i < v.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
+            if (d < best) { best = d; bestC = c }
+            c += 1
+          }
+          bestC
         }
-        bestC
       }
     }
   }

@@ -56,9 +56,8 @@ object TrainingData {
 
   /** q16 — n-gram Jaccard similarity on adjacent doc pairs (the exact
     * verify kernel used by the LSH pipeline, oracle-gated). Shingle sets
-    * are projected once per document BEFORE the self-join — inlining
-    * ngramJaccard(text_a, text_b) after the join shingled every document
-    * twice (once per side it appears on). */
+    * are projected once per document BEFORE the self-join, so no document
+    * is shingled twice (once per side it appears on). */
   def q16NgramJaccard(spark: SparkSession, dir: String): DataFrame = {
     val sh = graft.ops.OpCaches.track(
       graft.ops.TextAnalysis.shingleTable(docs(spark, dir), "doc_id", "text", 5))

@@ -30,9 +30,7 @@ import graft.lake.LakeTable
   * parquet row-group stats / bloom pushdown and AQE all apply. */
 object GraftScans {
 
-  /** Scan `entries` under `schema`. Caller guarantees every entry
-    * carries recorded bytes (`bytes > 0`); pre-r5 entries must go
-    * through the plain reader path instead. */
+  /** Scan `entries` under `schema`. */
   def scanEntries(spark: SparkSession, root: String,
       entries: Seq[LakeTable#FileEntry], schema: StructType): DataFrame =
     spark.baseRelationToDataFrame(HadoopFsRelation(

@@ -197,7 +197,7 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
           s.schema.fieldNames.contains(n) && !s.schema.fieldNames.contains(o) }
         if (s.deleteFiles.isEmpty && !renamesActive)
           HadoopFsRelation(
-            location = new GraftFileIndex(spark, lake, s.version),
+            location = new GraftFileIndex(lake, s.version),
             partitionSchema = new StructType(),
             dataSchema = s.schema,
             bucketSpec = None,
@@ -214,7 +214,7 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
   * isolation: later commits write new manifests, never mutate this one's
   * files). `listFiles` prunes with the same per-column bounds logic as
   * the engine's own read paths ([[GraftPruning]]). */
-class GraftFileIndex(spark: SparkSession, lake: LakeTable, version: Long)
+class GraftFileIndex(lake: LakeTable, version: Long)
     extends FileIndex {
 
   private val snap = lake.snapshot(version)
@@ -225,18 +225,11 @@ class GraftFileIndex(spark: SparkSession, lake: LakeTable, version: Long)
     * on object storage a per-file HEAD here would be the dominant query
     * planning cost; Iceberg stores `file_size_in_bytes` for the same
     * reason). Sizes feed Catalyst's scan statistics, so a well-pruned
-    * scan can still end up on the broadcast side of a join. Entries
-    * without recorded bytes (pre-r5 manifests) fall back to one status
-    * call each; the table's next compaction rewrites them with stats. */
-  private lazy val statuses: Map[String, FileStatus] = {
-    lazy val fs = rootHPath.getFileSystem(spark.sessionState.newHadoopConf())
+    * scan can still end up on the broadcast side of a join. */
+  private lazy val statuses: Map[String, FileStatus] =
     snap.dataFiles.map { f =>
-      val p = new HPath(rootHPath, f.path)
-      f.path -> (if (f.bytes > 0L)
-        new FileStatus(f.bytes, false, 1, f.bytes, 0L, p)
-      else fs.getFileStatus(p))
+      f.path -> new FileStatus(f.bytes, false, 1, f.bytes, 0L, new HPath(rootHPath, f.path))
     }.toMap
-  }
 
   override def rootPaths: Seq[HPath] = Seq(rootHPath)
 

@@ -2,38 +2,62 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.codec.ConcatJson
+import graft.reference.ConcatJsonRef
 
 /** Splitter parity with the reference's raw_decode cursor loop
-  * (`/root/reference/ef_ingestion_etl/data_profiling.py:90-110`). */
+  * (the reference pipeline's `ef_ingestion_etl/data_profiling.py:90-110`). Every
+  * case runs against the test-side reference splitter AND the production
+  * fused codec, whose recovered documents are its rows' `raw` spans. */
 class ConcatJsonSpec extends AnyFunSuite {
 
+  lazy val spark = TestSpark.spark
+
+  private def typedDocs(blob: String): Seq[String] = {
+    val session = spark
+    import session.implicits._
+    ConcatJson.decodeTyped(Seq(blob).toDS()).collect().map(_.raw).toSeq
+  }
+
+  private val decoders: Seq[(String, String => Seq[String])] = Seq(
+    "reference split" -> (ConcatJsonRef.split _),
+    "decodeTyped" -> (typedDocs _))
+
   test("splits back-to-back documents with no delimiter") {
-    val docs = ConcatJson.split("""{"a":1}{"b":2}{"c":{"d":3}}""")
-    assert(docs == Seq("""{"a":1}""", """{"b":2}""", """{"c":{"d":3}}"""))
+    for ((name, dec) <- decoders) {
+      val docs = dec("""{"a":1}{"b":2}{"c":{"d":3}}""")
+      assert(docs == Seq("""{"a":1}""", """{"b":2}""", """{"c":{"d":3}}"""), name)
+    }
   }
 
   test("skips corrupt inter-document bytes") {
-    val docs = ConcatJson.split("""xx{"a":1}GARBAGE]){"b":2}""")
-    assert(docs == Seq("""{"a":1}""", """{"b":2}"""))
+    for ((name, dec) <- decoders) {
+      val docs = dec("""xx{"a":1}GARBAGE]){"b":2}""")
+      assert(docs == Seq("""{"a":1}""", """{"b":2}"""), name)
+    }
   }
 
   test("a stray unmatched '{' does not swallow later documents") {
-    val docs = ConcatJson.split(""" {[not-json {"a":1}{"b":2}""")
-    assert(docs.contains("""{"a":1}""") && docs.contains("""{"b":2}"""))
+    for ((name, dec) <- decoders) {
+      val docs = dec(""" {[not-json {"a":1}{"b":2}""")
+      assert(docs.contains("""{"a":1}""") && docs.contains("""{"b":2}"""), name)
+    }
   }
 
   test("braces and quotes inside strings are not structural") {
     val d = """{"s":"}{\"{","t":"\\"}"""
-    assert(ConcatJson.split(d + d) == Seq(d, d))
+    for ((name, dec) <- decoders) assert(dec(d + d) == Seq(d, d), name)
   }
 
   test("unterminated trailing object is dropped") {
-    assert(ConcatJson.split("""{"a":1}{"b":""") == Seq("""{"a":1}"""))
+    for ((name, dec) <- decoders)
+      assert(dec("""{"a":1}{"b":""") == Seq("""{"a":1}"""), name)
   }
 
   test("empty and all-garbage input") {
-    assert(ConcatJson.split("").isEmpty)
-    assert(ConcatJson.split("no json here ][ ").isEmpty)
+    for ((name, dec) <- decoders) {
+      assert(dec("").isEmpty, name)
+      assert(dec("no json here ][ ").isEmpty, name)
+    }
   }
 
   test("∀ fuzzed blobs: never crashes, recovers every intact document in order") {
@@ -58,11 +82,13 @@ class ConcatJsonSpec extends AnyFunSuite {
       seps.zipAll(docs, "", "").map { case (g, d) => g + d }.mkString)
     (1 to 50).foreach { i =>
       val (docs, s) = blob.pureApply(Gen.Parameters.default, Seed(i.toLong))
-      val out = ConcatJson.split(s)
-      assert(docs.forall(out.contains), s"seed $i lost a doc; in=$s out=$out")
-      val recovered = out.filter(docs.contains)
-      assert(recovered == docs.filter(out.contains),
-        s"seed $i order broken; in=$s out=$out")
+      for ((name, dec) <- decoders) {
+        val out = dec(s)
+        assert(docs.forall(out.contains), s"$name: seed $i lost a doc; in=$s out=$out")
+        val recovered = out.filter(docs.contains)
+        assert(recovered == docs.filter(out.contains),
+          s"$name: seed $i order broken; in=$s out=$out")
+      }
     }
   }
 }

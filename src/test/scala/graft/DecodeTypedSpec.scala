@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.codec.ConcatJson
+import graft.reference.ConcatJsonRef
 
 /** The fused typed codec must agree with the split+from_json reference
   * path on every document — including corruption recovery and the
@@ -47,7 +48,7 @@ class DecodeTypedSpec extends AnyFunSuite {
         Option(r.commit).orNull, Option(r.lang).orNull,
         Option(r.commit_lang).orNull, r.content, r.schema_ver, r.source, r.part))
       .toSet
-    val legacy = ConcatJson.parse(ConcatJson.explodeDocs(blobs), spark)
+    val legacy = ConcatJsonRef.parse(ConcatJsonRef.explodeDocs(blobs), spark)
       .filter($"_corrupt".isNull)
       .collect()
       .map(r => (r.getAs[String]("event_id"), r.getAs[String]("op"),

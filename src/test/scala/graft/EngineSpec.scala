@@ -132,11 +132,10 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("salted LWW reduce ≡ plain LWW reduce") {
-    val applier = new CdcApplier(new LakeTable(TestSpark.tmpDir("lakesalt"), spark), spark)
     val ev = ChangeLogGen.events(spark, 2000, Seed)
       .select("repo", "path", "commit", "lang", "content", "seq", "op", "part")
-    val plain = applier.lwwReduce(ev).collect().map(_.toSeq).toSet
-    val salted = applier.saltedLwwReduce(ev, 16).collect().map(_.toSeq).toSet
+    val plain = CdcApplier.lwwReduce(ev).collect().map(_.toSeq).toSet
+    val salted = CdcApplier.saltedLwwReduce(ev, 16).collect().map(_.toSeq).toSet
     assert(plain == salted)
   }
 
@@ -152,8 +151,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("quarantine: wrong-source and corrupt rows are routed, not dropped silently") {
     val blobs = ChangeLogGen.blobs(spark, 1000, Seed).select($"blob").as[String]
-    val docs = graft.codec.ConcatJson.explodeDocs(blobs)
-    val parsed = graft.codec.ConcatJson.parse(docs, spark)
+    val parsed = CdcPipeline.resolveVariants(CdcPipeline.decode(blobs))
     val (clean, dirty) = graft.validate.Validate.route(parsed)
     val cleanN = clean.count()
     val dirtyN = dirty.count()
@@ -426,5 +424,9 @@ class EngineSpec extends AnyFunSuite {
     val v0Opened = (opened & v0Paths).size
     assert(v0Opened >= 1 && v0Opened < v0Paths.size,
       s"before-state read must stay inside the band: opened $v0Opened of ${v0Paths.size}")
+  }
+
+  test("flagship entry query (the CDC replay on the smallest fixture) returns rows") {
+    assert(SparkEntry.entry(spark).count() > 0)
   }
 }

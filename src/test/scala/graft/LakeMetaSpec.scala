@@ -35,6 +35,33 @@ class LakeMetaSpec extends AnyFunSuite {
     assert(lake.committedOffsets == Map("p0" -> 1L))
   }
 
+  test("manifests carry the format marker; a missing or different one fails by name") {
+    val root = TestSpark.tmpDir("lakeformat")
+    new LakeTable(root, spark).commit("f0", Map("p0" -> 1L), schema, Nil, Nil)
+    val v0 = java.nio.file.Paths.get(root, "meta", "v0.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def manifest = mapper.readValue(java.nio.file.Files.readString(v0),
+      classOf[java.util.LinkedHashMap[String, Object]])
+    assert(manifest.get("formatVersion") == LakeTable.FormatVersion)
+    def rewrite(edit: java.util.Map[String, Object] => Unit): Unit = {
+      val m = manifest
+      edit(m)
+      java.nio.file.Files.writeString(v0, mapper.writeValueAsString(m))
+      ()
+    }
+    // a fresh instance each time: nothing read before the edit is reused
+    rewrite(_.remove("formatVersion"))
+    val missing = intercept[LakeTable.ManifestFormatException](
+      new LakeTable(root, spark).currentSnapshot)
+    assert(missing.file == v0 && missing.found == null)
+    assert(missing.getMessage.contains(v0.toString))
+    rewrite(_.put("formatVersion", Integer.valueOf(LakeTable.FormatVersion + 1)))
+    val other = intercept[LakeTable.ManifestFormatException](
+      new LakeTable(root, spark).snapshot(0L))
+    assert(other.found == LakeTable.FormatVersion + 1)
+    assert(other.getMessage.contains(s"formatVersion ${LakeTable.FormatVersion + 1}"))
+  }
+
   test("applied-batch fence map is bounded to the sliding window across 100 commits") {
     val lake = new LakeTable(TestSpark.tmpDir("lakewindow"), spark, appliedWindow = 8)
     (0 until 100).foreach { i =>
@@ -113,7 +140,7 @@ class LakeMetaSpec extends AnyFunSuite {
     val hidden = java.nio.file.Paths.get(lake.root, "data-hidden")
     java.nio.file.Files.move(dataDir, hidden)
     try {
-      val ix = new graft.sources.GraftFileIndex(spark, lake, snap.version)
+      val ix = new graft.sources.GraftFileIndex(lake, snap.version)
       assert(ix.sizeInBytes == snap.dataFiles.map(_.bytes).sum)
       val listed = ix.listFiles(Nil, Nil).flatMap(_.files)
       assert(listed.size == snap.dataFiles.size)
@@ -290,7 +317,7 @@ class LakeMetaSpec extends AnyFunSuite {
     assert(snap.files.map(_.maxSeq).max == expectMaxSeq)
     // per-file repo bounds really bound the file's contents (spot check
     // via a pruning read on a repo that exists)
-    val (touched, _) = lake.pruneFiles(snap, Set("repo-001"))
+    val (touched, _) = graft.reference.LakeRef.pruneFiles(snap, Set("repo-001"))
     assert(touched.nonEmpty)
     val inTouched = spark.read.schema(snap.schema)
       .parquet(touched.map(f =>
@@ -314,7 +341,7 @@ class LakeMetaSpec extends AnyFunSuite {
     // a clustered layout gives files DISJOINT-ish tight ranges: a batch
     // touching one repo must leave most files untouched (a hash-
     // partitioned write would put every repo range in every file)
-    val (touched, retained) = lake.pruneFiles(snap, Set("repo-001"))
+    val (touched, retained) = graft.reference.LakeRef.pruneFiles(snap, Set("repo-001"))
     assert(touched.size < snap.files.size,
       s"expected localized CoW, but ${touched.size}/${snap.files.size} touched")
     assert(retained.nonEmpty)
@@ -336,7 +363,7 @@ class LakeMetaSpec extends AnyFunSuite {
     assert(snap.files.size >= 2)
     for (repos <- Seq(Set("repo-0000"), Set("repo-0003", "repo-0090"),
         Set("nope"), Set("repo-0000", "nope", "repo-0055"))) {
-      val (t1, r1) = lake.pruneFiles(snap, repos)
+      val (t1, r1) = graft.reference.LakeRef.pruneFiles(snap, repos)
       val (t2, r2) = lake.pruneFilesDistributed(snap, repos.toSeq.toDF("repo"))
       assert(t1.map(_.path).toSet == t2.map(_.path).toSet, s"touched for $repos")
       assert(r1.map(_.path).toSet == r2.map(_.path).toSet, s"retained for $repos")
@@ -353,7 +380,7 @@ class LakeMetaSpec extends AnyFunSuite {
       (0 until 50).foreach { i =>
         val snap = lake.currentSnapshot
         val e = lake.FileEntry(s"data/$tag-$i.parquet", 1L, s"$tag$i", s"$tag$i",
-          s"$tag$i a", s"$tag$i a", i.toLong, i.toLong)
+          s"$tag$i a", s"$tag$i a", i.toLong, i.toLong, bytes = 1L)
         lake.commit(s"$tag-$i", Map(s"part-$tag" -> i.toLong), schema,
           retain = snap.map(_.files).getOrElse(Nil), added = Seq(e),
           baseVersion = snap.map(_.version))
@@ -532,7 +559,8 @@ class LakeMetaSpec extends AnyFunSuite {
   test("chunked manifests: unchanged chunks re-referenced by name, disturbed ones rewritten, expiry sweeps") {
     val lake = new LakeTable(TestSpark.tmpDir("lakechunk"), spark, chunkSize = 4)
     def entry(i: Int) =
-      lake.FileEntry(f"data/f$i%02d", 1L, f"r$i%03d", f"r$i%03d", "k", "k", i.toLong, i.toLong)
+      lake.FileEntry(f"data/f$i%02d", 1L, f"r$i%03d", f"r$i%03d", "k", "k", i.toLong, i.toLong,
+        bytes = 1L)
     val fsA = (0 until 8).map(entry)
     lake.commit("ck-a", Map("p" -> 1L), schema, Nil, fsA)
     val chA = lake.currentSnapshot.get.chunkRefs
@@ -571,13 +599,14 @@ class LakeMetaSpec extends AnyFunSuite {
     assert(lake2.currentSnapshot.get.files.size == 9)
     assert(lake2.currentSnapshot.get.files.toSet ==
       (fsA.drop(1) ++ fsB).map(f => lake2.FileEntry(f.path, f.rows, f.minRepo,
-        f.maxRepo, f.minKey, f.maxKey, f.minSeq, f.maxSeq, f.kind)).toSet)
+        f.maxRepo, f.minKey, f.maxKey, f.minSeq, f.maxSeq, f.kind, f.bytes)).toSet)
   }
 
   test("amortized coalescing bounds chunk count across many tiny commits") {
     val lake = new LakeTable(TestSpark.tmpDir("lakecoal"), spark, chunkSize = 16)
     def entry(i: Int) =
-      lake.FileEntry(f"data/g$i%03d", 1L, f"r$i%03d", f"r$i%03d", "k", "k", i.toLong, i.toLong)
+      lake.FileEntry(f"data/g$i%03d", 1L, f"r$i%03d", f"r$i%03d", "k", "k", i.toLong, i.toLong,
+        bytes = 1L)
     lake.commit("co-0", Map("p" -> 0L), schema, Nil, Seq(entry(0)))
     (1 until 64).foreach { i =>
       val snap = lake.currentSnapshot.get

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.reference.{DedupRef, SimilarityRef, TextAnalysisRef}
 
 /** Training-data operator behavior: dedup sketches find planted
   * near-duplicates, ANN paths agree with each other, multimodal plumbing
@@ -40,7 +41,7 @@ class OpsSpec extends AnyFunSuite {
     val j = docs.as("a").join(docs.as("b"),
         $"a.doc_id" < $"b.doc_id")
       .select($"a.doc_id".as("ia"), $"b.doc_id".as("ib"),
-        Dedup.ngramJaccard($"a.text", $"b.text").as("j"))
+        DedupRef.ngramJaccard($"a.text", $"b.text").as("j"))
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(j((2L, 3L)) == 1.0)
     assert(j((0L, 1L)) > 0.7)
@@ -48,7 +49,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("simhash: exact dups share signature; near-dups within distance 3; pairs found") {
-    val sigs = docs.select($"doc_id", Dedup.simhashHex($"text").as("s"))
+    val sigs = docs.select($"doc_id", DedupRef.simhashHex($"text").as("s"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(sigs(2L) == sigs(3L))
     assert(sigs.values.forall(_.length == 16))
@@ -74,7 +75,7 @@ class OpsSpec extends AnyFunSuite {
     assert(qd.size == 15)
     // brute cosine on the same data: top-1 must agree (quantization at
     // 1e-3 cannot flip a clear winner on sin-separated vectors)
-    val bf = Similarity.bruteForceTopK(vecs, "vec_id", "embedding", q, 1)
+    val bf = SimilarityRef.bruteForceTopK(vecs, "vec_id", "embedding", q, 1)
       .select($"qid", $"neighbor_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     (0L to 2L).foreach { qid => assert(bf(qid) == qd((qid, 1))) }
@@ -85,7 +86,8 @@ class OpsSpec extends AnyFunSuite {
       (i.toLong, Array.tabulate(16)(d => math.cos(i + d * 13).toFloat))
     }.toDF("vec_id", "embedding")
     val q = vecs.filter($"vec_id" < 5).select($"vec_id".as("qid"), $"embedding".as("qvec"))
-    val out = Similarity.lshTopK(vecs, "vec_id", "embedding", q, 3, nPlanes = 4).collect()
+    val out = Similarity.lshTopKQuantized(vecs, "vec_id", "embedding", q, 3, nPlanes = 4)
+      .collect()
     assert(out.nonEmpty)
     val byQ = out.groupBy(_.getLong(0))
     byQ.values.foreach { rows =>
@@ -376,8 +378,8 @@ class OpsSpec extends AnyFunSuite {
     val out = docs.select($"doc_id",
       TextAnalysis.tokenCount($"text").as("n"),
       TextAnalysis.langId($"text").as("lang"),
-      TextAnalysis.fingerprint64($"text").as("fp"),
-      TextAnalysis.shingleFingerprint($"text").as("sfp")).collect()
+      TextAnalysisRef.fingerprint64($"text").as("fp"),
+      TextAnalysisRef.shingleFingerprint($"text").as("sfp")).collect()
     val byId = out.map(r => r.getLong(0) -> r).toMap
     assert(byId(4L).getInt(1) == 3)
     assert(byId(0L).getString(2) == "en") // 'the' rich text
@@ -473,13 +475,13 @@ class OpsSpec extends AnyFunSuite {
       "one two three four five six seven eight nine ten")
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
     // shingle sets == array_distinct(transform(...)) value set
-    val colSh = df.select($"id", TextAnalysis.shingles($"t", 5).as("sh"))
+    val colSh = df.select($"id", TextAnalysisRef.shingles($"t", 5).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val kerSh = TextAnalysis.shingleTable(df, "id", "t", 5)
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(colSh == kerSh)
     // minhash signature == the conv(md5-hex)-lane Column form
-    val colSig = df.select($"id", Dedup.minhashSignature($"t", 5, 16).as("sg"))
+    val colSig = df.select($"id", DedupRef.minhashSignature($"t", 5, 16).as("sg"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val md = java.security.MessageDigest.getInstance("MD5")
     texts.zipWithIndex.foreach { case (t, i) =>
@@ -487,12 +489,22 @@ class OpsSpec extends AnyFunSuite {
         s"minhash mismatch for '$t'")
     }
     // fingerprints == md5-prefix + min(md5(shingle))
-    val colFp = df.select($"id", TextAnalysis.fingerprint64($"t").as("f"),
-        TextAnalysis.shingleFingerprint($"t", 5).as("sf"))
+    val colFp = df.select($"id", TextAnalysisRef.fingerprint64($"t").as("f"),
+        TextAnalysisRef.shingleFingerprint($"t", 5).as("sf"))
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
     val kerFp = TextAnalysis.fingerprintTable(df, "id", "t", 5)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
     assert(colFp == kerFp)
+    // word n-gram digests == md5 over the wordNgrams value set, in order
+    Seq(2, 3).foreach { n =>
+      val colNg = df.select($"id",
+          transform(TextAnalysisRef.wordNgrams($"t", n), g => md5(g)).as("g"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+      texts.zipWithIndex.foreach { case (t, i) =>
+        assert(graft.ops.TextKernels.wordNgramDigests(md, t, n).toSeq == colNg(i.toLong),
+          s"word $n-gram digest mismatch for '$t'")
+      }
+    }
   }
 
   test("vector kernels are bit-identical to the Column HOFs they replaced") {
@@ -501,24 +513,54 @@ class OpsSpec extends AnyFunSuite {
       (1L, Array(0.0025f, 0.0005f, -0.25f, 0.49999997f)),
       (2L, Array(0f, 0f, 0f, 0f)))
     val df = vecs.toDF("id", "v")
-    val colQ = df.select($"id", Similarity.quantize($"v").as("q"))
+    val colQ = df.select($"id", SimilarityRef.quantize($"v").as("q"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val kerQ = graft.ops.VectorKernels.withQuantized(df, "v", "q")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](2)).toMap
     assert(colQ == kerQ)
     // qdot == aggregate(zip_with(...)) on the quantized grid
     val qdf = graft.ops.VectorKernels.withQuantized(df, "v", "q").drop("v")
-    val colD = qdf.select($"id", Similarity.qdot($"q", $"q").as("d"))
+    val colD = qdf.select($"id", SimilarityRef.qdot($"q", $"q").as("d"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val kerD = graft.ops.VectorKernels.withQdot(qdf, "q", "q", "d")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(colD == kerD)
     // bucket == lshBucketQ against the same hyperplanes
     val signs = Similarity.planeSigns(4, 4)
-    val colB = qdf.select($"id", Similarity.lshBucketQ($"q", 4, 4).as("b"))
+    val colB = qdf.select($"id", SimilarityRef.lshBucketQ($"q", 4, 4).as("b"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val kerB = graft.ops.VectorKernels.withBucket(qdf, "q", "b", signs, 4)
       .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     assert(colB == kerB)
+  }
+
+  test("vector kernels: centroid assignment is the qdist2 argmin, ties to the lower cell") {
+    // cell 3 duplicates cell 1, and (5,0,0) is equidistant from cells
+    // 0, 1 and 4: both ties must resolve to the lower cell id
+    val cents = Array(Array(0L, 0L, 0L), Array(10L, 0L, 0L), Array(0L, 10L, 0L),
+      Array(10L, 0L, 0L), Array(5L, 5L, 0L))
+    val df = Seq((0L, Seq(1L, 1L, 0L)), (1L, Seq(9L, 1L, 0L)), (2L, Seq(5L, 5L, 0L)),
+      (3L, Seq(5L, 0L, 0L)), (4L, Seq(-3L, 8L, 2L))).toDF("id", "qv")
+    val ker = graft.ops.VectorKernels.withCell(df, "qv", "cell", cents)
+      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
+    val nearest = element_at(array_sort(array(cents.toSeq.zipWithIndex.map { case (cv, c) =>
+      struct(Similarity.qdist2($"qv", cv.toSeq).as("d"), lit(c).as("c"))
+    }: _*)), 1).getField("c")
+    val ref = df.select($"id", nearest).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(ker == ref)
+    assert(ker(1L) == 1 && ker(3L) == 0)
+  }
+
+  test("IVF ANN: a ragged corpus vector drops out of the candidates without failing") {
+    val vecs = (0 until 40).map { i =>
+      (i.toLong, Array.tabulate(8)(d => math.sin(i * 3 + d * 1.1).toFloat))
+    } :+ ((99L, Array(0.5f, 0.5f, 0.5f))) // not among the lowest-id seeds
+    val df = vecs.toDF("vec_id", "embedding")
+    val q = df.filter($"vec_id" < 4).select($"vec_id".as("qid"), $"embedding".as("qvec"))
+    // k above the corpus size: every candidate in a probed cell is kept
+    val out = Similarity.ivfTopKQuantized(df, "vec_id", "embedding", q, 50,
+      nCells = 4, nProbe = 4).collect()
+    assert(out.nonEmpty)
+    assert(!out.exists(_.getLong(1) == 99L), "the ragged vector must not be a neighbour")
   }
 }
