@@ -1,5 +1,7 @@
 package graft.apply
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -118,7 +120,6 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
     * `Validate.routeObserved`) land in the committed manifest with zero
     * extra passes. Returns the committed snapshot version. */
   def applyBatch(events: DataFrame, batchId: String,
-      parsedCount: Long = -1, quarantinedCount: Long = -1,
       lineageExtras: () => Map[String, Long] = () => Map.empty): Long = {
 
     val snap = lake.currentSnapshot
@@ -177,19 +178,15 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
           val stats = scala.collection.mutable.HashMap.empty[String, Array[Long]]
           val ix = idxBc.map(_.value)
           val seen = new java.util.HashSet[String]()
-          val hit = new java.util.BitSet(ix.map(_.size).getOrElse(0))
           it.foreach { case (part, seq, op, repo) =>
             val a = stats.getOrElseUpdate(part, Array(Long.MinValue, 0L, 0L))
             if (seq > a(0)) a(0) = seq
             if (op == opDelete) a(1) += 1 else if (op != null) a(2) += 1
-            if (repo != null)
-              ix.foreach { i => if (seen.add(repo)) i.collectTouched(repo, hit) }
+            if (repo != null && ix.isDefined) seen.add(repo)
           }
-          val touchedIdx = scala.collection.mutable.ArrayBuffer.empty[Int]
-          var b = hit.nextSetBit(0)
-          while (b >= 0) { touchedIdx += b; b = hit.nextSetBit(b + 1) }
+          val touchedIdx = ix.map(_.touched(seen.asScala)).getOrElse(Iterator.empty)
           stats.iterator.map { case (p, a) => (false, p, a(0), a(1), a(2)) } ++
-            touchedIdx.iterator.map(i => (true, "", i.toLong, 0L, 0L))
+            touchedIdx.map(i => (true, "", i.toLong, 0L, 0L))
         }.collect()
       idxBc.foreach(_.unpersist())
       val statRows = fusedRows.filter(!_._1)
@@ -219,7 +216,7 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
 
       if (mergeOnRead)
         morMerge(fenced, snap, evolved, touched, batchId, newOffsets,
-          upserts, deletes, parsedCount, quarantinedCount, lineageExtras,
+          upserts, deletes, lineageExtras,
           // sparse batch vs table size (both already known: event counts
           // from the fused stats job, table rows from the manifest):
           // a drizzle batch semi-joins the base key scan to its key set,
@@ -228,32 +225,9 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
             snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L))
       else
         cowMerge(fenced, snap, evolved, touched, retained, batchId, newOffsets,
-          upserts, deletes, parsedCount, quarantinedCount, lineageExtras)
+          upserts, deletes, lineageExtras)
     } finally fenced.unpersist()
   }
-
-  /** Range-cluster a merge output before the write (see step 6 notes in
-    * [[applyBatch]]): each data file gets a TIGHT disjoint (repo, path)
-    * range, so a future batch touching k repos touches O(k/keyspace) of
-    * the table. `clusterPartitions = 0` lets AQE size the range
-    * partitions; an explicit count pins the output file count (AQE won't
-    * coalesce a user-specified numPartitions).
-    *
-    * `estRows` (an upper bound on the output's rows, when the caller
-    * knows one from batch stats) short-circuits SMALL outputs to
-    * `coalesce(1)`: one output partition is trivially range-disjoint and
-    * [[graft.lake.LakeTable.writeDataFiles]] sorts within partitions
-    * anyway, so the file keeps tight key stats — while skipping the
-    * RangePartitioner's SAMPLING pass, which executes the whole merge
-    * subtree one extra time per micro-batch. Threshold
-    * [[LakeTable.SmallWriteRows]]; production bulk batches exceed it and
-    * keep the parallel range path. */
-  private def clusterForWrite(df: DataFrame, estRows: Long = Long.MaxValue): DataFrame =
-    if (clusterPartitions > 0) // explicit file-count pin always wins
-      df.repartitionByRange(clusterPartitions, col("repo"), col("path"))
-    else if (estRows <= LakeTable.SmallWriteRows)
-      df.coalesce(1)
-    else df.repartitionByRange(col("repo"), col("path"))
 
   // ---- 5+6 (copy-on-write): union touched-file rows with the batch,
   // ONE LWW hash-agg (no join, one shuffle; subsumes in-batch dedup),
@@ -264,7 +238,6 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
       evolved: StructType, touched: Seq[lake.FileEntry],
       retained: Seq[lake.FileEntry], batchId: String,
       newOffsets: Map[String, Long], upserts: Long, deletes: Long,
-      parsedCount: Long, quarantinedCount: Long,
       lineageExtras: () => Map[String, Long]): Long = {
     val touchedData = touched.filter(_.kind == "data")
     def conform(df: DataFrame, isChange: Boolean): DataFrame = {
@@ -281,12 +254,8 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
     // renamed columns (pre-rename files must not read as null)
     val base =
       if (touchedData.isEmpty) None
-      else Some(lake.resolveDeletes(
-        lake.readDataFiles(touchedData,
-          StructType(evolved.fields.map(f =>
-            StructField(f.name, f.dataType, nullable = true))),
-          snap.map(_.renames).getOrElse(Map.empty)),
-        snap.get, scanned = Some(touchedData)))
+      else Some(lake.scan(snap, Some(touchedData), Some(StructType(evolved.fields.map(f =>
+        StructField(f.name, f.dataType, nullable = true))))))
     val unioned = base.map(b => conform(b, isChange = false)
       .unionByName(conform(fenced, isChange = true)))
       .getOrElse(conform(fenced, isChange = true))
@@ -296,10 +265,13 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
         struct(col("seq"), col("commit"), col("_isChange"))).as("r"))
       .filter(col("r._op") =!= Op.Delete)
       .select(keyCols.map(col) ++ valueNames.map(c => col(s"r.$c").as(c)): _*)
-    // merged rows ≤ touched base rows + batch upserts — both already on
-    // the driver (manifest stats + the fused stats job)
+    // range-clustered: each data file gets a TIGHT disjoint (repo, path)
+    // range, so a future batch touching k repos touches O(k/keyspace) of
+    // the table; `clusterPartitions` pins the file count. Merged rows ≤ touched
+    // base rows + batch upserts — both already on the driver (manifest
+    // stats + the fused stats job)
     val newFiles = lake.writeDataFiles(
-      clusterForWrite(merged, touchedData.map(_.rows).sum + upserts),
+      LakeTable.clustered(merged, touchedData.map(_.rows).sum + upserts, clusterPartitions),
       f"b$batchId%s-v")
     // delete files are kept whether touched or not (their entries may
     // target untouched files' rows)
@@ -310,7 +282,6 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
     val rowsBefore = snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L)
     val rowsAfter = (keep ++ newFiles).filter(_.kind == "data").map(_.rows).sum
     lake.commit(batchId, newOffsets, evolved, keep, newFiles, Map(
-      "parsed" -> parsedCount, "quarantined" -> quarantinedCount,
       "upserts" -> upserts, "deletes" -> deletes,
       "rowsBefore" -> rowsBefore, "rowsAfter" -> rowsAfter) ++ lineageExtras(),
       // anchor the commit's rewrite intent to the snapshot this batch
@@ -329,7 +300,6 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
   private def morMerge(fenced: DataFrame, snap: Option[lake.Snapshot],
       evolved: StructType, touched: Seq[lake.FileEntry], batchId: String,
       newOffsets: Map[String, Long], upserts: Long, deletes: Long,
-      parsedCount: Long, quarantinedCount: Long,
       lineageExtras: () => Map[String, Long],
       semiJoinBase: Boolean = true): Long = {
     val valueNames = evolved.fieldNames.toSeq.filterNot(keyCols.contains)
@@ -426,8 +396,8 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
       // written rows ≤ 2 × batch keys ≤ 2 × (upserts + deletes): every
       // output row (data winner or delete entry) maps to a batch key
       val entriesKinded = lake.writeDataFilesKinded(
-        clusterForWrite(dataPart.unionByName(delPart),
-          2 * (upserts + deletes)),
+        LakeTable.clustered(dataPart.unionByName(delPart),
+          2 * (upserts + deletes), clusterPartitions),
         f"b$batchId%s-m", blooms = false, partitionCol = Some("_kind"),
         kindMap = k => if (k == "data") "data" else "delete")
       val entries = entriesKinded.map(_._2)
@@ -442,8 +412,7 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
       val rowsAfter = rowsBefore + newLive - oldLive
       lake.commit(batchId, newOffsets, evolved,
         retain = snap.map(_.files).getOrElse(Nil), added = entries,
-        Map("parsed" -> parsedCount, "quarantined" -> quarantinedCount,
-          "upserts" -> upserts, "deletes" -> deletes,
+        Map("upserts" -> upserts, "deletes" -> deletes,
           "rowsBefore" -> rowsBefore, "rowsAfter" -> rowsAfter) ++ lineageExtras(),
         baseVersion = snap.map(_.version))
     } finally { act.unpersist(); () }

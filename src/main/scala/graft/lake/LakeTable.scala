@@ -161,18 +161,59 @@ class LakeTable(val root: String, spark: SparkSession,
     * columns in old files resolve to null under the snapshot schema
     * (additive schema evolution). Merge-on-read delete files, if any,
     * are applied at scan ([[resolveDeletes]]). */
-  def read(version: Option[Long] = None): DataFrame = {
-    val snapOpt = version.map(snapshot).orElse(currentSnapshot)
-    snapOpt match {
-      case Some(s) if s.dataFiles.nonEmpty =>
-        resolveDeletes(readDataFiles(s.dataFiles, s.schema, s.renames), s)
-      case Some(s) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-      case None =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          graft.core.Model.lakeSchemaV1)
+  def read(version: Option[Long] = None): DataFrame = scan(at(version))
+
+  /** The snapshot at `version`, or the current one. */
+  private def at(version: Option[Long]): Option[Snapshot] =
+    version.map(snapshot).orElse(currentSnapshot)
+
+  /** Schema of a read of `snap`: the snapshot's, or the engine's lake
+    * schema when the table has no snapshot yet. */
+  def schemaOf(snap: Option[Snapshot]): StructType =
+    snap.map(_.schema).getOrElse(graft.core.Model.lakeSchemaV1)
+
+  /** Whether a read of `s` under `schema` takes more than a plain scan of
+    * its data files: live merge-on-read delete files, or a rename whose
+    * stored old name files may still carry. Decided here only — [[scan]]
+    * and the `format("graft")` relation both ask. */
+  def needsResolution(s: Snapshot, schema: StructType): Boolean =
+    s.deleteFiles.nonEmpty || renamedColumns(s.renames, schema).nonEmpty
+
+  /** THE read from snapshot to rows; every engine read and the
+    * `format("graft")` relations go through it. `subset` (data entries of
+    * `snap`) defaults to all of them, `schema` to [[schemaOf]]. `rows`
+    * narrows the data scan BEFORE delete resolution — sound because a
+    * row's survival depends only on the delete files, never on other
+    * rows — so key filters reach parquet. An empty subset reads as an
+    * empty frame under the schema. Otherwise renamed columns are mapped
+    * ([[readDataFiles]]) and deletes resolved ([[resolveDeletes]]) with
+    * the delete files pruned to the subset's repo ranges; a whole-table
+    * read keeps every delete file (no files × delete-files check). */
+  private[graft] def scan(snap: Option[Snapshot], subset: Option[Seq[FileEntry]] = None,
+      schema: Option[StructType] = None,
+      rows: DataFrame => DataFrame = identity): DataFrame = {
+    val sch = schema.getOrElse(schemaOf(snap))
+    val files = subset.orElse(snap.map(_.dataFiles)).getOrElse(Nil)
+    snap match {
+      case Some(s) if files.nonEmpty && needsResolution(s, sch) =>
+        resolveDeletes(rows(readDataFiles(files, sch, s.renames)), s, subset)
+      case Some(_) if files.nonEmpty => rows(readEntries(files, sch))
+      case _ => emptyFrame(sch)
     }
   }
+
+  private def emptyFrame(schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  /** Live renames under `schema`, inverted: current name → stored old
+    * names, keeping only renames whose target is in `schema` and whose
+    * old name isn't itself a live column. */
+  private def renamedColumns(renames: Map[String, String], schema: StructType)
+      : Map[String, Seq[String]] =
+    renames.toSeq
+      .filter { case (o, n) => schema.fieldNames.contains(n) &&
+        !schema.fieldNames.contains(o) }
+      .groupBy(_._2).map { case (n, m) => n -> m.map(_._1).sorted }
 
   /** Scan a set of data files under `schema`, mapping RENAMED columns:
     * for every rename (old → new) the scan schema is augmented with the
@@ -183,14 +224,9 @@ class LakeTable(val root: String, spark: SparkSession,
     * across olds is irrelevant; files from after the rename fill `new`,
     * files from before fill exactly one `old`. No-op (plain scan) when
     * no renames exist. */
-  private[graft] def readDataFiles(files: Seq[FileEntry], schema: StructType,
+  private def readDataFiles(files: Seq[FileEntry], schema: StructType,
       renames: Map[String, String]): DataFrame = {
-    // current name → stored old names, keeping only renames whose target
-    // is in this schema and whose old name isn't itself a live column
-    val inv: Map[String, Seq[String]] = renames.toSeq
-      .filter { case (o, n) => schema.fieldNames.contains(n) &&
-        !schema.fieldNames.contains(o) }
-      .groupBy(_._2).map { case (n, m) => n -> m.map(_._1).sorted }
+    val inv = renamedColumns(renames, schema)
     val extras = inv.toSeq.sortBy(_._1).flatMap { case (n, olds) =>
       val t = schema(n).dataType
       olds.map(o => org.apache.spark.sql.types.StructField(o, t, nullable = true))
@@ -232,8 +268,8 @@ class LakeTable(val root: String, spark: SparkSession,
     * read against a range-clustered table opens O(1) delete files, not
     * every delete file since the last compaction. Metadata-scale
     * interval check, sound because both bounds come from footer stats. */
-  private[graft] def resolveDeletes(data: DataFrame, s: Snapshot,
-      scanned: Option[Seq[FileEntry]] = None): DataFrame = {
+  private def resolveDeletes(data: DataFrame, s: Snapshot,
+      scanned: Option[Seq[FileEntry]]): DataFrame = {
     val dels0 = s.deleteFiles
     val dels = scanned match {
       case Some(fs) => dels0.filter(d =>
@@ -272,16 +308,8 @@ class LakeTable(val root: String, spark: SparkSession,
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(
       RepoIntervalIndex(snap.files.map(f => (f.minRepo, f.maxRepo))))
-    val touched = repos.as[String].mapPartitions { it =>
-      val ix = bc.value
-      val seen = new java.util.HashSet[String]()
-      val hit = new java.util.BitSet(ix.size)
-      it.foreach { r => if (seen.add(r)) ix.collectTouched(r, hit) }
-      val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var b = hit.nextSetBit(0)
-      while (b >= 0) { out += b; b = hit.nextSetBit(b + 1) }
-      out.iterator
-    }.distinct().collect().toSet
+    val touched = repos.as[String].mapPartitions(bc.value.touched(_))
+      .distinct().collect().toSet
     bc.unpersist()
     val parts = snap.files.zipWithIndex.partition { case (_, idx) => touched(idx) }
     (parts._1.map(_._1), parts._2.map(_._1))
@@ -310,21 +338,26 @@ class LakeTable(val root: String, spark: SparkSession,
     * disk, so the footer reads fall back to a driver-side loop \u2014 the
     * same stats, collected where the files are visible. */
   def writeDataFiles(df: DataFrame, label: String, kind: String = "data",
-      blooms: Boolean = true, partitionCol: Option[String] = None)
-      : Seq[FileEntry] =
-    writeDataFilesKinded(df, label, kind, blooms, partitionCol, identity)
-      .map(_._2)
+      blooms: Boolean = true): Seq[FileEntry] =
+    writeDataFilesKinded(df, label, kind, blooms).map(_._2)
 
   /** [[writeDataFiles]] with a partition-value → manifest-kind mapping,
     * returning (raw partition value, entry) pairs: lets a caller write
     * SUBDIVIDED partitions in one job (e.g. the MoR merge splitting
     * delete entries by had-live-base-row) and read the per-subdivision
     * row counts straight from the footer stats — no separate count
-    * action over the merge output. */
+    * action over the merge output.
+    *
+    * `label` (a batch id, or the sink's `batchId` option) names the
+    * stage directory and every file, so it may not contain `/`: a
+    * `..` segment would point the overwrite-mode stage write — which
+    * deletes its target first — outside the table root. */
   private[graft] def writeDataFilesKinded(df: DataFrame, label: String,
       kind: String = "data", blooms: Boolean = true,
       partitionCol: Option[String] = None,
       kindMap: String => String = identity): Seq[(String, FileEntry)] = {
+    if (label.contains('/'))
+      throw new IllegalArgumentException(s"write label must not contain '/': $label")
     // no leading '_' \u2014 Spark's file listing filters _-prefixed paths
     val tmp = Paths.get(root, s"stage-$label")
     // KEYLESS tables (e.g. the quarantine sink's (raw, errors, stage)
@@ -454,10 +487,11 @@ class LakeTable(val root: String, spark: SparkSession,
     *    head (two appliers applying the same partitions is undefined);
     *  - the schema rebases by name-union (concurrent additive promotion
     *    merges; our column set survives).
-    * Retries are bounded (`maxRetries`) with small linear backoff. */
+    * Retries are bounded ([[LakeTable.CommitRetries]]) with small linear
+    * backoff. */
   def commit(batchId: String, offsets: Map[String, Long], schema: StructType,
       retain: Seq[FileEntry], added: Seq[FileEntry],
-      lineage: Map[String, Long] = Map.empty, maxRetries: Int = 20,
+      lineage: Map[String, Long] = Map.empty,
       baseVersion: Option[Long] = None, sticky: Boolean = false): Long = {
     // the caller's base: the snapshot `retain` was computed against.
     // Callers that read table state before building a commit MUST pass
@@ -470,62 +504,68 @@ class LakeTable(val root: String, spark: SparkSession,
     val droppedPaths: Set[String] =
       base.map(_.files.map(_.path).toSet).getOrElse(Set.empty) -- retain.map(_.path)
     val baseOff = base.map(_.offsets).getOrElse(Map.empty)
-    var attempt = 0
-    while (true) {
+    retryRace(s"commit $batchId") {
       val head = currentSnapshot
-      head.foreach { h =>
-        if (h.applied.get(batchId).contains(fence) ||
-          h.saved.get(batchId).contains(fence)) return h.version // no-op replay
-      }
-      // rebase the intent onto the head (a no-op when head == base):
-      // keep everything live at the head except what THIS commit drops
-      val headFiles = head.map(_.files).getOrElse(Nil)
-      val rebased = head.map(_.version) != base.map(_.version)
-      val (curRetain, curSchema) =
-        if (!rebased) (retain, schema)
-        else {
-          val headPaths = headFiles.map(_.path).toSet
-          val missing = droppedPaths.filterNot(headPaths.contains)
-          if (missing.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"commit $batchId conflicts: files it rewrites were removed by a " +
-                s"concurrent commit: ${missing.take(3).mkString(", ")}")
-          val headOff = head.map(_.offsets).getOrElse(Map.empty)
-          val moved = offsets.keys.filter(k => headOff.get(k) != baseOff.get(k))
-          if (moved.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"commit $batchId conflicts: partitions ${moved.take(3).mkString(", ")} " +
-                "were advanced by a concurrent applier")
-          (headFiles.filterNot(f => droppedPaths.contains(f.path)),
-            head.map(h => LakeTable.unionSchemas(h.schema, schema)).getOrElse(schema))
+      head.filter(h => h.applied.get(batchId).contains(fence) ||
+          h.saved.get(batchId).contains(fence))
+        .map(_.version) // no-op replay
+        .getOrElse {
+          // rebase the intent onto the head (a no-op when head == base):
+          // keep everything live at the head except what THIS commit drops
+          val headFiles = head.map(_.files).getOrElse(Nil)
+          val rebased = head.map(_.version) != base.map(_.version)
+          val (curRetain, curSchema) =
+            if (!rebased) (retain, schema)
+            else {
+              val headPaths = headFiles.map(_.path).toSet
+              val missing = droppedPaths.filterNot(headPaths.contains)
+              if (missing.nonEmpty)
+                throw new java.util.ConcurrentModificationException(
+                  s"commit $batchId conflicts: files it rewrites were removed by a " +
+                    s"concurrent commit: ${missing.take(3).mkString(", ")}")
+              val headOff = head.map(_.offsets).getOrElse(Map.empty)
+              val moved = offsets.keys.filter(k => headOff.get(k) != baseOff.get(k))
+              if (moved.nonEmpty)
+                throw new java.util.ConcurrentModificationException(
+                  s"commit $batchId conflicts: partitions ${moved.take(3).mkString(", ")} " +
+                    "were advanced by a concurrent applier")
+              (headFiles.filterNot(f => droppedPaths.contains(f.path)),
+                head.map(h => LakeTable.unionSchemas(h.schema, schema)).getOrElse(schema))
+            }
+          val version = head.map(_.version + 1).getOrElse(0L)
+          // sliding-window fence map: keep only the newest `appliedWindow`
+          // entries (older replays are caught by the offsets watermark);
+          // sticky fences go to the untrimmed `saved` map instead
+          val applied: Map[String, String] =
+            (head.map(_.applied).getOrElse(scala.collection.immutable.ListMap.empty[String, String]) ++
+              (if (sticky) Map.empty else Map(batchId -> fence))).takeRight(appliedWindow)
+          val saved: Map[String, String] =
+            head.map(_.saved).getOrElse(Map.empty) ++
+              (if (sticky) Map(batchId -> fence) else Map.empty)
+          val mergedOffsets = head.map(_.offsets).getOrElse(Map.empty) ++ offsets
+          writeManifest(version, curSchema, curRetain ++ added, mergedOffsets, applied,
+            lineage, batchId, head.map(_.renames).getOrElse(Map.empty),
+            prevChunks = head.map(_.chunkRefs).getOrElse(Nil), saved = saved)
+          version
         }
-      val version = head.map(_.version + 1).getOrElse(0L)
-      // sliding-window fence map: keep only the newest `appliedWindow`
-      // entries (older replays are caught by the offsets watermark);
-      // sticky fences go to the untrimmed `saved` map instead
-      val applied: Map[String, String] =
-        (head.map(_.applied).getOrElse(scala.collection.immutable.ListMap.empty[String, String]) ++
-          (if (sticky) Map.empty else Map(batchId -> fence))).takeRight(appliedWindow)
-      val saved: Map[String, String] =
-        head.map(_.saved).getOrElse(Map.empty) ++
-          (if (sticky) Map(batchId -> fence) else Map.empty)
-      val mergedOffsets = head.map(_.offsets).getOrElse(Map.empty) ++ offsets
-      try {
-        writeManifest(version, curSchema, curRetain ++ added, mergedOffsets, applied,
-          lineage, batchId, head.map(_.renames).getOrElse(Map.empty),
-          prevChunks = head.map(_.chunkRefs).getOrElse(Nil), saved = saved)
-        return version
-      } catch {
-        case _: LakeTable.CommitRace =>
-          attempt += 1
-          if (attempt > maxRetries)
-            throw new java.util.ConcurrentModificationException(
-              s"commit $batchId lost the race $maxRetries times — giving up")
-          Thread.sleep(math.min(25L * attempt, 400L))
-      }
     }
-    -1L // unreachable
   }
+
+  /** Run `publish` (which re-reads the head each time) until it wins the
+    * manifest-link race: a lost race ([[LakeTable.CommitRace]]) retries
+    * up to [[LakeTable.CommitRetries]] times with small linear backoff,
+    * then fails as a [[java.util.ConcurrentModificationException]]. */
+  @scala.annotation.tailrec
+  private def retryRace[T](what: String, attempt: Int = 1)(publish: => T): T =
+    (try Some(publish) catch { case _: LakeTable.CommitRace => None }) match {
+      case Some(v) => v
+      case None if attempt > LakeTable.CommitRetries =>
+        throw new java.util.ConcurrentModificationException(
+          s"$what lost the race ${LakeTable.CommitRetries} times — giving up")
+      case None =>
+        Thread.sleep(math.min(25L * attempt, 400L))
+        retryRace(what, attempt + 1)(publish)
+    }
 
   /** Compact small data files: rewrite any files below `minRows` into
     * fresh right-sized files (keyed-sorted, tight stats), keep the rest.
@@ -541,10 +581,10 @@ class LakeTable(val root: String, spark: SparkSession,
     *    many-file rewrite, never a one-task funnel;
     *  - `shufflePartitions > 0`: pinned output file count (AQE does not
     *    coalesce a user-specified partition count);
-    *  - `singleFile = true`: explicit `coalesce(1)` for a KNOWN-tiny
-    *    table (the only case where one task is the right plan). */
+    *  - a rewrite of at most [[LakeTable.SmallWriteRows]] rows (known
+    *    from the manifest) takes `coalesce(1)` ([[LakeTable.clustered]]). */
   def compact(minRows: Long, shufflePartitions: Int = 0,
-      singleFile: Boolean = false, minBytes: Long = 0L): Option[Long] = {
+      minBytes: Long = 0L): Option[Long] = {
     val snap = currentSnapshot.getOrElse(return None)
     val major = snap.deleteFiles.nonEmpty
     // byte-targeted selection uses the manifest-recorded file sizes —
@@ -580,24 +620,15 @@ class LakeTable(val root: String, spark: SparkSession,
         keep, Nil, Map("compactedFiles" -> snap.deleteFiles.size.toLong,
           "rowsAfter" -> keep.map(_.rows).sum),
         baseVersion = Some(snap.version)))
-    // rename-mapped scan: compaction REWRITES files, so its output
-    // materializes old-named columns under their current names — the
-    // rent-paying moment after which the rename mapping is inert
-    val raw = readDataFiles(small, snap.schema, snap.renames)
-    val df = if (major) resolveDeletes(raw, snap, scanned = Some(small)) else raw
-    // range-cluster (not hash): compacted files get tight disjoint key
-    // ranges, which is what keeps future CoW merges cheap. SMALL rewrites
-    // (total rows known from the manifest) take coalesce(1): one
-    // partition is trivially range-disjoint, writeDataFiles sorts it, and
-    // the RangePartitioner's sampling pass — one extra execution of the
-    // whole resolve subtree — is skipped.
-    val sized =
-      if (shufflePartitions > 0) // explicit file-count pin always wins
-        df.repartitionByRange(shufflePartitions, col("repo"), col("path"))
-      else if (singleFile || small.map(_.rows).sum <= LakeTable.SmallWriteRows)
-        df.coalesce(1)
-      else df.repartitionByRange(col("repo"), col("path"))
-    val added = writeDataFiles(sized, s"compact-v${snap.version + 1}")
+    // rename-mapped, delete-resolved scan: compaction REWRITES files, so
+    // its output materializes old-named columns under their current
+    // names — the rent-paying moment after which the rename mapping is
+    // inert. Range-clustered (not hashed): compacted files get tight
+    // disjoint key ranges, which is what keeps future CoW merges cheap.
+    val df = scan(Some(snap), Some(small))
+    val added = writeDataFiles(
+      LakeTable.clustered(df, small.map(_.rows).sum, shufflePartitions),
+      s"compact-v${snap.version + 1}")
     Some(commit(s"compact-${snap.version + 1}", Map.empty, snap.schema, keep, added,
       Map("compactedFiles" -> (small.size + (if (major) snap.deleteFiles.size else 0)).toLong,
         "rowsAfter" -> (keep ++ added).filter(_.kind == "data").map(_.rows).sum),
@@ -636,17 +667,13 @@ class LakeTable(val root: String, spark: SparkSession,
       // delete aggregate runs once, not once per pass
       .persist()
     try {
-      // delete-entry total is manifest-known: small consolidations skip
-      // the RangePartitioner sampling pass via coalesce(1) (sorted +
-      // trivially range-disjoint, like the applier's small-batch path)
-      val sized =
-        if (dels.map(_.rows).sum <= LakeTable.SmallWriteRows)
-          merged.coalesce(1)
-        else merged.repartitionByRange(col("repo"), col("path"))
-      // blooms off: like MoR micro-batch output, delete files are always
-      // scanned whole by resolveDeletes, never point-probed
-      val added = writeDataFiles(sized, s"deletes-v${snap.version + 1}",
-        kind = "delete", blooms = false)
+      // delete-entry total is manifest-known, so small consolidations
+      // skip the range sampling pass. Blooms off: like MoR micro-batch
+      // output, delete files are always scanned whole by resolveDeletes,
+      // never point-probed
+      val added = writeDataFiles(
+        LakeTable.clustered(merged, dels.map(_.rows).sum),
+        s"deletes-v${snap.version + 1}", kind = "delete", blooms = false)
       Some(commit(s"consolidate-deletes-${snap.version + 1}", Map.empty,
         snap.schema, snap.dataFiles, added,
         Map("consolidatedDeleteFiles" -> dels.size.toLong,
@@ -704,43 +731,26 @@ class LakeTable(val root: String, spark: SparkSession,
 
   def readSince(afterSeq: Long, version: Option[Long] = None)
       : (DataFrame, Int, Int) = {
-    val snapOpt = version.map(snapshot).orElse(currentSnapshot)
-    snapOpt match {
-      case Some(s) =>
-        // chunk-level seq prune first: an incremental consumer never
-        // parses chunk files whose aggregate maxSeq sits at or below its
-        // watermark (steady state: only the chunks of recent commits)
-        val live: Seq[FileEntry] = s.chunkRefs
-          .filter(c => c.kind == "data" && c.maxSeq > afterSeq)
-          .flatMap(c => readChunk(c.name))
-          .filter(_.maxSeq > afterSeq)
-        val df =
-          if (live.isEmpty)
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-          else resolveDeletes(readDataFiles(live, s.schema, s.renames), s,
-            scanned = Some(live))
-            .filter(col("seq") > afterSeq)
-        (df, live.size, dataFileCount(s))
-      case None =>
-        (spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          graft.core.Model.lakeSchemaV1), 0, 0)
-    }
+    val snap = at(version)
+    // chunk-level seq prune first: an incremental consumer never parses
+    // chunk files whose aggregate maxSeq sits at or below its watermark
+    // (steady state: only the chunks of recent commits)
+    val live: Seq[FileEntry] = snap.toSeq.flatMap(_.chunkRefs)
+      .filter(c => c.kind == "data" && c.maxSeq > afterSeq)
+      .flatMap(c => readChunk(c.name))
+      .filter(_.maxSeq > afterSeq)
+    (scan(snap, Some(live), rows = _.filter(col("seq") > afterSeq)),
+      live.size, snap.map(dataFileCount).getOrElse(0))
   }
 
   /** State of snapshot `s` restricted to the keys of `keys` (columns
     * repo, path): the file list is pruned to candidate repos through the
     * broadcast interval index (no repo set reaches the driver, only file
-    * indices), then read, delete-resolved, and semi-joined to the keys. */
+    * indices), then read, semi-joined to the keys, and delete-resolved. */
   private def stateRestricted(s: Snapshot, keys: DataFrame): DataFrame = {
     val (touched, _) = pruneFilesDistributed(s, keys.select(col("repo")))
-    val data = touched.filter(_.kind == "data")
-    if (data.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-    else
-      resolveDeletes(readDataFiles(data, s.schema, s.renames), s,
-        scanned = Some(data))
-        .join(keys.select(col("repo"), col("path")), Seq("repo", "path"), "left_semi")
+    scan(Some(s), Some(touched.filter(_.kind == "data")),
+      rows = _.join(keys.select(col("repo"), col("path")), Seq("repo", "path"), "left_semi"))
   }
 
   /** Row-level change-data feed between two snapshots (the Delta CDF /
@@ -816,26 +826,14 @@ class LakeTable(val root: String, spark: SparkSession,
         (if (df.columns.contains(f.name)) col(f.name).cast(f.dataType)
         else lit(null).cast(f.dataType)).as(f.name)
       }: _*).as(as))
-    val outSchema = img(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], b.schema), "before")
-      .withColumn("change_type", lit(""))
-      .withColumn("after", col("before"))
-      .select(col("repo"), col("path"), col("change_type"), col("before"), col("after"))
-      .schema
     val keyC = Seq(col("repo"), col("path"))
     val candParts: Seq[DataFrame] =
-      (if (added.nonEmpty)
-        Seq(resolveDeletes(readDataFiles(added, b.schema, b.renames), b,
-          scanned = Some(added)).select(keyC: _*)) else Nil) ++
-        (if (removed.nonEmpty)
-          Seq(resolveDeletes(readDataFiles(removed, a.schema, a.renames), a,
-            scanned = Some(removed)).select(keyC: _*)) else Nil) ++
+      Seq(b -> added, a -> removed).collect { case (s, fs) if fs.nonEmpty =>
+        scan(Some(s), Some(fs)).select(keyC: _*) } ++
         (if (addedDel.nonEmpty)
           Seq(readEntries(addedDel, LakeTable.deleteSchema)
             .select(keyC: _*)) else Nil)
-    if (candParts.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
+    if (candParts.isEmpty) return emptyFrame(LakeTable.changeFeedSchema(b.schema))
     // used four times (two prunes, two semi-joins) — compute once;
     // released by the session's OpCaches.unpersistAll between queries
     val cand = graft.ops.OpCaches.track(
@@ -864,12 +862,11 @@ class LakeTable(val root: String, spark: SparkSession,
     *     concatenated composite "repo path" is NOT a sound lexicographic
     *     bound when a repo may contain the separator or anything below it
     *     (minRepo="a", minPath="q" gives minKey="a q", which incorrectly
-    *     prunes the real key ("a b", "x")). Small key sets prune with a
-    *     direct keys × files scan; past [[LakeTable.LookupBulkThreshold]]
-    *     keys the manifest's
-    *     [[RepoIntervalIndex]] (sorted minRepo + prefix-max walk) prunes
-    *     in O(keys·log files) instead.
-    *  2. FILTER: small key sets become an OR-chain of key-equality
+    *     prunes the real key ("a b", "x")). Chunks, then files, prune
+    *     through a [[RepoIntervalIndex]] (sorted minRepo + prefix-max
+    *     walk) in O(keys·log files).
+    *  2. FILTER: up to [[LakeTable.LookupBulkThreshold]] keys become an
+    *     OR-chain of key-equality
     *     predicates pushed down to parquet, where the write-time bloom
     *     filters + column min/max skip non-matching row groups inside
     *     each scanned file. Past the threshold an OR-chain would be a
@@ -879,62 +876,25 @@ class LakeTable(val root: String, spark: SparkSession,
     * Returns (rows, filesScanned, filesTotal). */
   def lookupKeys(keys: Seq[(String, String)], version: Option[Long] = None)
       : (DataFrame, Int, Int) = {
-    val snapOpt = version.map(snapshot).orElse(currentSnapshot)
-    snapOpt match {
-      case Some(s) =>
-        val bulk = keys.size > LakeTable.LookupBulkThreshold
-        val repos = keys.map(_._1).distinct
-        // two-stage manifest prune: chunk stats (in the manifest itself)
-        // decide which chunk FILES to parse at all, then per-file stats
-        // decide which data files to scan — a cold point lookup reads
-        // O(overlapping chunks) of metadata, not the whole file list
-        val dataF: Seq[FileEntry] = {
-          val cand = s.chunkRefs.filter(_.kind == "data")
-          val hitChunks =
-            if (keys.isEmpty) Nil
-            else if (!bulk)
-              cand.filter(c => repos.exists(r => r >= c.minRepo && r <= c.maxRepo))
-            else {
-              val ix = RepoIntervalIndex(cand.map(c => (c.minRepo, c.maxRepo)))
-              val hit = new java.util.BitSet(ix.size)
-              repos.foreach(r => ix.collectTouched(r, hit))
-              cand.zipWithIndex.collect { case (c, i) if hit.get(i) => c }
-            }
-          hitChunks.flatMap(c => readChunk(c.name))
-        }
-        val totalData: Int = dataFileCount(s)
-        val live =
-          if (keys.isEmpty) Nil
-          else if (!bulk)
-            dataF.filter(f => repos.exists(r => r >= f.minRepo && r <= f.maxRepo))
-          else {
-            val ix = RepoIntervalIndex(dataF.map(f => (f.minRepo, f.maxRepo)))
-            val hit = new java.util.BitSet(ix.size)
-            repos.foreach(r => ix.collectTouched(r, hit))
-            dataF.zipWithIndex.collect { case (f, i) if hit.get(i) => f }
-          }
-        val df =
-          if (live.isEmpty || keys.isEmpty)
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-          else {
-            val base = readDataFiles(live, s.schema, s.renames)
-            val filtered =
-              if (!bulk)
-                base.filter(keys.map { case (r, p) =>
-                  col("repo") === r && col("path") === p }.reduce(_ || _))
-              else {
-                import spark.implicits._
-                val keyDf = keys.toDF("repo", "path")
-                base.join(broadcast(keyDf), Seq("repo", "path"), "left_semi")
-              }
-            resolveDeletes(filtered, s, scanned = Some(live))
-          }
-        (df, live.size, totalData)
-      case None =>
-        (spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          graft.core.Model.lakeSchemaV1), 0, 0)
-    }
+    val snap = at(version)
+    val repos = keys.map(_._1).distinct
+    // two-stage manifest prune: chunk stats (in the manifest itself)
+    // decide which chunk FILES to parse at all, then per-file stats
+    // decide which data files to scan — a cold point lookup reads
+    // O(overlapping chunks) of metadata, not the whole file list
+    val chunks = RepoIntervalIndex.select(snap.toSeq.flatMap(_.chunkRefs)
+      .filter(_.kind == "data"), repos)(c => (c.minRepo, c.maxRepo))
+    val live = RepoIntervalIndex.select(chunks.flatMap(c => readChunk(c.name)),
+      repos)(f => (f.minRepo, f.maxRepo))
+    val onKeys: DataFrame => DataFrame =
+      if (keys.size <= LakeTable.LookupBulkThreshold)
+        _.filter(keys.map { case (r, p) =>
+          col("repo") === r && col("path") === p }.reduce(_ || _))
+      else { df =>
+        import spark.implicits._
+        df.join(broadcast(keys.toDF("repo", "path")), Seq("repo", "path"), "left_semi")
+      }
+    (scan(snap, Some(live), rows = onKeys), live.size, snap.map(dataFileCount).getOrElse(0))
   }
 
   /** Materialize the current snapshot in the reference's output layout:
@@ -1027,11 +987,10 @@ class LakeTable(val root: String, spark: SparkSession,
     * commit) are the engine's contract and cannot be renamed. Returns
     * the committed version. Metadata-only ⇒ always rebase-safe, so the
     * race loop needs no file/offset validation. */
-  def renameColumn(oldName: String, newName: String, maxRetries: Int = 20): Long = {
+  def renameColumn(oldName: String, newName: String): Long = {
     require(!Set("repo", "path", "seq", "commit").contains(oldName),
       s"cannot rename engine key/ordering column $oldName")
-    var attempt = 0
-    while (true) {
+    retryRace(s"rename $oldName→$newName") {
       val snap = currentSnapshot.getOrElse(
         throw new IllegalStateException("rename on an empty table"))
       require(snap.schema.fieldNames.contains(oldName), s"no such column: $oldName")
@@ -1042,23 +1001,13 @@ class LakeTable(val root: String, spark: SparkSession,
       val renames = snap.renames.map { case (o, n) =>
         o -> (if (n == oldName) newName else n) } + (oldName -> newName)
       val version = snap.version + 1
-      try {
-        writeManifest(version, newSchema, snap.files, snap.offsets, snap.applied,
-          Map("rename" -> 1L, "rowsAfter" ->
-            snap.lineage.getOrElse("rowsAfter", snap.dataFiles.map(_.rows).sum)),
-          s"rename-$oldName-$newName", renames, prevChunks = snap.chunkRefs,
-          saved = snap.saved)
-        return version
-      } catch {
-        case _: LakeTable.CommitRace =>
-          attempt += 1
-          if (attempt > maxRetries)
-            throw new java.util.ConcurrentModificationException(
-              s"rename $oldName→$newName lost the race $maxRetries times")
-          Thread.sleep(math.min(25L * attempt, 400L))
-      }
+      writeManifest(version, newSchema, snap.files, snap.offsets, snap.applied,
+        Map("rename" -> 1L, "rowsAfter" ->
+          snap.lineage.getOrElse("rowsAfter", snap.dataFiles.map(_.rows).sum)),
+        s"rename-$oldName-$newName", renames, prevChunks = snap.chunkRefs,
+        saved = snap.saved)
+      version
     }
-    -1L // unreachable
   }
 
   /** Committed per-source-partition offsets: the resume point. */
@@ -1301,6 +1250,9 @@ object LakeTable {
     * a REAL conflict after failed revalidation). */
   private[lake] class CommitRace(msg: String) extends RuntimeException(msg)
 
+  /** Lost manifest-link races a commit or rename retries before giving up. */
+  val CommitRetries: Int = 20
+
   /** Layout version of the manifests [[LakeTable.writeManifest]] writes:
     * chunked file lists, per-chunk kind segregation, recorded file bytes.
     * A reader accepts exactly this value. */
@@ -1322,9 +1274,22 @@ object LakeTable {
     * task sorting ≲100 MB. */
   val SmallWriteRows: Long = 262144L
 
-  /** Key count above which [[LakeTable.lookupKeys]] prunes through the
-    * interval index and filters with a broadcast semi-join instead of a
-    * keys × files scan and an OR-chain predicate. */
+  /** Partition a rewrite's output for the write — the one sizing rule of
+    * the applier merge, compaction and delete consolidation. A pinned
+    * `partitions` count range-partitions to exactly that many files (AQE
+    * does not coalesce a user-specified count); an output of at most
+    * [[SmallWriteRows]] rows (`estRows`, an upper bound the caller knows
+    * from manifest or batch stats) takes `coalesce(1)`, which is
+    * trivially range-disjoint and skips the RangePartitioner's sampling
+    * pass over the whole input subtree; anything larger range-partitions
+    * on (repo, path) under AQE sizing. */
+  private[graft] def clustered(df: DataFrame, estRows: Long, partitions: Int = 0): DataFrame =
+    if (partitions > 0) df.repartitionByRange(partitions, col("repo"), col("path"))
+    else if (estRows <= SmallWriteRows) df.coalesce(1)
+    else df.repartitionByRange(col("repo"), col("path"))
+
+  /** Key count above which [[LakeTable.lookupKeys]] filters with a
+    * broadcast semi-join instead of an OR-chain predicate. */
   val LookupBulkThreshold: Int = 64
 
   /** Schema of merge-on-read equality-delete files: the superseded key

@@ -17,8 +17,17 @@ final class RepoIntervalIndex private (
 
   def size: Int = sMin.length
 
+  /** ORIGINAL indices, ascending, of the intervals containing any of
+    * `repos` (each distinct repo is walked once). */
+  def touched(repos: IterableOnce[String]): Iterator[Int] = {
+    val seen = new java.util.HashSet[String]()
+    val hit = new java.util.BitSet(size)
+    repos.iterator.foreach(r => if (seen.add(r)) collectTouched(r, hit))
+    Iterator.iterate(hit.nextSetBit(0))(b => hit.nextSetBit(b + 1)).takeWhile(_ >= 0)
+  }
+
   /** Set the ORIGINAL file index bit for every interval containing `r`. */
-  def collectTouched(r: String, hit: java.util.BitSet): Unit = {
+  private def collectTouched(r: String, hit: java.util.BitSet): Unit = {
     var lo = 0; var hi = sMin.length - 1; var pos = -1
     while (lo <= hi) {
       val mid = (lo + hi) >>> 1
@@ -33,6 +42,13 @@ final class RepoIntervalIndex private (
 }
 
 object RepoIntervalIndex {
+
+  /** The elements of `items`, in order, whose `range` contains any of
+    * `repos` — driver-side pruning through one index over `items`. */
+  def select[A](items: Seq[A], repos: Iterable[String])(range: A => (String, String)): Seq[A] = {
+    val v = items.toIndexedSeq
+    apply(v.map(range)).touched(repos).map(v).toSeq
+  }
 
   /** Build from per-file (minRepo, maxRepo) ranges, in manifest order. */
   def apply(ranges: Seq[(String, String)]): RepoIntervalIndex = {

@@ -278,10 +278,11 @@ object EngineE2E {
   /** q40 — the SQL data source over a MERGE-ON-READ snapshot: read the
     * shared replayed lake through `spark.read.format("graft")` with a
     * repo-subset predicate. Delete files are live, so this certifies the
-    * RESOLVING relation end-to-end — manifest file pruning from V1
-    * filters, row-filter pushdown below the delete anti-resolution, and
-    * rename-free schema binding — against an oracle that knows only the
-    * LWW final state. */
+    * RESOLVING relation end-to-end — its engine plan (substituted by
+    * [[graft.sources.GraftExtensions]] in an extension session, run by
+    * the V1 `buildScan` otherwise), manifest file pruning from the
+    * pushed-down predicate, and rename-free schema binding — against an
+    * oracle that knows only the LWW final state. */
   def q40SqlSourceMor(spark: SparkSession, dir: String): DataFrame = {
     val (lake, _) = replayedLake(spark, dir)
     spark.read.format("graft").load(lake.root)

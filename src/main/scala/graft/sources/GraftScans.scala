@@ -10,7 +10,9 @@ import org.apache.spark.sql.types.StructType
 
 import graft.lake.LakeTable
 
-/** Manifest-entry-backed parquet scans for the ENGINE's own read paths.
+/** Manifest-entry-backed parquet scans: every read of a lake table —
+  * the engine's own paths ([[LakeTable.scan]]) and the `format("graft")`
+  * bound relation — plans over [[GraftEntriesFileIndex]].
   *
   * `spark.read.parquet(paths…)` builds an `InMemoryFileIndex`, which
   * issues one driver-side status/list call per path at planning — at
@@ -20,10 +22,8 @@ import graft.lake.LakeTable
   * per-file `bytes` (collected by the footer-stats pass at write time,
   * the Iceberg `file_size_in_bytes` idea), so planning a scan costs
   * ZERO filesystem metadata calls, and `listFiles` additionally prunes
-  * entries against the query's data filters with the same per-column
-  * bounds logic as every other engine read path ([[GraftPruning]]) —
-  * manifest-level file skipping on engine-internal scans, not just the
-  * `format("graft")` face.
+  * entries against the query's data filters from the manifest's
+  * per-column bounds ([[GraftPruning]]).
   *
   * The scan itself is a normal `FileSourceScanExec` over
   * [[ParquetFileFormat]]: vectorized reader, whole-stage codegen,
@@ -33,23 +33,30 @@ object GraftScans {
   /** Scan `entries` under `schema`. */
   def scanEntries(spark: SparkSession, root: String,
       entries: Seq[LakeTable#FileEntry], schema: StructType): DataFrame =
-    spark.baseRelationToDataFrame(HadoopFsRelation(
-      location = new GraftEntriesFileIndex(spark, root, entries),
-      partitionSchema = new StructType(),
+    spark.baseRelationToDataFrame(relation(spark, root, entries,
       // nullable, matching DataFrameReader.schema() semantics: files
       // written before a rename/promotion legitimately miss columns, and
       // the vectorized reader hard-errors on a missing REQUIRED column
-      dataSchema = StructType(schema.fields.map(_.copy(nullable = true))),
+      StructType(schema.fields.map(_.copy(nullable = true))), Map.empty))
+
+  /** Parquet relation over `entries` under `dataSchema`, passing the
+    * reader `options` a caller was given. */
+  def relation(spark: SparkSession, root: String, entries: Seq[LakeTable#FileEntry],
+      dataSchema: StructType, options: Map[String, String]): HadoopFsRelation =
+    HadoopFsRelation(
+      location = new GraftEntriesFileIndex(root, entries),
+      partitionSchema = new StructType(),
+      dataSchema = dataSchema,
       bucketSpec = None,
       fileFormat = new ParquetFileFormat(),
-      options = Map.empty)(spark))
+      options = options)(spark)
 }
 
 /** [[FileIndex]] over an explicit manifest-entry subset: statuses from
   * recorded bytes (zero FS calls), planning-time pruning from manifest
   * stats. Snapshot-stable by construction — entries are immutable. */
-class GraftEntriesFileIndex(spark: SparkSession, root: String,
-    entries: Seq[LakeTable#FileEntry]) extends FileIndex {
+class GraftEntriesFileIndex(root: String, entries: Seq[LakeTable#FileEntry])
+    extends FileIndex {
 
   private val rootHPath = new HPath(root)
 

@@ -1,12 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, EqualTo => CEqualTo, Expression, GreaterThan => CGreaterThan, GreaterThanOrEqual => CGreaterThanOrEqual, In => CIn, InSet => CInSet, LessThan => CLessThan, LessThanOrEqual => CLessThanOrEqual, Literal, Or => COr}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
@@ -19,32 +15,31 @@ import graft.lake.LakeTable
   * USING graft`) and the DataFrame reader see snapshot-consistent table
   * state with MANIFEST-driven file pruning.
   *
-  * Two execution paths, chosen per snapshot:
+  * Every snapshot reads through ONE manifest-backed file index,
+  * [[GraftEntriesFileIndex]], whose `listFiles` answers from the
+  * MANIFEST — never a directory listing (at 100 TB / object storage, LIST
+  * calls and their eventual-consistency hazards are the thing a table
+  * format exists to remove). Catalyst hands `listFiles` the query's data
+  * filters, so `WHERE repo = 'x'` or `WHERE seq > w` prunes to the O(1)
+  * overlapping files at PLANNING time using the manifest's per-file
+  * `[minRepo, maxRepo]` / `[minSeq, maxSeq]` stats, and the same
+  * predicates continue down into parquet row-group stats and bloom
+  * filters (`PushedFilters` in the explain). [[LakeTable.needsResolution]]
+  * picks the relation:
   *
-  *  - **Bound scan** (no live merge-on-read delete files, no active
-  *    column-rename mapping): the snapshot binds straight to Spark's
-  *    vectorized parquet reader via [[HadoopFsRelation]] + a
-  *    [[GraftFileIndex]] whose `listFiles` answers from the MANIFEST —
-  *    never a directory listing (at 100 TB / object storage, LIST calls
-  *    and their eventual-consistency hazards are the thing a table
-  *    format exists to remove). Catalyst hands `listFiles` the query's
-  *    data filters, so `WHERE repo = 'x'` or `WHERE seq > w` prunes to
-  *    the O(1) overlapping files at PLANNING time using the manifest's
-  *    per-file `[minRepo, maxRepo]` / `[minSeq, maxSeq]` stats, and the
-  *    same predicates continue down into parquet row-group stats and
-  *    bloom filters (`PushedFilters` in the explain). Whole-stage
-  *    codegen, column pruning and AQE all apply — it is a normal
-  *    `FileSourceScanExec` whose file list came from the snapshot.
+  *  - no live merge-on-read delete files and no active rename mapping:
+  *    the snapshot binds straight to Spark's vectorized parquet reader,
+  *    a [[HadoopFsRelation]] over the index — a normal
+  *    `FileSourceScanExec` whose file list came from the snapshot;
   *
-  *  - **Resolving scan** (delete files or a live rename mapping
-  *    present): correctness needs the equality-delete anti-resolution /
-  *    rename coalesce that a bare file scan cannot express, so the
-  *    relation evaluates [[LakeTable.resolveDeletes]] over the
-  *    manifest-pruned file set (a [[PrunedFilteredScan]]; Spark
-  *    re-applies every filter above it, so pruning here is purely an IO
-  *    reduction and cannot change results). Compaction/consolidation
-  *    return the table to the bound-scan path — the scheduler's
-  *    maintenance cadence directly buys back SQL scan speed.
+  *  - otherwise a [[GraftResolvingRelation]], whose one plan is the
+  *    engine's own read ([[LakeTable.scan]]: equality-delete resolution /
+  *    rename coalesce over index-backed scans). [[GraftExtensions]]
+  *    substitutes that plan during analysis; without it the V1
+  *    `buildScan` runs the same plan under the pushed filters.
+  *    Compaction/consolidation return the table to the bound relation —
+  *    the scheduler's maintenance cadence directly buys back SQL scan
+  *    speed.
   *
   * Options: `versionAsOf` (snapshot time travel, ≙ Iceberg
   * `VERSION AS OF`). Incremental consumption needs no option: a
@@ -69,8 +64,8 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
     ci.get("changefeed").exists(_.toBoolean)
 
   private def streamSchema(spark: SparkSession, ci: Map[String, String]): StructType = {
-    val t = new LakeTable(ci("path"), spark).currentSnapshot.map(_.schema)
-      .getOrElse(graft.core.Model.lakeSchemaV1)
+    val lake = new LakeTable(ci("path"), spark)
+    val t = lake.schemaOf(lake.currentSnapshot)
     if (isCdf(ci)) LakeTable.changeFeedSchema(t) else t
   }
 
@@ -184,118 +179,41 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
       return new GraftMergeRelation(spark, path,
         mergeOnRead = ci.get("mergeonread").exists(_.toBoolean))
     val lake = new LakeTable(path, spark)
-    val version = ci.get("versionasof").map(_.toLong)
-    val snap = version.map(lake.snapshot).orElse(lake.currentSnapshot)
+    val snap = ci.get("versionasof").map(v => lake.snapshot(v.toLong))
+      .orElse(lake.currentSnapshot)
     snap match {
-      case None =>
-        // uninitialised table root: empty relation under the engine schema
-        new GraftResolvingRelation(spark, lake, None)
-      case Some(s) =>
-        // a rename mapping is ACTIVE only if some stored old name still
-        // maps onto a live column (same filter as LakeTable.readDataFiles)
-        val renamesActive = s.renames.exists { case (o, n) =>
-          s.schema.fieldNames.contains(n) && !s.schema.fieldNames.contains(o) }
-        if (s.deleteFiles.isEmpty && !renamesActive)
-          HadoopFsRelation(
-            location = new GraftFileIndex(lake, s.version),
-            partitionSchema = new StructType(),
-            dataSchema = s.schema,
-            bucketSpec = None,
-            fileFormat = new ParquetFileFormat(),
-            options = parameters)(spark)
-        else new GraftResolvingRelation(spark, lake, Some(s.version))
+      case Some(s) if !lake.needsResolution(s, s.schema) =>
+        GraftScans.relation(spark, lake.root, s.dataFiles, s.schema, parameters)
+      // an uninitialised table root reads empty under the engine schema
+      case _ => new GraftResolvingRelation(spark, lake.schemaOf(snap), lake.scan(snap))
     }
   }
 }
 
-/** Manifest-backed [[FileIndex]]: the file list, per-file sizes and the
-  * planning-time pruning all come from the pinned snapshot's manifest —
-  * zero directory listings, stable under concurrent commits (snapshot
-  * isolation: later commits write new manifests, never mutate this one's
-  * files). `listFiles` prunes with the same per-column bounds logic as
-  * the engine's own read paths ([[GraftPruning]]). */
-class GraftFileIndex(lake: LakeTable, version: Long)
-    extends FileIndex {
+/** Relation for a snapshot whose state a bare file scan cannot reproduce
+  * (live merge-on-read delete files / active rename mapping) — and for an
+  * uninitialised table (empty). `plan` is the engine read of the
+  * snapshot ([[LakeTable.scan]]), under `schema`. */
+class GraftResolvingRelation(spark: SparkSession, override val schema: StructType,
+    plan: => DataFrame) extends BaseRelation with PrunedFilteredScan {
 
-  private val snap = lake.snapshot(version)
-  private val rootHPath = new HPath(lake.root)
-
-  /** FileStatus rows synthesized from the MANIFEST's recorded per-file
-    * bytes — ZERO filesystem status calls at index build (at 10^5 files
-    * on object storage a per-file HEAD here would be the dominant query
-    * planning cost; Iceberg stores `file_size_in_bytes` for the same
-    * reason). Sizes feed Catalyst's scan statistics, so a well-pruned
-    * scan can still end up on the broadcast side of a join. */
-  private lazy val statuses: Map[String, FileStatus] =
-    snap.dataFiles.map { f =>
-      f.path -> new FileStatus(f.bytes, false, 1, f.bytes, 0L, new HPath(rootHPath, f.path))
-    }.toMap
-
-  override def rootPaths: Seq[HPath] = Seq(rootHPath)
-
-  override def partitionSchema: StructType = new StructType()
-
-  override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val pruned = GraftPruning.pruneCatalyst(snap.dataFiles, dataFilters)
-    Seq(PartitionDirectory(InternalRow.empty,
-      pruned.map(f => statuses(f.path)).toArray))
-  }
-
-  override def inputFiles: Array[String] =
-    snap.dataFiles.map(f => new HPath(rootHPath, f.path).toString).toArray
-
-  override def refresh(): Unit = ()
-
-  override def sizeInBytes: Long = statuses.values.map(_.getLen).sum
-}
-
-/** Fallback relation for snapshots whose state a bare file scan cannot
-  * reproduce (live merge-on-read delete files / active rename mapping) —
-  * and for an uninitialised table (`version = None`, empty). Builds the
-  * engine's resolving read over the manifest-pruned file subset; Spark
-  * treats every filter as unhandled (the [[BaseRelation]] default), so
-  * the translation below is pure IO reduction. */
-class GraftResolvingRelation(spark: SparkSession, lake: LakeTable,
-    version: Option[Long]) extends BaseRelation with PrunedFilteredScan {
-
-  private val snap = version.map(lake.snapshot)
-
-  /** The engine's Catalyst plan for this snapshot (delete resolution +
-    * rename coalesce over manifest-backed scans) — what
-    * [[GraftResolveMorRule]] substitutes for this relation when the
-    * session runs with [[GraftExtensions]], keeping the whole read
-    * columnar. None for an uninitialised table. */
-  private[sources] def resolvedPlan: Option[org.apache.spark.sql.DataFrame] =
-    version.map(v => lake.read(Some(v)))
+  /** The relation's only plan, built once: delete resolution + rename
+    * coalesce over manifest-backed scans. [[GraftResolveMorRule]]
+    * substitutes it for this relation when the session runs with
+    * [[GraftExtensions]], keeping the whole read columnar; [[buildScan]]
+    * evaluates it otherwise. */
+  private[sources] lazy val resolvedPlan: DataFrame = plan
 
   override def sqlContext: SQLContext = spark.sqlContext
 
-  override def schema: StructType =
-    snap.map(_.schema).getOrElse(graft.core.Model.lakeSchemaV1)
-
+  /** [[resolvedPlan]] under the translatable filters: Catalyst pushes them
+    * down to the index-backed scans, where they prune files and row
+    * groups. Spark re-applies every filter above (the [[BaseRelation]]
+    * default), so an untranslatable one costs IO, never correctness. */
   override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] = {
-    val df = snap match {
-      case None => emptyDf
-      case Some(s) =>
-        val pruned = GraftPruning.pruneSource(s.dataFiles, filters)
-        if (pruned.isEmpty) emptyDf
-        else {
-          val base = lake.readDataFiles(pruned, s.schema, s.renames)
-          // row filters commute with delete resolution (a row's survival
-          // depends only on the delete files, never on other rows), so
-          // push the translatable ones below it — parquet sees them
-          val filtered = GraftPruning.toColumns(filters)
-            .foldLeft(base)((d, c) => d.filter(c))
-          lake.resolveDeletes(filtered, s, scanned = Some(pruned))
-        }
-    }
-    df.select(requiredColumns.toSeq.map(col): _*).rdd
-  }
-
-  private def emptyDf: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+      filters: Array[Filter]): RDD[Row] =
+    GraftPruning.toColumns(filters.toSeq).foldLeft(resolvedPlan)(_.filter(_))
+      .select(requiredColumns.toSeq.map(col): _*).rdd
 }
 
 /** The SQL MERGE face (the reference's Athena-over-Glue-catalog hand-off
@@ -328,13 +246,16 @@ class GraftMergeRelation(spark: SparkSession, root: String,
 
   override def sqlContext: SQLContext = spark.sqlContext
 
-  override val schema: StructType = new LakeTable(root, spark)
-    .currentSnapshot.map(_.schema).getOrElse(graft.core.Model.lakeSchemaV1)
+  override val schema: StructType = {
+    val lake = new LakeTable(root, spark)
+    lake.schemaOf(lake.currentSnapshot)
+  }
 
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
     val lake = new LakeTable(root, spark)
-    new GraftResolvingRelation(spark, lake, lake.currentVersion)
+    val head = lake.currentSnapshot
+    new GraftResolvingRelation(spark, lake.schemaOf(head), lake.scan(head))
       .buildScan(requiredColumns, filters)
   }
 
@@ -364,14 +285,6 @@ class GraftMergeRelation(spark: SparkSession, root: String,
 object GraftPruning {
 
   type Entry = LakeTable#FileEntry
-
-  // generic in the element type: callers hold the PATH-DEPENDENT
-  // `lake.FileEntry` and the engine read paths require it back
-  def pruneCatalyst[E <: Entry](files: Seq[E], filters: Seq[Expression]): Seq[E] =
-    files.filter(f => filters.forall(e => mayMatchCatalyst(e, f)))
-
-  def pruneSource[E <: Entry](files: Seq[E], filters: Seq[Filter]): Seq[E] =
-    files.filter(f => filters.forall(e => mayMatchSource(e, f)))
 
   // ---- bounds checks over one file's manifest stats --------------------
   // Unknown seq stats are stored as the [Long.MinValue, Long.MaxValue]
@@ -456,23 +369,11 @@ object GraftPruning {
     case _ => true
   }
 
-  // ---- V1 sources.Filter face (the resolving-relation path) ------------
+  // ---- V1 sources.Filter face (the resolving relation's buildScan) ------
 
-  private[sources] def mayMatchSource(e: Filter, f: Entry): Boolean = e match {
-    case And(l, r) => mayMatchSource(l, f) && mayMatchSource(r, f)
-    case Or(l, r) => mayMatchSource(l, f) || mayMatchSource(r, f)
-    case EqualTo(a, v) => eqB(f, a, v)
-    case GreaterThan(a, v) => gtB(f, a, v)
-    case GreaterThanOrEqual(a, v) => geB(f, a, v)
-    case LessThan(a, v) => ltB(f, a, v)
-    case LessThanOrEqual(a, v) => leB(f, a, v)
-    case In(a, vs) => vs.exists(v => eqB(f, a, v))
-    case _ => true
-  }
-
-  /** Best-effort translation of V1 filters back to Columns, for row-level
-    * pushdown inside the resolving relation's inner plan. Untranslatable
-    * filters are simply skipped — Spark re-applies all of them above. */
+  /** Best-effort translation of V1 filters back to Columns, applied on
+    * the resolving relation's plan. Untranslatable filters are simply
+    * skipped — Spark re-applies all of them above. */
   def toColumns(filters: Seq[Filter]): Seq[Column] = filters.flatMap(toColumn)
 
   private def toColumn(f: Filter): Option[Column] = f match {

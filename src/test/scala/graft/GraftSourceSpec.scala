@@ -452,6 +452,70 @@ class GraftSourceSpec extends AnyFunSuite {
     spark.sql("DROP VIEW merge_src")
   }
 
+  test("a sink batchId containing '/' is refused before any write outside the root") {
+    val parent = TestSpark.tmpDir("srclabel")
+    val root = java.nio.file.Paths.get(parent, "lake").toString
+    val victim = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(parent, "victim"))
+    val sentinel = java.nio.file.Files.writeString(victim.resolve("sentinel"), "keep")
+    val err = intercept[IllegalArgumentException] {
+      Seq(("r1", "p1", 1L)).toDF("repo", "path", "seq").write.format("graft")
+        .option("batchId", "a/../../victim").save(root)
+    }
+    assert(err.getMessage.contains("a/../../victim"))
+    assert(java.nio.file.Files.readString(sentinel) == "keep")
+  }
+
+  /** The resolving relation `format("graft")` binds for `root`'s head. */
+  private def resolvingRelation(root: String): GraftResolvingRelation =
+    new GraftDataSource().createRelation(spark.sqlContext, Map("path" -> root))
+      .asInstanceOf[GraftResolvingRelation]
+
+  test("the resolving relation builds its plan once") {
+    val lake = new LakeTable(TestSpark.tmpDir("srconce"), spark)
+    val applier = new CdcApplier(lake, spark, mergeOnRead = true)
+    val ev = canonical(1000, 37L)
+    val mx = ev.agg(max($"seq")).head().getLong(0)
+    applier.applyBatch(ev.filter($"seq" <= mx / 2), "once-0")
+    applier.applyBatch(ev.filter($"seq" > mx / 2), "once-1")
+    val rel = resolvingRelation(lake.root)
+    assert(rel.resolvedPlan eq rel.resolvedPlan)
+  }
+
+  test("V1 buildScan (no extension rule) on merge-on-read and renamed snapshots matches a filtered engine read") {
+    import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, StringContains}
+    val mor = new LakeTable(TestSpark.tmpDir("srcv1mor"), spark)
+    val morApp = new CdcApplier(mor, spark, mergeOnRead = true)
+    val ev = canonical(2000, 41L)
+    val mx = ev.agg(max($"seq")).head().getLong(0)
+    morApp.applyBatch(ev.filter($"seq" <= mx / 2), "v1-0")
+    morApp.applyBatch(ev.filter($"seq" > mx / 2), "v1-1")
+    assert(mor.currentSnapshot.get.deleteFiles.nonEmpty)
+    val ren = new LakeTable(TestSpark.tmpDir("srcv1ren"), spark)
+    new CdcApplier(ren, spark).applyBatch(canonical(1500, 43L), "v1-r")
+    ren.renameColumn("lang", "language")
+    Seq(mor -> "lang", ren -> "language").foreach { case (lake, langCol) =>
+      val cols = Array("repo", "path", "seq", langCol)
+      val all = lake.read()
+      val repo = all.agg(min($"repo")).head().getString(0)
+      val w = all.agg(expr("percentile_approx(seq, 0.5)")).head().getLong(0)
+      def viaBuildScan(filters: Filter*): Set[Seq[Any]] =
+        resolvingRelation(lake.root).buildScan(cols, filters.toArray)
+          .collect().map(_.toSeq).toSet
+      def expected(df: DataFrame): Set[Seq[Any]] =
+        df.select(cols.map(col).toIndexedSeq: _*).collect().map(_.toSeq).toSet
+      val byRepo = expected(all.filter($"repo" === repo))
+      assert(byRepo.nonEmpty)
+      assert(viaBuildScan(EqualTo("repo", repo)) == byRepo)
+      val bySeq = expected(all.filter($"seq" > w))
+      assert(bySeq.nonEmpty && bySeq.size < expected(all).size)
+      assert(viaBuildScan(GreaterThan("seq", w)) == bySeq)
+      // an untranslatable filter narrows nothing here (Spark re-applies
+      // every filter above the relation) and never drops rows
+      assert(viaBuildScan(StringContains("path", "1")) == expected(all))
+      assert(viaBuildScan(EqualTo("repo", repo), StringContains("path", "1")) == byRepo)
+    }
+  }
+
   test("empty table root yields an empty relation under the engine schema") {
     val lake = new LakeTable(TestSpark.tmpDir("srcempty"), spark)
     val df = readGraft(lake.root)

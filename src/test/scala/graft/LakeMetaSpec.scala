@@ -140,7 +140,7 @@ class LakeMetaSpec extends AnyFunSuite {
     val hidden = java.nio.file.Paths.get(lake.root, "data-hidden")
     java.nio.file.Files.move(dataDir, hidden)
     try {
-      val ix = new graft.sources.GraftFileIndex(lake, snap.version)
+      val ix = new graft.sources.GraftEntriesFileIndex(lake.root, snap.dataFiles)
       assert(ix.sizeInBytes == snap.dataFiles.map(_.bytes).sum)
       val listed = ix.listFiles(Nil, Nil).flatMap(_.files)
       assert(listed.size == snap.dataFiles.size)
@@ -463,13 +463,18 @@ class LakeMetaSpec extends AnyFunSuite {
     val refRows = lake.read().select($"repo", $"path", $"seq").collect()
       .filter(r => keySet.contains((r.getString(0), r.getString(1)))).map(_.toSeq).toSet
     assert(gotRows == refRows && gotRows.nonEmpty)
-    // and the small-set OR-chain path agrees on a subset it CAN express
-    val fewKeys = keys.take(20).distinct
-    val (fewDf, _, _) = lake.lookupKeys(fewKeys)
-    val fewSet = fewKeys.toSet
-    assert(fewDf.select($"repo", $"path", $"seq").collect().map(_.toSeq).toSet ==
-      refRows.filter(r => fewSet.contains((r.head.asInstanceOf[String],
-        r(1).asInstanceOf[String]))))
+    // and the small-set OR-chain path agrees on a subset it CAN express;
+    // 63/64/65 keys straddle LookupBulkThreshold (OR-chain up to 64 keys,
+    // semi-join past it)
+    Seq(20, 63, 64, 65).foreach { n =>
+      val fewKeys = keys.distinct.take(n)
+      assert(fewKeys.size == n)
+      val (fewDf, _, _) = lake.lookupKeys(fewKeys)
+      val fewSet = fewKeys.toSet
+      assert(fewDf.select($"repo", $"path", $"seq").collect().map(_.toSeq).toSet ==
+        refRows.filter(r => fewSet.contains((r.head.asInstanceOf[String],
+          r(1).asInstanceOf[String]))), s"$n keys")
+    }
   }
 
   test("merge-on-read point lookup prunes delete files and broadcasts the delete side") {

@@ -16,8 +16,8 @@ object TestSpark {
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "10m")
       .config("spark.sql.session.timeZone", "UTC")
       // the optional Catalyst rule (columnar MoR through format("graft"))
-      // runs in every suite; the V1 fallback path keeps its own coverage
-      // via GraftPruning/relation unit assertions
+      // runs in every suite; GraftSourceSpec covers the V1 fallback by
+      // calling the resolving relation's buildScan directly
       .config("spark.sql.extensions", "graft.sources.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
