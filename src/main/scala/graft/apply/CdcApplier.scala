@@ -13,7 +13,8 @@ import graft.lake.LakeTable
   *
   * parse → validate → repair (upstream) → offsets fence →
   * manifest-pruned copy-on-write MERGE (which subsumes the in-batch LWW
-  * reduce) → atomic snapshot commit.
+  * reduce) → atomic snapshot commit of (files dropped, files added)
+  * against the snapshot the batch read ([[LakeTable.commit]]).
   *
   * Scale design decisions (for the 1000-executor / 10^10-event case):
   *  - ONE data shuffle for the MERGE (plus an optional range-cluster
@@ -56,24 +57,15 @@ import graft.lake.LakeTable
 object CdcApplier {
 
   /** The lake's key columns — single source of truth for the standalone
-    * reduces AND the applyBatch merge (diverging copies would silently
-    * group by different keys). */
-  private[apply] val keyCols = Seq("repo", "path")
-
-  /** Standalone in-batch LWW dedup (A3) — exposed as an operator; the
-    * apply path folds this into the merge aggregate instead. */
-  def lwwReduce(events: DataFrame): DataFrame = {
-    val valueCols = events.columns.filterNot(keyCols.contains).toSeq
-    events.groupBy(keyCols.map(col): _*)
-      .agg(max_by(struct(valueCols.map(col): _*),
-        struct(col("seq"), col("commit"))).as("r"))
-      .select(keyCols.map(col) ++ valueCols.map(c => col(s"r.$c").as(c)): _*)
-  }
+    * reduce, its test-side reference form AND the applyBatch merge
+    * (diverging copies would silently group by different keys). */
+  private[graft] val keyCols = Seq("repo", "path")
 
   /** Two-phase salted LWW reduce for adversarial hot keys: phase 1
     * reduces (key, salt) subgroups, phase 2 merges the ≤`salts` survivors
-    * per key. Result ≡ [[lwwReduce]] (property-tested + oracle-gated in
-    * q28). */
+    * per key. Result ≡ the plain one-phase per-key LWW reduce
+    * (property-tested against the test-side reference form + oracle-gated
+    * in q28). */
   def saltedLwwReduce(events: DataFrame, salts: Int): DataFrame = {
     val valueCols = events.columns.filterNot(keyCols.contains).toSeq
     val salted = events.withColumn("_salt",
@@ -192,7 +184,7 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
       val statRows = fusedRows.filter(!_._1)
       if (statRows.isEmpty) { // nothing new: idempotent no-op path
         return snap.map(_.version).getOrElse(
-          lake.commit(batchId, committed, graft.core.Model.lakeSchemaV1, Nil, Nil))
+          lake.commit(batchId, committed, graft.core.Model.lakeSchemaV1, Nil, Nil, None))
       }
       val newOffsets = committed ++ statRows.groupBy(_._2).map { case (p, rs) =>
         p -> math.max(rs.map(_._3).max, committed.getOrElse(p, Long.MinValue)) }
@@ -208,11 +200,9 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
         curSchema.fields.filterNot(f => metaCols.contains(f.name)) ++
           eventValueFields.filterNot(f => curSchema.fieldNames.contains(f.name)))
 
-      // ---- touched vs retained files, from the fused index set. ----
-      val (touched, retained) = snap.map { s =>
-        val parts = s.files.zipWithIndex.partition { case (_, i) => touchedIdx(i) }
-        (parts._1.map(_._1), parts._2.map(_._1))
-      }.getOrElse((Nil, Nil))
+      // ---- touched files, from the fused index set. ----
+      val touched = snap.toSeq.flatMap(_.files.zipWithIndex
+        .collect { case (f, i) if touchedIdx(i) => f })
 
       if (mergeOnRead)
         morMerge(fenced, snap, evolved, touched, batchId, newOffsets,
@@ -224,19 +214,19 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
           semiJoinBase = (upserts + deletes) * 8 <
             snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L))
       else
-        cowMerge(fenced, snap, evolved, touched, retained, batchId, newOffsets,
+        cowMerge(fenced, snap, evolved, touched, batchId, newOffsets,
           upserts, deletes, lineageExtras)
     } finally fenced.unpersist()
   }
 
   // ---- 5+6 (copy-on-write): union touched-file rows with the batch,
   // ONE LWW hash-agg (no join, one shuffle; subsumes in-batch dedup),
-  // rewrite touched files range-clustered, retain the rest by
-  // reference. Touched merge-on-read delete files are never rewritten
-  // here — they stay retained until a major compaction folds them. ----
+  // rewrite touched data files range-clustered and commit them as
+  // dropped; everything else stays by reference. Touched merge-on-read
+  // delete files are never rewritten here — they stay until a major
+  // compaction folds them. ----
   private def cowMerge(fenced: DataFrame, snap: Option[lake.Snapshot],
-      evolved: StructType, touched: Seq[lake.FileEntry],
-      retained: Seq[lake.FileEntry], batchId: String,
+      evolved: StructType, touched: Seq[lake.FileEntry], batchId: String,
       newOffsets: Map[String, Long], upserts: Long, deletes: Long,
       lineageExtras: () => Map[String, Long]): Long = {
     val touchedData = touched.filter(_.kind == "data")
@@ -273,30 +263,24 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
     val newFiles = lake.writeDataFiles(
       LakeTable.clustered(merged, touchedData.map(_.rows).sum + upserts, clusterPartitions),
       f"b$batchId%s-v")
-    // delete files are kept whether touched or not (their entries may
-    // target untouched files' rows)
-    val keep = retained ++ touched.filter(_.kind == "delete")
-    // exact on a pure-CoW table; on a mixed table retained MoR files may
-    // still hold superseded versions, so the count is an upper bound
+    // exact on a pure-CoW table; on a mixed table untouched MoR files
+    // may still hold superseded versions, so the count is an upper bound
     // until the next major compaction
-    val rowsBefore = snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L)
-    val rowsAfter = (keep ++ newFiles).filter(_.kind == "data").map(_.rows).sum
-    lake.commit(batchId, newOffsets, evolved, keep, newFiles, Map(
+    val rowsAfter = snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L) -
+      touchedData.map(_.rows).sum + newFiles.map(_.rows).sum
+    lake.commit(batchId, newOffsets, evolved, touchedData, newFiles, snap, Map(
       "upserts" -> upserts, "deletes" -> deletes,
-      "rowsBefore" -> rowsBefore, "rowsAfter" -> rowsAfter) ++ lineageExtras(),
-      // anchor the commit's rewrite intent to the snapshot this batch
-      // READ (merged base rows from) — a concurrent maintenance commit
-      // between that read and this commit rebases instead of clobbering
-      baseVersion = snap.map(_.version))
+      "rowsBefore" -> snap.map(_.liveRows).getOrElse(0L),
+      "rowsAfter" -> rowsAfter) ++ lineageExtras())
   }
 
   // ---- 5+6 (merge-on-read): decide true LWW winners from the KEY
   // COLUMNS of touched files (a columnar-pruned scan — the content
   // column, which dominates file bytes, is never read), then write only
   // the winning rows plus key-only equality-delete entries; nothing is
-  // rewritten. Existing delete entries and DELETE tombstones participate
-  // as base VERSIONS so a stale event can neither resurrect a deleted
-  // key nor shadow a newer base row. ----
+  // rewritten, so the commit drops no file. Existing delete entries and
+  // DELETE tombstones participate as base VERSIONS so a stale event can
+  // neither resurrect a deleted key nor shadow a newer base row. ----
   private def morMerge(fenced: DataFrame, snap: Option[lake.Snapshot],
       evolved: StructType, touched: Seq[lake.FileEntry], batchId: String,
       newOffsets: Map[String, Long], upserts: Long, deletes: Long,
@@ -405,16 +389,13 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
       // null), so its row total is exactly the old newLive counter
       val newLive = entriesKinded.filter(_._1 == "data").map(_._2.rows).sum
       val oldLive = entriesKinded.filter(_._1 == "dlive").map(_._2.rows).sum
-      // live-count chain: previous commit's exact rowsAfter (file sums
-      // would count superseded versions still sitting in MoR files)
-      val rowsBefore = snap.map(s =>
-        s.lineage.getOrElse("rowsAfter", s.dataFiles.map(_.rows).sum)).getOrElse(0L)
-      val rowsAfter = rowsBefore + newLive - oldLive
-      lake.commit(batchId, newOffsets, evolved,
-        retain = snap.map(_.files).getOrElse(Nil), added = entries,
+      // live-count chain from the base's exact live rows (file sums would
+      // count superseded versions still sitting in MoR files)
+      val rowsBefore = snap.map(_.liveRows).getOrElse(0L)
+      lake.commit(batchId, newOffsets, evolved, Nil, entries, snap,
         Map("upserts" -> upserts, "deletes" -> deletes,
-          "rowsBefore" -> rowsBefore, "rowsAfter" -> rowsAfter) ++ lineageExtras(),
-        baseVersion = snap.map(_.version))
+          "rowsBefore" -> rowsBefore, "rowsAfter" -> (rowsBefore + newLive - oldLive)) ++
+          lineageExtras())
     } finally { act.unpersist(); () }
   }
 }

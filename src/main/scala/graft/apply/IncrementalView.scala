@@ -26,11 +26,12 @@ import graft.lake.LakeTable
   *   1. `delta(feed)` — one map-side-combined aggregate over the feed's
   *      ±weighted before/after images; output is one row per TOUCHED
   *      group, never per table row.
-  *   2. `maintain(...)` — point-reads ONLY the touched groups' current
-  *      rows from the view's own lake table ([[LakeTable.lookupKeys]],
-  *      manifest range pruning, when the touched-group set is
-  *      driver-small; a broadcast left-semi scan otherwise), adds the
-  *      deltas, and routes the result back through [[CdcApplier]]:
+  *   2. `maintain(...)` — reads ONLY the touched groups' current rows
+  *      from the view's own lake table (the lake's distributed key-set
+  *      read: manifest files pruned by the touched repos, rows
+  *      semi-joined to the touched keys; the key set never reaches the
+  *      driver), adds the deltas, and routes the result back through
+  *      [[CdcApplier]]:
   *      upserts for live groups, DELETEs for groups whose row count
   *      reaches zero. The view is itself a graft table, so it inherits
   *      snapshots, time travel, exactly-once batch fencing and its own
@@ -146,38 +147,23 @@ final class IncrementalView(
   def read(viewLake: LakeTable, version: Option[Long] = None): DataFrame =
     viewLake.read(version).select(gcols ++ aggCols.map(col): _*)
 
-  /** One O(churn) incremental refresh: feed → group deltas → point-read
+  /** One O(churn) incremental refresh: feed → group deltas → read
     * touched groups → add → apply as CDC batch. `seq` must be monotone
     * across maintain calls (use the source feed's end version) — it is
     * the view lake's exactly-once fence, so a replayed refresh is a
     * no-op. Returns the view lake's new version. */
   def maintain(viewApplier: CdcApplier, viewLake: LakeTable, feed: DataFrame,
-      batchId: String, seq: Long, maxPointKeys: Int = 8192): Long = {
+      batchId: String, seq: Long): Long = {
     // local persist, released before return: a long-running streaming
     // maintainer calls this once per micro-batch, so a session-lifetime
     // cache registry would grow without bound
     val d = delta(feed).persist()
     try {
       val touched = d.select(viewKeyRepo.as("repo"), viewKeyPath.as("path"))
-      // touched-group count is O(churn's group set) — tiny relative to
-      // the table; counting it is one metadata-scale job over the
-      // cached delta
-      val nTouched = touched.count()
-      val current: DataFrame =
-        if (viewLake.currentSnapshot.isEmpty || nTouched == 0) {
-          d.limit(0) // empty, same shape as a delta row set
-        } else if (nTouched <= maxPointKeys) {
-          // manifest-range-pruned point reads: O(touched groups) of data
-          val keys = touched.collect().map(r => (r.getString(0), r.getString(1))).toSeq
-          val (rows, _, _) = viewLake.lookupKeys(keys)
-          rows.select(gcols ++ aggCols.map(col): _*)
-        } else {
-          // churn so wide the point path stops paying: one scan,
-          // semi-joined to the (still broadcastable) touched-key set
-          viewLake.read()
-            .join(broadcast(touched), Seq("repo", "path"), "left_semi")
-            .select(gcols ++ aggCols.map(col): _*)
-        }
+      val current: DataFrame = viewLake.currentSnapshot match {
+        case Some(s) => viewLake.stateRestricted(s, touched).select(gcols ++ aggCols.map(col): _*)
+        case None => d.limit(0) // empty, same shape as a delta row set
+      }
       val merged = regroup(current.unionByName(d))
       val events = asViewEvents(merged,
         when(col("n_rows") <= 0, lit(Op.Delete)).otherwise(lit(Op.Update)),

@@ -24,8 +24,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   data/<name>.parquet        — immutable data files
   *   meta/v<N>.json             — snapshot manifest N (atomic-rename created)
   *
-  * A manifest carries: schema, live file list with per-file key stats
-  * (min/max of repo and of the composite key), the checkpoint offsets
+  * A manifest carries: schema, live file list with per-file stats
+  * (min/max of repo and of seq), the checkpoint offsets
   * `{sourcePartition -> lastAppliedSeq}`, the cumulative applied-batch
   * fence map, and lineage counters.
   *
@@ -34,11 +34,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * already exists — the optimistic-concurrency fence. (A plain
   * `Files.move(..., ATOMIC_MOVE)` maps to rename(2) on Linux, which
   * silently REPLACES the target — two racing committers would both
-  * "succeed" and one snapshot would be clobbered.) A lost race is
-  * RETRIED optimistically: [[commit]] re-reads the head, revalidates its
-  * assumptions, rebases its file/offset intent, and re-links — so
-  * compaction and snapshot expiry can overlap ingest; only failed
-  * revalidation (a true conflict) raises
+  * "succeed" and one snapshot would be clobbered.) Every writer states
+  * its intent as (files dropped, files added) against the snapshot it
+  * read; a lost race is RETRIED optimistically: [[commit]] re-reads the
+  * head, revalidates, applies the same intent to the new head
+  * (`head.files − dropped ++ added`) and re-links — so compaction and
+  * snapshot expiry can overlap ingest; only failed revalidation (a true
+  * conflict) raises
   * [[java.util.ConcurrentModificationException]]. Manifest bytes and the meta dir are
   * fsynced before the link lands (crash durability). Current version =
   * max N present (a crash after data-file write but before the manifest
@@ -84,7 +86,6 @@ class LakeTable(val root: String, spark: SparkSession,
     * manifest exists to remove (Iceberg stores `file_size_in_bytes` for
     * the same reason). */
   case class FileEntry(path: String, rows: Long, minRepo: String, maxRepo: String,
-      minKey: String, maxKey: String,
       minSeq: Long = Long.MinValue, maxSeq: Long = Long.MaxValue,
       kind: String = "data", bytes: Long)
 
@@ -131,6 +132,21 @@ class LakeTable(val root: String, spark: SparkSession,
       * resolution costs O(delete metadata). */
     lazy val deleteFiles: Seq[FileEntry] =
       chunkRefs.filter(_.kind == "delete").flatMap(c => readChunk(c.name))
+
+    /** THE replay fence: whether `(batchId, offsets)` is already committed
+      * in this snapshot's windowed `applied` map or its sticky `saved`
+      * one. [[commit]] and the `format("graft")` sink's pre-write check
+      * both ask here. */
+    def committed(batchId: String, offsets: Map[String, Long]): Boolean = {
+      val fence = LakeTable.fence(offsets)
+      applied.get(batchId).contains(fence) || saved.get(batchId).contains(fence)
+    }
+
+    /** Live rows of this snapshot: the `rowsAfter` its commit recorded,
+      * else the sum of its data-file rows. The lineage value is the exact
+      * one — on a merge-on-read table the file sum still counts every
+      * superseded version. */
+    def liveRows: Long = lineage.getOrElse("rowsAfter", dataFiles.map(_.rows).sum)
   }
 
   private val mapper = new ObjectMapper()
@@ -422,7 +438,7 @@ class LakeTable(val root: String, spark: SparkSession,
     val localOnlyStage = tmp.toUri.getScheme == "file" || tmp.toUri.getScheme == null
     val taskSide = (spark.sparkContext.isLocal || !localOnlyStage) &&
       parts.size > spark.sparkContext.defaultParallelism
-    val stats: Map[String, (Long, String, String, String, String, Long, Long, Long)] =
+    val stats: Map[String, (Long, String, String, Long, Long, Long)] =
       if (parts.isEmpty) Map.empty
       else if (!taskSide) {
         val conf = spark.sessionState.newHadoopConf()
@@ -437,24 +453,19 @@ class LakeTable(val root: String, spark: SparkSession,
           .repartition(n)
           .mapPartitions { it =>
             val conf = confBc.value.value
-            it.map { p =>
-              val (rws, minR, maxR, minP, maxP, minS, maxS, bytes) =
-                LakeTable.footerStats(Paths.get(p), conf)
-              (p, rws, minR, maxR, minP, maxP, minS, maxS, bytes)
-            }
+            it.map(p => p -> LakeTable.footerStats(Paths.get(p), conf))
           }.collect()
         confBc.unpersist()
-        rows.map(r => r._1 -> ((r._2, r._3, r._4, r._5, r._6, r._7, r._8, r._9))).toMap
+        rows.toMap
       }
     val entries = partsKinded.zipWithIndex.map { case ((src, k), i) =>
-      val (rows, minR, maxR, minP, maxP, minS, maxS, bytes) = stats(src.toString)
+      val (rows, minR, maxR, minS, maxS, bytes) = stats(src.toString)
       // the public file name carries the MANIFEST kind (raw partition
       // values like dlive/dtomb are an internal counting detail)
       val name = s"$label-${kindMap(k)}-${"%05d".format(i)}-${src.getFileName.toString.stripPrefix("part-").take(41)}"
       val dst = dataDir.resolve(name)
       Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-      (k, FileEntry(s"data/$name", rows, minR, maxR, s"$minR $minP", s"$maxR $maxP",
-        minS, maxS, kindMap(k), bytes))
+      (k, FileEntry(s"data/$name", rows, minR, maxR, minS, maxS, kindMap(k), bytes))
     }
     // clean tmp dir remnants (_SUCCESS etc.)
     val w = Files.walk(tmp)
@@ -465,20 +476,20 @@ class LakeTable(val root: String, spark: SparkSession,
   }
 
 
-  /** Atomically commit a new snapshot: keep `retain`, add `added`, drop
-    * everything else. Returns the committed version, or the existing one
-    * if this (batchId, offsets) was already applied (idempotent).
+  /** Atomically commit a new snapshot from the caller's intent against
+    * `base`, the snapshot it read (None: the table was empty): the files
+    * it `dropped` leave, the files it `added` arrive. Returns the
+    * committed version, or the existing one if this (batchId, offsets)
+    * was already committed ([[Snapshot.committed]] — idempotent replay).
     *
-    * CONCURRENT writers are supported with optimistic retry (the Iceberg
-    * commit loop): losing the manifest-link race re-reads the new head,
-    * REVALIDATES that the loser's assumptions still hold, rebases its
-    * intent onto the head, and re-attempts the link — so maintenance
+    * The new file list is always `head.files − dropped ++ added`. When
+    * the head is still `base` that is exactly the caller's view; when a
+    * concurrent commit moved it, the same expression REBASES the intent
+    * onto the new head (the Iceberg commit loop), so maintenance
     * (compaction / expiry / appends) can overlap ingest instead of
-    * hard-failing. The commit's intent is expressed relative to its BASE
-    * snapshot as (dropped files, added files, advanced offsets); rebase =
-    * `newRetain = head.files − dropped`. Validation (any failure is a
+    * hard-failing. A moved head is first REVALIDATED — any failure is a
     * REAL conflict → [[java.util.ConcurrentModificationException]], the
-    * caller must re-plan from fresh state):
+    * caller must re-plan from fresh state:
     *  - every file this commit DROPS must still be live at the head (a
     *    concurrent writer rewriting a file whose content this commit
     *    consumed — e.g. compaction racing a CoW merge of the same file —
@@ -487,64 +498,51 @@ class LakeTable(val root: String, spark: SparkSession,
     *    head (two appliers applying the same partitions is undefined);
     *  - the schema rebases by name-union (concurrent additive promotion
     *    merges; our column set survives).
-    * Retries are bounded ([[LakeTable.CommitRetries]]) with small linear
+    * Losing the manifest-link race re-reads the head and runs the same
+    * steps again, bounded by [[LakeTable.CommitRetries]] with small linear
     * backoff. */
   def commit(batchId: String, offsets: Map[String, Long], schema: StructType,
-      retain: Seq[FileEntry], added: Seq[FileEntry],
-      lineage: Map[String, Long] = Map.empty,
-      baseVersion: Option[Long] = None, sticky: Boolean = false): Long = {
-    // the caller's base: the snapshot `retain` was computed against.
-    // Callers that read table state before building a commit MUST pass
-    // the version they read (applier/compactor do) — deriving the base
-    // from the current head here would mis-assign files added by a
-    // concurrent commit in the read→commit window to the dropped set.
-    val base: Option[Snapshot] =
-      baseVersion.flatMap(v => Try(snapshot(v)).toOption).orElse(currentSnapshot)
-    val fence = offsets.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(",")
-    val droppedPaths: Set[String] =
-      base.map(_.files.map(_.path).toSet).getOrElse(Set.empty) -- retain.map(_.path)
+      dropped: Seq[FileEntry], added: Seq[FileEntry], base: Option[Snapshot],
+      lineage: Map[String, Long] = Map.empty, sticky: Boolean = false): Long = {
+    val droppedPaths = dropped.map(_.path).toSet
     val baseOff = base.map(_.offsets).getOrElse(Map.empty)
     retryRace(s"commit $batchId") {
       val head = currentSnapshot
-      head.filter(h => h.applied.get(batchId).contains(fence) ||
-          h.saved.get(batchId).contains(fence))
-        .map(_.version) // no-op replay
+      head.filter(_.committed(batchId, offsets)).map(_.version) // no-op replay
         .getOrElse {
-          // rebase the intent onto the head (a no-op when head == base):
-          // keep everything live at the head except what THIS commit drops
           val headFiles = head.map(_.files).getOrElse(Nil)
-          val rebased = head.map(_.version) != base.map(_.version)
-          val (curRetain, curSchema) =
-            if (!rebased) (retain, schema)
-            else {
-              val headPaths = headFiles.map(_.path).toSet
-              val missing = droppedPaths.filterNot(headPaths.contains)
-              if (missing.nonEmpty)
-                throw new java.util.ConcurrentModificationException(
-                  s"commit $batchId conflicts: files it rewrites were removed by a " +
-                    s"concurrent commit: ${missing.take(3).mkString(", ")}")
-              val headOff = head.map(_.offsets).getOrElse(Map.empty)
-              val moved = offsets.keys.filter(k => headOff.get(k) != baseOff.get(k))
-              if (moved.nonEmpty)
-                throw new java.util.ConcurrentModificationException(
-                  s"commit $batchId conflicts: partitions ${moved.take(3).mkString(", ")} " +
-                    "were advanced by a concurrent applier")
-              (headFiles.filterNot(f => droppedPaths.contains(f.path)),
-                head.map(h => LakeTable.unionSchemas(h.schema, schema)).getOrElse(schema))
-            }
+          val moved = head.map(_.version) != base.map(_.version)
+          if (moved) {
+            val headPaths = headFiles.map(_.path).toSet
+            val missing = droppedPaths.filterNot(headPaths.contains)
+            if (missing.nonEmpty)
+              throw new java.util.ConcurrentModificationException(
+                s"commit $batchId conflicts: files it rewrites were removed by a " +
+                  s"concurrent commit: ${missing.take(3).mkString(", ")}")
+            val headOff = head.map(_.offsets).getOrElse(Map.empty)
+            val advanced = offsets.keys.filter(k => headOff.get(k) != baseOff.get(k))
+            if (advanced.nonEmpty)
+              throw new java.util.ConcurrentModificationException(
+                s"commit $batchId conflicts: partitions ${advanced.take(3).mkString(", ")} " +
+                  "were advanced by a concurrent applier")
+          }
+          val newSchema =
+            if (moved) head.map(h => LakeTable.unionSchemas(h.schema, schema)).getOrElse(schema)
+            else schema
           val version = head.map(_.version + 1).getOrElse(0L)
           // sliding-window fence map: keep only the newest `appliedWindow`
           // entries (older replays are caught by the offsets watermark);
           // sticky fences go to the untrimmed `saved` map instead
+          val fence = Map(batchId -> LakeTable.fence(offsets))
           val applied: Map[String, String] =
             (head.map(_.applied).getOrElse(scala.collection.immutable.ListMap.empty[String, String]) ++
-              (if (sticky) Map.empty else Map(batchId -> fence))).takeRight(appliedWindow)
+              (if (sticky) Map.empty else fence)).takeRight(appliedWindow)
           val saved: Map[String, String] =
-            head.map(_.saved).getOrElse(Map.empty) ++
-              (if (sticky) Map(batchId -> fence) else Map.empty)
+            head.map(_.saved).getOrElse(Map.empty) ++ (if (sticky) fence else Map.empty)
           val mergedOffsets = head.map(_.offsets).getOrElse(Map.empty) ++ offsets
-          writeManifest(version, curSchema, curRetain ++ added, mergedOffsets, applied,
-            lineage, batchId, head.map(_.renames).getOrElse(Map.empty),
+          writeManifest(version, newSchema,
+            headFiles.filterNot(f => droppedPaths.contains(f.path)) ++ added,
+            mergedOffsets, applied, lineage, batchId, head.map(_.renames).getOrElse(Map.empty),
             prevChunks = head.map(_.chunkRefs).getOrElse(Nil), saved = saved)
           version
         }
@@ -606,33 +604,33 @@ class LakeTable(val root: String, spark: SparkSession,
     // instead of on every micro-batch (the Iceberg v2 rewrite_data_files
     // + rewrite_position_delete_files cycle). Small files below
     // `minRows` join the rewrite for consolidation either way.
-    val (small, keep) =
+    val small =
       if (major) {
         val dels = snap.deleteFiles
-        snap.dataFiles.partition(f => undersized(f) ||
+        snap.dataFiles.filter(f => undersized(f) ||
           dels.exists(d => d.minRepo <= f.maxRepo && d.maxRepo >= f.minRepo))
-      } else snap.files.partition(undersized)
+      } else snap.files.filter(undersized)
     if (!major && small.size < 2) return None
-    if (major && small.isEmpty)
-      // nothing to rewrite (every delete file's range misses all live
-      // data): just drop the delete files in a metadata-only commit
-      return Some(commit(s"compact-${snap.version + 1}", Map.empty, snap.schema,
-        keep, Nil, Map("compactedFiles" -> snap.deleteFiles.size.toLong,
-          "rowsAfter" -> keep.map(_.rows).sum),
-        baseVersion = Some(snap.version)))
+    // a major compaction drops every delete file with its rewrite (or
+    // alone, metadata-only, when every delete file's range misses all
+    // live data and nothing needs rewriting)
+    val dropped = small ++ (if (major) snap.deleteFiles else Nil)
     // rename-mapped, delete-resolved scan: compaction REWRITES files, so
     // its output materializes old-named columns under their current
     // names — the rent-paying moment after which the rename mapping is
     // inert. Range-clustered (not hashed): compacted files get tight
     // disjoint key ranges, which is what keeps future CoW merges cheap.
-    val df = scan(Some(snap), Some(small))
-    val added = writeDataFiles(
-      LakeTable.clustered(df, small.map(_.rows).sum, shufflePartitions),
-      s"compact-v${snap.version + 1}")
-    Some(commit(s"compact-${snap.version + 1}", Map.empty, snap.schema, keep, added,
-      Map("compactedFiles" -> (small.size + (if (major) snap.deleteFiles.size else 0)).toLong,
-        "rowsAfter" -> (keep ++ added).filter(_.kind == "data").map(_.rows).sum),
-      baseVersion = Some(snap.version)))
+    val added =
+      if (small.isEmpty) Nil
+      else writeDataFiles(
+        LakeTable.clustered(scan(Some(snap), Some(small)), small.map(_.rows).sum,
+          shufflePartitions),
+        s"compact-v${snap.version + 1}")
+    // no delete file survives a compaction, so the data-row sum is exact
+    Some(commit(s"compact-${snap.version + 1}", Map.empty, snap.schema, dropped, added,
+      Some(snap), Map("compactedFiles" -> dropped.size.toLong,
+        "rowsAfter" -> (snap.dataFiles.map(_.rows).sum - small.map(_.rows).sum +
+          added.map(_.rows).sum))))
   }
 
   /** MINOR compaction: consolidate accumulated merge-on-read delete
@@ -675,10 +673,8 @@ class LakeTable(val root: String, spark: SparkSession,
         LakeTable.clustered(merged, dels.map(_.rows).sum),
         s"deletes-v${snap.version + 1}", kind = "delete", blooms = false)
       Some(commit(s"consolidate-deletes-${snap.version + 1}", Map.empty,
-        snap.schema, snap.dataFiles, added,
-        Map("consolidatedDeleteFiles" -> dels.size.toLong,
-          "rowsAfter" -> snap.dataFiles.map(_.rows).sum),
-        baseVersion = Some(snap.version)))
+        snap.schema, dels, added, Some(snap),
+        Map("consolidatedDeleteFiles" -> dels.size.toLong, "rowsAfter" -> snap.liveRows)))
     } finally { merged.unpersist(); () }
   }
 
@@ -744,10 +740,11 @@ class LakeTable(val root: String, spark: SparkSession,
   }
 
   /** State of snapshot `s` restricted to the keys of `keys` (columns
-    * repo, path): the file list is pruned to candidate repos through the
-    * broadcast interval index (no repo set reaches the driver, only file
-    * indices), then read, semi-joined to the keys, and delete-resolved. */
-  private def stateRestricted(s: Snapshot, keys: DataFrame): DataFrame = {
+    * repo, path) — THE read of a distributed key set: the file list is
+    * pruned to candidate repos through the broadcast interval index (no
+    * repo set reaches the driver, only file indices), then read,
+    * semi-joined to the keys, and delete-resolved. */
+  private[graft] def stateRestricted(s: Snapshot, keys: DataFrame): DataFrame = {
     val (touched, _) = pruneFilesDistributed(s, keys.select(col("repo")))
     scan(Some(s), Some(touched.filter(_.kind == "data")),
       rows = _.join(keys.select(col("repo"), col("path")), Seq("repo", "path"), "left_semi"))
@@ -858,11 +855,9 @@ class LakeTable(val root: String, spark: SparkSession,
   /** Point lookups: read only the rows for the given (repo, path) keys.
     * Two pruning layers, both metadata-first:
     *  1. MANIFEST: a file is scanned only if some key's repo falls inside
-    *     its [minRepo, maxRepo] range — per-COLUMN bounds, because the
-    *     concatenated composite "repo path" is NOT a sound lexicographic
-    *     bound when a repo may contain the separator or anything below it
-    *     (minRepo="a", minPath="q" gives minKey="a q", which incorrectly
-    *     prunes the real key ("a b", "x")). Chunks, then files, prune
+    *     its [minRepo, maxRepo] range (the manifest keeps no path bound:
+    *     a concatenated "repo path" bound is unsound when a repo may
+    *     contain the separator or anything below it). Chunks, then files, prune
     *     through a [[RepoIntervalIndex]] (sorted minRepo + prefix-max
     *     walk) in O(keys·log files).
     *  2. FILTER: up to [[LakeTable.LookupBulkThreshold]] keys become an
@@ -1002,8 +997,7 @@ class LakeTable(val root: String, spark: SparkSession,
         o -> (if (n == oldName) newName else n) } + (oldName -> newName)
       val version = snap.version + 1
       writeManifest(version, newSchema, snap.files, snap.offsets, snap.applied,
-        Map("rename" -> 1L, "rowsAfter" ->
-          snap.lineage.getOrElse("rowsAfter", snap.dataFiles.map(_.rows).sum)),
+        Map("rename" -> 1L, "rowsAfter" -> snap.liveRows),
         s"rename-$oldName-$newName", renames, prevChunks = snap.chunkRefs,
         saved = snap.saved)
       version
@@ -1020,7 +1014,6 @@ class LakeTable(val root: String, spark: SparkSession,
     val e = new JLinkedHashMap[String, Object]()
     e.put("path", f.path); e.put("rows", java.lang.Long.valueOf(f.rows))
     e.put("minRepo", f.minRepo); e.put("maxRepo", f.maxRepo)
-    e.put("minKey", f.minKey); e.put("maxKey", f.maxKey)
     e.put("minSeq", java.lang.Long.valueOf(f.minSeq))
     e.put("maxSeq", java.lang.Long.valueOf(f.maxSeq))
     e.put("kind", f.kind)
@@ -1032,7 +1025,6 @@ class LakeTable(val root: String, spark: SparkSession,
     FileEntry(e.get("path").asInstanceOf[String],
       e.get("rows").asInstanceOf[Number].longValue(),
       e.get("minRepo").asInstanceOf[String], e.get("maxRepo").asInstanceOf[String],
-      e.get("minKey").asInstanceOf[String], e.get("maxKey").asInstanceOf[String],
       e.get("minSeq").asInstanceOf[Number].longValue(),
       e.get("maxSeq").asInstanceOf[Number].longValue(),
       e.get("kind").asInstanceOf[String],
@@ -1253,10 +1245,17 @@ object LakeTable {
   /** Lost manifest-link races a commit or rename retries before giving up. */
   val CommitRetries: Int = 20
 
+  /** The replay-fence string of a commit's offsets, as recorded in a
+    * manifest's `applied`/`saved` maps; read only through
+    * [[LakeTable#Snapshot.committed]]. */
+  private[lake] def fence(offsets: Map[String, Long]): String =
+    offsets.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(",")
+
   /** Layout version of the manifests [[LakeTable.writeManifest]] writes:
-    * chunked file lists, per-chunk kind segregation, recorded file bytes.
-    * A reader accepts exactly this value. */
-  val FormatVersion: Int = 1
+    * chunked file lists, per-chunk kind segregation, recorded file bytes,
+    * per-file repo and seq bounds (no composite-key bound). A reader
+    * accepts exactly this value. */
+  val FormatVersion: Int = 2
 
   /** A manifest whose `formatVersion` is missing or is not
     * [[FormatVersion]]: written by another layout, which this reader
@@ -1324,12 +1323,12 @@ object LakeTable {
       StructField("after", img)))
   }
 
-  /** Row count + (repo, path) string min/max + seq long min/max + file
+  /** Row count + repo string min/max + seq long min/max + file
     * BYTES from a parquet footer open (the open already knows the length
     * — no extra status call). Static so write-job TASKS can call it
     * without capturing a table instance (executor-side stat collection). */
   private[lake] def footerStats(p: Path, conf: org.apache.hadoop.conf.Configuration)
-      : (Long, String, String, String, String, Long, Long, Long) = {
+      : (Long, String, String, Long, Long, Long) = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toUri), conf)
@@ -1338,7 +1337,6 @@ object LakeTable {
       val blocks = reader.getFooter.getBlocks.asScala
       var rows = 0L
       var minR: String = null; var maxR: String = null
-      var minP: String = null; var maxP: String = null
       var minS = Long.MaxValue; var maxS = Long.MinValue
       blocks.foreach { b =>
         rows += b.getRowCount
@@ -1355,10 +1353,6 @@ object LakeTable {
                 val lo = str(st.genericGetMin); val hi = str(st.genericGetMax)
                 if (minR == null || lo < minR) minR = lo
                 if (maxR == null || hi > maxR) maxR = hi
-              case "path" =>
-                val lo = str(st.genericGetMin); val hi = str(st.genericGetMax)
-                if (minP == null || lo < minP) minP = lo
-                if (maxP == null || hi > maxP) maxP = hi
               case "seq" => (st.genericGetMin, st.genericGetMax) match {
                 case (lo: java.lang.Long, hi: java.lang.Long) =>
                   if (lo < minS) minS = lo
@@ -1372,7 +1366,6 @@ object LakeTable {
       }
       (rows,
         Option(minR).getOrElse(""), Option(maxR).getOrElse("\uffff"),
-        Option(minP).getOrElse(""), Option(maxP).getOrElse("\uffff"),
         if (minS == Long.MaxValue) Long.MinValue else minS,
         if (maxS == Long.MinValue) Long.MaxValue else maxS,
         in.getLength)

@@ -32,15 +32,45 @@ object EngineE2E {
       col("props").as("content"),
       col("event_id").as("seq"))
 
-  /** One shared replay per (session, dir): q22/q25/q27 read different
-    * surfaces (final state / lineage / change feed) of the same 3-batch
+  /** Delete `dir` and everything under it, best effort. */
+  private def deleteTree(dir: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    scala.util.Try(java.nio.file.Files.walk(dir)
+      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .iterator().asScala.foreach(f => scala.util.Try(java.nio.file.Files.delete(f))))
+    ()
+  }
+
+  /** A fresh temp directory named `graft-<prefix>-…`, deleted when the
+    * JVM exits (`untilExit`) or as soon as `body` returns — so `body`
+    * must hand back nothing that still reads it (the per-query fixtures
+    * return a `localCheckpoint`). */
+  private def withTempDir[T](prefix: String, untilExit: Boolean = false)(
+      body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-$prefix-")
+    if (untilExit) { sys.addShutdownHook(deleteTree(dir)); body(dir) }
+    else try body(dir) finally deleteTree(dir)
+  }
+
+  /** One shared replay per (session, dir, mode), living until JVM exit:
+    * the queries over a replay read different surfaces (final state /
+    * lineage / change feed / time travel / SQL source / view) of the same
     * apply, so the engine replays once per Verify/Bench process instead
-    * of once per query. The temp lake lives until JVM exit. */
+    * of once per query.
+    *  - MERGE-ON-READ (`e2e-0..2`, cuts at max/3 and 2·max/3): the oracle
+    *    is mode-blind, so q22/q25/q27/q33/q35/q40 all-green here certifies
+    *    that MoR table state (winners + equality-delete resolution, across
+    *    multi-batch commits, time travel, change feeds and point lookups)
+    *    is indistinguishable from the plain LWW replay.
+    *  - COPY-ON-WRITE (`cow-0..1`, cut at max/2): leaves no delete files,
+    *    so `format("graft")` binds it to the vectorized parquet scan
+    *    ([[graft.sources.GraftDataSource]] bound path, q41) instead of the
+    *    resolving relation; q44/q49 diff its two snapshots. */
   // keyed on the session OBJECT (not its identity hash, which can be
   // reused after GC): entries pin their session, but the temp lakes are
   // JVM-lifetime by design anyway
-  private val lakes =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (LakeTable, Long)]
+  private val lakes = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, Boolean), (LakeTable, Long)]
 
   /** max(event_id) per (session, dir) — five fixture queries derive their
     * batch cuts from it; one metadata-scale job per process, not five. */
@@ -52,37 +82,37 @@ object EngineE2E {
       spark.read.parquet(s"$dir/events.parquet")
         .agg(max(col("event_id"))).head().getLong(0))
 
-  private def replayedLake(spark: SparkSession, dir: String): (LakeTable, Long) =
-    lakes.getOrElseUpdate((spark, dir), {
-      val changes = asChanges(spark.read.parquet(s"$dir/events.parquet"))
-      val maxSeq = maxSeqOf(spark, dir)
-      val cut1 = maxSeq / 3
-      val cut2 = 2 * maxSeq / 3
-      val lakeDir = java.nio.file.Files.createTempDirectory("graft-e2e-lake")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        import scala.jdk.CollectionConverters._
-        scala.util.Try(java.nio.file.Files.walk(lakeDir)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator().asScala.foreach(f =>
-            scala.util.Try(java.nio.file.Files.delete(f))))
-      }))
-      val lake = new LakeTable(lakeDir.toString, spark)
-      // MERGE-ON-READ mode: the oracle is mode-blind, so q22/q25/q27/
-      // q33/q35 all-green here certifies that MoR table state (winners +
-      // equality-delete resolution, across multi-batch commits, time
-      // travel, change feeds and point lookups) is indistinguishable
-      // from the plain LWW replay
-      val applier = new CdcApplier(lake, spark, mergeOnRead = true)
-      applier.applyBatch(changes.filter(col("seq") <= cut1), "e2e-0")
-      applier.applyBatch(changes.filter(col("seq") > cut1 && col("seq") <= cut2), "e2e-1")
-      applier.applyBatch(changes.filter(col("seq") > cut2), "e2e-2")
-      (lake, maxSeq)
+  /** Replay the changelog into a fresh lake at `lakeDir`: merge-on-read
+    * in three batches `<prefix>-0..2` (cuts at max/3 and 2·max/3),
+    * copy-on-write in two, `<prefix>-0..1` (cut at max/2). */
+  private def replayInto(spark: SparkSession, dir: String, lakeDir: java.nio.file.Path,
+      mergeOnRead: Boolean, prefix: String): LakeTable = {
+    val changes = asChanges(spark.read.parquet(s"$dir/events.parquet"))
+    val maxSeq = maxSeqOf(spark, dir)
+    val cuts = if (mergeOnRead) Seq(maxSeq / 3, 2 * maxSeq / 3) else Seq(maxSeq / 2)
+    val lake = new LakeTable(lakeDir.toString, spark)
+    val applier = new CdcApplier(lake, spark, mergeOnRead = mergeOnRead)
+    // batch i takes the seqs in (cut i-1, cut i]
+    val edges = Long.MinValue +: cuts :+ Long.MaxValue
+    edges.zip(edges.tail).zipWithIndex.foreach { case ((lo, hi), i) =>
+      applier.applyBatch(changes.filter(col("seq") > lo && col("seq") <= hi), s"$prefix-$i")
+    }
+    lake
+  }
+
+  private def replayed(spark: SparkSession, dir: String,
+      mergeOnRead: Boolean): (LakeTable, Long) =
+    lakes.getOrElseUpdate((spark, dir, mergeOnRead), {
+      val prefix = if (mergeOnRead) "e2e" else "cow"
+      withTempDir(s"$prefix-lake", untilExit = true) { lakeDir =>
+        (replayInto(spark, dir, lakeDir, mergeOnRead, prefix), maxSeqOf(spark, dir))
+      }
     })
 
   /** q22 — full engine replay; output = final lake state with content
     * digests. */
   def q22CdcReplay(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, _) = replayedLake(spark, dir)
+    val (lake, _) = replayed(spark, dir, mergeOnRead = true)
     lake.read().select(col("repo"), col("path"), col("commit"), col("lang"),
       sha2(col("content"), 256).as("content_sha"), col("seq"))
   }
@@ -93,7 +123,7 @@ object EngineE2E {
     * [[LakeTable.lineageTable]]; the oracle recomputes every counter
     * independently in SQL. */
   def q25Lineage(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, _) = replayedLake(spark, dir)
+    val (lake, _) = replayed(spark, dir, mergeOnRead = true)
     lake.lineageTable()
       .select(col("batch_id"), col("upserts"), col("deletes"), col("rows_after"))
   }
@@ -103,7 +133,7 @@ object EngineE2E {
     * File-level seq-stats pruning keeps the scan proportional to churn;
     * the oracle is the LWW final state restricted to seq > cut2. */
   def q27ChangesSince(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, maxSeq) = replayedLake(spark, dir)
+    val (lake, maxSeq) = replayed(spark, dir, mergeOnRead = true)
     val cut2 = 2 * maxSeq / 3
     val (feed, _, _) = lake.readSince(cut2)
     feed.select(col("repo"), col("path"), col("commit"), col("lang"),
@@ -120,7 +150,7 @@ object EngineE2E {
     * head. Resolved by batchId (not a hardcoded version number) so an
     * empty batch's no-op commit cannot shift it. */
   def q33TimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, _) = replayedLake(spark, dir)
+    val (lake, _) = replayed(spark, dir, mergeOnRead = true)
     val v = lake.versions.find(v => lake.snapshot(v).batchId == "e2e-1")
       .getOrElse(sys.error("snapshot for batch e2e-1 not found"))
     lake.read(Some(v)).select(col("repo"), col("path"), col("commit"), col("lang"),
@@ -129,12 +159,12 @@ object EngineE2E {
 
   /** q35 — point lookups under the oracle gate ([[LakeTable.lookupKeys]]):
     * a service-style read of a small deterministic key set (every 13th
-    * user) against the replayed lake. Manifest composite-key ranges prune
+    * user) against the replayed lake. Manifest repo ranges prune
     * files, parquet bloom filters + min/max prune row groups inside the
     * survivors; the oracle is the LWW final state restricted to the same
     * keys. Deleted keys return no row on either side. */
   def q35PointLookup(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, _) = replayedLake(spark, dir)
+    val (lake, _) = replayed(spark, dir, mergeOnRead = true)
     val uids = spark.read.parquet(s"$dir/events.parquet")
       .filter(pmod(col("user_id"), lit(13)) === 0)
       .select(col("user_id")).distinct().collect()
@@ -165,36 +195,23 @@ object EngineE2E {
     * snapshot. The table state must be byte-identical to the plain
     * replay (q22's oracle), proving compaction and vacuum are pure
     * maintenance. */
-  def q31CompactVacuum(spark: SparkSession, dir: String): DataFrame = {
-    val changes = asChanges(spark.read.parquet(s"$dir/events.parquet"))
-    val maxSeq = maxSeqOf(spark, dir)
-    val lakeDir = java.nio.file.Files.createTempDirectory("graft-cv-lake").toString
-    val lake = new LakeTable(lakeDir, spark)
-    // MoR replay → MAJOR compaction (folds the equality-delete files into
-    // a resolved rewrite and drops them) → expiry+vacuum: byte-identical
-    // to the plain replay under q22's oracle, proving the whole MoR
-    // maintenance cycle is pure
-    val applier = new CdcApplier(lake, spark, mergeOnRead = true)
-    val cut1 = maxSeq / 3
-    val cut2 = 2 * maxSeq / 3
-    applier.applyBatch(changes.filter(col("seq") <= cut1), "cv-0")
-    applier.applyBatch(changes.filter(col("seq") > cut1 && col("seq") <= cut2), "cv-1")
-    applier.applyBatch(changes.filter(col("seq") > cut2), "cv-2")
-    lake.compact(minRows = Long.MaxValue)
-    // require, not assert: this is a query-path invariant check and must
-    // survive -Xdisable-assertions
-    require(lake.currentSnapshot.exists(_.deleteFiles.isEmpty),
-      "major compaction must fold all delete files")
-    lake.expireSnapshots(keepLast = 1)
-    val out = lake.read().select(col("repo"), col("path"), col("commit"), col("lang"),
-      sha2(col("content"), 256).as("content_sha"), col("seq"))
-      .localCheckpoint(true)
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(java.nio.file.Paths.get(lakeDir))
-      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .iterator().asScala.foreach(f => scala.util.Try(java.nio.file.Files.delete(f)))
-    out
-  }
+  def q31CompactVacuum(spark: SparkSession, dir: String): DataFrame =
+    withTempDir("cv-lake") { lakeDir =>
+      // MoR replay → MAJOR compaction (folds the equality-delete files
+      // into a resolved rewrite and drops them) → expiry+vacuum:
+      // byte-identical to the plain replay under q22's oracle, proving the
+      // whole MoR maintenance cycle is pure
+      val lake = replayInto(spark, dir, lakeDir, mergeOnRead = true, "cv")
+      lake.compact(minRows = Long.MaxValue)
+      // require, not assert: this is a query-path invariant check and
+      // must survive -Xdisable-assertions
+      require(lake.currentSnapshot.exists(_.deleteFiles.isEmpty),
+        "major compaction must fold all delete files")
+      lake.expireSnapshots(keepLast = 1)
+      lake.read().select(col("repo"), col("path"), col("commit"), col("lang"),
+        sha2(col("content"), 256).as("content_sha"), col("seq"))
+        .localCheckpoint(true)
+    }
 
   /** q32 — per-rule observability under the oracle gate (the VERDICT-r2
     * `df.observe` + QueryExecutionListener ask): a 2-batch replay whose
@@ -223,57 +240,25 @@ object EngineE2E {
           .otherwise(lit("app.change.log")))
       .withColumn("_corrupt", lit(null).cast("string"))
       .withColumn("raw", lit("{}"))
-    val lakeDir = java.nio.file.Files.createTempDirectory("graft-obs-lake").toString
-    val lake = new LakeTable(lakeDir, spark)
-    val applier = new CdcApplier(lake, spark)
-    val canonical = Seq("op", "part", "repo", "path", "commit", "lang",
-      "content", "seq").map(col)
-    Seq(0, 1).foreach { b =>
-      val slice =
-        if (b == 0) changes.filter(col("seq") <= mx / 2)
-        else changes.filter(col("seq") > mx / 2)
-      val (clean, _, obs) = Validate.routeObserved(slice,
-        name = s"obs-$b-${java.util.UUID.randomUUID()}")
-      applier.applyBatch(clean.select(canonical: _*), s"obs-$b",
-        lineageExtras = () => Validate.observedLineage(obs))
-    }
-    val out = lake.lineageRules()
-      .select(col("batch_id"), col("rule"), col("violations"))
-      .localCheckpoint(true)
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(java.nio.file.Paths.get(lakeDir))
-      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .iterator().asScala.foreach(f => scala.util.Try(java.nio.file.Files.delete(f)))
-    out
-  }
-
-  /** CoW twin of [[replayedLake]] for the data-source fast path: a plain
-    * copy-on-write replay leaves no merge-on-read delete files, so
-    * `format("graft")` binds it to the vectorized parquet scan
-    * ([[graft.sources.GraftDataSource]] bound path) instead of the
-    * resolving relation. Cached per (session, dir) like the MoR twin. */
-  private val cowLakes =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (LakeTable, Long)]
-
-  private def cowReplayedLake(spark: SparkSession, dir: String): (LakeTable, Long) =
-    cowLakes.getOrElseUpdate((spark, dir), {
-      val changes = asChanges(spark.read.parquet(s"$dir/events.parquet"))
-      val maxSeq = maxSeqOf(spark, dir)
-      val lakeDir = java.nio.file.Files.createTempDirectory("graft-e2e-cowlake")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        import scala.jdk.CollectionConverters._
-        scala.util.Try(java.nio.file.Files.walk(lakeDir)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator().asScala.foreach(f =>
-            scala.util.Try(java.nio.file.Files.delete(f))))
-      }))
+    withTempDir("obs-lake") { lakeDir =>
       val lake = new LakeTable(lakeDir.toString, spark)
       val applier = new CdcApplier(lake, spark)
-      val cut = maxSeq / 2
-      applier.applyBatch(changes.filter(col("seq") <= cut), "cow-0")
-      applier.applyBatch(changes.filter(col("seq") > cut), "cow-1")
-      (lake, maxSeq)
-    })
+      val canonical = Seq("op", "part", "repo", "path", "commit", "lang",
+        "content", "seq").map(col)
+      Seq(0, 1).foreach { b =>
+        val slice =
+          if (b == 0) changes.filter(col("seq") <= mx / 2)
+          else changes.filter(col("seq") > mx / 2)
+        val (clean, _, obs) = Validate.routeObserved(slice,
+          name = s"obs-$b-${java.util.UUID.randomUUID()}")
+        applier.applyBatch(clean.select(canonical: _*), s"obs-$b",
+          lineageExtras = () => Validate.observedLineage(obs))
+      }
+      lake.lineageRules()
+        .select(col("batch_id"), col("rule"), col("violations"))
+        .localCheckpoint(true)
+    }
+  }
 
   /** q40 — the SQL data source over a MERGE-ON-READ snapshot: read the
     * shared replayed lake through `spark.read.format("graft")` with a
@@ -284,7 +269,7 @@ object EngineE2E {
     * pushed-down predicate, and rename-free schema binding — against an
     * oracle that knows only the LWW final state. */
   def q40SqlSourceMor(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, _) = replayedLake(spark, dir)
+    val (lake, _) = replayed(spark, dir, mergeOnRead = true)
     spark.read.format("graft").load(lake.root)
       .filter(col("repo").isin("r0", "r5", "r11", "r23", "r36"))
       .select(col("repo"), col("path"), col("commit"), col("lang"),
@@ -298,7 +283,7 @@ object EngineE2E {
     * into parquet row groups; the result must equal the LWW final state
     * past the watermark. */
   def q41SqlSourcePruned(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, maxSeq) = cowReplayedLake(spark, dir)
+    val (lake, maxSeq) = replayed(spark, dir, mergeOnRead = false)
     val cut2 = 2 * maxSeq / 3
     spark.read.format("graft").load(lake.root)
       .filter(col("seq") > cut2)
@@ -314,7 +299,7 @@ object EngineE2E {
     * recomputes both LWW states from the raw events and diffs them —
     * mode- and layout-blind. */
   def q44ChangeFeed(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, _) = cowReplayedLake(spark, dir)
+    val (lake, _) = replayed(spark, dir, mergeOnRead = false)
     lake.changeFeed(0L, 1L)
       .select(col("repo"), col("path"), col("change_type"),
         col("before.seq").as("before_seq"),
@@ -334,26 +319,23 @@ object EngineE2E {
     val changes = asChanges(spark.read.parquet(s"$dir/events.parquet"))
     val maxSeq = maxSeqOf(spark, dir)
     val cut = maxSeq / 2
-    val lakeDir = java.nio.file.Files.createTempDirectory("graft-sqlmerge-lake").toString
-    spark.sql(
-      s"""CREATE OR REPLACE TEMPORARY VIEW graft_merge_face
-         |USING graft OPTIONS (path '$lakeDir', merge 'true', mergeOnRead 'true')"""
-        .stripMargin)
-    changes.createOrReplaceTempView("graft_merge_face_src")
-    spark.sql("INSERT INTO graft_merge_face SELECT repo, path, commit, lang, " +
-      s"content, seq FROM graft_merge_face_src WHERE seq <= $cut")
-    spark.sql("INSERT INTO graft_merge_face SELECT repo, path, commit, lang, " +
-      s"content, seq FROM graft_merge_face_src WHERE seq > $cut")
-    val out = spark.sql("SELECT repo, path, commit, lang, " +
-      "sha2(content, 256) AS content_sha, seq FROM graft_merge_face")
-      .localCheckpoint(true)
-    spark.sql("DROP VIEW graft_merge_face")
-    spark.sql("DROP VIEW graft_merge_face_src")
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(java.nio.file.Paths.get(lakeDir))
-      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .iterator().asScala.foreach(f => scala.util.Try(java.nio.file.Files.delete(f)))
-    out
+    withTempDir("sqlmerge-lake") { lakeDir =>
+      spark.sql(
+        s"""CREATE OR REPLACE TEMPORARY VIEW graft_merge_face
+           |USING graft OPTIONS (path '$lakeDir', merge 'true', mergeOnRead 'true')"""
+          .stripMargin)
+      changes.createOrReplaceTempView("graft_merge_face_src")
+      spark.sql("INSERT INTO graft_merge_face SELECT repo, path, commit, lang, " +
+        s"content, seq FROM graft_merge_face_src WHERE seq <= $cut")
+      spark.sql("INSERT INTO graft_merge_face SELECT repo, path, commit, lang, " +
+        s"content, seq FROM graft_merge_face_src WHERE seq > $cut")
+      val out = spark.sql("SELECT repo, path, commit, lang, " +
+        "sha2(content, 256) AS content_sha, seq FROM graft_merge_face")
+        .localCheckpoint(true)
+      spark.sql("DROP VIEW graft_merge_face")
+      spark.sql("DROP VIEW graft_merge_face_src")
+      out
+    }
   }
 
   /** q49 — incremental materialized-view maintenance from the row-level
@@ -369,20 +351,16 @@ object EngineE2E {
     * changes `lang` moves its row BETWEEN groups) or a group that should
     * have emptied out all break the hash. */
   def q49IncrementalView(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, _) = cowReplayedLake(spark, dir)
+    val (lake, _) = replayed(spark, dir, mergeOnRead = false)
     val view = new graft.apply.IncrementalView(Seq("repo", "lang"),
       Seq("total_len" -> length(col("content")).cast("long")))
-    val viewDir = java.nio.file.Files.createTempDirectory("graft-view-lake")
-    val viewLake = new LakeTable(viewDir.toString, spark)
-    val viewApplier = new CdcApplier(viewLake, spark)
-    view.initialize(viewApplier, lake.read(Some(0L)), "view-0", seq = 1L)
-    view.maintain(viewApplier, viewLake, lake.changeFeed(0L, 1L), "view-1", seq = 2L)
-    val out = view.read(viewLake).localCheckpoint(true)
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(viewDir)
-      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .iterator().asScala.foreach(f => scala.util.Try(java.nio.file.Files.delete(f)))
-    out
+    withTempDir("view-lake") { viewDir =>
+      val viewLake = new LakeTable(viewDir.toString, spark)
+      val viewApplier = new CdcApplier(viewLake, spark)
+      view.initialize(viewApplier, lake.read(Some(0L)), "view-0", seq = 1L)
+      view.maintain(viewApplier, viewLake, lake.changeFeed(0L, 1L), "view-1", seq = 2L)
+      view.read(viewLake).localCheckpoint(true)
+    }
   }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -111,9 +111,11 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
     *    `option("stickyBatchId", "true")` to persist its fence in the
     *    manifest's untrimmed `saved` map instead — growth is
     *    O(sticky saves), the caller's explicit trade;
-    *  - `Append` unions schemas by name (additive evolution: old files
-    *    resolve missing columns as null at read); `Overwrite` replaces
-    *    files AND schema.
+    *  - `Append` drops no file and unions schemas by name (additive
+    *    evolution: old files resolve missing columns as null at read);
+    *    `Overwrite` drops every file of the snapshot it read and
+    *    replaces the schema (files a concurrent writer committed
+    *    meanwhile survive the rebase).
     *
     * This path writes ROWS, not CDC semantics: LWW merge stays the
     * applier's job. It is the hand-off for non-CDC producers (backfills,
@@ -142,26 +144,21 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
       val batchId = ci.getOrElse("batchid",
         s"save-${java.util.UUID.randomUUID().toString.take(12)}")
       val sticky = ci.get("stickybatchid").exists(_.toBoolean)
-      // idempotence pre-check mirrors commit's fence (offsets are empty
-      // for a save, so the fence is the batchId alone) — skip the WRITE,
-      // not just the commit, on replay
-      val replayed = head.exists(h => h.applied.get(batchId).contains("") ||
-        h.saved.get(batchId).contains(""))
-      if (!replayed) {
+      // the commit's own replay fence (a save carries no offsets),
+      // asked BEFORE the write so a replay skips the write too
+      if (!head.exists(_.committed(batchId, Map.empty))) {
         val added = lake.writeDataFiles(clustered, batchId)
+        val addedRows = added.map(_.rows).sum
         mode match {
           case SaveMode.Overwrite =>
-            lake.commit(batchId, Map.empty, data.schema, Nil, added,
-              Map("rowsAfter" -> added.map(_.rows).sum),
-              baseVersion = head.map(_.version), sticky = sticky)
+            lake.commit(batchId, Map.empty, data.schema, head.toSeq.flatMap(_.files), added,
+              head, Map("rowsAfter" -> addedRows), sticky = sticky)
           case _ =>
             val schema = head.map(h => LakeTable.unionSchemas(h.schema, data.schema))
               .getOrElse(data.schema)
-            val retain = head.map(_.files).getOrElse(Nil)
-            lake.commit(batchId, Map.empty, schema, retain, added,
-              Map("rowsAfter" ->
-                (retain.filter(_.kind == "data") ++ added).map(_.rows).sum),
-              baseVersion = head.map(_.version), sticky = sticky)
+            lake.commit(batchId, Map.empty, schema, Nil, added, head,
+              Map("rowsAfter" -> (head.map(_.liveRows).getOrElse(0L) + addedRows)),
+              sticky = sticky)
         }
         ()
       }
@@ -278,10 +275,10 @@ class GraftMergeRelation(spark: SparkSession, root: String,
 /** File pruning from query predicates against manifest stats — sound
   * ("may the file contain a matching row?") over the per-COLUMN bounds
   * the manifest carries: `repo` string range and `seq` long range.
-  * `path` has no per-column bound in the manifest (the composite minKey
-  * is not a sound lexicographic path bound — see [[LakeTable.lookupKeys]]),
-  * so path predicates never prune files here; they still prune row
-  * groups inside parquet. Anything unrecognised keeps the file. */
+  * `path` has no bound in the manifest (a composite "repo path" bound is
+  * not sound — see [[LakeTable.lookupKeys]]), so path predicates never
+  * prune files here; they still prune row groups inside parquet.
+  * Anything unrecognised keeps the file. */
 object GraftPruning {
 
   type Entry = LakeTable#FileEntry

@@ -70,8 +70,7 @@ class CompactionSpec extends AnyFunSuite {
     val files = lake.currentSnapshot.get.files
     assert(files.size > 1, s"expected a multi-file compact, got ${files.size}")
     // range clustering ⇒ per-file REPO ranges are disjoint up to the
-    // boundary repo (a repo may straddle a boundary, split on path; the
-    // composite minKey/maxKey stats are per-column and thus conservative)
+    // boundary repo (a repo may straddle a boundary, split on path)
     val sorted = files.sortBy(_.minRepo)
     sorted.sliding(2).foreach {
       case Seq(a, b) => assert(a.maxRepo <= b.minRepo,

@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.apply.CdcApplier
 import graft.gen.ChangeLogGen
 import graft.lake.LakeTable
+import graft.reference.ApplyRef
 
 /** Engine e2e: seeded change log → full pipeline replay → final lake state
   * must equal a sequential in-memory oracle, by multiset of
@@ -134,7 +135,7 @@ class EngineSpec extends AnyFunSuite {
   test("salted LWW reduce ≡ plain LWW reduce") {
     val ev = ChangeLogGen.events(spark, 2000, Seed)
       .select("repo", "path", "commit", "lang", "content", "seq", "op", "part")
-    val plain = CdcApplier.lwwReduce(ev).collect().map(_.toSeq).toSet
+    val plain = ApplyRef.lwwReduce(ev).collect().map(_.toSeq).toSet
     val salted = CdcApplier.saltedLwwReduce(ev, 16).collect().map(_.toSeq).toSet
     assert(plain == salted)
   }

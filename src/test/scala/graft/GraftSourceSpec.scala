@@ -40,11 +40,10 @@ class GraftSourceSpec extends AnyFunSuite {
     val hi = ev.filter($"seq" > mx / 2)
     val f1 = lake.writeDataFiles(
       lo.repartitionByRange(2, col("repo"), col("path")), "src-lo")
-    lake.commit("src-0", Map("p0" -> mx / 2), ev.schema, Nil, f1)
+    lake.commit("src-0", Map("p0" -> mx / 2), ev.schema, Nil, f1, lake.currentSnapshot)
     val f2 = lake.writeDataFiles(
       hi.repartitionByRange(2, col("repo"), col("path")), "src-hi")
-    lake.commit("src-1", Map("p0" -> mx), ev.schema,
-      lake.currentSnapshot.get.files, f2)
+    lake.commit("src-1", Map("p0" -> mx), ev.schema, Nil, f2, lake.currentSnapshot)
     lake
   }
   private lazy val cowMid: Long = {

@@ -99,12 +99,12 @@ class IncrementalViewSpec extends AnyFunSuite {
     val merged = view.merge(v0, view.delta(feed))
     assert(viewSet(merged) == viewSet(view.full(srcLake.read(Some(1L)))))
 
-    // lake-backed maintenance with maxPointKeys=0 forces the broadcast
-    // left-semi scan branch — same result as the point-lookup branch
+    // lake-backed maintenance (the view lake's key-set read of the
+    // touched groups) — same result as the in-memory merge
     val viewLake = new LakeTable(TestSpark.tmpDir("ivview2"), spark)
     val viewApplier = new CdcApplier(viewLake, spark)
     view.initialize(viewApplier, srcLake.read(Some(0L)), "view-0", seq = 1L)
-    view.maintain(viewApplier, viewLake, feed, "view-1", seq = 2L, maxPointKeys = 0)
+    view.maintain(viewApplier, viewLake, feed, "view-1", seq = 2L)
     assert(viewSet(view.read(viewLake)) == viewSet(view.full(srcLake.read(Some(1L)))))
   }
 

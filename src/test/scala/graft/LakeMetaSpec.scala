@@ -20,7 +20,7 @@ class LakeMetaSpec extends AnyFunSuite {
 
   test("publishing the same manifest version twice fails, first commit survives") {
     val lake = new LakeTable(TestSpark.tmpDir("lakefence"), spark)
-    lake.commit("b0", Map("p0" -> 1L), schema, Nil, Nil)
+    lake.commit("b0", Map("p0" -> 1L), schema, Nil, Nil, lake.currentSnapshot)
     val v0 = java.nio.file.Paths.get(lake.root, "meta", "v0.json")
     val original = java.nio.file.Files.readString(v0)
     // a second writer publishing version 0 must fail EEXIST-atomically
@@ -37,7 +37,8 @@ class LakeMetaSpec extends AnyFunSuite {
 
   test("manifests carry the format marker; a missing or different one fails by name") {
     val root = TestSpark.tmpDir("lakeformat")
-    new LakeTable(root, spark).commit("f0", Map("p0" -> 1L), schema, Nil, Nil)
+    val writer = new LakeTable(root, spark)
+    writer.commit("f0", Map("p0" -> 1L), schema, Nil, Nil, writer.currentSnapshot)
     val v0 = java.nio.file.Paths.get(root, "meta", "v0.json")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     def manifest = mapper.readValue(java.nio.file.Files.readString(v0),
@@ -65,7 +66,7 @@ class LakeMetaSpec extends AnyFunSuite {
   test("applied-batch fence map is bounded to the sliding window across 100 commits") {
     val lake = new LakeTable(TestSpark.tmpDir("lakewindow"), spark, appliedWindow = 8)
     (0 until 100).foreach { i =>
-      lake.commit(s"b$i", Map("p0" -> i.toLong), schema, Nil, Nil)
+      lake.commit(s"b$i", Map("p0" -> i.toLong), schema, Nil, Nil, lake.currentSnapshot)
     }
     val snap = lake.currentSnapshot.get
     assert(snap.version == 99L)
@@ -75,7 +76,7 @@ class LakeMetaSpec extends AnyFunSuite {
     // offsets watermark still cumulative (the primary replay fence)
     assert(lake.committedOffsets == Map("p0" -> 99L))
     // replaying a batch still inside the window is a metadata no-op
-    assert(lake.commit("b99", Map("p0" -> 99L), schema, Nil, Nil) == 99L)
+    assert(lake.commit("b99", Map("p0" -> 99L), schema, Nil, Nil, lake.currentSnapshot) == 99L)
     assert(lake.currentSnapshot.get.version == 99L)
   }
 
@@ -83,15 +84,18 @@ class LakeMetaSpec extends AnyFunSuite {
     val lake = new LakeTable(TestSpark.tmpDir("lakesticky"), spark, appliedWindow = 2)
     val df = Seq(("r1", "p1", 1L)).toDF("repo", "path", "seq")
     val f = lake.writeDataFiles(df, "st")
-    lake.commit("sticky-0", Map.empty, df.schema, Nil, f, sticky = true)
+    lake.commit("sticky-0", Map.empty, df.schema, Nil, f, lake.currentSnapshot,
+      sticky = true)
     // 5 > window intervening commits evict non-sticky fences
-    (0 until 5).foreach(i => lake.commit(s"w$i", Map("p0" -> i.toLong), schema, Nil, Nil))
+    (0 until 5).foreach(i =>
+      lake.commit(s"w$i", Map("p0" -> i.toLong), schema, Nil, Nil, lake.currentSnapshot))
     assert(!lake.currentSnapshot.get.applied.contains("sticky-0"))
     assert(lake.currentSnapshot.get.saved.get("sticky-0").contains(""))
     val vBefore = lake.currentVersion.get
     // late replay: must be a metadata no-op (an offsets-less save has no
     // watermark backstop — the sticky map is its only fence)
-    assert(lake.commit("sticky-0", Map.empty, schema, Nil, f, sticky = true) == vBefore)
+    assert(lake.commit("sticky-0", Map.empty, schema, Nil, f, lake.currentSnapshot,
+      sticky = true) == vBefore)
     assert(lake.currentVersion.get == vBefore)
   }
 
@@ -125,7 +129,7 @@ class LakeMetaSpec extends AnyFunSuite {
       .select($"repo", $"path", $"commit", $"lang", $"content", $"seq")
     val files = lake.writeDataFiles(
       ev.repartitionByRange(3, col("repo"), col("path")), "bytes-0")
-    lake.commit("bytes-0", Map("p0" -> 1L), ev.schema, Nil, files)
+    lake.commit("bytes-0", Map("p0" -> 1L), ev.schema, Nil, files, lake.currentSnapshot)
     val snap = lake.currentSnapshot.get
     // every entry carries its true on-disk size from the footer pass
     snap.dataFiles.foreach { f =>
@@ -157,7 +161,7 @@ class LakeMetaSpec extends AnyFunSuite {
     val tiny = lake.writeDataFiles(
       ev.filter($"seq" % 4 === 0).repartitionByRange(3, col("repo"), col("path")),
       "bc-tiny")
-    lake.commit("bc-0", Map("p0" -> 1L), ev.schema, Nil, big ++ tiny)
+    lake.commit("bc-0", Map("p0" -> 1L), ev.schema, Nil, big ++ tiny, lake.currentSnapshot)
     val before = lake.currentSnapshot.get.dataFiles
     val bigBytes = big.map(_.bytes).max
     val threshold = tiny.map(_.bytes).max + 1
@@ -203,6 +207,32 @@ class LakeMetaSpec extends AnyFunSuite {
       lake.snapshot(vB - 1), lake.snapshot(vB))
     assert(ad2.isEmpty && rm2.isEmpty && cd2.isEmpty,
       "maintenance-only interval must contribute no candidates at all")
+  }
+
+  test("merge-on-read live-row chain: rows_after equals the table size across a delete consolidation") {
+    val lake = new LakeTable(TestSpark.tmpDir("lakelivechain"), spark)
+    val app = new CdcApplier(lake, spark, mergeOnRead = true)
+    def rows(ids: Range, tag: String, seqBase: Long) =
+      ids.map { i => ("UPDATE", "p0", f"lc$i%04d", "f", s"c$tag$i", "scala",
+        s"content-$tag-$i", seqBase + i) }
+        .toDF("op", "part", "repo", "path", "commit", "lang", "content", "seq")
+    def assertChain(after: String): Unit = {
+      val newest = lake.lineageTable().orderBy($"version".desc).head()
+      assert(newest.getAs[Long]("rows_after") == lake.read().count(), s"after $after")
+    }
+    app.applyBatch(rows(0 until 800, "a", 0), "lc-0")
+    assertChain("the base batch")
+    app.applyBatch(rows(0 until 500, "b", 10000), "lc-1")
+    assertChain("the first update batch")
+    app.applyBatch(rows(0 until 30, "c", 20000), "lc-2")
+    assertChain("the second update batch")
+    // the data files now hold 1 330 physical rows for 800 live keys
+    assert(lake.consolidateDeletes().nonEmpty)
+    assertChain("the delete consolidation")
+    // 10 updates + 50 new keys chain from the consolidation's count
+    app.applyBatch(rows(790 until 850, "d", 30000), "lc-3")
+    assertChain("the batch after the consolidation")
+    assert(lake.read().count() == 850L)
   }
 
   test("readSince: change feed matches filtered full read and prunes files by seq stats") {
@@ -380,10 +410,9 @@ class LakeMetaSpec extends AnyFunSuite {
       (0 until 50).foreach { i =>
         val snap = lake.currentSnapshot
         val e = lake.FileEntry(s"data/$tag-$i.parquet", 1L, s"$tag$i", s"$tag$i",
-          s"$tag$i a", s"$tag$i a", i.toLong, i.toLong, bytes = 1L)
+          i.toLong, i.toLong, bytes = 1L)
         lake.commit(s"$tag-$i", Map(s"part-$tag" -> i.toLong), schema,
-          retain = snap.map(_.files).getOrElse(Nil), added = Seq(e),
-          baseVersion = snap.map(_.version))
+          dropped = Nil, added = Seq(e), base = snap)
       }
     })
     val (a, b) = (appender("aa"), appender("bb"))
@@ -397,6 +426,49 @@ class LakeMetaSpec extends AnyFunSuite {
       (0 until 50).flatMap(i => Seq(s"data/aa-$i.parquet", s"data/bb-$i.parquet")).toSet)
     assert(snap.offsets == Map("part-aa" -> 49L, "part-bb" -> 49L))
     assert(snap.version >= 99L)
+  }
+
+  test("a commit against an expired base rebases onto the head: no concurrent file is lost") {
+    val root = TestSpark.tmpDir("lakeexpiredbase")
+    val lake = new LakeTable(root, spark)
+    def rows(tag: String, n: Int) =
+      (0 until n).map(i => (s"$tag-repo$i", "p", i.toLong)).toDF("repo", "path", "seq")
+    val a = lake.writeDataFiles(rows("a", 3), "eb-a")
+    lake.commit("eb-a", Map.empty, rows("a", 0).schema, Nil, a, lake.currentSnapshot) // v0
+    val base = lake.currentSnapshot
+    // a second writer commits F (v1), then expiry deletes v0's manifest
+    // while the first writer still holds v0 as its base
+    val other = new LakeTable(root, spark)
+    val f = other.writeDataFiles(rows("f", 2), "eb-f")
+    other.commit("eb-f", Map.empty, rows("f", 0).schema, Nil, f, other.currentSnapshot)
+    lake.expireSnapshots(keepLast = 1)
+    intercept[java.nio.file.NoSuchFileException](lake.snapshot(0L))
+    val g = lake.writeDataFiles(rows("g", 4), "eb-g")
+    lake.commit("eb-g", Map.empty, rows("g", 0).schema, Nil, g, base)
+    val head = lake.currentSnapshot.get
+    assert(head.files.map(_.path).toSet == (a ++ f ++ g).map(_.path).toSet)
+    val repos = lake.read().select($"repo").as[String].collect().toSet
+    assert(repos == Set("a-repo0", "a-repo1", "a-repo2", "f-repo0", "f-repo1",
+      "g-repo0", "g-repo1", "g-repo2", "g-repo3"))
+  }
+
+  test("a commit dropping a file a concurrent compaction rewrote away conflicts") {
+    val lake = new LakeTable(TestSpark.tmpDir("lakeconflict"), spark)
+    def rows(tag: String, n: Int) =
+      (0 until n).map(i => (s"$tag-repo$i", "p", i.toLong)).toDF("repo", "path", "seq")
+    val small = lake.writeDataFiles(rows("x", 2), "cf-x") ++
+      lake.writeDataFiles(rows("y", 2), "cf-y")
+    lake.commit("cf-0", Map.empty, rows("x", 0).schema, Nil, small, lake.currentSnapshot)
+    val base = lake.currentSnapshot
+    // the compactor folds both small files into one (v1) ...
+    assert(lake.compact(minRows = Long.MaxValue).contains(1L))
+    // ... so a writer that read v0 and rewrote the first file cannot rebase
+    val rewrite = lake.writeDataFiles(rows("x", 3), "cf-rw")
+    val err = intercept[java.util.ConcurrentModificationException](
+      lake.commit("cf-1", Map.empty, rows("x", 0).schema, small.take(1), rewrite, base))
+    assert(err.getMessage.contains("removed by a concurrent commit"))
+    assert(lake.currentVersion.contains(1L))
+    assert(lake.read().count() == 4L)
   }
 
   test("maintenance overlaps ingest: compaction races the applier, both commit, no rows lost") {
@@ -564,24 +636,24 @@ class LakeMetaSpec extends AnyFunSuite {
   test("chunked manifests: unchanged chunks re-referenced by name, disturbed ones rewritten, expiry sweeps") {
     val lake = new LakeTable(TestSpark.tmpDir("lakechunk"), spark, chunkSize = 4)
     def entry(i: Int) =
-      lake.FileEntry(f"data/f$i%02d", 1L, f"r$i%03d", f"r$i%03d", "k", "k", i.toLong, i.toLong,
+      lake.FileEntry(f"data/f$i%02d", 1L, f"r$i%03d", f"r$i%03d", i.toLong, i.toLong,
         bytes = 1L)
     val fsA = (0 until 8).map(entry)
-    lake.commit("ck-a", Map("p" -> 1L), schema, Nil, fsA)
+    lake.commit("ck-a", Map("p" -> 1L), schema, Nil, fsA, lake.currentSnapshot)
     val chA = lake.currentSnapshot.get.chunkRefs
     assert(chA.size == 2 && chA.map(_.n) == Seq(4, 4))
     // append retaining everything: both A-chunks are re-referenced BY
     // NAME (zero metadata rewritten for them), one fresh chunk appears
     val fsB = (8 until 10).map(entry)
-    lake.commit("ck-b", Map("p" -> 2L), schema, lake.currentSnapshot.get.files, fsB)
+    lake.commit("ck-b", Map("p" -> 2L), schema, Nil, fsB, lake.currentSnapshot)
     val chB = lake.currentSnapshot.get.chunkRefs
     assert(chB.size == 3)
     assert(chA.map(_.name).forall(n => chB.map(_.name).contains(n)))
     assert(lake.currentSnapshot.get.files.toSet == (fsA ++ fsB).toSet)
     // dropping ONE file rewrites only its own chunk; the other two
     // chunk files survive untouched
-    val retain = lake.currentSnapshot.get.files.filterNot(_.path == "data/f00")
-    lake.commit("ck-c", Map("p" -> 3L), schema, retain, Nil)
+    val f00 = lake.currentSnapshot.get.files.filter(_.path == "data/f00")
+    lake.commit("ck-c", Map("p" -> 3L), schema, f00, Nil, lake.currentSnapshot)
     val chC = lake.currentSnapshot.get.chunkRefs
     val namesC = chC.map(_.name)
     assert(!namesC.contains(chA.head.name), "disturbed chunk must be replaced")
@@ -604,18 +676,18 @@ class LakeMetaSpec extends AnyFunSuite {
     assert(lake2.currentSnapshot.get.files.size == 9)
     assert(lake2.currentSnapshot.get.files.toSet ==
       (fsA.drop(1) ++ fsB).map(f => lake2.FileEntry(f.path, f.rows, f.minRepo,
-        f.maxRepo, f.minKey, f.maxKey, f.minSeq, f.maxSeq, f.kind, f.bytes)).toSet)
+        f.maxRepo, f.minSeq, f.maxSeq, f.kind, f.bytes)).toSet)
   }
 
   test("amortized coalescing bounds chunk count across many tiny commits") {
     val lake = new LakeTable(TestSpark.tmpDir("lakecoal"), spark, chunkSize = 16)
     def entry(i: Int) =
-      lake.FileEntry(f"data/g$i%03d", 1L, f"r$i%03d", f"r$i%03d", "k", "k", i.toLong, i.toLong,
+      lake.FileEntry(f"data/g$i%03d", 1L, f"r$i%03d", f"r$i%03d", i.toLong, i.toLong,
         bytes = 1L)
-    lake.commit("co-0", Map("p" -> 0L), schema, Nil, Seq(entry(0)))
+    lake.commit("co-0", Map("p" -> 0L), schema, Nil, Seq(entry(0)), lake.currentSnapshot)
     (1 until 64).foreach { i =>
       val snap = lake.currentSnapshot.get
-      lake.commit(s"co-$i", Map("p" -> i.toLong), schema, snap.files, Seq(entry(i)))
+      lake.commit(s"co-$i", Map("p" -> i.toLong), schema, Nil, Seq(entry(i)), Some(snap))
     }
     val snap = lake.currentSnapshot.get
     assert(snap.files.size == 64)

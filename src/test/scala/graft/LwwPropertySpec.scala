@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.apply.CdcApplier
 import graft.lake.LakeTable
+import graft.reference.ApplyRef
 
 /** Property tests (SURVEY.md §5 plan item 4): for random small change
   * logs — ∀ in-batch row orderings and ∀ batch boundary choices, the
@@ -87,7 +88,7 @@ class LwwPropertySpec extends AnyFunSuite {
     samples(genLog.flatMap(e => Gen.oneOf(2, 7, 32).map((e, _))), 4).foreach { case (evs, salts) =>
       {
         val df = evs.toDF()
-        val plain = CdcApplier.lwwReduce(df).collect().map(_.toSeq).toSet
+        val plain = ApplyRef.lwwReduce(df).collect().map(_.toSeq).toSet
         val salted = CdcApplier.saltedLwwReduce(df, salts).collect().map(_.toSeq).toSet
         assert(plain == salted)
       }
