@@ -2,9 +2,9 @@ package graft.apply
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.core.Model.Op
 import graft.lake.LakeTable
@@ -94,8 +94,10 @@ object CdcApplier {
   *     upserts: bounded write amplification per micro-batch, rent paid
   *     in one periodic maintenance job.
   *   Both modes commit the SAME logical table state — the oracle-gated
-  *   engine queries are indistinguishable across modes. */
-class CdcApplier(lake: LakeTable, spark: SparkSession,
+  *   engine queries are indistinguishable across modes: each returns
+  *   only its intent, and [[applyBatch]] commits it (step 7).
+  * @param lake the table this applier writes — the only one. */
+class CdcApplier(val lake: LakeTable, spark: SparkSession,
     clusterPartitions: Int = 0, mergeOnRead: Boolean = false) {
 
   import spark.implicits._
@@ -110,7 +112,9 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
     * the snapshot's lineage map — the hook that lets `df.observe` metrics
     * collected during this batch's own jobs (per-rule validation counts,
     * `Validate.routeObserved`) land in the committed manifest with zero
-    * extra passes. Returns the committed snapshot version. */
+    * extra passes. Steps 0–6 read the snapshot, fence, stat, evolve the
+    * schema and write the merge mode's files; step 7 is the batch's one
+    * [[LakeTable.commit]]. Returns the committed snapshot version. */
   def applyBatch(events: DataFrame, batchId: String,
       lineageExtras: () => Map[String, Long] = () => Map.empty): Long = {
 
@@ -204,48 +208,43 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
       val touched = snap.toSeq.flatMap(_.files.zipWithIndex
         .collect { case (f, i) if touchedIdx(i) => f })
 
-      if (mergeOnRead)
-        morMerge(fenced, snap, evolved, touched, batchId, newOffsets,
-          upserts, deletes, lineageExtras,
-          // sparse batch vs table size (both already known: event counts
-          // from the fused stats job, table rows from the manifest):
-          // a drizzle batch semi-joins the base key scan to its key set,
-          // a bulk batch skips the semi-join's own shuffles
-          semiJoinBase = (upserts + deletes) * 8 <
-            snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L))
-      else
-        cowMerge(fenced, snap, evolved, touched, batchId, newOffsets,
-          upserts, deletes, lineageExtras)
+      // ---- 5+6. merge and write: each mode returns its intent. ----
+      val (dropped, added, rowsAfter) =
+        if (mergeOnRead) morMerge(fenced, snap, evolved, touched, batchId, upserts + deletes)
+        else cowMerge(fenced, snap, evolved, touched, batchId, upserts)
+      // ---- 7. commit: the batch's one durable effect. `lineageExtras`
+      // runs only now — its observation is filled by the write job. ----
+      lake.commit(batchId, newOffsets, evolved, dropped, added, snap, Map(
+        "upserts" -> upserts, "deletes" -> deletes,
+        "rowsBefore" -> snap.map(_.liveRows).getOrElse(0L),
+        "rowsAfter" -> rowsAfter) ++ lineageExtras())
     } finally fenced.unpersist()
   }
 
+  /** What a merge mode publishes: (files dropped, files added, live rows
+    * after the batch) — committed by [[applyBatch]] alone. */
+  private type Intent = (Seq[lake.FileEntry], Seq[lake.FileEntry], Long)
+
   // ---- 5+6 (copy-on-write): union touched-file rows with the batch,
   // ONE LWW hash-agg (no join, one shuffle; subsumes in-batch dedup),
-  // rewrite touched data files range-clustered and commit them as
-  // dropped; everything else stays by reference. Touched merge-on-read
-  // delete files are never rewritten here — they stay until a major
-  // compaction folds them. ----
+  // rewrite touched data files range-clustered and drop them; everything
+  // else stays by reference. Touched merge-on-read delete files are
+  // never rewritten here — they stay until a major compaction folds
+  // them. ----
   private def cowMerge(fenced: DataFrame, snap: Option[lake.Snapshot],
       evolved: StructType, touched: Seq[lake.FileEntry], batchId: String,
-      newOffsets: Map[String, Long], upserts: Long, deletes: Long,
-      lineageExtras: () => Map[String, Long]): Long = {
+      upserts: Long): Intent = {
     val touchedData = touched.filter(_.kind == "data")
-    def conform(df: DataFrame, isChange: Boolean): DataFrame = {
-      val cols = evolved.fields.toSeq.map { f =>
-        if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      } ++ Seq(
+    def conform(df: DataFrame, isChange: Boolean): DataFrame =
+      df.select(LakeTable.conform(df, evolved) ++ Seq(
         (if (isChange && df.columns.contains("op")) col("op") else lit(Op.Update)).as("_op"),
-        lit(isChange).as("_isChange"))
-      df.select(cols: _*)
-    }
+        lit(isChange).as("_isChange")): _*)
     // base rows resolve any merge-on-read deletes FIRST (a raw scan
     // would resurrect superseded versions into the merge) and map
     // renamed columns (pre-rename files must not read as null)
     val base =
       if (touchedData.isEmpty) None
-      else Some(lake.scan(snap, Some(touchedData), Some(StructType(evolved.fields.map(f =>
-        StructField(f.name, f.dataType, nullable = true))))))
+      else Some(lake.scan(snap, Some(touchedData), Some(evolved)))
     val unioned = base.map(b => conform(b, isChange = false)
       .unionByName(conform(fenced, isChange = true)))
       .getOrElse(conform(fenced, isChange = true))
@@ -268,68 +267,53 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
     // until the next major compaction
     val rowsAfter = snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L) -
       touchedData.map(_.rows).sum + newFiles.map(_.rows).sum
-    lake.commit(batchId, newOffsets, evolved, touchedData, newFiles, snap, Map(
-      "upserts" -> upserts, "deletes" -> deletes,
-      "rowsBefore" -> snap.map(_.liveRows).getOrElse(0L),
-      "rowsAfter" -> rowsAfter) ++ lineageExtras())
+    (touchedData, newFiles, rowsAfter)
   }
 
   // ---- 5+6 (merge-on-read): decide true LWW winners from the KEY
   // COLUMNS of touched files (a columnar-pruned scan — the content
   // column, which dominates file bytes, is never read), then write only
   // the winning rows plus key-only equality-delete entries; nothing is
-  // rewritten, so the commit drops no file. Existing delete entries and
+  // rewritten, so the intent drops no file. Existing delete entries and
   // DELETE tombstones participate as base VERSIONS so a stale event can
-  // neither resurrect a deleted key nor shadow a newer base row. ----
+  // neither resurrect a deleted key nor shadow a newer base row.
+  // `events` = the batch's upserts + deletes. ----
   private def morMerge(fenced: DataFrame, snap: Option[lake.Snapshot],
       evolved: StructType, touched: Seq[lake.FileEntry], batchId: String,
-      newOffsets: Map[String, Long], upserts: Long, deletes: Long,
-      lineageExtras: () => Map[String, Long],
-      semiJoinBase: Boolean = true): Long = {
+      events: Long): Intent = {
     val valueNames = evolved.fieldNames.toSeq.filterNot(keyCols.contains)
-    val keyColsSet = Set("repo", "path", "seq", "commit")
-    def conformChange(df: DataFrame): DataFrame = {
-      val cols = evolved.fields.toSeq.map { f =>
-        if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      } ++ Seq(
-        (if (df.columns.contains("op")) col("op") else lit(Op.Update)).as("_op"),
-        lit(true).as("_isChange"), lit(true).as("_isData"))
-      df.select(cols: _*)
-    }
-    def conformBase(df: DataFrame, isData: Boolean): DataFrame = {
-      val cols = evolved.fields.toSeq.map { f =>
-        if (keyColsSet.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      } ++ Seq(lit(null).cast("string").as("_op"),
-        lit(false).as("_isChange"), lit(isData).as("_isData"))
-      df.select(cols: _*)
-    }
+    // change rows carry every value column; base rows are the key-column
+    // scans ([[LakeTable.deleteSchema]]), so their value columns read null
+    def conformed(df: DataFrame, markers: Column*): DataFrame =
+      df.select(LakeTable.conform(df, evolved) ++ markers: _*)
     // base versions are only consulted for keys THIS batch changes — for
-    // a SPARSE batch (`semiJoinBase`, decided by the caller from batch
-    // event count vs table rows), semi-join the key-column scans to the
-    // batch's key set before the merge aggregate, so a drizzle batch
-    // aggregates O(batch) base rows, not every key in every touched
-    // file; AQE broadcasts the small key set. For a BULK batch the
-    // semi-join's own distinct+probe cost exceeds what it saves
-    // (measured +45% on a whole-keyspace 2M-row batch), so it is
-    // skipped and the aggregate's map-side combine does the work.
+    // a SPARSE batch (event count vs table rows, both already known:
+    // events from the fused stats job, table rows from the manifest),
+    // semi-join the key-column scans to the batch's key set before the
+    // merge aggregate, so a drizzle batch aggregates O(batch) base rows,
+    // not every key in every touched file; AQE broadcasts the small key
+    // set. For a BULK batch the semi-join's own distinct+probe cost
+    // exceeds what it saves (measured +45% on a whole-keyspace 2M-row
+    // batch), so it is skipped and the aggregate's map-side combine does
+    // the work.
+    val semiJoinBase = events * 8 < snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L)
     val batchKeys = fenced.select(col("repo"), col("path")).distinct()
-    def readKeyCols(fs: Seq[lake.FileEntry]) = {
+    def readKeyCols(fs: Seq[lake.FileEntry], isData: Boolean) = {
       // manifest-backed scan (zero listing calls per micro-batch — at
       // 10^6 batches the per-batch planning RPCs ARE the throughput)
       val base = lake.readEntries(fs, LakeTable.deleteSchema)
-      if (semiJoinBase) base.join(batchKeys, Seq("repo", "path"), "left_semi")
-      else base
+      val keys = if (semiJoinBase) base.join(batchKeys, Seq("repo", "path"), "left_semi") else base
+      conformed(keys,
+        lit(null).cast("string").as("_op"), lit(false).as("_isChange"), lit(isData).as("_isData"))
     }
     val touchedData = touched.filter(_.kind == "data")
     val touchedDel = touched.filter(_.kind == "delete")
     val parts: Seq[DataFrame] =
-      Seq(conformChange(fenced)) ++
-        (if (touchedData.nonEmpty)
-          Seq(conformBase(readKeyCols(touchedData), isData = true)) else Nil) ++
-        (if (touchedDel.nonEmpty)
-          Seq(conformBase(readKeyCols(touchedDel), isData = false)) else Nil)
+      Seq(conformed(fenced,
+        (if (fenced.columns.contains("op")) col("op") else lit(Op.Update)).as("_op"),
+        lit(true).as("_isChange"), lit(true).as("_isData"))) ++
+        (if (touchedData.nonEmpty) Seq(readKeyCols(touchedData, isData = true)) else Nil) ++
+        (if (touchedDel.nonEmpty) Seq(readKeyCols(touchedDel, isData = false)) else Nil)
     // ONE hash aggregate over (changes ∪ base versions): the best change
     // row (in-batch LWW — _isChange leads the ordering so a change is
     // picked whenever one exists) and the best base VERSION, where a
@@ -377,25 +361,19 @@ class CdcApplier(lake: LakeTable, spark: SparkSession,
           if (c == "seq" || c == "commit") col(s"w.$c").as(c)
           else lit(null).cast(evolved(c).dataType).as(c)
         } :+ when(col("bmax.d"), lit("dlive")).otherwise(lit("dtomb")).as("_kind"): _*)
-      // written rows ≤ 2 × batch keys ≤ 2 × (upserts + deletes): every
-      // output row (data winner or delete entry) maps to a batch key
+      // written rows ≤ 2 × batch keys ≤ 2 × events: every output row
+      // (data winner or delete entry) maps to a batch key
       val entriesKinded = lake.writeDataFilesKinded(
-        LakeTable.clustered(dataPart.unionByName(delPart),
-          2 * (upserts + deletes), clusterPartitions),
+        LakeTable.clustered(dataPart.unionByName(delPart), 2 * events, clusterPartitions),
         f"b$batchId%s-m", blooms = false, partitionCol = Some("_kind"),
         kindMap = k => if (k == "data") "data" else "delete")
-      val entries = entriesKinded.map(_._2)
       // dataPart's filter drops null-op winners (null =!= 'DELETE' is
       // null), so its row total is exactly the old newLive counter
       val newLive = entriesKinded.filter(_._1 == "data").map(_._2.rows).sum
       val oldLive = entriesKinded.filter(_._1 == "dlive").map(_._2.rows).sum
       // live-count chain from the base's exact live rows (file sums would
       // count superseded versions still sitting in MoR files)
-      val rowsBefore = snap.map(_.liveRows).getOrElse(0L)
-      lake.commit(batchId, newOffsets, evolved, Nil, entries, snap,
-        Map("upserts" -> upserts, "deletes" -> deletes,
-          "rowsBefore" -> rowsBefore, "rowsAfter" -> (rowsBefore + newLive - oldLive)) ++
-          lineageExtras())
-    } finally { act.unpersist(); () }
+      (Nil, entriesKinded.map(_._2), snap.map(_.liveRows).getOrElse(0L) + newLive - oldLive)
+    } finally act.unpersist()
   }
 }

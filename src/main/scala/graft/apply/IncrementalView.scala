@@ -26,12 +26,12 @@ import graft.lake.LakeTable
   *   1. `delta(feed)` — one map-side-combined aggregate over the feed's
   *      ±weighted before/after images; output is one row per TOUCHED
   *      group, never per table row.
-  *   2. `maintain(...)` — reads ONLY the touched groups' current rows
-  *      from the view's own lake table (the lake's distributed key-set
-  *      read: manifest files pruned by the touched repos, rows
-  *      semi-joined to the touched keys; the key set never reaches the
-  *      driver), adds the deltas, and routes the result back through
-  *      [[CdcApplier]]:
+  *   2. `maintain(viewApplier, ...)` — reads ONLY the touched groups'
+  *      current rows from the view's own lake table, the one
+  *      `viewApplier` writes (the lake's distributed key-set read:
+  *      manifest files pruned by the touched repos, rows semi-joined to
+  *      the touched keys; the key set never reaches the driver), adds the
+  *      deltas, and routes the result back through that [[CdcApplier]]:
   *      upserts for live groups, DELETEs for groups whose row count
   *      reaches zero. The view is itself a graft table, so it inherits
   *      snapshots, time travel, exactly-once batch fencing and its own
@@ -148,12 +148,15 @@ final class IncrementalView(
     viewLake.read(version).select(gcols ++ aggCols.map(col): _*)
 
   /** One O(churn) incremental refresh: feed → group deltas → read
-    * touched groups → add → apply as CDC batch. `seq` must be monotone
-    * across maintain calls (use the source feed's end version) — it is
-    * the view lake's exactly-once fence, so a replayed refresh is a
-    * no-op. Returns the view lake's new version. */
-  def maintain(viewApplier: CdcApplier, viewLake: LakeTable, feed: DataFrame,
+    * touched groups → add → apply as CDC batch. The view lake is the one
+    * `viewApplier` writes, so reads and writes cannot name different
+    * tables. `seq` must be monotone across maintain calls (use the
+    * source feed's end version) — it is the view lake's exactly-once
+    * fence, so a replayed refresh is a no-op. Returns the view lake's
+    * new version. */
+  def maintain(viewApplier: CdcApplier, feed: DataFrame,
       batchId: String, seq: Long): Long = {
+    val viewLake = viewApplier.lake
     // local persist, released before return: a long-running streaming
     // maintainer calls this once per micro-batch, so a session-lifetime
     // cache registry would grow without bound

@@ -22,47 +22,6 @@ object Model {
     val all: Seq[String] = Seq(Insert, Update, Delete)
   }
 
-  /** One change event from the binlog/WAL tail. `schemaVer` mirrors the
-    * reference's `anyof_schema` v1/v2 envelope variants
-    * (`microone_event.json:59-187`): v1 carries `commitLang` as a
-    * composite `"<commit>#<lang>"` (service-in-key form), v2 carries
-    * explicit `commit` + `lang`. */
-  case class ChangeEvent(
-      eventId: String,
-      op: String,
-      seq: Long,
-      repo: String,
-      path: String,
-      commit: String,
-      lang: String,
-      content: String,
-      schemaVer: String,
-      source: String)
-
-  /** A row of the lake table (input_hint shape). */
-  case class RepoRow(
-      repo: String,
-      path: String,
-      commit: String,
-      lang: String,
-      content: String,
-      seq: Long)
-
-  /** Quarantined raw event + validation error details (≙ the reference's
-    * dirty_efs split, `data_profiling.py:38-41,176-179`). */
-  case class Quarantined(raw: String, errors: Seq[String], stage: String)
-
-  /** Per-batch lineage / row-count metrics (≙ PROFILER logs → ES,
-    * `process_logs.py:140-167`). */
-  case class Lineage(
-      batchId: Long,
-      parsed: Long,
-      quarantined: Long,
-      upserts: Long,
-      deletes: Long,
-      rowsBefore: Long,
-      rowsAfter: Long)
-
   /** Wire schema of a change event as JSON (explicit — no inference scan,
     * unlike the reference's `spark.read.json` at
     * `convert_to_parquet.py:183`). */

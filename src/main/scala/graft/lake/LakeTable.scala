@@ -817,12 +817,9 @@ class LakeTable(val root: String, spark: SparkSession,
     val a = snapshot(fromVersion)
     val b = snapshot(toVersion)
     val (added, removed, addedDel) = changeFeedCandidateFiles(a, b)
-    val valF = b.schema.fields.filterNot(f => f.name == "repo" || f.name == "path")
+    val valT = StructType(b.schema.fields.filterNot(f => f.name == "repo" || f.name == "path"))
     def img(df: DataFrame, as: String) = df.select(col("repo"), col("path"),
-      struct(valF.toSeq.map { f =>
-        (if (df.columns.contains(f.name)) col(f.name).cast(f.dataType)
-        else lit(null).cast(f.dataType)).as(f.name)
-      }: _*).as(as))
+      struct(LakeTable.conform(df, valT): _*).as(as))
     val keyC = Seq(col("repo"), col("path"))
     val candParts: Seq[DataFrame] =
       Seq(b -> added, a -> removed).collect { case (s, fs) if fs.nonEmpty =>
@@ -831,10 +828,11 @@ class LakeTable(val root: String, spark: SparkSession,
           Seq(readEntries(addedDel, LakeTable.deleteSchema)
             .select(keyC: _*)) else Nil)
     if (candParts.isEmpty) return emptyFrame(LakeTable.changeFeedSchema(b.schema))
-    // used four times (two prunes, two semi-joins) — compute once;
-    // released by the session's OpCaches.unpersistAll between queries
-    val cand = graft.ops.OpCaches.track(
-      candParts.reduce(_ unionByName _).distinct())
+    // used four times (two prunes, two semi-joins) — compute once. A
+    // local checkpoint, not a session cache: the streaming CDF source
+    // calls this per micro-batch, and its blocks are released by the
+    // ContextCleaner once the returned feed is unreachable
+    val cand = candParts.reduce(_ unionByName _).distinct().localCheckpoint(eager = false)
     val joined = img(stateRestricted(a, cand), "before")
       .join(img(stateRestricted(b, cand), "after"), Seq("repo", "path"), "full_outer")
     // same-state filter compares the WHOLE images null-safely: tables
@@ -1298,6 +1296,16 @@ object LakeTable {
     org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("seq", org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("commit", org.apache.spark.sql.types.StringType)))
+
+  /** `df`'s columns under `schema`, in its order: a present column is cast
+    * to the schema type, an absent one reads as a typed null — the lake's
+    * "missing columns read as null" rule, applied wherever change rows,
+    * base rows or feed images meet an evolved or pinned schema. */
+  private[graft] def conform(df: DataFrame, schema: StructType): Seq[Column] =
+    schema.fields.toSeq.map { f =>
+      (if (df.columns.contains(f.name)) col(f.name).cast(f.dataType)
+      else lit(null).cast(f.dataType)).as(f.name)
+    }
 
   /** Name-union of two schemas, `a`'s order first — the rebase rule for
     * concurrent additive schema promotion (also the append-sink schema

@@ -59,8 +59,15 @@ object Similarity {
           }
         }
       }.toDF("qid", "neighbor_id", "qdot")
+    topK(joined, k)
+  }
+
+  /** The ranking tail of every top-k here: per query, the `k` best
+    * `(qid, neighbor_id, qdot)` candidates by quantized dot product, ties
+    * broken by neighbor id. */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("qid")).orderBy(col("qdot").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w))
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("qid"), col("neighbor_id"), col("rank").cast("int").as("rank"),
         col("qdot"))
@@ -177,11 +184,7 @@ object Similarity {
       c.join(broadcast(q), Seq("cell"))
         .filter(col("neighbor_id") =!= col("qid")),
       "qv", "qq", "qdot")
-    val w = Window.partitionBy(col("qid")).orderBy(col("qdot").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("neighbor_id"), col("rank").cast("int").as("rank"),
-        col("qdot"))
+    topK(joined, k)
   }
 
   /** Multi-probe bucket list: the query's own bucket plus (for
@@ -218,10 +221,6 @@ object Similarity {
       c.join(broadcast(q), Seq("bucket"))
         .filter(col("neighbor_id") =!= col("qid")),
       "qv", "qq", "qdot")
-    val w = Window.partitionBy(col("qid")).orderBy(col("qdot").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("neighbor_id"), col("rank").cast("int").as("rank"),
-        col("qdot"))
+    topK(joined, k)
   }
 }

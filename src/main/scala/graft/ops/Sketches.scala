@@ -129,12 +129,6 @@ object Sketches {
       .otherwise(raw)
   }
 
-  /** Convenience: per-key distinct-count estimate in one call. */
-  def hllDistinct(df: DataFrame, keyCols: Seq[String], textCol: String,
-      p: Int = 6): DataFrame =
-    hllRegisters(df, keyCols, textCol, p)
-      .select(keyCols.map(col) :+ hllEstimate(col("hll"), p).as("distinct_est"): _*)
-
   /** Heavy hitters (frequent items): every item whose count exceeds
     * `N / (k+1)`, with its EXACT count — the two-phase Misra-Gries
     * pattern (Misra & Gries 1982; the "MG summary" of Agarwal et al.,

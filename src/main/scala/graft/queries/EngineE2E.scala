@@ -358,7 +358,7 @@ object EngineE2E {
       val viewLake = new LakeTable(viewDir.toString, spark)
       val viewApplier = new CdcApplier(viewLake, spark)
       view.initialize(viewApplier, lake.read(Some(0L)), "view-0", seq = 1L)
-      view.maintain(viewApplier, viewLake, lake.changeFeed(0L, 1L), "view-1", seq = 2L)
+      view.maintain(viewApplier, lake.changeFeed(0L, 1L), "view-1", seq = 2L)
       view.read(viewLake).localCheckpoint(true)
     }
   }

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, EqualTo => CEqualTo, Expression, GreaterThan => CGreaterThan, GreaterThanOrEqual => CGreaterThanOrEqual, In => CIn, InSet => CInSet, LessThan => CLessThan, LessThanOrEqual => CLessThanOrEqual, Literal, Or => COr}
+import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, BinaryComparison, Expression, In => CIn, InSet => CInSet, Literal, Or => COr}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
@@ -283,46 +283,32 @@ object GraftPruning {
 
   type Entry = LakeTable#FileEntry
 
-  // ---- bounds checks over one file's manifest stats --------------------
-  // Unknown seq stats are stored as the [Long.MinValue, Long.MaxValue]
-  // sentinels, so every comparison below degrades to "keep".
+  /** May column `name` of file `f` hold a value `x` with `x op v`? THE
+    * bounds comparison: where `v` lies against the file's [min, max] of
+    * `repo` (String) or `seq` (Long). Unknown columns, literal types and
+    * operators keep the file; unknown seq stats are stored as the
+    * [Long.MinValue, Long.MaxValue] sentinels, so they keep it too. */
+  private def mayHold(f: Entry, name: String, op: String, v: Any): Boolean = {
+    val vsBounds: Option[(Int, Int)] = (name, v) match { // (v vs min, v vs max)
+      case ("repo", s: String) => Some((s.compareTo(f.minRepo), s.compareTo(f.maxRepo)))
+      case ("seq", n: Number) => Some((java.lang.Long.compare(n.longValue, f.minSeq),
+        java.lang.Long.compare(n.longValue, f.maxSeq)))
+      case _ => None
+    }
+    vsBounds.forall { case (lo, hi) =>
+      op match {
+        case "=" => lo >= 0 && hi <= 0
+        case ">" => hi < 0
+        case ">=" => hi <= 0
+        case "<" => lo > 0
+        case "<=" => lo >= 0
+        case _ => true
+      }
+    }
+  }
 
-  private def repoEq(f: Entry, v: String) = v >= f.minRepo && v <= f.maxRepo
-  private def repoGt(f: Entry, v: String) = f.maxRepo > v
-  private def repoGe(f: Entry, v: String) = f.maxRepo >= v
-  private def repoLt(f: Entry, v: String) = f.minRepo < v
-  private def repoLe(f: Entry, v: String) = f.minRepo <= v
-  private def seqEq(f: Entry, v: Long) = v >= f.minSeq && v <= f.maxSeq
-  private def seqGt(f: Entry, v: Long) = f.maxSeq > v
-  private def seqGe(f: Entry, v: Long) = f.maxSeq >= v
-  private def seqLt(f: Entry, v: Long) = f.minSeq < v
-  private def seqLe(f: Entry, v: Long) = f.minSeq <= v
-
-  private def eqB(f: Entry, name: String, v: Any): Boolean = (name, v) match {
-    case ("repo", s: String) => repoEq(f, s)
-    case ("seq", n: Number) => seqEq(f, n.longValue)
-    case _ => true
-  }
-  private def gtB(f: Entry, name: String, v: Any): Boolean = (name, v) match {
-    case ("repo", s: String) => repoGt(f, s)
-    case ("seq", n: Number) => seqGt(f, n.longValue)
-    case _ => true
-  }
-  private def geB(f: Entry, name: String, v: Any): Boolean = (name, v) match {
-    case ("repo", s: String) => repoGe(f, s)
-    case ("seq", n: Number) => seqGe(f, n.longValue)
-    case _ => true
-  }
-  private def ltB(f: Entry, name: String, v: Any): Boolean = (name, v) match {
-    case ("repo", s: String) => repoLt(f, s)
-    case ("seq", n: Number) => seqLt(f, n.longValue)
-    case _ => true
-  }
-  private def leB(f: Entry, name: String, v: Any): Boolean = (name, v) match {
-    case ("repo", s: String) => repoLe(f, s)
-    case ("seq", n: Number) => seqLe(f, n.longValue)
-    case _ => true
-  }
+  /** `v op col` ≡ `col flipped(op) v`. */
+  private val flipped = Map(">" -> "<", ">=" -> "<=", "<" -> ">", "<=" -> ">=")
 
   // ---- catalyst expression face (the FileIndex path) -------------------
 
@@ -336,32 +322,18 @@ object GraftPruning {
   private[sources] def mayMatchCatalyst(e: Expression, f: Entry): Boolean = e match {
     case CAnd(l, r) => mayMatchCatalyst(l, f) && mayMatchCatalyst(r, f)
     case COr(l, r) => mayMatchCatalyst(l, f) || mayMatchCatalyst(r, f)
-    case CEqualTo(a: AttributeReference, v) =>
-      ext(v).forall(eqB(f, a.name, _))
-    case CEqualTo(v, a: AttributeReference) =>
-      ext(v).forall(eqB(f, a.name, _))
-    case CGreaterThan(a: AttributeReference, v) =>
-      ext(v).forall(gtB(f, a.name, _))
-    case CGreaterThan(v, a: AttributeReference) => // lit > col ≡ col < lit
-      ext(v).forall(ltB(f, a.name, _))
-    case CGreaterThanOrEqual(a: AttributeReference, v) =>
-      ext(v).forall(geB(f, a.name, _))
-    case CGreaterThanOrEqual(v, a: AttributeReference) =>
-      ext(v).forall(leB(f, a.name, _))
-    case CLessThan(a: AttributeReference, v) =>
-      ext(v).forall(ltB(f, a.name, _))
-    case CLessThan(v, a: AttributeReference) =>
-      ext(v).forall(gtB(f, a.name, _))
-    case CLessThanOrEqual(a: AttributeReference, v) =>
-      ext(v).forall(leB(f, a.name, _))
-    case CLessThanOrEqual(v, a: AttributeReference) =>
-      ext(v).forall(geB(f, a.name, _))
+    case c: BinaryComparison => (c.left, c.right) match {
+      case (a: AttributeReference, v) => ext(v).forall(mayHold(f, a.name, c.symbol, _))
+      case (v, a: AttributeReference) =>
+        ext(v).forall(mayHold(f, a.name, flipped.getOrElse(c.symbol, c.symbol), _))
+      case _ => true
+    }
     case CIn(a: AttributeReference, vs) =>
       val lits = vs.flatMap(ext)
-      lits.size != vs.size || lits.exists(eqB(f, a.name, _))
+      lits.size != vs.size || lits.exists(mayHold(f, a.name, "=", _))
     case CInSet(a: AttributeReference, hset) =>
       hset.exists { v =>
-        eqB(f, a.name, v match { case u: UTF8String => u.toString; case o => o })
+        mayHold(f, a.name, "=", v match { case u: UTF8String => u.toString; case o => o })
       }
     case _ => true
   }

@@ -99,10 +99,7 @@ class GraftStreamSource(spark: SparkSession, root: String,
           struct(img.map(col): _*).as("after"))
     }
     // conform to the pinned schema: later snapshots may be wider
-    val conformed = feed.select(declaredSchema.fields.toSeq.map { f =>
-      if (feed.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
+    val conformed = feed.select(LakeTable.conform(feed, declaredSchema): _*)
     // MicroBatchExecution asserts isStreaming on the returned frame; the
     // inner plan stays lazy (toRdd builds lineage, executes per trigger)
     org.apache.spark.sql.GraftSparkInternals.streamingDataFrame(

@@ -43,38 +43,49 @@ object CdcStream {
     StructField("content", StringType),
     StructField("seq", LongType)))
 
+  /** The one streaming driver behind every starter: tail `source` under
+    * `name`, resuming from `checkpointDir`, run `body` on each
+    * micro-batch and then, when `maintainEvery > 0`, `maintenance` after
+    * every K-th batch.
+    *
+    * Maintenance is the scheduling hook that keeps a long-running
+    * merge-on-read tail healthy (bounded delete-file count, bounded
+    * small files) without an external cron. It runs AFTER the batch's
+    * commit, so a crash between them loses only hygiene, never data;
+    * the policy's jobs rebase against concurrent commits. */
+  private def drive(source: DataFrame, name: String, checkpointDir: String,
+      trigger: Trigger, maintainEvery: Int = 0, maintenance: () => Unit = () => ())(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    source.writeStream
+      .queryName(name)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        body(batch, id)
+        if (maintainEvery > 0 && (id + 1) % maintainEvery == 0) maintenance()
+      }
+      .start()
+
   /** Start tailing `inputDir` (parquet change-event files) into `lake`.
     * `Trigger.AvailableNow` drains everything present then stops —
     * the batch-incremental cadence of the reference; a ProcessingTime
-    * trigger makes it a long-running tail.
-    *
-    * `maintainEvery > 0` runs [[LakeTable.maintain]] after every K-th
-    * micro-batch — the scheduling hook that keeps a long-running
-    * merge-on-read tail healthy (bounded delete-file count, bounded
-    * small files) without an external cron. Maintenance runs AFTER the
-    * batch's commit, so a crash between them loses only hygiene, never
-    * data; the policy's jobs rebase against concurrent commits. */
+    * trigger makes it a long-running tail. `maintainEvery > 0` runs
+    * `maintain` (default [[LakeTable.maintain]]) after every K-th
+    * micro-batch ([[drive]]). */
   def start(spark: SparkSession, inputDir: String, lake: LakeTable,
       checkpointDir: String, maxFilesPerTrigger: Int = 500,
       trigger: Trigger = Trigger.AvailableNow(),
       mergeOnRead: Boolean = false, maintainEvery: Int = 0,
       maintain: LakeTable => Seq[Long] = _.maintain()): StreamingQuery = {
     val applier = new CdcApplier(lake, spark, mergeOnRead = mergeOnRead)
-    spark.readStream
+    val source = spark.readStream
       .schema(eventSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inputDir)
-      .writeStream
-      .queryName("graft-cdc-apply")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applier.applyBatch(batch, s"stream-$id")
-        if (maintainEvery > 0 && (id + 1) % maintainEvery == 0)
-          maintain(lake)
-        ()
-      }
-      .start()
+    drive(source, "graft-cdc-apply", checkpointDir, trigger, maintainEvery,
+      () => maintain(lake)) { (batch, id) =>
+      applier.applyBatch(batch, s"stream-$id")
+    }
   }
 
   /** Start tailing `blobDir` in the WIRE format — raw concatenated-JSON
@@ -92,7 +103,7 @@ object CdcStream {
     * metadata no-op on the dirty side too (streaming replays are always
     * the most recent batch, well inside the applied window). Read it
     * back with `spark.read.format("graft").load(quarantineDir)`.
-    * `maintainEvery`: as in [[start]]. */
+    * `maintainEvery`/`maintain`: as in [[start]]. */
   def startWire(spark: SparkSession, blobDir: String, lake: LakeTable,
       checkpointDir: String, quarantineDir: Option[String] = None,
       maxFilesPerTrigger: Int = 500,
@@ -100,6 +111,7 @@ object CdcStream {
       mergeOnRead: Boolean = false, maintainEvery: Int = 0,
       maintain: LakeTable => Seq[Long] = _.maintain()): StreamingQuery = {
     import org.apache.spark.sql.functions._
+    import spark.implicits._
     // binaryFile's schema is FIXED by the source, but the streaming API
     // still requires it stated explicitly (no inference on streams)
     val binaryFileSchema = StructType(Seq(
@@ -107,35 +119,28 @@ object CdcStream {
       StructField("modificationTime", TimestampType),
       StructField("length", LongType),
       StructField("content", BinaryType)))
-    spark.readStream
+    val source = spark.readStream
       .format("binaryFile")
       .schema(binaryFileSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .load(blobDir)
       .select(col("content"))
-      .writeStream
-      .queryName("graft-cdc-wire")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        import spark.implicits._
-        val blobs = batch.select(col("content").cast("string")).as[String]
-        val (_, dirty) = graft.CdcPipeline.processBlobs(spark, blobs, lake,
-          s"wire-$id", mergeOnRead = mergeOnRead)
-        quarantineDir.foreach(d => dirty.write.format("graft").mode("append")
-          .option("batchId", s"wire-dirty-$id").save(d))
-        if (maintainEvery > 0 && (id + 1) % maintainEvery == 0)
-          maintain(lake)
-        ()
-      }
-      .start()
+    drive(source, "graft-cdc-wire", checkpointDir, trigger, maintainEvery,
+      () => maintain(lake)) { (batch, id) =>
+      val blobs = batch.select(col("content").cast("string")).as[String]
+      val (_, dirty) = graft.CdcPipeline.processBlobs(spark, blobs, lake,
+        s"wire-$id", mergeOnRead = mergeOnRead)
+      quarantineDir.foreach(d => dirty.write.format("graft").mode("append")
+        .option("batchId", s"wire-dirty-$id").save(d))
+    }
   }
 
   /** Continuously maintain an incremental materialized view
     * ([[graft.apply.IncrementalView]]) from a graft table's CDF stream —
     * the composition the changeFeed streaming mode exists for: source
     * table → `readStream.format("graft").option("changeFeed","true")` →
-    * per-micro-batch O(churn) view refresh into the view's own lake.
+    * per-micro-batch O(churn) view refresh into `viewLake` through its
+    * own [[CdcApplier]].
     *
     * No separate bootstrap step: the CDF stream's FIRST micro-batch is
     * the whole table as insert-images (unless `startingVersion` pins a
@@ -156,19 +161,13 @@ object CdcStream {
     val viewApplier = new CdcApplier(viewLake, spark)
     val reader = spark.readStream.format("graft").option("changeFeed", "true")
     startingVersion.foreach(v => reader.option("startingVersion", v.toString))
-    reader.load(sourceRoot)
-      .writeStream
-      .queryName("graft-view-maintenance")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    drive(reader.load(sourceRoot), "graft-view-maintenance", checkpointDir, trigger) {
+      (batch, id) =>
         // micro-batch ids are the checkpoint's monotone clock — they
         // restart exactly where they left off, which is what the view
         // lake's seq fence needs
-        view.maintain(viewApplier, viewLake, batch, s"view-$id", seq = id + 1)
-        ()
-      }
-      .start()
+        view.maintain(viewApplier, batch, s"view-$id", seq = id + 1)
+    }
   }
 
   /** Event-time windowed op-mix metrics with a WATERMARK (the streaming

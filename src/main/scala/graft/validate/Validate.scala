@@ -169,11 +169,8 @@ object Validate {
     * flattens. */
   def routeByClass(df: DataFrame, registry: RuleRegistry = defaultRegistry(),
       classCol: Column = classKey): (DataFrame, DataFrame) = {
-    val annotated = df.withColumn("errors",
-      concat(errorsColumn(envelopeRules), registry.errorsFor(classCol)))
-    (annotated.filter(size(col("errors")) === 0).drop("errors", "_corrupt", "raw"),
-      annotated.filter(size(col("errors")) > 0)
-        .select(col("raw"), col("errors"), lit("validate").as("stage")))
+    cleanAndDirty(df.withColumn("errors",
+      concat(errorsColumn(envelopeRules), registry.errorsFor(classCol))))
   }
 
   /** Annotate with `errors`; clean ⇔ `size(errors)=0`. One pass. */
@@ -185,10 +182,7 @@ object Validate {
     * single projection reused by both sinks. */
   def route(df: DataFrame, rules: Seq[Rule] = changeEventRules)
       : (DataFrame, DataFrame) = {
-    val annotated = annotate(df, rules)
-    (annotated.filter(size(col("errors")) === 0).drop("errors", "_corrupt", "raw"),
-      annotated.filter(size(col("errors")) > 0)
-        .select(col("raw"), col("errors"), lit("validate").as("stage")))
+    cleanAndDirty(annotate(df, rules))
   }
 
   /** [[route]] plus per-rule observability (the reference's per-event
@@ -210,12 +204,16 @@ object Validate {
       sum(when(!coalesce(r.holds, lit(false)), 1L).otherwise(0L)).as(r.name)) ++ Seq(
       count(lit(1)).as("parsed"),
       sum(when(size(col("errors")) > 0, 1L).otherwise(0L)).as("quarantined"))
-    val observed = annotated.observe(obs, aggs.head, aggs.tail: _*)
-    (observed.filter(size(col("errors")) === 0).drop("errors", "_corrupt", "raw"),
-      observed.filter(size(col("errors")) > 0)
-        .select(col("raw"), col("errors"), lit("validate").as("stage")),
-      obs)
+    val (clean, dirty) = cleanAndDirty(annotated.observe(obs, aggs.head, aggs.tail: _*))
+    (clean, dirty, obs)
   }
+
+  /** (clean, quarantined) views of one annotated plan: clean rows drop the
+    * annotation, quarantined rows keep the raw event and its errors. */
+  private def cleanAndDirty(annotated: DataFrame): (DataFrame, DataFrame) =
+    (annotated.filter(size(col("errors")) === 0).drop("errors", "_corrupt", "raw"),
+      annotated.filter(size(col("errors")) > 0)
+        .select(col("raw"), col("errors"), lit("validate").as("stage")))
 
   /** Lineage-map entries from a completed observation: per-rule counts
     * keyed `rule.<name>` plus `parsed` / `quarantined`.

@@ -109,6 +109,46 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(sortedRows(q) == sortedRows(engineFeed))
   }
 
+  test("file pruning ≡ brute force over the file's range: comparisons both ways, IN, InSet, AND, OR on repo and seq") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BindReferences, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, Or}
+    import org.apache.spark.sql.types.{LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val lake = new LakeTable(TestSpark.tmpDir("prunetable"), spark)
+    val f = lake.FileEntry("data/x.parquet", 1L, "c", "g", 10L, 20L, bytes = 1L)
+    val repo = AttributeReference("repo", StringType)()
+    val seq = AttributeReference("seq", LongType)()
+    // every value the file may hold (for strings: the bounds and every
+    // literal inside them, which decides each single comparison exactly)
+    val fileRows = for (r <- Seq("c", "e", "g"); s <- 10L to 20L)
+      yield InternalRow(UTF8String.fromString(r), s)
+    // literals below, at the min edge, inside, at the max edge, above
+    val repoLits = Seq("a", "c", "e", "g", "i").map(Literal(_))
+    val seqLits = Seq(5L, 10L, 15L, 20L, 25L).map(Literal(_))
+    val cmps: Seq[(Expression, Expression) => Expression] = Seq(EqualTo(_, _),
+      GreaterThan(_, _), GreaterThanOrEqual(_, _), LessThan(_, _), LessThanOrEqual(_, _))
+    def compared(a: Expression, lits: Seq[Literal]): Seq[Expression] =
+      for (c <- cmps; v <- lits; e <- Seq(c(a, v), c(v, a))) yield e
+    def utf(s: String*): Set[Any] = s.map(UTF8String.fromString).toSet
+    val repoPreds = compared(repo, repoLits) ++ Seq(
+      In(repo, Seq(Literal("a"), Literal("i"))), In(repo, Seq(Literal("a"), Literal("e"))),
+      InSet(repo, utf("b", "h")), InSet(repo, utf("g")))
+    val seqPreds = compared(seq, seqLits) ++ Seq(
+      In(seq, Seq(Literal(1L), Literal(30L))), In(seq, Seq(Literal(1L), Literal(20L))),
+      InSet(seq, Set(4L, 26L)), InSet(seq, Set(12L)))
+    // conjunctions and disjunctions across the two columns: the file is a
+    // product of two ranges, so per-side answers combine exactly
+    val cases = repoPreds ++ seqPreds ++
+      (for (r <- repoPreds; s <- seqPreds; e <- Seq(And(r, s), Or(s, r))) yield e)
+    val wrong = cases.filter { e =>
+      val bound = BindReferences.bindReference(e, Seq(repo, seq))
+      val someRowMatches = fileRows.exists(row => bound.eval(row) == true)
+      GraftPruning.mayMatchCatalyst(e, f) != someRowMatches
+    }
+    assert(cases.size > 1000)
+    assert(wrong.size == 0, s"of ${cases.size} cases disagree, e.g. ${wrong.take(3)}")
+  }
+
   test("column pruning reaches the scan's ReadSchema") {
     val q = readGraft(cowLake.root).select($"repo", $"seq")
     val scan = scans(q).head

@@ -57,7 +57,7 @@ class IncrementalViewSpec extends AnyFunSuite {
       ev("UPDATE", "r1", "b", "scala", "bbbbb", 6),
       ev("DELETE", "r2", "d", "go", "", 7),
       ev("INSERT", "r3", "e", "rust", "ee", 8))), "b1")
-    view.maintain(viewApplier, viewLake, srcLake.changeFeed(0L, 1L), "view-1", seq = 2L)
+    view.maintain(viewApplier, srcLake.changeFeed(0L, 1L), "view-1", seq = 2L)
     assert(viewSet(view.read(viewLake)) == viewSet(view.full(srcLake.read(Some(1L)))))
     val v1 = viewSet(view.read(viewLake))
     assert(!v1.exists(_._2 == "go"), s"emptied group must drop out, got $v1")
@@ -66,7 +66,7 @@ class IncrementalViewSpec extends AnyFunSuite {
 
     // replayed refresh (same batchId + seq): fenced to a no-op
     val verBefore = viewLake.currentSnapshot.get.version
-    view.maintain(viewApplier, viewLake, srcLake.changeFeed(0L, 1L), "view-1", seq = 2L)
+    view.maintain(viewApplier, srcLake.changeFeed(0L, 1L), "view-1", seq = 2L)
     assert(viewSet(view.read(viewLake)) == v1)
 
     // v2: delete the last python row of r1 plus an unrelated insert;
@@ -76,7 +76,7 @@ class IncrementalViewSpec extends AnyFunSuite {
       ev("DELETE", "r1", "c", "python", "", 10),
       ev("INSERT", "r2", "f", "go", "ffff", 11))), "b2")
     val v2src = srcLake.currentSnapshot.get.version
-    view.maintain(viewApplier, viewLake,
+    view.maintain(viewApplier,
       srcLake.changeFeed(1L, v2src), "view-2", seq = 3L)
     assert(viewSet(view.read(viewLake)) == viewSet(view.full(srcLake.read(Some(v2src)))))
     assert(!viewSet(view.read(viewLake)).exists(_._2 == "python"))
@@ -104,7 +104,7 @@ class IncrementalViewSpec extends AnyFunSuite {
     val viewLake = new LakeTable(TestSpark.tmpDir("ivview2"), spark)
     val viewApplier = new CdcApplier(viewLake, spark)
     view.initialize(viewApplier, srcLake.read(Some(0L)), "view-0", seq = 1L)
-    view.maintain(viewApplier, viewLake, feed, "view-1", seq = 2L)
+    view.maintain(viewApplier, feed, "view-1", seq = 2L)
     assert(viewSet(view.read(viewLake)) == viewSet(view.full(srcLake.read(Some(1L)))))
   }
 

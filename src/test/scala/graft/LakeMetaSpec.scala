@@ -209,6 +209,23 @@ class LakeMetaSpec extends AnyFunSuite {
       "maintenance-only interval must contribute no candidates at all")
   }
 
+  test("change feed pins no session cache: repeated feeds leave the CacheManager empty") {
+    val lake = new LakeTable(TestSpark.tmpDir("lakecdfcache"), spark)
+    val app = new CdcApplier(lake, spark)
+    def rows(ids: Range, tag: String, seqBase: Long) =
+      ids.map { i => ("UPDATE", "p0", f"cc$i%04d", "f", s"c$tag$i", "scala",
+        s"content-$tag-$i", seqBase + i) }
+        .toDF("op", "part", "repo", "path", "commit", "lang", "content", "seq")
+    app.applyBatch(rows(0 until 50, "a", 0), "cc-0")
+    app.applyBatch(rows(0 until 20, "b", 1000), "cc-1")
+    spark.catalog.clearCache()
+    // a streaming CDF maintainer calls changeFeed once per micro-batch and
+    // never releases a session registry: each call must leave nothing behind
+    (1 to 3).foreach(_ => assert(lake.changeFeed(0L, 1L).collect().length == 20))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "changeFeed must not register a session-lifetime cache")
+  }
+
   test("merge-on-read live-row chain: rows_after equals the table size across a delete consolidation") {
     val lake = new LakeTable(TestSpark.tmpDir("lakelivechain"), spark)
     val app = new CdcApplier(lake, spark, mergeOnRead = true)
