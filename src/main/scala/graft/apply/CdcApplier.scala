@@ -289,20 +289,21 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
     // base versions are only consulted for keys THIS batch changes — for
     // a SPARSE batch (event count vs table rows, both already known:
     // events from the fused stats job, table rows from the manifest),
-    // semi-join the key-column scans to the batch's key set before the
+    // semi-join the key-column scans to the batch's keys before the
     // merge aggregate, so a drizzle batch aggregates O(batch) base rows,
-    // not every key in every touched file; AQE broadcasts the small key
-    // set. For a BULK batch the semi-join's own distinct+probe cost
-    // exceeds what it saves (measured +45% on a whole-keyspace 2M-row
-    // batch), so it is skipped and the aggregate's map-side combine does
-    // the work.
+    // not every key in every touched file. AQE broadcasts the batch's
+    // key column pair as it is — a left-semi probe needs no unique build
+    // keys, so no `distinct` (a shuffle) runs first. For a BULK batch the
+    // probe costs more than it saves (measured +45% on a whole-keyspace
+    // 2M-row batch), so it is skipped and the aggregate's map-side
+    // combine does the work.
     val semiJoinBase = events * 8 < snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L)
-    val batchKeys = fenced.select(col("repo"), col("path")).distinct()
     def readKeyCols(fs: Seq[lake.FileEntry], isData: Boolean) = {
       // manifest-backed scan (zero listing calls per micro-batch — at
       // 10^6 batches the per-batch planning RPCs ARE the throughput)
       val base = lake.readEntries(fs, LakeTable.deleteSchema)
-      val keys = if (semiJoinBase) base.join(batchKeys, Seq("repo", "path"), "left_semi") else base
+      val keys = if (semiJoinBase) base.join(fenced.select(keyCols.map(col): _*), keyCols, "left_semi")
+        else base
       conformed(keys,
         lit(null).cast("string").as("_op"), lit(false).as("_isChange"), lit(isData).as("_isData"))
     }
@@ -334,46 +335,39 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
     val actionable = col("hasChange") && (col("bmax").isNull ||
       struct(col("w.seq").as("s"), col("w.commit").as("c")) >
         struct(col("bmax.s").as("s"), col("bmax.c").as("c")))
-    // O(batch winners) — PERSISTED because the range-clustered write
-    // SAMPLES its input (RangePartitioner runs a full pass over the
-    // child before the write pass) and the union below reads `act` from
-    // two branches: without the cache the whole merge — base key-column
-    // scan + shuffle + aggregate — would execute per consumer.
-    val act = merged.filter(actionable)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // ONE write job for both outputs, partitioned by kind: data rows
-      // (winners that live) ∪ key-only equality-delete entries (for keys
-      // where some base version existed — a brand-new key has nothing to
-      // supersede; the entry carries the WINNING (seq, commit) so
-      // strictly-older versions die at read). The delete partition is
-      // SUBDIVIDED by whether a live base row existed ('dlive' — a bare
-      // tombstone supersession is 'dtomb'), so the exact newLive/oldLive
-      // counters for the lineage chain fall out of the written files'
-      // footer stats — the separate count aggregate (one full action per
-      // micro-batch) is gone; per-micro-batch fixed cost is what
-      // sustained throughput is made of.
-      val dataPart = act.filter(col("w._op") =!= Op.Delete)
-        .select(keyCols.map(col) ++ valueNames.map(c => col(s"w.$c").as(c)) :+
-          lit("data").as("_kind"): _*)
-      val delPart = act.filter(col("bmax").isNotNull)
-        .select(keyCols.map(col) ++ valueNames.map { c =>
-          if (c == "seq" || c == "commit") col(s"w.$c").as(c)
-          else lit(null).cast(evolved(c).dataType).as(c)
-        } :+ when(col("bmax.d"), lit("dlive")).otherwise(lit("dtomb")).as("_kind"): _*)
-      // written rows ≤ 2 × batch keys ≤ 2 × events: every output row
-      // (data winner or delete entry) maps to a batch key
-      val entriesKinded = lake.writeDataFilesKinded(
-        LakeTable.clustered(dataPart.unionByName(delPart), 2 * events, clusterPartitions),
-        f"b$batchId%s-m", blooms = false, partitionCol = Some("_kind"),
-        kindMap = k => if (k == "data") "data" else "delete")
-      // dataPart's filter drops null-op winners (null =!= 'DELETE' is
-      // null), so its row total is exactly the old newLive counter
-      val newLive = entriesKinded.filter(_._1 == "data").map(_._2.rows).sum
-      val oldLive = entriesKinded.filter(_._1 == "dlive").map(_._2.rows).sum
-      // live-count chain from the base's exact live rows (file sums would
-      // count superseded versions still sitting in MoR files)
-      (Nil, entriesKinded.map(_._2), snap.map(_.liveRows).getOrElse(0L) + newLive - oldLive)
-    } finally act.unpersist()
+    // ONE pass over the actionable winners writes both outputs,
+    // partitioned by kind: each winner explodes into its data row (if it
+    // lives: a null-op winner's `=!= DELETE` is null, so it writes none)
+    // and its key-only equality-delete entry (if some base version
+    // existed — a brand-new key has nothing to supersede; the entry
+    // carries the WINNING (seq, commit) so strictly-older versions die at
+    // read). The delete kind is SUBDIVIDED by whether a live base row
+    // existed ('dlive' — a bare tombstone supersession is 'dtomb'), so
+    // the exact newLive/oldLive counters for the lineage chain fall out
+    // of the written files' footer stats — no count aggregate (one full
+    // action per micro-batch); per-micro-batch fixed cost is what
+    // sustained throughput is made of. One consumer needs no cache: a
+    // range-clustered (bulk) write samples its input, but the sample
+    // re-reads the merge's shuffle output, not the base scan.
+    def entry(live: Column, value: String => Column, kind: Column): Column =
+      when(live, struct(keyCols.map(col) ++ valueNames.map(c => value(c).as(c)) :+
+        kind.as("_kind"): _*))
+    val out = merged.filter(actionable).select(explode(array(
+      entry(col("w._op") =!= Op.Delete, c => col(s"w.$c"), lit("data")),
+      entry(col("bmax").isNotNull, c =>
+        if (c == "seq" || c == "commit") col(s"w.$c") else lit(null).cast(evolved(c).dataType),
+        when(col("bmax.d"), lit("dlive")).otherwise(lit("dtomb"))))).as("_e"))
+      .filter(col("_e").isNotNull).select(col("_e.*"))
+    // written rows ≤ 2 × batch keys ≤ 2 × events: every output row
+    // (data winner or delete entry) maps to a batch key
+    val entriesKinded = lake.writeDataFilesKinded(
+      LakeTable.clustered(out, 2 * events, clusterPartitions),
+      f"b$batchId%s-m", blooms = false, partitionCol = Some("_kind"),
+      kindMap = k => if (k == "data") "data" else "delete")
+    val newLive = entriesKinded.filter(_._1 == "data").map(_._2.rows).sum
+    val oldLive = entriesKinded.filter(_._1 == "dlive").map(_._2.rows).sum
+    // live-count chain from the base's exact live rows (file sums would
+    // count superseded versions still sitting in MoR files)
+    (Nil, entriesKinded.map(_._2), snap.map(_.liveRows).getOrElse(0L) + newLive - oldLive)
   }
 }

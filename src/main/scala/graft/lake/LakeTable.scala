@@ -266,16 +266,9 @@ class LakeTable(val root: String, spark: SparkSession,
   private[graft] def readEntries(files: Seq[FileEntry], schema: StructType): DataFrame =
     graft.sources.GraftScans.scanEntries(spark, root, files, schema)
 
-  /** Apply a snapshot's merge-on-read delete files to a data scan: a row
-    * survives iff NO delete entry for its key carries a strictly newer
-    * (seq, commit). The per-key delete maximum is one small aggregate
-    * over the delete files (churn since the last compaction, NOT table
-    * size), joined back by key — size-based planning broadcasts it in
-    * the common case, and AQE handles the adversarial huge-churn case as
-    * a shuffle join rather than an OOM. The winner row itself always
-    * survives: its (seq, commit) EQUALS its own delete entry's, and the
-    * predicate keeps `>=`. No-op when the snapshot has no delete files
-    * (pure copy-on-write history).
+  /** Apply a snapshot's merge-on-read delete files to a data scan
+    * ([[LakeTable.undeleted]]). No-op when the snapshot has no delete
+    * files (pure copy-on-write history).
     *
     * `scanned` (the data files `data` actually reads, when the caller
     * pruned them — point lookups, incremental feeds) prunes the DELETE
@@ -286,22 +279,10 @@ class LakeTable(val root: String, spark: SparkSession,
     * interval check, sound because both bounds come from footer stats. */
   private def resolveDeletes(data: DataFrame, s: Snapshot,
       scanned: Option[Seq[FileEntry]]): DataFrame = {
-    val dels0 = s.deleteFiles
-    val dels = scanned match {
-      case Some(fs) => dels0.filter(d =>
-        fs.exists(f => d.minRepo <= f.maxRepo && d.maxRepo >= f.minRepo))
-      case None => dels0
-    }
+    val dels = scanned.fold(s.deleteFiles)(fs => s.deleteFiles.filter(d =>
+      fs.exists(f => d.minRepo <= f.maxRepo && d.maxRepo >= f.minRepo)))
     if (dels.isEmpty) data
-    else {
-      val dmax = readEntries(dels, LakeTable.deleteSchema)
-        .groupBy(col("repo"), col("path"))
-        .agg(max(struct(col("seq").as("s"), col("commit").as("c"))).as("_dmax"))
-      data.join(dmax, Seq("repo", "path"), "left")
-        .filter(col("_dmax").isNull ||
-          struct(col("seq").as("s"), col("commit").as("c")) >= col("_dmax"))
-        .drop("_dmax")
-    }
+    else LakeTable.undeleted(data, readEntries(dels, LakeTable.deleteSchema))
   }
 
   /** Distributed file pruning for the apply path: which files' [minRepo,
@@ -638,12 +619,12 @@ class LakeTable(val root: String, spark: SparkSession,
     * Between major compactions every MoR micro-batch adds a delete file,
     * and every resolved read opens all of them — after 10^4 batches the
     * read-side footprint is 10^4 tiny files. Consolidation replaces them
-    * with their per-key max (exactly the aggregate [[resolveDeletes]]
-    * computes on every read, materialized once), so reads open ONE
-    * delete file and the manifest shrinks — the Iceberg
+    * with their per-key max, so reads open ONE delete file, probe one
+    * entry per key, and the manifest shrinks — the Iceberg
     * rewrite_position_delete_files idea for equality deletes. Table
-    * state is bit-identical: resolveDeletes(max-of-files) ≡
-    * resolveDeletes(consolidated) because max is associative.
+    * state is bit-identical: [[resolveDeletes]] kills a row iff SOME
+    * entry for its key is strictly newer, which holds iff the per-key
+    * max is.
     *
     * Cost is O(delete churn since the last major compaction), never
     * O(table) — the job a scheduler runs every N micro-batches, with
@@ -1288,6 +1269,24 @@ object LakeTable {
   /** Key count above which [[LakeTable.lookupKeys]] filters with a
     * broadcast semi-join instead of an OR-chain predicate. */
   val LookupBulkThreshold: Int = 64
+
+  /** The rows of `data` that no delete entry (`deletes`, under
+    * [[deleteSchema]]) kills: a row survives iff NO entry for its key
+    * carries a strictly newer (seq, commit). One `left_anti` join on
+    * (repo, path) with that comparison as its condition — the Iceberg v2
+    * equality-delete probe. No per-key aggregate runs first, so nothing
+    * shuffles: the delete side (churn since the last compaction, NOT
+    * table size) is the small build side AQE broadcasts, and a huge-churn
+    * delete side plans as a shuffle join rather than an OOM. The winner
+    * row itself survives: its (seq, commit) EQUALS its own entry's. The
+    * struct order is total (a NULL field sorts first), so the rule
+    * equals "the per-key delete maximum ≤ the row". */
+  private[graft] def undeleted(data: DataFrame, deletes: DataFrame): DataFrame = {
+    val (r, d) = (data.as("_r"), deletes.as("_d"))
+    r.join(d, col("_r.repo") === col("_d.repo") && col("_r.path") === col("_d.path") &&
+      struct(col("_d.seq"), col("_d.commit")) > struct(col("_r.seq"), col("_r.commit")),
+      "left_anti")
+  }
 
   /** Schema of merge-on-read equality-delete files: the superseded key
     * plus the WINNING (seq, commit) that superseded it. */

@@ -214,7 +214,13 @@ object CdcStream {
     * need exact once-per-winner across TTL evictions must dedup on
     * (key, seq) downstream (or read the lake's `readSince`, which is
     * always exact: the TABLE, unlike the feed, keeps LWW state forever
-    * by construction). `None` keeps the exact never-re-emit behavior. */
+    * by construction). `None` keeps the exact never-re-emit behavior.
+    * With a TTL, `Trigger.AvailableNow` does not end by itself: a
+    * processing-time timeout may fire at any moment, so every trigger
+    * schedules another no-data batch, and `processAllAvailable` (which
+    * waits for a trigger with nothing to do) never returns either. Stop
+    * such a query once its data batches have committed (`recentProgress`
+    * shows them). */
   def lwwChangeFeed(spark: SparkSession, inputDir: String,
       maxFilesPerTrigger: Int = 500,
       stateTtl: Option[String] = None): Dataset[Change] = {

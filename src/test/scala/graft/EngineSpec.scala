@@ -267,6 +267,32 @@ class EngineSpec extends AnyFunSuite {
     assert(st(mor) == st(cow))
   }
 
+  test("merge-on-read batch outputs: null-op, delete-over-live, update-over-tombstone, new key") {
+    val lake = new LakeTable(TestSpark.tmpDir("lakemorpin"), spark)
+    val app = new CdcApplier(lake, spark, mergeOnRead = true)
+    def rows(evs: (Option[String], String, Long)*) = evs.map { case (op, key, seq) =>
+      (op, "0", s"pin-$key", "p", s"c$key$seq", "scala", s"body-$key-$seq", seq)
+    }.toDF("op", "part", "repo", "path", "commit", "lang", "content", "seq")
+    val up = Some("UPDATE")
+    app.applyBatch(rows((up, "null", 1L), (up, "del", 2L), (up, "tomb", 3L), (up, "keep", 4L)),
+      "pin-0")
+    app.applyBatch(rows((Some("DELETE"), "tomb", 10L)), "pin-1") // tombstone over live
+    app.applyBatch(rows(
+      (None, "null", 20L), // NULL-op winner over a live row: entry, no data row
+      (Some("DELETE"), "del", 21L), // DELETE over a live row: a 'dlive' entry
+      (up, "tomb", 22L), // update superseding the tombstone: data + 'dtomb' entry
+      (up, "new", 23L)), "pin-2") // brand-new key: data row only
+    val (before, after) = (lake.snapshot(lake.currentVersion.get - 1), lake.currentSnapshot.get)
+    val added = after.files.filterNot(f => before.files.map(_.path).contains(f.path))
+    def rowsOf(kind: String) = added.filter(_.kind == kind).map(_.rows).sum
+    // data = {tomb, new}; entries = {null, del} live + {tomb} tombstone
+    assert((rowsOf("data"), rowsOf("delete")) == (2L, 3L))
+    // rowsAfter = live before (null, del, keep) + data − 'dlive' entries
+    assert(before.liveRows == 3L && after.lineage("rowsAfter") == 3L)
+    assert(lake.read().select($"repo", $"seq").as[(String, Long)].collect().toSet ==
+      Set(("pin-tomb", 22L), ("pin-new", 23L), ("pin-keep", 4L)))
+  }
+
   test("merge-on-read schema evolution: promoted column flows through the MoR merge") {
     val lake = new LakeTable(TestSpark.tmpDir("lakemorevo"), spark)
     val morApp = new CdcApplier(lake, spark, mergeOnRead = true)

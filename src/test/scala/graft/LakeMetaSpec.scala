@@ -599,7 +599,27 @@ class LakeMetaSpec extends AnyFunSuite {
     assert(delOpened >= 1 && delOpened < snap.deleteFiles.size,
       s"delete files opened: $delOpened of ${snap.deleteFiles.size}")
     assert(rows.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
-      "delete-max must broadcast against the point read")
+      "the delete side must broadcast against the point read")
+    // delete resolution is one anti-join probe: neither the point lookup
+    // nor an incremental poll of the same lake shuffles or aggregates
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    def assertProbeOnly(what: String, plan: SparkPlan): Unit = {
+      val bad = nodes(plan).filter(n =>
+        n.isInstanceOf[ShuffleExchangeLike] || n.isInstanceOf[BaseAggregateExec])
+      assert(bad.isEmpty, s"$what: ${bad.map(_.nodeName).mkString(", ")}\n$plan")
+    }
+    assertProbeOnly("point lookup", rows.queryExecution.executedPlan)
+    val (since, _, _) = lake.readSince(13000L)
+    val sinceRows = since.select($"repo", $"path", $"seq").collect().map(_.toSeq).toSet
+    assert(sinceRows.nonEmpty && sinceRows == lake.read().filter($"seq" > 13000L)
+      .select($"repo", $"path", $"seq").collect().map(_.toSeq).toSet)
+    assertProbeOnly("readSince", since.queryExecution.executedPlan)
   }
 
   test("point lookup: manifest range pruning + parquet blooms on key columns") {

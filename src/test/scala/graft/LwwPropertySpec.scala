@@ -1,18 +1,21 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.apply.CdcApplier
 import graft.lake.LakeTable
-import graft.reference.ApplyRef
+import graft.reference.{ApplyRef, LakeRef}
 
 /** Property tests (SURVEY.md §5 plan item 4): for random small change
   * logs — ∀ in-batch row orderings and ∀ batch boundary choices, the
   * final lake state is invariant; applying twice ≡ once; salted reduce ≡
-  * plain reduce for any salt count. */
+  * plain reduce for any salt count; merge-on-read delete resolution (one
+  * anti-join) ≡ its aggregate reference form. */
 case class PropEv(op: String, part: String, repo: String, path: String,
     commit: String, lang: String, content: String, seq: Long)
 
@@ -93,5 +96,61 @@ class LwwPropertySpec extends AnyFunSuite {
         assert(plain == salted)
       }
     }
+  }
+
+  // merge-on-read version sets: few keys and a small (seq, commit) domain,
+  // so ties, NULLs, several deletes per key and undeleted keys all occur
+  private val genSeq: Gen[Option[Long]] =
+    Gen.frequency(1 -> Gen.const(None), 6 -> Gen.choose(0L, 5L).map(Some(_)))
+  private val genCommit: Gen[Option[String]] =
+    Gen.frequency(1 -> Gen.const(None), 4 -> Gen.oneOf("a", "b", "c").map(Some(_)))
+  private val genKey: Gen[(String, Option[String])] = for {
+    r <- Gen.choose(0, 2)
+    p <- Gen.frequency(1 -> Gen.const(None), 8 -> Gen.choose(0, 1).map(i => Some(s"f$i")))
+  } yield (s"repo-$r", p)
+  private val genVersions: Gen[(List[Row], List[Row])] = for {
+    nd <- Gen.choose(0, 30)
+    data <- Gen.listOfN(nd, for { k <- genKey; s <- genSeq; c <- genCommit } yield (k, s, c))
+    nx <- Gen.choose(0, 20)
+    dels <- Gen.listOfN(nx, for { k <- genKey; s <- genSeq; c <- genCommit } yield (k, s, c))
+  } yield (
+    data.zipWithIndex.map { case (((r, p), s, c), i) =>
+      Row(r, p.orNull, s.map(Long.box).orNull, c.orNull, s"row-$i") },
+    dels.map { case ((r, p), s, c) => Row(r, p.orNull, s.map(Long.box).orNull, c.orNull) })
+
+  test("∀ data/delete version sets: anti-join delete resolution ≡ aggregate reference") {
+    val dataSchema = StructType(LakeTable.deleteSchema.fields :+ StructField("content", StringType))
+    // (seq, commit) as a total order with NULL first, like Spark's struct order
+    def ord(r: Row, s: Int): (Boolean, Long, Boolean, String) =
+      (!r.isNullAt(s), if (r.isNullAt(s)) 0L else r.getLong(s),
+        !r.isNullAt(s + 1), Option(r.getString(s + 1)).getOrElse(""))
+    val seen = scala.collection.mutable.Set.empty[String]
+    samples(genVersions, 40).foreach { case (data, dels) =>
+      val byKey = dels.groupBy(d => (d.getString(0), d.getString(1)))
+      data.filterNot(_.isNullAt(1)).foreach { r =>
+        byKey.get((r.getString(0), r.getString(1))) match {
+          case None => seen += "key without delete"
+          case Some(ds) =>
+            if (ds.size > 1) seen += "several deletes per key"
+            if (ds.exists(d => ord(d, 2) == ord(r, 2))) seen += "(seq, commit) tie"
+            if (ds.forall(d => Ordering[(Boolean, Long, Boolean, String)].lt(ord(d, 2), ord(r, 2))))
+              seen += "deletes older than the data version"
+        }
+        if (r.isNullAt(2)) seen += "NULL seq"
+        if (r.isNullAt(3)) seen += "NULL commit"
+      }
+      val d = spark.createDataFrame(java.util.Arrays.asList(data: _*), dataSchema)
+      val x = spark.createDataFrame(java.util.Arrays.asList(dels: _*), LakeTable.deleteSchema)
+      val want = LakeRef.undeleted(d, x).collect().map(_.toSeq).sortBy(_.last.toString).toSeq
+      if (want.size < data.size) seen += "a row killed"
+      def got = LakeTable.undeleted(d, x).collect().map(_.toSeq).sortBy(_.last.toString).toSeq
+      // the broadcast probe and the shuffle join both keep exactly these rows
+      assert(got == want, s"broadcast\ndata=$data\ndels=$dels")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try assert(got == want, s"shuffle\ndata=$data\ndels=$dels")
+      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+    assert(seen == Set("key without delete", "several deletes per key", "(seq, commit) tie",
+      "deletes older than the data version", "NULL seq", "NULL commit", "a row killed"), seen)
   }
 }

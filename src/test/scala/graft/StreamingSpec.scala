@@ -253,7 +253,16 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
             b.collect().foreach(c => buf.add((c.repo, c.path, c.seq))): Unit
         }
         .start()
-      awaitAndStop(q)
+      // a processing-time timeout makes AvailableNow run no-data batches
+      // without end (see `lwwChangeFeed`), and `processAllAvailable`
+      // waits for a trigger that finds nothing to do, so it never returns
+      // either: stop the query once the wave's one data batch (every file
+      // of the wave fits one trigger) has reached the sink
+      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+      while (q.isActive && !q.recentProgress.exists(_.numInputRows > 0) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+      q.stop()
+      q.awaitTermination()
       import scala.jdk.CollectionConverters._
       buf.asScala.toSeq
     }
