@@ -162,9 +162,10 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
       val opDelete = Op.Delete
       // seq rides as Long.MinValue when NULL (a boxed-primitive encoder
       // field would throw on null; the replaced aggregate job silently
-      // ignored null seqs, and MinValue can never win a max); null op
-      // counts as neither delete nor upsert, null repo matches no file —
-      // both preserved from the aggregate-job semantics
+      // ignored null seqs, and MinValue can never win a max); a NULL op
+      // counts as a delete, because both merges delete a key whose
+      // winning event has one (its `=!= DELETE` is null, so no row
+      // survives); a null repo matches no file
       val fusedRows = fenced
         .select(col("part").cast("string"),
           coalesce(col("seq").cast("long"), lit(Long.MinValue)),
@@ -177,7 +178,7 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
           it.foreach { case (part, seq, op, repo) =>
             val a = stats.getOrElseUpdate(part, Array(Long.MinValue, 0L, 0L))
             if (seq > a(0)) a(0) = seq
-            if (op == opDelete) a(1) += 1 else if (op != null) a(2) += 1
+            if (op == null || op == opDelete) a(1) += 1 else a(2) += 1
             if (repo != null && ix.isDefined) seen.add(repo)
           }
           val touchedIdx = ix.map(_.touched(seen.asScala)).getOrElse(Iterator.empty)

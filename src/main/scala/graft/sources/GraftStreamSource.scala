@@ -102,8 +102,8 @@ class GraftStreamSource(spark: SparkSession, root: String,
     val conformed = feed.select(LakeTable.conform(feed, declaredSchema): _*)
     // MicroBatchExecution asserts isStreaming on the returned frame; the
     // inner plan stays lazy (toRdd builds lineage, executes per trigger)
-    org.apache.spark.sql.GraftSparkInternals.streamingDataFrame(
-      spark, conformed.queryExecution.toRdd, conformed.schema)
+    org.apache.spark.sql.GraftSparkInternals.dataFrame(
+      spark, conformed.queryExecution.toRdd, conformed.schema, isStreaming = true)
   }
 
   override def commit(end: SourceOffset): Unit = ()

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSparkInternals, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -52,7 +52,19 @@ object CdcStream {
     * merge-on-read tail healthy (bounded delete-file count, bounded
     * small files) without an external cron. It runs AFTER the batch's
     * commit, so a crash between them loses only hygiene, never data;
-    * the policy's jobs rebase against concurrent commits. */
+    * the policy's jobs rebase against concurrent commits.
+    *
+    * `body` gets each micro-batch re-rooted into `source.sparkSession`,
+    * the session that started the stream, not the DataFrame of the
+    * stream's own session. Every streaming run executes in a CLONE of
+    * the caller's session, and each session tags its jobs with its own
+    * id, for which executors keep a separate classloader. Spark caches
+    * generated code per (classloader, source), so in the clone every
+    * run — one per `AvailableNow` trigger — recompiles the whole apply
+    * path in its tasks and runs the fresh classes cold. The re-rooted
+    * batch is the same already-planned rows (`queryExecution.toRdd`, no
+    * decode/re-encode), so only the session that plans and tags the
+    * apply path's jobs changes: it is the caller's for every run. */
   private def drive(source: DataFrame, name: String, checkpointDir: String,
       trigger: Trigger, maintainEvery: Int = 0, maintenance: () => Unit = () => ())(
       body: (DataFrame, Long) => Unit): StreamingQuery =
@@ -61,7 +73,8 @@ object CdcStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        body(batch, id)
+        body(GraftSparkInternals.dataFrame(source.sparkSession,
+          batch.queryExecution.toRdd, batch.schema, isStreaming = false), id)
         if (maintainEvery > 0 && (id + 1) % maintainEvery == 0) maintenance()
       }
       .start()

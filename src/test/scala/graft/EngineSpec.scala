@@ -267,17 +267,19 @@ class EngineSpec extends AnyFunSuite {
     assert(st(mor) == st(cow))
   }
 
+  /** One canonical event per (op, key, seq): repo `pin-<key>`, one path. */
+  private def pinRows(evs: (Option[String], String, Long)*) = evs.map { case (op, key, seq) =>
+    (op, "0", s"pin-$key", "p", s"c$key$seq", "scala", s"body-$key-$seq", seq)
+  }.toDF("op", "part", "repo", "path", "commit", "lang", "content", "seq")
+
   test("merge-on-read batch outputs: null-op, delete-over-live, update-over-tombstone, new key") {
     val lake = new LakeTable(TestSpark.tmpDir("lakemorpin"), spark)
     val app = new CdcApplier(lake, spark, mergeOnRead = true)
-    def rows(evs: (Option[String], String, Long)*) = evs.map { case (op, key, seq) =>
-      (op, "0", s"pin-$key", "p", s"c$key$seq", "scala", s"body-$key-$seq", seq)
-    }.toDF("op", "part", "repo", "path", "commit", "lang", "content", "seq")
     val up = Some("UPDATE")
-    app.applyBatch(rows((up, "null", 1L), (up, "del", 2L), (up, "tomb", 3L), (up, "keep", 4L)),
+    app.applyBatch(pinRows((up, "null", 1L), (up, "del", 2L), (up, "tomb", 3L), (up, "keep", 4L)),
       "pin-0")
-    app.applyBatch(rows((Some("DELETE"), "tomb", 10L)), "pin-1") // tombstone over live
-    app.applyBatch(rows(
+    app.applyBatch(pinRows((Some("DELETE"), "tomb", 10L)), "pin-1") // tombstone over live
+    app.applyBatch(pinRows(
       (None, "null", 20L), // NULL-op winner over a live row: entry, no data row
       (Some("DELETE"), "del", 21L), // DELETE over a live row: a 'dlive' entry
       (up, "tomb", 22L), // update superseding the tombstone: data + 'dtomb' entry
@@ -289,8 +291,22 @@ class EngineSpec extends AnyFunSuite {
     assert((rowsOf("data"), rowsOf("delete")) == (2L, 3L))
     // rowsAfter = live before (null, del, keep) + data − 'dlive' entries
     assert(before.liveRows == 3L && after.lineage("rowsAfter") == 3L)
+    // the NULL-op winner deletes its key, so it counts as a delete
+    assert((after.lineage("upserts"), after.lineage("deletes")) == (2L, 2L))
     assert(lake.read().select($"repo", $"seq").as[(String, Long)].collect().toSet ==
       Set(("pin-tomb", 22L), ("pin-new", 23L), ("pin-keep", 4L)))
+  }
+
+  test("copy-on-write null-op winner deletes its key and counts as a delete") {
+    val lake = new LakeTable(TestSpark.tmpDir("lakecownull"), spark)
+    val app = new CdcApplier(lake, spark)
+    app.applyBatch(pinRows((Some("UPDATE"), "null", 1L), (Some("UPDATE"), "keep", 2L)), "cn-0")
+    app.applyBatch(pinRows((None, "null", 20L), (Some("UPDATE"), "new", 21L)), "cn-1")
+    val after = lake.currentSnapshot.get
+    assert((after.lineage("upserts"), after.lineage("deletes")) == (1L, 1L))
+    assert(after.lineage("rowsAfter") == 2L)
+    assert(lake.read().select($"repo", $"seq").as[(String, Long)].collect().toSet ==
+      Set(("pin-keep", 2L), ("pin-new", 21L)))
   }
 
   test("merge-on-read schema evolution: promoted column flows through the MoR merge") {

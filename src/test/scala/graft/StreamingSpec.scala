@@ -34,6 +34,19 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       scala.util.Try { q.stop(); q.awaitTermination() }
     }
 
+  /** Write wire blob `id` into `dir`. The file source batches in
+    * (modificationTime, path) order; a real binlog drop arrives in
+    * sequence order with increasing mtimes — reproduce that (same-instant
+    * writes would batch in hash order, and per-part out-of-order delivery
+    * ACROSS micro-batches is outside the offsets fence's binlog
+    * contract). */
+  private def stageBlob(dir: String, id: Long, blob: String): Unit = {
+    val p = java.nio.file.Paths.get(dir, f"blob-$id%05d.json")
+    java.nio.file.Files.writeString(p, blob)
+    java.nio.file.Files.setLastModifiedTime(p,
+      java.nio.file.attribute.FileTime.fromMillis(1600000000000L + id * 1000))
+  }
+
   private def canonical(n: Long, lo: Long, hi: Long) =
     ChangeLogGen.events(spark, n, seed = 11L)
       .filter(col("seq") >= lo && col("seq") < hi)
@@ -100,18 +113,8 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val blobRows = ChangeLogGen.blobs(spark, n, 7L)
       .select(col("blob_id"), col("blob")).collect()
     val inDir = TestSpark.tmpDir("wire-in")
-    blobRows.foreach { r =>
-      val id = r.getAs[Number]("blob_id").longValue
-      val p = java.nio.file.Paths.get(inDir, f"blob-$id%05d.json")
-      java.nio.file.Files.writeString(p, r.getAs[String]("blob"))
-      // the file source batches in (modificationTime, path) order; a real
-      // binlog drop arrives in sequence order with increasing mtimes —
-      // reproduce that (same-instant writes would batch in hash order,
-      // and per-part out-of-order delivery ACROSS micro-batches is
-      // outside the offsets fence's binlog contract)
-      java.nio.file.Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime.fromMillis(1600000000000L + id * 1000))
-    }
+    blobRows.foreach(r =>
+      stageBlob(inDir, r.getAs[Number]("blob_id").longValue, r.getAs[String]("blob")))
     val lakeS = new LakeTable(TestSpark.tmpDir("wire-lake"), spark)
     val qDir = TestSpark.tmpDir("wire-quar") + "/dirty"
     // 7 files per trigger → several micro-batches through the FULL wire
@@ -127,6 +130,15 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       .select($"repo", $"path", $"commit", sha2($"content", 256))
       .collect().map(_.toSeq).toSet
     assert(state(lakeS) == state(lakeB) && state(lakeS).nonEmpty)
+    // the validation counters are observed in the re-rooted batch's
+    // session: summed over the streamed commits they equal the batch
+    // reference's single commit
+    def counters(l: LakeTable) = l.versions.flatMap(v => l.snapshot(v).lineage)
+      .filter { case (k, _) => k == "parsed" || k == "quarantined" || k.startsWith("rule.") }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    assert(lakeS.versions.size > 1)
+    assert(counters(lakeS) == counters(lakeB) && counters(lakeB)("parsed") > 0 &&
+      counters(lakeB)("quarantined") > 0 && counters(lakeB).keys.exists(_.startsWith("rule.")))
     // every dirty row (wrong source / corrupt slices) landed in the
     // quarantine TABLE (the graft sink, not bare parquet appends)
     val dirtyN = dirtyB.count()
@@ -143,6 +155,31 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     awaitAndStop(q2)
     assert(state(lakeS) == tableBefore, "replayed drain must not change the table")
     assert(dirtyCount == dirtyN, "replayed drain must not double the quarantine")
+  }
+
+  test("streaming runs reuse the caller session's generated code") {
+    // three single-file AvailableNow runs into one merge-on-read lake,
+    // each a fresh query on one checkpoint: every micro-batch runs in
+    // the session that started its stream, so the third run finds the
+    // apply path already compiled (in a per-run cloned session, the
+    // executors compile it afresh every run)
+    val blobs = ChangeLogGen.blobs(spark, 600L, 5L, blobSize = 200)
+      .select(col("blob_id"), col("blob")).as[(Long, String)].collect().sortBy(_._1)
+    assert(blobs.length == 3)
+    val inDir = TestSpark.tmpDir("cg-in")
+    val ckDir = TestSpark.tmpDir("cg-ck")
+    val lake = new LakeTable(TestSpark.tmpDir("cg-lake"), spark)
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val perRun = blobs.map { case (id, blob) =>
+      stageBlob(inDir, id, blob)
+      val before = compiles
+      awaitAndStop(CdcStream.startWire(spark, inDir, lake, ckDir,
+        maxFilesPerTrigger = 1, mergeOnRead = true))
+      compiles - before
+    }
+    info(s"Janino compiles per run: ${perRun.mkString(", ")}")
+    assert(lake.versions.size == 3)
+    assert(perRun(2) <= 20L, s"Janino compiles per run: ${perRun.mkString(", ")}")
   }
 
   test("maintenance policy bounds delete files during a long merge-on-read drain") {
