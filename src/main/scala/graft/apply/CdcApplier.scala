@@ -17,10 +17,16 @@ import graft.lake.LakeTable
   * against the snapshot the batch read ([[LakeTable.commit]]).
   *
   * Scale design decisions (for the 1000-executor / 10^10-event case):
-  *  - ONE data shuffle for the MERGE (plus an optional range-cluster
-  *    exchange before the write — see step 6 — that keeps per-file key
-  *    ranges tight so later batches' copy-on-write stays proportional to
-  *    what they touch). The MERGE is not a join: touched base rows ∪
+  *  - A small batch runs shuffle-free: when the merge input (batch
+  *    events + rows of the touched files, both known on the driver) is
+  *    at most [[LakeTable.SmallWriteRows]], it is gathered into one
+  *    partition ([[LakeTable.gathered]]), which already satisfies the
+  *    aggregate's distribution — fence + stats is one Spark job, merge +
+  *    write another, and each is one task. A larger batch pays ONE data
+  *    shuffle for the MERGE (plus an optional range-cluster exchange
+  *    before the write — see step 6 — that keeps per-file key ranges
+  *    tight so later batches' copy-on-write stays proportional to what
+  *    they touch). The MERGE is not a join: touched base rows ∪
   *    fenced change events are unioned and reduced by a single hash
   *    aggregate `max_by(row, (seq, commit, isChange))`. That aggregate IS
   *    the in-batch LWW dedup and the cross-batch LWW resolution at once —
@@ -60,6 +66,23 @@ object CdcApplier {
     * reduce, its test-side reference form AND the applyBatch merge
     * (diverging copies would silently group by different keys). */
   private[graft] val keyCols = Seq("repo", "path")
+
+  /** The offsets fence: drop the events at or below the `committed`
+    * high-watermark of their source partition. An expression over a
+    * literal map of the offsets, not a join: the fenced plan has no
+    * exchange, so caching the batch and the fused stats pass over it run
+    * as ONE Spark job. A NULL or unknown `part` has no watermark and is
+    * kept; a NULL `seq` under a known part compares NULL and is dropped.
+    * The map reaches generated code as a reference object, so a new
+    * watermark compiles no new class; its lookup probes the committed
+    * partitions linearly, which a source's partition count keeps small. */
+  private[graft] def fence(events: DataFrame, committed: Map[String, Long]): DataFrame =
+    if (committed.isEmpty) events
+    else {
+      val offsets = typedLit(committed)
+      val off = offsets(col("part").cast("string"))
+      events.filter(off.isNull || col("seq") > off)
+    }
 
   /** Two-phase salted LWW reduce for adversarial hot keys: phase 1
     * reduces (key, salt) subgroups, phase 2 merges the ≤`salts` survivors
@@ -133,17 +156,9 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
     // ---- 1. offsets fence: drop events at-or-below the committed
     // high-watermark of their source partition (exactly-once resume). ----
     val committed = snap.map(_.offsets).getOrElse(Map.empty)
-    val fencedRaw =
-      if (committed.isEmpty) canon
-      else {
-        val offDf = committed.toSeq.toDF("part", "_off")
-        canon.join(broadcast(offDf), Seq("part"), "left")
-          .filter(col("_off").isNull || col("seq") > col("_off"))
-          .drop("_off")
-      }
     // micro-batch-sized by construction (O2's 500-file-cap analog) —
     // cached because the jobs below consume it twice.
-    val fenced = fencedRaw.cache()
+    val fenced = CdcApplier.fence(canon, committed).cache()
     try {
 
       // ---- 2+4 fused: ONE job over the fenced batch computes BOTH the
@@ -212,7 +227,7 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
       // ---- 5+6. merge and write: each mode returns its intent. ----
       val (dropped, added, rowsAfter) =
         if (mergeOnRead) morMerge(fenced, snap, evolved, touched, batchId, upserts + deletes)
-        else cowMerge(fenced, snap, evolved, touched, batchId, upserts)
+        else cowMerge(fenced, snap, evolved, touched, batchId, upserts, upserts + deletes)
       // ---- 7. commit: the batch's one durable effect. `lineageExtras`
       // runs only now — its observation is filled by the write job. ----
       lake.commit(batchId, newOffsets, evolved, dropped, added, snap, Map(
@@ -227,15 +242,16 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
   private type Intent = (Seq[lake.FileEntry], Seq[lake.FileEntry], Long)
 
   // ---- 5+6 (copy-on-write): union touched-file rows with the batch,
-  // ONE LWW hash-agg (no join, one shuffle; subsumes in-batch dedup),
-  // rewrite touched data files range-clustered and drop them; everything
-  // else stays by reference. Touched merge-on-read delete files are
-  // never rewritten here — they stay until a major compaction folds
-  // them. ----
+  // ONE LWW hash-agg (no join, one shuffle — none for a small input;
+  // subsumes in-batch dedup), rewrite touched data files range-clustered
+  // and drop them; everything else stays by reference. Touched
+  // merge-on-read delete files are never rewritten here — they stay
+  // until a major compaction folds them. `events` = upserts + deletes. ----
   private def cowMerge(fenced: DataFrame, snap: Option[lake.Snapshot],
       evolved: StructType, touched: Seq[lake.FileEntry], batchId: String,
-      upserts: Long): Intent = {
+      upserts: Long, events: Long): Intent = {
     val touchedData = touched.filter(_.kind == "data")
+    val baseRows = touchedData.map(_.rows).sum
     def conform(df: DataFrame, isChange: Boolean): DataFrame =
       df.select(LakeTable.conform(df, evolved) ++ Seq(
         (if (isChange && df.columns.contains("op")) col("op") else lit(Op.Update)).as("_op"),
@@ -250,7 +266,7 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
       .unionByName(conform(fenced, isChange = true)))
       .getOrElse(conform(fenced, isChange = true))
     val valueNames = evolved.fieldNames.toSeq.filterNot(keyCols.contains)
-    val merged = unioned.groupBy(keyCols.map(col): _*)
+    val merged = LakeTable.gathered(unioned, baseRows + events).groupBy(keyCols.map(col): _*)
       .agg(max_by(struct((valueNames :+ "_op").map(col) :+ col("_isChange"): _*),
         struct(col("seq"), col("commit"), col("_isChange"))).as("r"))
       .filter(col("r._op") =!= Op.Delete)
@@ -261,13 +277,13 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
     // base rows + batch upserts — both already on the driver (manifest
     // stats + the fused stats job)
     val newFiles = lake.writeDataFiles(
-      LakeTable.clustered(merged, touchedData.map(_.rows).sum + upserts, clusterPartitions),
+      LakeTable.clustered(merged, baseRows + upserts, clusterPartitions),
       f"b$batchId%s-v")
     // exact on a pure-CoW table; on a mixed table untouched MoR files
     // may still hold superseded versions, so the count is an upper bound
     // until the next major compaction
     val rowsAfter = snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L) -
-      touchedData.map(_.rows).sum + newFiles.map(_.rows).sum
+      baseRows + newFiles.map(_.rows).sum
     (touchedData, newFiles, rowsAfter)
   }
 
@@ -287,18 +303,30 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
     // scans ([[LakeTable.deleteSchema]]), so their value columns read null
     def conformed(df: DataFrame, markers: Column*): DataFrame =
       df.select(LakeTable.conform(df, evolved) ++ markers: _*)
+    val touchedData = touched.filter(_.kind == "data")
+    val touchedDel = touched.filter(_.kind == "delete")
+    // the merge input is bounded by the batch's events plus every row of
+    // the touched files (both already on the driver); a SMALL input is
+    // gathered into one partition, so aggregate, explode and kinded write
+    // run as one task with no exchange ([[LakeTable.gathered]])
+    val inRows = events + touched.map(_.rows).sum
     // base versions are only consulted for keys THIS batch changes — for
-    // a SPARSE batch (event count vs table rows, both already known:
-    // events from the fused stats job, table rows from the manifest),
-    // semi-join the key-column scans to the batch's keys before the
-    // merge aggregate, so a drizzle batch aggregates O(batch) base rows,
-    // not every key in every touched file. AQE broadcasts the batch's
-    // key column pair as it is — a left-semi probe needs no unique build
-    // keys, so no `distinct` (a shuffle) runs first. For a BULK batch the
-    // probe costs more than it saves (measured +45% on a whole-keyspace
-    // 2M-row batch), so it is skipped and the aggregate's map-side
-    // combine does the work.
-    val semiJoinBase = events * 8 < snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L)
+    // a SPARSE batch over a table too big to gather (event count vs
+    // table rows, both already known: events from the fused stats job,
+    // table rows from the manifest), semi-join the key-column scans to
+    // the batch's keys before the merge aggregate, so a drizzle batch
+    // aggregates O(batch) base rows, not every key in every touched
+    // file. AQE broadcasts the batch's key column pair as it is — a
+    // left-semi probe needs no unique build keys, so no `distinct` (a
+    // shuffle) runs first. For a BULK batch the probe costs more than it
+    // saves (measured +45% on a whole-keyspace 2M-row batch), so it is
+    // skipped and the aggregate's map-side combine does the work. A
+    // gathered input skips it too: its one task aggregates at most
+    // [[LakeTable.SmallWriteRows]] rows, while the probe's two broadcast
+    // jobs (one per key-column scan — AQE cannot reuse a broadcast across
+    // the two cache scans) are most of a small batch's fixed cost.
+    val semiJoinBase = !LakeTable.isSmall(inRows) &&
+      events * 8 < snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L)
     def readKeyCols(fs: Seq[lake.FileEntry], isData: Boolean) = {
       // manifest-backed scan (zero listing calls per micro-batch — at
       // 10^6 batches the per-batch planning RPCs ARE the throughput)
@@ -308,8 +336,6 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
       conformed(keys,
         lit(null).cast("string").as("_op"), lit(false).as("_isChange"), lit(isData).as("_isData"))
     }
-    val touchedData = touched.filter(_.kind == "data")
-    val touchedDel = touched.filter(_.kind == "delete")
     val parts: Seq[DataFrame] =
       Seq(conformed(fenced,
         (if (fenced.columns.contains("op")) col("op") else lit(Op.Update)).as("_op"),
@@ -321,7 +347,7 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
     // picked whenever one exists) and the best base VERSION, where a
     // data row beats its paired delete entry on (seq, commit) ties —
     // the data row is the live one, a bare tombstone means deleted.
-    val merged = parts.reduce(_ unionByName _)
+    val merged = LakeTable.gathered(parts.reduce(_ unionByName _), inRows)
       .groupBy(keyCols.map(col): _*)
       .agg(
         max_by(struct((valueNames :+ "_op").map(col): _*),
@@ -349,7 +375,8 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
     // action per micro-batch); per-micro-batch fixed cost is what
     // sustained throughput is made of. One consumer needs no cache: a
     // range-clustered (bulk) write samples its input, but the sample
-    // re-reads the merge's shuffle output, not the base scan.
+    // re-reads the merge's shuffle output, not the base scan (a gathered
+    // input has no shuffle to re-read, but is small by definition).
     def entry(live: Column, value: String => Column, kind: Column): Column =
       when(live, struct(keyCols.map(col) ++ valueNames.map(c => value(c).as(c)) :+
         kind.as("_kind"): _*))

@@ -637,26 +637,28 @@ class LakeTable(val root: String, spark: SparkSession,
     val snap = currentSnapshot.getOrElse(return None)
     val dels = snap.deleteFiles
     if (dels.size < minFiles) return None
-    val merged = readEntries(dels, LakeTable.deleteSchema)
+    // delete-entry total is manifest-known, so a small consolidation is
+    // gathered into one task (no exchange) and skips the range sampling
+    // pass
+    val entries = dels.map(_.rows).sum
+    val merged = LakeTable.gathered(readEntries(dels, LakeTable.deleteSchema), entries)
       .groupBy(col("repo"), col("path"))
       .agg(max(struct(col("seq").as("s"), col("commit").as("c"))).as("_m"))
       .select(col("repo"), col("path"),
         col("_m.s").as("seq"), col("_m.c").as("commit"))
-      // the range-clustered write SAMPLES its input — persist so the
-      // delete aggregate runs once, not once per pass
-      .persist()
+    // a range-clustered write SAMPLES its input — persist there so the
+    // delete aggregate runs once, not once per pass
+    val sampled = !LakeTable.isSmall(entries)
+    if (sampled) merged.persist()
     try {
-      // delete-entry total is manifest-known, so small consolidations
-      // skip the range sampling pass. Blooms off: like MoR micro-batch
-      // output, delete files are always scanned whole by resolveDeletes,
-      // never point-probed
-      val added = writeDataFiles(
-        LakeTable.clustered(merged, dels.map(_.rows).sum),
+      // Blooms off: like MoR micro-batch output, delete files are always
+      // scanned whole by resolveDeletes, never point-probed
+      val added = writeDataFiles(LakeTable.clustered(merged, entries),
         s"deletes-v${snap.version + 1}", kind = "delete", blooms = false)
       Some(commit(s"consolidate-deletes-${snap.version + 1}", Map.empty,
         snap.schema, dels, added, Some(snap),
         Map("consolidatedDeleteFiles" -> dels.size.toLong, "rowsAfter" -> snap.liveRows)))
-    } finally { merged.unpersist(); () }
+    } finally if (sampled) merged.unpersist()
   }
 
   /** Maintenance POLICY: decides WHEN the maintenance jobs run, so a
@@ -695,6 +697,10 @@ class LakeTable(val root: String, spark: SparkSession,
     out.result()
   }
 
+  /** Data-file count from the chunk refs alone (no chunk is parsed). */
+  private def dataFileCount(s: Snapshot): Int =
+    s.chunkRefs.iterator.filter(_.kind == "data").map(_.n).sum
+
   /** Incremental change feed: rows whose winning `seq` is after
     * `afterSeq` — what a downstream CDC consumer reads per poll. Files
     * whose footer maxSeq ≤ afterSeq are pruned at the MANIFEST (zero IO):
@@ -702,10 +708,6 @@ class LakeTable(val root: String, spark: SparkSession,
     * so the scan cost tracks the churn since `afterSeq`, not table size —
     * the seq stats play the role of Iceberg's hidden time partitioning.
     * Returns (feed, filesScanned, filesTotal). */
-  /** Data-file count from the chunk refs alone (no chunk is parsed). */
-  private def dataFileCount(s: Snapshot): Int =
-    s.chunkRefs.iterator.filter(_.kind == "data").map(_.n).sum
-
   def readSince(afterSeq: Long, version: Option[Long] = None)
       : (DataFrame, Int, Int) = {
     val snap = at(version)
@@ -731,27 +733,6 @@ class LakeTable(val root: String, spark: SparkSession,
       rows = _.join(keys.select(col("repo"), col("path")), Seq("repo", "path"), "left_semi"))
   }
 
-  /** Row-level change-data feed between two snapshots (the Delta CDF /
-    * Iceberg changelog idea): one row per key whose LIVE state differs
-    * between `fromVersion` and `toVersion`, classified
-    * insert / update / delete, with before- and after-images of the
-    * value columns as structs (null on the absent side).
-    *
-    * Scale shape: candidate keys come only from files DISTURBED between
-    * the snapshots — data files added or removed, delete files added —
-    * so the feed costs O(churn), not O(table). The two restricted state
-    * reads then prune each snapshot's file list to the candidates' repos
-    * ([[pruneFilesDistributed]]) and semi-join to the candidate keys.
-    * Pure maintenance between the snapshots (compaction, delete
-    * consolidation) only rewrites physical files: its keys enter the
-    * candidate set but fall out at the final same-version filter, so a
-    * maintenance-only interval emits an empty feed.
-    *
-    * Correctness leans on the maintenance invariant [[compact]] upholds:
-    * a delete file is only ever REMOVED by a compaction that
-    * simultaneously rewrites every data file overlapping its key range
-    * (so a row it suppressed can never silently come back to life in a
-    * shared file). */
   /** Candidate files for [[changeFeed]] over (`a`, `b`]: (data files
     * added, data files removed, delete files carrying genuine churn).
     *
@@ -794,6 +775,27 @@ class LakeTable(val root: String, spark: SparkSession,
     (added, removed, churnDel)
   }
 
+  /** Row-level change-data feed between two snapshots (the Delta CDF /
+    * Iceberg changelog idea): one row per key whose LIVE state differs
+    * between `fromVersion` and `toVersion`, classified
+    * insert / update / delete, with before- and after-images of the
+    * value columns as structs (null on the absent side).
+    *
+    * Scale shape: candidate keys come only from files DISTURBED between
+    * the snapshots — data files added or removed, delete files added —
+    * so the feed costs O(churn), not O(table). The two restricted state
+    * reads then prune each snapshot's file list to the candidates' repos
+    * ([[pruneFilesDistributed]]) and semi-join to the candidate keys.
+    * Pure maintenance between the snapshots (compaction, delete
+    * consolidation) only rewrites physical files: its keys enter the
+    * candidate set but fall out at the final same-version filter, so a
+    * maintenance-only interval emits an empty feed.
+    *
+    * Correctness leans on the maintenance invariant [[compact]] upholds:
+    * a delete file is only ever REMOVED by a compaction that
+    * simultaneously rewrites every data file overlapping its key range
+    * (so a row it suppressed can never silently come back to life in a
+    * shared file). */
   def changeFeed(fromVersion: Long, toVersion: Long): DataFrame = {
     val a = snapshot(fromVersion)
     val b = snapshot(toVersion)
@@ -1244,13 +1246,33 @@ object LakeTable {
         s"manifest $file has formatVersion ${Option(found).getOrElse("<missing>")}, " +
           s"expected $FormatVersion")
 
-  /** Row bound under which a rewrite (applier merge output, compaction,
-    * delete consolidation) takes `coalesce(1)` instead of a range
-    * repartition: one partition is trivially range-disjoint and the
-    * write sorts within partitions, while the RangePartitioner's sampling
-    * pass would execute the whole input subtree once more. ≈ one write
-    * task sorting ≲100 MB. */
+  /** Row bound of the one small-input rule ([[isSmall]]), used twice:
+    *  - on a keyed aggregate's INPUT (the applier merge's events + touched
+    *    file rows, a delete consolidation's entries): at most this many
+    *    rows are gathered into one partition before the aggregate
+    *    ([[gathered]]), so no exchange runs;
+    *  - on a rewrite's OUTPUT (applier merge output, compaction, delete
+    *    consolidation): at most this many rows take `coalesce(1)` instead
+    *    of a range repartition ([[clustered]]) — one partition is
+    *    trivially range-disjoint and the write sorts within partitions,
+    *    while the RangePartitioner's sampling pass would execute the
+    *    whole input subtree once more.
+    * ≈ one task aggregating or sorting ≲100 MB. */
   val SmallWriteRows: Long = 262144L
+
+  /** Whether an input or output bounded by `estRows` (an upper bound the
+    * caller knows from manifest or batch stats) is at most
+    * [[SmallWriteRows]] rows. */
+  private[graft] def isSmall(estRows: Long): Boolean = estRows <= SmallWriteRows
+
+  /** Gather a keyed aggregate's input into one partition when it is
+    * [[isSmall]]: one partition satisfies the aggregate's required
+    * distribution, so no Exchange is planned, AQE does not engage, and
+    * the aggregate and the write above it run as one task — per-stage
+    * scheduling is most of a micro-batch's fixed cost. A larger input
+    * passes through to the aggregate's hash exchange. */
+  private[graft] def gathered(df: DataFrame, estRows: Long): DataFrame =
+    if (isSmall(estRows)) df.coalesce(1) else df
 
   /** Partition a rewrite's output for the write — the one sizing rule of
     * the applier merge, compaction and delete consolidation. A pinned
@@ -1263,7 +1285,7 @@ object LakeTable {
     * on (repo, path) under AQE sizing. */
   private[graft] def clustered(df: DataFrame, estRows: Long, partitions: Int = 0): DataFrame =
     if (partitions > 0) df.repartitionByRange(partitions, col("repo"), col("path"))
-    else if (estRows <= SmallWriteRows) df.coalesce(1)
+    else if (isSmall(estRows)) df.coalesce(1)
     else df.repartitionByRange(col("repo"), col("path"))
 
   /** Key count above which [[LakeTable.lookupKeys]] filters with a
