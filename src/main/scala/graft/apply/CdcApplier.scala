@@ -19,8 +19,9 @@ import graft.lake.LakeTable
   * Scale design decisions (for the 1000-executor / 10^10-event case):
   *  - A small batch runs shuffle-free: when the merge input (batch
   *    events + rows of the touched files, both known on the driver) is
-  *    at most [[LakeTable.SmallWriteRows]], it is gathered into one
-  *    partition ([[LakeTable.gathered]]), which already satisfies the
+  *    at most [[LakeTable.SmallWriteRows]] (copy-on-write) or
+  *    [[CdcApplier.MorGatherRows]] (merge-on-read), it is gathered into
+  *    one partition ([[LakeTable.gathered]]), which already satisfies the
   *    aggregate's distribution — fence + stats is one Spark job, merge +
   *    write another, and each is one task. A larger batch pays ONE data
   *    shuffle for the MERGE (plus an optional range-cluster exchange
@@ -66,6 +67,18 @@ object CdcApplier {
     * reduce, its test-side reference form AND the applyBatch merge
     * (diverging copies would silently group by different keys). */
   private[graft] val keyCols = Seq("repo", "path")
+
+  /** Merge input bound (batch events + rows of the touched files) up to
+    * which a merge-on-read batch is gathered into one task and skips the
+    * sparse base semi-join. Lower than [[LakeTable.SmallWriteRows]]:
+    * gathered, one task scans and aggregates the key columns of every
+    * touched file, while the exchange path scans them in parallel and
+    * semi-joins them down to the batch's keys first. Measured with
+    * 2 000-event batches on 4 cores (BENCH.md, "Where the gather bound
+    * sits"), gathered against the exchange path: −30% wall and −36% CPU
+    * at 32–43k input rows; −1% to −15% wall and −24% to −39% CPU at
+    * 82–113k; +15% wall at 122–133k; +39% wall (CPU even) at 246–257k. */
+  private[graft] val MorGatherRows: Long = 98304L
 
   /** The offsets fence: drop the events at or below the `committed`
     * high-watermark of their source partition. An expression over a
@@ -306,10 +319,12 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
     val touchedData = touched.filter(_.kind == "data")
     val touchedDel = touched.filter(_.kind == "delete")
     // the merge input is bounded by the batch's events plus every row of
-    // the touched files (both already on the driver); a SMALL input is
-    // gathered into one partition, so aggregate, explode and kinded write
-    // run as one task with no exchange ([[LakeTable.gathered]])
+    // the touched files (both already on the driver); an input of at most
+    // [[CdcApplier.MorGatherRows]] is gathered into one partition, so
+    // aggregate, explode and kinded write run as one task with no
+    // exchange ([[LakeTable.gathered]])
     val inRows = events + touched.map(_.rows).sum
+    val gather = inRows <= CdcApplier.MorGatherRows
     // base versions are only consulted for keys THIS batch changes — for
     // a SPARSE batch over a table too big to gather (event count vs
     // table rows, both already known: events from the fused stats job,
@@ -322,10 +337,10 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
     // saves (measured +45% on a whole-keyspace 2M-row batch), so it is
     // skipped and the aggregate's map-side combine does the work. A
     // gathered input skips it too: its one task aggregates at most
-    // [[LakeTable.SmallWriteRows]] rows, while the probe's two broadcast
+    // [[CdcApplier.MorGatherRows]] rows, while the probe's two broadcast
     // jobs (one per key-column scan — AQE cannot reuse a broadcast across
     // the two cache scans) are most of a small batch's fixed cost.
-    val semiJoinBase = !LakeTable.isSmall(inRows) &&
+    val semiJoinBase = !gather &&
       events * 8 < snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L)
     def readKeyCols(fs: Seq[lake.FileEntry], isData: Boolean) = {
       // manifest-backed scan (zero listing calls per micro-batch — at
@@ -347,7 +362,8 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
     // picked whenever one exists) and the best base VERSION, where a
     // data row beats its paired delete entry on (seq, commit) ties —
     // the data row is the live one, a bare tombstone means deleted.
-    val merged = LakeTable.gathered(parts.reduce(_ unionByName _), inRows)
+    val merged = LakeTable.gathered(parts.reduce(_ unionByName _), inRows,
+      CdcApplier.MorGatherRows)
       .groupBy(keyCols.map(col): _*)
       .agg(
         max_by(struct((valueNames :+ "_op").map(col): _*),

@@ -1247,17 +1247,22 @@ object LakeTable {
           s"expected $FormatVersion")
 
   /** Row bound of the one small-input rule ([[isSmall]]), used twice:
-    *  - on a keyed aggregate's INPUT (the applier merge's events + touched
-    *    file rows, a delete consolidation's entries): at most this many
-    *    rows are gathered into one partition before the aggregate
-    *    ([[gathered]]), so no exchange runs;
+    *  - on a keyed aggregate's INPUT (a copy-on-write merge's events +
+    *    touched file rows, a delete consolidation's entries): at most
+    *    this many rows are gathered into one partition before the
+    *    aggregate ([[gathered]]), so no exchange runs. A merge-on-read
+    *    merge gathers under its own, lower bound
+    *    (`CdcApplier.MorGatherRows`);
     *  - on a rewrite's OUTPUT (applier merge output, compaction, delete
     *    consolidation): at most this many rows take `coalesce(1)` instead
     *    of a range repartition ([[clustered]]) — one partition is
     *    trivially range-disjoint and the write sorts within partitions,
     *    while the RangePartitioner's sampling pass would execute the
     *    whole input subtree once more.
-    * ≈ one task aggregating or sorting ≲100 MB. */
+    * A copy-on-write merge input just under the bound (≈260 000 rows,
+    * 2 000-event batches, 4 cores) gathered beats the exchange path by
+    * 9–14% wall and 13–15% CPU, with ~30-byte and with 1 KB contents
+    * (BENCH.md, "Where the gather bound sits"). */
   val SmallWriteRows: Long = 262144L
 
   /** Whether an input or output bounded by `estRows` (an upper bound the
@@ -1265,14 +1270,16 @@ object LakeTable {
     * [[SmallWriteRows]] rows. */
   private[graft] def isSmall(estRows: Long): Boolean = estRows <= SmallWriteRows
 
-  /** Gather a keyed aggregate's input into one partition when it is
-    * [[isSmall]]: one partition satisfies the aggregate's required
-    * distribution, so no Exchange is planned, AQE does not engage, and
-    * the aggregate and the write above it run as one task — per-stage
-    * scheduling is most of a micro-batch's fixed cost. A larger input
-    * passes through to the aggregate's hash exchange. */
-  private[graft] def gathered(df: DataFrame, estRows: Long): DataFrame =
-    if (isSmall(estRows)) df.coalesce(1) else df
+  /** Gather a keyed aggregate's input into one partition when its row
+    * bound `estRows` is at most `bound` (default: [[isSmall]]): one
+    * partition satisfies the aggregate's required distribution, so no
+    * Exchange is planned, AQE does not engage, and the aggregate and the
+    * write above it run as one task — per-stage scheduling is most of a
+    * micro-batch's fixed cost. A larger input passes through to the
+    * aggregate's hash exchange. */
+  private[graft] def gathered(df: DataFrame, estRows: Long,
+      bound: Long = SmallWriteRows): DataFrame =
+    if (estRows <= bound) df.coalesce(1) else df
 
   /** Partition a rewrite's output for the write — the one sizing rule of
     * the applier merge, compaction and delete consolidation. A pinned

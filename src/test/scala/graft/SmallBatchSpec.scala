@@ -18,7 +18,8 @@ import graft.reference.ApplyRef
   * expression (no join, no exchange), and a merge input of at most
   * [[LakeTable.SmallWriteRows]] rows is gathered into one partition — a
   * small merge-on-read batch runs as two Spark jobs. Above the bound the
-  * exchange and semi-join path still runs and still matches the oracle. */
+  * exchange path (merge-on-read: with the semi-join) still runs in both
+  * merge modes and still matches the oracle. */
 class SmallBatchSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
@@ -121,15 +122,12 @@ class SmallBatchSpec extends AnyFunSuite {
       (0L until 30L).filter(i => i % 3 == 2 || (i % 3 == 0 && i > 10) || (i % 3 == 1 && i > 20)).toSet)
   }
 
-  test("merge-on-read batch over a table above SmallWriteRows takes the exchange path and matches the oracle") {
-    val lake = new LakeTable(TestSpark.tmpDir("lakebig"), spark)
-    val app = new CdcApplier(lake, spark, mergeOnRead = true)
+  test("a batch over a table above SmallWriteRows takes the exchange path in both merge modes and matches the oracle") {
     val n = LakeTable.SmallWriteRows + 20000
     val seed = spark.range(n).select(lit("UPDATE").as("op"), lit("0").as("part"),
       format_string("sb-repo%03d", $"id" % 500).as("repo"), concat(lit("p"), $"id").as("path"),
       concat(lit("c"), $"id").as("commit"), lit("scala").as("lang"),
       concat(lit("b"), $"id").as("content"), $"id".as("seq"))
-    app.applyBatch(seed, "big-0")
     // sparse, spread over the keyspace: every seed file is touched
     // seed key k is (repo k % 500, path k); 900 existing keys, 100 new
     val k = when($"id" < 900, $"id" * 251 % n).otherwise($"id" + n)
@@ -138,9 +136,17 @@ class SmallBatchSpec extends AnyFunSuite {
       format_string("sb-repo%03d", k % 500).as("repo"), concat(lit("p"), k).as("path"),
       concat(lit("u"), $"id").as("commit"), lit("scala").as("lang"),
       concat(lit("new"), $"id").as("content"), ($"id" + n).as("seq"))
-    // above the bound: the merge's exchange and the semi-join broadcasts
-    assert(jobsOf(app.applyBatch(batch, "big-1")) > 2)
-    assert(sameRows(state(lake.read()), oracle(seed.unionByName(batch))))
-    assert(lake.currentSnapshot.get.lineage("rowsAfter") == lake.read().count())
+    for (mergeOnRead <- Seq(true, false)) {
+      val lake = new LakeTable(TestSpark.tmpDir(s"lakebig-mor$mergeOnRead"), spark)
+      val app = new CdcApplier(lake, spark, mergeOnRead = mergeOnRead)
+      app.applyBatch(seed, "big-0")
+      // above the bound: the merge's exchange (and, merge-on-read, the
+      // semi-join broadcasts)
+      assert(jobsOf(app.applyBatch(batch, "big-1")) > 2, s"mergeOnRead = $mergeOnRead")
+      assert(sameRows(state(lake.read()), oracle(seed.unionByName(batch))),
+        s"mergeOnRead = $mergeOnRead")
+      assert(lake.currentSnapshot.get.lineage("rowsAfter") == lake.read().count(),
+        s"mergeOnRead = $mergeOnRead")
+    }
   }
 }

@@ -12,12 +12,10 @@ are listed under execution `-`.
 
 Usage:
     python3 tools/eventlog_jobs.py <event log file or directory> [--jobs]
-        [--grep TEXT]
 
 A directory is either one rolling (v2) event log — Spark 4's default
 `eventlog_v2_<app>/events_<n>_<app>.zstd` — or holds application logs,
-of which the newest is read. `--grep` keeps only the executions whose
-description contains TEXT.
+of which the newest is read.
 
 Write an event log for a run by passing the Spark confs as JVM system
 properties, e.g.
@@ -130,7 +128,6 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("path", help="event log file, or a directory of them (newest is read)")
     ap.add_argument("--jobs", action="store_true", help="one line per job, too")
-    ap.add_argument("--grep", default=None, help="keep executions whose description has TEXT")
     args = ap.parse_args()
     files = log_files(args.path)
     app_start, execs, jobs = parse(files)
@@ -139,8 +136,6 @@ def main():
           f"{'tasks':>5} {'cpu_ms':>9} {'run_ms':>8}  description")
     totals = [0, 0, 0, 0.0]
     for exec_id, e in execs.items():
-        if args.grep is not None and args.grep not in (e["desc"] or ""):
-            continue
         js = [jobs[j] for j in e["jobs"]]
         ends = [x for x in [e["end"]] + [j["end"] for j in js] if x is not None]
         dur = (max(ends) - e["start"]) if ends else float("nan")
