@@ -40,26 +40,35 @@ object Dedup {
     * join, so shuffle bytes are O(candidates × 16B), not O(candidates ×
     * shingle-set) — → dedup (id_a, id_b) → re-join the shingle sets just
     * for the (small) surviving candidate set → verify exact Jaccard.
-    * Every join is an equi-join: sort-merge/shuffled-hash,
-    * AQE-skew-splittable — never a cartesian. `idCol` must be integral
-    * (it rides the kernel as long).
+    * Every join is an equi-join — never a cartesian. `idCol` must be
+    * integral (it rides the kernel as long).
     *
     * `prefixChars` caps signature+verify cost by shingling only the first
     * N chars of the text (0 = full text) — a cost/recall knob the caller
     * chooses explicitly, mirrored in the DuckDB oracle.
     *
-    * The (id, band, bucket) relation feeds both self-join branches and is
-    * persisted ([[OpCaches.track]], released by the session between
-    * queries): exchange reuse covers the two branches only while BOTH
-    * plan as shuffle joins — if AQE converts the self-join or the verify
-    * semi-join to a broadcast at runtime, the reused exchange disappears
-    * and the signature subplan would recompute per branch. The verify
-    * stage is semi-joined to
-    * the surviving candidate ids BEFORE shingling, so its shuffle is
-    * O(candidates), never O(corpus) — when candidates ≈ 0 the verify is
-    * free. AQE turns the semi-join into a broadcast at runtime when the
-    * candidate set is small (the common case) without risking an OOM hint
-    * on an adversarial all-dup corpus. */
+    * Each intermediate that feeds two branches is computed ONCE per call:
+    * the banded signatures (both self-join sides), the deduplicated pair
+    * set (the candidate ids and the verify join) and the candidates'
+    * shingle sets (both verify sides) are each `localCheckpoint(eager =
+    * false)`ed: filled by the first job that reads them, dropped by
+    * Spark's context cleaner once the returned DataFrame is garbage.
+    * Exchange reuse does NOT cover these branches once AQE turns the
+    * joins into broadcasts at run time (it does for every q17 join):
+    * without the checkpoints one call's plans held the (band, bucket)
+    * self-join five times and fed both verify joins their own shingling
+    * (30 Spark jobs per call on the bench corpus; 9 with them). A checkpoint plans
+    * its subtree when the operator is CALLED, so the self-join's and the
+    * candidate semi-join's shuffle and broadcast stages run then; only
+    * the verify joins wait for the caller's action. Checkpoint blocks
+    * live on the executors that computed them (no lineage to recompute a
+    * lost one).
+    *
+    * The verify stage is semi-joined to the surviving candidate ids
+    * BEFORE shingling, so its shuffle is O(candidates), never O(corpus) —
+    * when candidates ≈ 0 the verify is free. AQE turns the semi-join into
+    * a broadcast at runtime when the candidate set is small (the common
+    * case) without risking an OOM hint on an adversarial all-dup corpus. */
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
       k: Int = 5, numHashes: Int = 16, bands: Int = 4,
       threshold: Double = 0.6, prefixChars: Int = 0): DataFrame = {
@@ -79,7 +88,7 @@ object Dedup {
     // oracle (q17) and OpsSpec.
     val kk = k; val nh = numHashes; val nb = bands; val rpb = rowsPerBand
     val pc = prefixChars
-    val banded = OpCaches.track(
+    val banded =
       df.select(col(idCol).cast("long").as("id"),
           col(textCol).cast("string").as("t")).as[(Long, String)]
         .mapPartitions { it =>
@@ -100,13 +109,14 @@ object Dedup {
               }
             }
           }
-        }.toDF("id", "band", "bucket"))
+        }.toDF("id", "band", "bucket").localCheckpoint(eager = false)
     val a = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
     val b = banded.select(col("band"), col("bucket"), col("id").as("id_b"))
     val pairs = a.join(b, Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
+      .localCheckpoint(eager = false)
     // verify cost O(candidates): shingle only docs appearing in a pair
     // (kernel shingle sets — same first-occurrence-distinct value set as
     // the array_distinct transform, without the interpreted HOF)
@@ -120,7 +130,7 @@ object Dedup {
         (id, if (t == null) null
         else TextKernels.shingleSet(
           if (pc > 0) TextKernels.codePointPrefix(t, pc) else t, kk))
-      }).toDF("id", "sh")
+      }).toDF("id", "sh").localCheckpoint(eager = false)
     pairs
       .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
@@ -157,7 +167,10 @@ object Dedup {
 
   /** SimHash near-dup pairs by pigeonhole: two docs within Hamming
     * distance ≤ 3 over 16 nibbles must agree exactly on one of 4
-    * nibble-blocks → equi-join per block, verify nibble-distance. */
+    * nibble-blocks → equi-join per block, verify nibble-distance. The
+    * blocked signatures feed both self-join sides, so they are
+    * `localCheckpoint(eager = false)`ed: the corpus is scanned and hashed
+    * once per call (see [[minhashLsh]]). */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxNibbleDist: Int = 3): DataFrame = {
     val sigd = simhash(df, idCol, textCol)
@@ -166,6 +179,7 @@ object Dedup {
       explode(transform(sequence(lit(0), lit(3)), b =>
         struct(b.as("blk"), col("sig").substr(b * 4 + 1, lit(4)).as("key")))).as("bk"))
       .select(col("id"), col("sig"), col("bk.blk").as("blk"), col("bk.key").as("key"))
+      .localCheckpoint(eager = false)
     val a = blocked.select(col("blk"), col("key"), col("id").as("id_a"), col("sig").as("sig_a"))
     val b = blocked.select(col("blk"), col("key"), col("id").as("id_b"), col("sig").as("sig_b"))
     a.join(b, Seq("blk", "key"))

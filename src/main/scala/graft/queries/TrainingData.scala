@@ -85,7 +85,9 @@ object TrainingData {
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
   /** The q17 pipeline WITHOUT the cross-query cache — what PlanSpec pins
-    * (a localCheckpoint collapses the plan to an ExistingRDD scan). */
+    * (a localCheckpoint collapses the plan to an ExistingRDD scan). Like
+    * [[Dedup.minhashLsh]], it runs the candidate self-join's jobs when
+    * called. */
   private[graft] def q17PairsUncached(spark: SparkSession, dir: String): DataFrame =
     Dedup.minhashLsh(docs(spark, dir), "doc_id", "text", k = 5,
       numHashes = 16, bands = 2, threshold = 0.5,

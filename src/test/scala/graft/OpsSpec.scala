@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -61,6 +62,25 @@ class OpsSpec extends AnyFunSuite {
     val fast = Dedup.simhash(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(fast == sigs)
+  }
+
+  test("simhash pairs scan and hash the corpus once per call") {
+    // the blocked signatures feed both self-join sides; a broadcast join
+    // cannot reuse the other side's exchange, so unless they are
+    // materialized once the corpus is scanned and hashed per side
+    val path = TestSpark.tmpDir("simhash-once") + "/docs"
+    docs.write.parquet(path)
+    val s = spark.newSession()
+    var pairs = Set.empty[(Long, Long)]
+    val plans = ExecutedPlans.of(s) {
+      pairs = Dedup.simhashPairs(s.read.parquet(path), "doc_id", "text")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    val scanned = plans.flatMap(ExecutedPlans.nodes).collect {
+      case f: FileSourceScanExec => f.metrics("numOutputRows").value
+    }.sum
+    assert(pairs.contains((2L, 3L)))
+    assert(scanned == docs.count(), s"corpus rows scanned: $scanned")
   }
 
   test("quantized-dot ANN matches brute-force cosine ranking on unit-ish data") {

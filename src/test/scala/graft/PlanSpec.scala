@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape assertions: the optimizations the queries rely on must
@@ -14,12 +17,16 @@ class PlanSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
-  // q17's registered query serves a cross-query localCheckpoint cache
-  // (shared with q36), which collapses to an ExistingRDD scan — pin the
-  // UNCACHED pipeline's plan instead
-  private def q17plan: String =
-    graft.queries.TrainingData.q17PairsUncached(spark, dir)
-      .queryExecution.executedPlan.toString
+  /** The executed plans of every SQL execution that one q17 call and its
+    * action run, final (AQE) plans as they ran. q17's registered query
+    * serves a cross-query localCheckpoint cache (shared with q36), and the
+    * operator checkpoints its own intermediates, so no single plan holds
+    * the pipeline: each checkpointed subtree is in the execution that
+    * declared it. */
+  private lazy val q17plans: Seq[SparkPlan] = {
+    val s = spark.newSession()
+    ExecutedPlans.of(s)(graft.queries.TrainingData.q17PairsUncached(s, dir).collect())
+  }
 
   test("q02: predicate pushdown + column pruning reach the scan") {
     val p = plan("q02_filter_project")
@@ -52,25 +59,47 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q17: LSH candidate join is an equi-join, never a cartesian") {
-    val p = q17plan
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"LSH must bucket-join, got:\n$p")
+    assert(q17plans.nonEmpty)
+    q17plans.map(_.toString).foreach { p =>
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+        s"LSH must bucket-join, got:\n$p")
+    }
   }
 
   test("q17: signature+banding is a row-local scan-stage kernel — no exchange") {
-    val p = q17plan
     // the per-doc MinHash signature is computed by a mapPartitions kernel
     // in the scan stage; the explode → 16-min-aggregate round trip (an
     // O(corpus shingles) exchange) must NOT reappear
-    assert(p.contains("MapPartitions"), s"expected signature kernel in:\n$p")
-    assert(!p.contains("partial_min"),
-      s"signature must not shuffle through a min-aggregate:\n$p")
+    val ps = q17plans.map(_.toString)
+    assert(ps.exists(_.contains("MapPartitions")), s"expected signature kernel in:\n$ps")
+    ps.foreach { p =>
+      assert(!p.contains("partial_min"),
+        s"signature must not shuffle through a min-aggregate:\n$p")
+    }
   }
 
-  test("q17: verify stage shingles only candidates (left-semi), signature exchange reused") {
-    val p = q17plan
-    assert(p.contains("LeftSemi"),
-      s"verify must semi-join to surviving candidates before shingling:\n$p")
+  test("q17: verify stage shingles only candidates (left-semi)") {
+    // a shingle kernel with the candidate semi-join below it
+    val shingled = q17plans.flatMap(ExecutedPlans.nodes).exists {
+      case m: MapPartitionsExec => ExecutedPlans.nodes(m).exists {
+        case j: BaseJoinExec => j.joinType == LeftSemi
+        case _ => false
+      }
+      case _ => false
+    }
+    assert(shingled,
+      s"verify must semi-join to surviving candidates before shingling:\n${q17plans.mkString("\n")}")
+  }
+
+  test("q17: one (band, bucket) self-join per call") {
+    // AQE broadcasts every q17 join at run time, so exchange reuse cannot
+    // share the candidate pair set between the branches that read it;
+    // the operator materializes it once
+    val selfJoins = q17plans.flatMap(ExecutedPlans.nodes).count {
+      case j: BaseJoinExec => j.leftKeys.exists(_.references.exists(_.name == "band"))
+      case _ => false
+    }
+    assert(selfJoins == 1, s"expected one self-join in:\n${q17plans.mkString("\n")}")
   }
 
   test("q24: enrichment dimension broadcasts; fact side never shuffles") {
