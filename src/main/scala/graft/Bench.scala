@@ -128,10 +128,9 @@ object Bench {
             Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
         }
         val sec = (System.nanoTime() - t0) / 1e9
-        // sketch queries persist() intermediates they cannot unpersist
-        // themselves; drop them so they don't pin memory under (and leak
-        // plan-matched cache hits into) later queries' timings
-        graft.ops.OpCaches.unpersistAll(spark)
+        // operators checkpoint their intermediates locally, so a query
+        // leaves no session cache; the clear is a guard that a cache one
+        // query does leave cannot serve plan-matched hits to later timings
         spark.sharedState.cacheManager.clearCache()
         (name, sec, err)
       }

@@ -27,8 +27,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // sketch queries persist() intermediates; don't let them accumulate
-      graft.ops.OpCaches.unpersistAll(spark)
+      // guard: a session cache one query leaves must not serve the next
       spark.sharedState.cacheManager.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

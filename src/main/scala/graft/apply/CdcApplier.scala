@@ -170,7 +170,15 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
     // high-watermark of their source partition (exactly-once resume). ----
     val committed = snap.map(_.offsets).getOrElse(Map.empty)
     // micro-batch-sized by construction (O2's 500-file-cap analog) —
-    // cached because the jobs below consume it twice.
+    // cached because the jobs below consume it twice. A scoped cache, not a
+    // local checkpoint: `routeObserved`'s per-rule counts ride a
+    // CollectMetrics node under `events`. The fused-stats and write
+    // executions reach that node through a cached plan
+    // (`InMemoryTableScanExec.relation.cachedPlan`), and an observation
+    // completes only from an execution whose logical plan contains it. A
+    // checkpoint would hide the node from both, so the observation could
+    // complete only from the checkpoint's own execution, before any row is
+    // counted.
     val fenced = CdcApplier.fence(canon, committed).cache()
     try {
 

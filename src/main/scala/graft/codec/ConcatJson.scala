@@ -37,11 +37,14 @@ object ConcatJson {
     * earlier `readTree` built a JsonNode tree per event — one map plus
     * one node per field of pure allocation on the hottest path of the
     * wire replay — only to read ~13 scalar fields once. The walk keeps
-    * tree semantics exactly: last duplicate key wins, scalar fields get
-    * the token text (containers coerce to "" like `JsonNode.asText`),
-    * `seq` accepts integral tokens in long range (and truncates in-range
-    * doubles, like `canConvertToLong`/`asLong`), `payload` is captured
-    * as its RAW character span (consumers only ever `from_json` it). */
+    * tree semantics except for numbers in string-typed fields: last
+    * duplicate key wins, scalar fields get the token text (containers
+    * coerce to "" like `JsonNode.asText`). A numeric token's text is its
+    * RAW text as written (`1e3`, `2.50`), where `JsonNode.asText` printed
+    * the parsed number (`1000.0`, `2.5`). `seq` accepts integral tokens
+    * in long range (and truncates in-range doubles, like
+    * `canConvertToLong`/`asLong`); `payload` is captured as its RAW
+    * character span (consumers only ever `from_json` it). */
   def decodeTyped(blobs: Dataset[String]): Dataset[RawChange] = {
     import blobs.sparkSession.implicits._
     blobs.mapPartitions { it =>

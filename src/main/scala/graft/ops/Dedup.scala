@@ -205,23 +205,22 @@ object Dedup {
     * row's buckets by all 1-bit flips for recall. */
   def embeddingNearDup(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nPlanes: Int = 8, probeBits: Int = 0): DataFrame = {
-    val dim = df.select(size(col(vecCol))).head().getInt(0)
-    // three consumers (both join branches + the verify re-join) —
-    // materialize once, recomputable on loss; registered with OpCaches
-    // so long-lived sessions can release it ([[OpCaches.unpersistAll]]).
     // quantize / bucket / self-dot in row-local kernels ([[VectorKernels]])
-    // — same arithmetic as the Column HOFs, no interpreted lambdas.
-    val signs = Similarity.planeSigns(nPlanes, dim)
-    val base = OpCaches.track(VectorKernels.withQdot(
-      VectorKernels.withBucket(
-        VectorKernels.withQuantized(
-          df.select(col(idCol).as("id"), col(vecCol).as("_v")), "_v", "qv")
-          .drop("_v"),
-        "qv", "bucket", signs, dim),
-      "qv", "qv", "aa"))
-    val a = base.select(col("id").as("id_a"),
+    // — same arithmetic as the Column HOFs, no interpreted lambdas. The
+    // quantized vectors feed both join branches and the verify re-join, so
+    // they are local-checkpointed: the dim probe's job fills the checkpoint
+    // and the corpus is read and quantized once per call (the integer
+    // bucket projection runs once per join side).
+    val base = VectorKernels.withQdot(
+      VectorKernels.withQuantized(
+        df.select(col(idCol).as("id"), col(vecCol).as("_v")), "_v", "qv").drop("_v"),
+      "qv", "qv", "aa").localCheckpoint(eager = false)
+    val dim = base.select(size(col("qv"))).head().getInt(0)
+    val bucketed = VectorKernels.withBucket(base.select(col("id"), col("qv")),
+      "qv", "bucket", Similarity.planeSigns(nPlanes, dim), dim)
+    val a = bucketed.select(col("id").as("id_a"),
       explode(Similarity.probeBuckets(col("bucket"), nPlanes, probeBits)).as("bucket"))
-    val b = base.select(col("id").as("id_b"), col("bucket"))
+    val b = bucketed.select(col("id").as("id_b"), col("bucket"))
     val pairs = a.join(b, Seq("bucket"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
@@ -253,19 +252,21 @@ object Dedup {
     * /small-star dance in practice. Per round: one equi-join on edges +
     * one min-aggregate, both map-side combined; `localCheckpoint`
     * truncates the lineage so round N's plan doesn't replay rounds
-    * 0..N-1. The driver-side loop decision (`changed == 0`) reads ONE
-    * aggregate value per round — labels monotonically decrease, so the
-    * label SUM is a fixpoint witness; no per-row driver work.
+    * 0..N-1; the symmetric edge set every round reads is checkpointed
+    * once the same way. The driver-side loop decision (`changed == 0`)
+    * reads ONE aggregate value per round — labels monotonically
+    * decrease, so the label SUM is a fixpoint witness; no per-row driver
+    * work.
     *
     * Returns (doc_id, cluster_id) for every doc appearing in some pair
     * (singletons are their own cluster trivially — callers that need
     * them add `ids.except(members)` rows with cluster_id = doc_id). */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    val edges = OpCaches.track(
+    val edges =
       pairs.select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
         .unionByName(pairs.select(col("id_b").cast("long").as("src"),
           col("id_a").cast("long").as("dst")))
-        .distinct())
+        .distinct().localCheckpoint(eager = false)
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
       .localCheckpoint(true)

@@ -1,56 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.SparkSession
 
-/** Lifetime management for DataFrames the sketch operators persist
-  * internally (e.g. [[Dedup.embeddingNearDup]]'s shared base relation,
-  * which feeds both candidate-join branches AND the verify re-join, so
-  * exchange reuse alone cannot cover it).
-  *
-  * An operator cannot unpersist its own intermediate — the returned
-  * DataFrame is lazy and the cache must outlive the caller's action — so
-  * operators register persisted relations here and a long-lived session
-  * calls [[unpersistAll]] after consuming results (Bench/Verify do this
-  * between queries) instead of nuking every cache in the session with
-  * `spark.catalog.clearCache()`. References are STRONG on purpose: the
-  * session's CacheManager pins the cached blocks regardless of whether
-  * the DataFrame wrapper is still reachable, so a weak reference would
-  * just lose the only handle that can unpersist them — the registry
-  * itself is the leak guard, and it is emptied on every release.
-  *
-  * The registry is keyed PER SparkSession: `unpersistAll()` releases only
-  * the calling session's tracked caches, so one session's between-query
-  * cleanup (Bench/Verify) can never evict a cache an unrelated concurrent
-  * session is still consuming. Sessions that never call [[unpersistAll]]
-  * keep their entries until the map entry is dropped with the session
-  * (weak session keys — the DataFrames die with their session anyway). */
+/** Operators `localCheckpoint(eager = false)` what several consumers of
+  * one query read, so the blocks go with the returned DataFrame and no
+  * session cache is left to release. This object stays only because the
+  * benchmark harness (`perfbench/`) still calls [[unpersistAll]]. */
 object OpCaches {
 
-  private val bySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.ArrayBuffer[DataFrame]]()
-
-  /** Persist `df` (MEMORY_AND_DISK) and register it for later release by
-    * its own session. */
-  def track(df: DataFrame): DataFrame = synchronized {
-    val buf = {
-      val existing = bySession.get(df.sparkSession)
-      if (existing != null) existing
-      else {
-        val b = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        bySession.put(df.sparkSession, b)
-        b
-      }
-    }
-    buf += df.persist(StorageLevel.MEMORY_AND_DISK)
-    df
-  }
-
-  /** Unpersist every relation tracked by `session` and clear its
-    * registry. Safe to call at any time — Spark recomputes on demand. */
-  def unpersistAll(session: SparkSession): Unit = synchronized {
-    val buf = bySession.remove(session)
-    if (buf != null) buf.foreach(df => scala.util.Try(df.unpersist(blocking = false)))
-  }
+  /** No-op: operators leave nothing to release. */
+  def unpersistAll(session: SparkSession): Unit = ()
 }

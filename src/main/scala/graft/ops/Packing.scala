@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * instead:
   *   1. range-partition by id (partition p holds ids strictly below
   *      partition p+1 — ordering is preserved ACROSS partitions) and pin
-  *      the partitioning with a persist so both passes see identical
-  *      boundaries (range sampling is otherwise nondeterministic across
-  *      recomputes);
+  *      the partitioning with a local checkpoint so both passes see
+  *      identical boundaries (range sampling is otherwise
+  *      nondeterministic across recomputes);
   *   2. ONE metadata-scale aggregate of per-partition token totals to the
   *      driver (≤ one row per partition) — scanLeft gives each
   *      partition's exclusive global offset, shipped back as a literal
@@ -45,11 +45,11 @@ object Packing {
     val spark = df.sparkSession
     val base = df.select(col(idCol), coalesce(tokens.cast("long"), lit(0L))
       .as("n_tokens"))
-    // persist BEFORE reading partition ids: range boundaries are sampled,
-    // so an unpinned plan could re-sample between the offsets job and the
-    // final pass and mis-assign offsets
-    val parted = OpCaches.track(
-      base.repartitionByRange(col(idCol)).withColumn("_pid", spark_partition_id()))
+    // checkpoint BEFORE reading partition ids: range boundaries are
+    // sampled, so an unpinned plan could re-sample between the offsets job
+    // and the final pass and mis-assign offsets
+    val parted = base.repartitionByRange(col(idCol))
+      .withColumn("_pid", spark_partition_id()).localCheckpoint(eager = false)
     val partSums = parted.groupBy(col("_pid"))
       .agg(sum(col("n_tokens")).as("_t"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap

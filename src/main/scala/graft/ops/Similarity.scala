@@ -33,13 +33,15 @@ object Similarity {
     // driver anyway) ships in the closure, and the nested-loop join the
     // planner produced for the `neighbor_id =!= qid` condition
     // disappears. Arithmetic identical to the zip_with Column form
-    // (OpsSpec equivalence + q19 oracle); ragged vectors yield NULL
-    // dots like zip_with null-padding.
+    // (OpsSpec equivalence + q19 oracle); ragged vectors and NULL query
+    // vectors yield NULL dots like zip_with null-padding. NULL-qid rows are
+    // dropped: the `neighbor_id =!= qid` join matched nothing for them.
     val qRows: Array[(Long, Array[Long])] = VectorKernels.withQuantized(
-        queries.select(col("qid").cast("long").as("qid"), col("qvec")),
+        queries.select(col("qid").cast("long").as("qid"), col("qvec"))
+          .filter(col("qid").isNotNull),
         "qvec", "qq")
       .select(col("qid"), col("qq")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+      .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[Long](1).toArray))
     val joined = VectorKernels.withQuantized(
         corpus.select(col(idCol).cast("long").as("neighbor_id"),
           col(vecCol).as("_v")), "_v", "qv").drop("_v")
@@ -48,7 +50,7 @@ object Similarity {
         it.flatMap { case (nid, qv) =>
           qRows.iterator.filter(_._1 != nid).map { case (qid, qq) =>
             val qdot: Option[Long] =
-              if (qv == null || qv.length != qq.length) None
+              if (qv == null || qq == null || qv.length != qq.length) None
               else {
                 var s = 0L
                 var i = 0
@@ -155,12 +157,12 @@ object Similarity {
   def ivfTopKQuantized(corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, k: Int, nCells: Int = 16, nProbe: Int = 2,
       kmeansIters: Int = 1): DataFrame = {
-    // quantize ONCE and cache: the seed collect, every Lloyd step, and
-    // the final assignment all read the same projection — uncached, each
-    // k-means iteration would rescan and re-quantize the full corpus
-    val qvecs = OpCaches.track(VectorKernels.withQuantized(
+    // quantize ONCE into a local checkpoint: the seed collect, every Lloyd
+    // step, and the final assignment all read the same projection — without
+    // it, each k-means iteration would rescan and re-quantize the corpus
+    val qvecs = VectorKernels.withQuantized(
       corpus.select(col(idCol).cast("long").as("id"), col(vecCol).as("_v")),
-      "_v", "qv").drop("_v"))
+      "_v", "qv").drop("_v").localCheckpoint(eager = false)
     val seeds: Seq[(Int, Seq[Long])] = qvecs
       .orderBy(col("id")).limit(nCells).collect()
       .sortBy(_.getLong(0))

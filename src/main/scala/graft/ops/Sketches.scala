@@ -157,8 +157,9 @@ object Sketches {
     * counts only those. The two passes re-scan the input — callers with
     * a cheap-to-recompute item projection (a tokenizer over a column
     * scan) should prefer the re-scan over persisting an exploded token
-    * table. The phase-1 summary itself is persisted (metadata-scale,
-    * registered with [[OpCaches]]).
+    * table. The phase-1 summary itself (metadata-scale) is
+    * `localCheckpoint(eager = false)`ed: the total and the candidates
+    * read it from one phase-1 pass.
     *
     * Returns one row per heavy hitter: (itemCol, cnt, share). */
   def frequentItems(items: DataFrame, itemCol: String, k: Int): DataFrame = {
@@ -166,7 +167,7 @@ object Sketches {
     val spark = items.sparkSession
     import spark.implicits._
     val ds = items.select(col(itemCol).cast("string")).na.drop().as[String]
-    val summary = OpCaches.track(ds.mapPartitions { it =>
+    val summary = ds.mapPartitions { it =>
       val counters = scala.collection.mutable.HashMap.empty[String, Long]
       var n = 0L
       it.foreach { x =>
@@ -183,7 +184,7 @@ object Sketches {
       // candidates ride as (item, 0); the partition row count as (null, n)
       counters.keysIterator.map(s => (Option(s), 0L)) ++
         Iterator((Option.empty[String], n))
-    }.toDF("item", "np"))
+    }.toDF("item", "np").localCheckpoint(eager = false)
     val total = summary.filter(col("item").isNull)
       .agg(sum(col("np"))).head().getLong(0)
     val cand = summary.filter(col("item").isNotNull)

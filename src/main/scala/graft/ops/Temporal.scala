@@ -155,21 +155,23 @@ object Temporal {
     val iv = intervals.filter(col(endCol) >= col(startCol))
     // both delta rows (+ at start, − past end) come from ONE interval
     // scan via explode — the two-sided union scanned the interval table
-    // twice; the aggregated delta table (≤ 2·days rows) is persisted
-    // because BOTH the calendar-bounds aggregate and the calendar join
-    // consume it, which re-executed the whole scan+aggregate per consumer
+    // twice; the aggregated delta table (≤ 2·days rows) is
+    // local-checkpointed because BOTH the calendar-bounds aggregate and the
+    // calendar join consume it, which re-executed the whole scan+aggregate
+    // per consumer
     def side(day: Column, sign: Int): Column =
       struct(day.as("__d") +:
         lit(sign.toLong).as("__n") +:
         weights.map { case (c, out) => (col(c) * sign).as(out) }: _*)
-    val deltas = OpCaches.track(iv
+    val deltas = iv
       .select(explode(array(
         side(to_date(col(startCol)), 1),
         side(date_add(to_date(col(endCol)), 1), -1))).as("__e"))
       .select(col("__e.*"))
       .groupBy(col("__d"))
       .agg(sum(col("__n")).as("__n"),
-        weights.map { case (_, out) => sum(col(out)).as(out) }: _*))
+        weights.map { case (_, out) => sum(col(out)).as(out) }: _*)
+      .localCheckpoint(eager = false)
     // densify the calendar so every point day has an exact running value
     // (one row → explode; bounded by the date domain, not data volume)
     val days = deltas.agg(min(col("__d")).as("__lo"), max(col("__d")).as("__hi"))

@@ -56,11 +56,12 @@ object TrainingData {
 
   /** q16 — n-gram Jaccard similarity on adjacent doc pairs (the exact
     * verify kernel used by the LSH pipeline, oracle-gated). Shingle sets
-    * are projected once per document BEFORE the self-join, so no document
-    * is shingled twice (once per side it appears on). */
+    * are projected once per document BEFORE the self-join and
+    * local-checkpointed, so no document is shingled twice (once per side
+    * it appears on). */
   def q16NgramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    val sh = graft.ops.OpCaches.track(
-      graft.ops.TextAnalysis.shingleTable(docs(spark, dir), "doc_id", "text", 5))
+    val sh = graft.ops.TextAnalysis.shingleTable(docs(spark, dir), "doc_id", "text", 5)
+      .localCheckpoint(eager = false)
     val a = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
     val b = sh.select((col("doc_id") - 1).as("id_a"), col("doc_id").as("id_b"),
       col("sh").as("sh_b"))

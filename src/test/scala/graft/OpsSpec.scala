@@ -89,8 +89,16 @@ class OpsSpec extends AnyFunSuite {
         (math.sin(i * 31 + d * 7) * 0.5).toFloat))
     }.toDF("vec_id", "embedding")
     val q = vecs.filter($"vec_id" < 3).select($"vec_id".as("qid"), $"embedding".as("qvec"))
-    val qd = Similarity.quantizedDotTopK(vecs, "vec_id", "embedding", q, 5)
-      .select($"qid", $"neighbor_id", $"rank").collect()
+    // a NULL qid matches no neighbour; a NULL qvec scores a NULL dot
+    // against every neighbour
+    val withNulls = q.unionByName(Seq[(Option[Long], Option[Array[Float]])](
+      (None, Some(Array.fill(16)(0.1f))), (Some(99L), None)).toDF("qid", "qvec"))
+    val out = Similarity.quantizedDotTopK(vecs, "vec_id", "embedding", withNulls, 5)
+      .select($"qid", $"neighbor_id", $"rank", $"qdot").collect()
+    val nullVec = out.filter(_.getLong(0) == 99L).sortBy(_.getInt(2))
+    assert(nullVec.map(_.getLong(1)).toSeq == (0L to 4L) && nullVec.forall(_.isNullAt(3)),
+      s"NULL qvec rows: ${nullVec.toSeq}")
+    val qd = out.filter(_.getLong(0) != 99L)
       .map(r => (r.getLong(0), r.getInt(2)) -> r.getLong(1)).toMap
     assert(qd.size == 15)
     // brute cosine on the same data: top-1 must agree (quantization at
@@ -326,7 +334,6 @@ class OpsSpec extends AnyFunSuite {
       assert(got(id) == ((t, acc, acc / 50, acc % 50)), s"doc $id")
       acc += t
     }
-    graft.ops.OpCaches.unpersistAll(spark)
   }
 
   test("histogram quantiles: upper bounds bracket exact quantiles within one bin; groups independent") {
@@ -369,7 +376,6 @@ class OpsSpec extends AnyFunSuite {
     // MG summaries only shape the candidate SUPERSET, never the output
     assert(run(1) == expected)
     assert(run(8) == expected)
-    graft.ops.OpCaches.unpersistAll(spark)
   }
 
   test("stratified hash sample: deterministic, weighted, strata-scoped") {

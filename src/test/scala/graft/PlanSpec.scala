@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.plans.LeftSemi
-import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec, SparkPlan}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -136,7 +136,35 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Exchange SinglePartition"),
       s"the distributed prefix sum must not funnel into one task:\n$p")
     assert(p.contains("Window"), "per-partition running sum should be a window")
-    graft.ops.OpCaches.unpersistAll(spark)
+  }
+
+  test("operators leave no session cache behind (q16 q29 q30 q36 q38 q42 q47)") {
+    // a long-lived session never releases a registry: each query must
+    // drop its intermediates with the frame it returned
+    spark.catalog.clearCache()
+    Seq("q16_ngram_jaccard", "q29_embedding_neardup", "q30_ann_ivf",
+        "q36_dedup_clusters", "q38_token_packing", "q42_heavy_hitters",
+        "q47_range_join").foreach { name =>
+      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left a session cache")
+    }
+  }
+
+  test("q16 shingles each doc and q29 quantizes each vector once per call") {
+    // the shingle sets feed both join sides; the quantized vectors feed
+    // both candidate-join sides and the verify re-join
+    Seq("q16_ngram_jaccard" -> "documents", "q29_embedding_neardup" -> "embeddings")
+      .foreach { case (name, table) =>
+        val s = spark.newSession()
+        val plans = ExecutedPlans.of(s) {
+          SparkEntry.queries(name)(s, dir).write.format("noop").mode("overwrite").save()
+        }
+        val scanned = plans.flatMap(ExecutedPlans.nodes).collect {
+          case f: FileSourceScanExec => f.metrics("numOutputRows").value
+        }.sum
+        val rows = spark.read.parquet(s"$dir/$table.parquet").count()
+        assert(scanned == rows, s"$name scanned $scanned rows of $rows")
+      }
   }
 
   test("q37: contamination join is an equi-join on gram digests, no cartesian") {
