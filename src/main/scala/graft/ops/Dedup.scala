@@ -43,6 +43,13 @@ object Dedup {
     * Every join is an equi-join — never a cartesian. `idCol` must be
     * integral (it rides the kernel as long).
     *
+    * The verify shares q16's two kernels: the candidates' shingle sets
+    * are [[TextAnalysis.shingleTable]]'s packed layout (sorted distinct
+    * shingle codes plus a sorted string remainder), and the Jaccard is
+    * [[TextKernels.jaccard]], two merge walks per pair instead of the two
+    * `UTF8String` hash sets the Column intersect and union built — the
+    * same value, NULL and ANSI semantics included.
+    *
     * `prefixChars` caps signature+verify cost by shingling only the first
     * N chars of the text (0 = full text) — a cost/recall knob the caller
     * chooses explicitly, mirrored in the DuckDB oracle.
@@ -117,28 +124,20 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
       .localCheckpoint(eager = false)
-    // verify cost O(candidates): shingle only docs appearing in a pair
-    // (kernel shingle sets — same first-occurrence-distinct value set as
-    // the array_distinct transform, without the interpreted HOF)
+    // verify cost O(candidates): shingle only docs appearing in a pair,
+    // in the packed layout the Jaccard kernel merge-walks
     val candIds = pairs.select(col("id_a").as("id"))
       .unionByName(pairs.select(col("id_b").as("id"))).distinct()
-    val sh = df.select(col(idCol).cast("long").as("id"),
-        col(textCol).cast("string").as("t")).as[(Long, String)]
-      .join(candIds, Seq("id"), "left_semi")
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, t) =>
-        (id, if (t == null) null
-        else TextKernels.shingleSet(
-          if (pc > 0) TextKernels.codePointPrefix(t, pc) else t, kk))
-      }).toDF("id", "sh").localCheckpoint(eager = false)
-    pairs
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+    val sh = TextAnalysis.shingleTable(
+        df.select(col(idCol).cast("long").as("id"), col(textCol).cast("string").as("t"))
+          .join(candIds, Seq("id"), "left_semi"),
+        "id", "t", k, prefixChars).localCheckpoint(eager = false)
+    TextAnalysis.shingleJaccard(pairs
+        .join(sh.select(col("id").as("id_a"), col("codes").as("codes_a"),
+          col("wide").as("wide_a")), Seq("id_a"))
+        .join(sh.select(col("id").as("id_b"), col("codes").as("codes_b"),
+          col("wide").as("wide_b")), Seq("id_b")))
       .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   /** SimHash signatures for a whole table — the hot-path shape (same

@@ -21,10 +21,21 @@ import org.apache.spark.sql.expressions.Window
   */
 object Similarity {
 
+  /** Most query rows [[quantizedDotTopK]] collects to the driver. */
+  val MaxQueryRows = 10000
+
+  /** A query table above [[quantizedDotTopK]]'s driver-side bound. */
+  final class QueryTableTooLargeException(val rows: Long, val bound: Int)
+    extends IllegalArgumentException(
+      s"query table has $rows non-NULL-qid rows, above the bound of $bound " +
+        "that quantizedDotTopK collects to the driver")
+
   /** Top-k by quantized dot product (oracle-parity variant): ranking on
-    * exact integers, ties broken by neighbor id. */
+    * exact integers, ties broken by neighbor id. The query table is
+    * collected to the driver, at most `maxQueryRows` rows of it: a larger
+    * one fails with [[QueryTableTooLargeException]] before any scoring. */
   def quantizedDotTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int): DataFrame = {
+      queries: DataFrame, k: Int, maxQueryRows: Int = MaxQueryRows): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // brute force is definitionally all-pairs, so score every query
@@ -36,12 +47,17 @@ object Similarity {
     // (OpsSpec equivalence + q19 oracle); ragged vectors and NULL query
     // vectors yield NULL dots like zip_with null-padding. NULL-qid rows are
     // dropped: the `neighbor_id =!= qid` join matched nothing for them.
-    val qRows: Array[(Long, Array[Long])] = VectorKernels.withQuantized(
-        queries.select(col("qid").cast("long").as("qid"), col("qvec"))
-          .filter(col("qid").isNotNull),
-        "qvec", "qq")
-      .select(col("qid"), col("qq")).collect()
+    // At most maxQueryRows + 1 rows reach the driver; one more row than
+    // the bound fails with the table's count (a job run only then)
+    // instead of an OOM. Over a one-partition query table the limited
+    // collect is one job, as the unbounded collect was.
+    val qTable = queries.select(col("qid").cast("long").as("qid"), col("qvec"))
+      .filter(col("qid").isNotNull)
+    val qRows: Array[(Long, Array[Long])] = VectorKernels.withQuantized(qTable, "qvec", "qq")
+      .select(col("qid"), col("qq")).limit(maxQueryRows + 1).collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[Long](1).toArray))
+    if (qRows.length > maxQueryRows)
+      throw new QueryTableTooLargeException(qTable.count(), maxQueryRows)
     val joined = VectorKernels.withQuantized(
         corpus.select(col(idCol).cast("long").as("neighbor_id"),
           col(vecCol).as("_v")), "_v", "qv").drop("_v")

@@ -92,19 +92,49 @@ object TextAnalysis {
       }.toDF(idCol, "fp64", "shingle_fp")
   }
 
-  /** Distinct k-shingle sets for a whole table: (idCol, sh) via the
-    * row-local kernel ([[TextKernels.shingleSet]]) — the value set of
-    * `array_distinct(transform(...))` without the interpreted HOF. NULL
-    * text ⇒ NULL array. idCol must be integral. */
+  /** Distinct k-shingle sets for a whole table in the packed layout of
+    * [[TextKernels.shingleCodes]]: (idCol, codes: array<long>,
+    * wide: array<string>), one row-local kernel in the scan stage — the
+    * value set of `array_distinct(transform(...))` without the
+    * interpreted HOF. `prefixChars` > 0 shingles only the first that many
+    * code points. NULL text ⇒ NULL `codes` and `wide`. idCol must be
+    * integral. */
   def shingleTable(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, k: Int = 5): org.apache.spark.sql.DataFrame = {
+      textCol: String, k: Int = 5, prefixChars: Int = 0): org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val kk = k
+    val pc = prefixChars
     df.select(col(idCol).cast("long").as("id"),
         col(textCol).cast("string").as("t")).as[(Long, String)]
       .mapPartitions(_.map { case (id, t) =>
-        (id, if (t == null) null else TextKernels.shingleSet(t, kk))
-      }).toDF(idCol, "sh")
+        if (t == null) (id, null: Array[Long], null: Array[String])
+        else {
+          val (codes, wide) = TextKernels.shingleCodes(
+            if (pc > 0) TextKernels.codePointPrefix(t, pc) else t, kk)
+          (id, codes, wide)
+        }
+      }).toDF(idCol, "codes", "wide")
+  }
+
+  /** Exact n-gram Jaccard of shingle-set pairs ([[TextKernels.jaccard]],
+    * one row-local kernel): `pairs` carries `id_a`, `id_b` and each
+    * side's [[shingleTable]] layout as `codes_a`/`wide_a` and
+    * `codes_b`/`wide_b`; returns (id_a, id_b, jaccard) with the value of
+    * the Column form (intersection size over union size of the string
+    * sets, `graft.reference.DedupRef.jaccard`) under this session's
+    * `size(NULL)` and ANSI division rules. The ids ride as long. */
+  def shingleJaccard(pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val conf = spark.sessionState.conf
+    val legacySize = conf.legacySizeOfNull
+    val ansi = conf.ansiEnabled
+    pairs.select(col("id_a").cast("long"), col("id_b").cast("long"), col("codes_a"),
+        col("wide_a"), col("codes_b"), col("wide_b"))
+      .as[(Long, Long, Array[Long], Array[String], Array[Long], Array[String])]
+      .mapPartitions(_.map { case (ia, ib, ca, wa, cb, wb) =>
+        (ia, ib, TextKernels.jaccard(ca, wa, cb, wb, legacySize, ansi))
+      }).toDF("id_a", "id_b", "jaccard")
   }
 }

@@ -28,6 +28,20 @@ import java.security.MessageDigest
   * token semantics, md5-hex lane extraction, IEEE double ratios of exact
   * integer counts. Gated by the q15/q16/q17/q18/q37/q50 oracle queries
   * and the OpsSpec kernel-vs-Column equivalence tests.
+  *
+  * Shingle sets for Jaccard (q16, q17's verify) use a packed layout, not
+  * `array<string>`: a document is `(codes: array<long>, wide:
+  * array<string>)`, both sorted and distinct ([[shingleCodes]]). A
+  * shingle of at most 5 UTF-16 chars, each below U+1000, is one
+  * non-negative long ([[packShingle]]: 12 bits per char, then a 3-bit
+  * length); every other shingle (surrogates, CJK, k > 5) stays a string
+  * in `wide`. The pack rule looks only at the shingle, so equal shingles
+  * always take the same form, and the set is exactly the reference
+  * shingle set split in two. [[jaccard]] is then two merge walks, with
+  * the Column form's `size(NULL)` and 0/0 results under the session's
+  * ANSI setting. JaccardKernelSpec checks both against the Column forms
+  * over generated text (ASCII, Latin-1, the U+0FFF/U+1000 boundary,
+  * surrogate pairs, CJK, blank and NULL), with ANSI on and off.
   */
 private[graft] object TextKernels {
 
@@ -41,12 +55,13 @@ private[graft] object TextKernels {
     s.substring(0, o)
   }
 
-  /** Visit every character-k-gram of `s` in order, code-point-correct:
-    * positions 1 .. max(cpLen-k+1, 1), each shingle = k code points (or
-    * the remainder near/at a short end) — the exact value set of
+  /** Visit the bounds `[from, to)` of every character-k-gram of `s` in
+    * order, code-point-correct: positions 1 .. max(cpLen-k+1, 1), each
+    * shingle = k code points (or the remainder near/at a short end) — the
+    * exact value set of
     * `transform(sequence(1, greatest(length(s)-k+1, 1)), i => substr(i, k))`.
     * May visit duplicates; callers dedup as needed. */
-  def foreachShingle(s: String, k: Int)(f: String => Unit): Unit = {
+  def foreachShingleBounds(s: String, k: Int)(f: (Int, Int) => Unit): Unit = {
     val len = s.length
     var hasSupp = false
     var i = 0
@@ -57,7 +72,7 @@ private[graft] object TextKernels {
     if (!hasSupp) {
       val cnt = math.max(len - (k - 1), 1)
       var p = 0
-      while (p < cnt) { f(s.substring(p, math.min(p + k, len))); p += 1 }
+      while (p < cnt) { f(p, math.min(p + k, len)); p += 1 }
     } else {
       val cpLen = s.codePointCount(0, len)
       val offs = new Array[Int](cpLen + 1)
@@ -67,16 +82,116 @@ private[graft] object TextKernels {
       offs(cpLen) = len
       val cnt = math.max(cpLen - (k - 1), 1)
       var p = 0
-      while (p < cnt) { f(s.substring(offs(p), offs(math.min(p + k, cpLen)))); p += 1 }
+      while (p < cnt) { f(offs(p), offs(math.min(p + k, cpLen))); p += 1 }
     }
   }
 
-  /** Distinct shingles, first-occurrence order (≡ `array_distinct` over
-    * the shingle transform). */
-  def shingleSet(s: String, k: Int): Array[String] = {
-    val seen = new java.util.LinkedHashSet[String]()
-    foreachShingle(s, k)(seen.add(_))
-    seen.toArray(new Array[String](seen.size))
+  /** Every character-k-gram of `s` as a string ([[foreachShingleBounds]]). */
+  def foreachShingle(s: String, k: Int)(f: String => Unit): Unit =
+    foreachShingleBounds(s, k)((from, to) => f(s.substring(from, to)))
+
+  /** Longest shingle, in UTF-16 chars, that [[packShingle]] packs. */
+  private val PackChars = 5
+
+  /** `s[from, to)` packed into one non-negative long when it is at most
+    * [[PackChars]] UTF-16 chars, each below U+1000: 12 bits per char,
+    * first char highest, unused slots 0, then the length in the low 3
+    * bits (5 × 12 + 3 = 63 bits). Injective: the length tells a trailing
+    * U+0000 from an unused slot. −1 when the shingle does not pack. */
+  def packShingle(s: String, from: Int, to: Int): Long = {
+    val len = to - from
+    if (len > PackChars) return -1L
+    var code = 0L
+    var i = 0
+    while (i < PackChars) {
+      val c = if (i < len) s.charAt(from + i).toInt else 0
+      if (c >= 0x1000) return -1L
+      code = (code << 12) | c
+      i += 1
+    }
+    (code << 3) | len
+  }
+
+  /** The distinct k-shingles of `s` in the packed layout: `codes`, the
+    * shingles [[packShingle]] packs, and `wide`, every other shingle
+    * (surrogates, CJK, k > 5) as a string; both sorted ascending and
+    * distinct. Whether a shingle packs depends only on the shingle, so
+    * equal shingles of two documents always land in the same half. */
+  def shingleCodes(s: String, k: Int): (Array[Long], Array[String]) = {
+    var codes = new Array[Long](math.max(s.length, 1))
+    var n = 0
+    var wide: java.util.TreeSet[String] = null
+    foreachShingleBounds(s, k) { (from, to) =>
+      val c = packShingle(s, from, to)
+      if (c >= 0) {
+        if (n == codes.length) codes = java.util.Arrays.copyOf(codes, 2 * n)
+        codes(n) = c
+        n += 1
+      } else {
+        if (wide == null) wide = new java.util.TreeSet[String]()
+        wide.add(s.substring(from, to))
+      }
+    }
+    java.util.Arrays.sort(codes, 0, n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (m == 0 || codes(i) != codes(m - 1)) { codes(m) = codes(i); m += 1 }
+      i += 1
+    }
+    (java.util.Arrays.copyOf(codes, m),
+      if (wide == null) Array.empty[String] else wide.toArray(new Array[String](0)))
+  }
+
+  /** |A ∩ B| of two ascending distinct long arrays: one merge walk. */
+  private def commonCount(a: Array[Long], b: Array[Long]): Int = {
+    var i = 0
+    var j = 0
+    var n = 0
+    while (i < a.length && j < b.length) {
+      val x = a(i)
+      val y = b(j)
+      if (x == y) { n += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    n
+  }
+
+  /** |A ∩ B| of two ascending distinct string arrays: one merge walk. */
+  private def commonCount(a: Array[String], b: Array[String]): Int = {
+    var i = 0
+    var j = 0
+    var n = 0
+    while (i < a.length && j < b.length) {
+      val c = a(i).compareTo(b(j))
+      if (c == 0) { n += 1; i += 1; j += 1 }
+      else if (c < 0) i += 1
+      else j += 1
+    }
+    n
+  }
+
+  /** Exact Jaccard |A ∩ B| / |A ∪ B| of two shingle sets in the
+    * [[shingleCodes]] layout — the value of the Column form
+    * (`graft.reference.DedupRef.jaccard`: intersection size over union
+    * size, each `size` cast to double) over the same sets as string
+    * arrays. Both sets are distinct, so
+    * |A ∪ B| = |A| + |B| − |A ∩ B|, and the intersection is a merge walk
+    * over `codes` plus one over `wide`. A set is NULL when its `codes`
+    * is; then both `size`s are NULL, or −1 under `legacySizeOfNull`
+    * (`spark.sql.legacy.sizeOfNull` without ANSI), so the pair gives
+    * NULL or −1/−1 = 1.0. Two empty sets give 0/0: NULL, or a
+    * DIVIDE_BY_ZERO error under `ansi`. */
+  def jaccard(codesA: Array[Long], wideA: Array[String], codesB: Array[Long],
+      wideB: Array[String], legacySizeOfNull: Boolean, ansi: Boolean): Option[Double] = {
+    if (codesA == null || codesB == null) return if (legacySizeOfNull) Some(1.0) else None
+    val common = commonCount(codesA, codesB) + commonCount(wideA, wideB)
+    val union = codesA.length + wideA.length + codesB.length + wideB.length - common
+    if (union > 0) Some(common.toDouble / union.toDouble)
+    else if (ansi) throw new ArithmeticException(
+      "[DIVIDE_BY_ZERO] Division by zero: Jaccard of two empty shingle sets")
+    else None
   }
 
   private val hexChars = "0123456789abcdef".toCharArray

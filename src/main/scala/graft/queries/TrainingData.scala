@@ -56,19 +56,21 @@ object TrainingData {
 
   /** q16 — n-gram Jaccard similarity on adjacent doc pairs (the exact
     * verify kernel used by the LSH pipeline, oracle-gated). Shingle sets
-    * are projected once per document BEFORE the self-join and
+    * are projected once per document BEFORE the self-join, in the packed
+    * layout of [[graft.ops.TextKernels.shingleCodes]], and
     * local-checkpointed, so no document is shingled twice (once per side
-    * it appears on). */
+    * it appears on). Each pair's Jaccard is one row-local kernel
+    * ([[graft.ops.TextKernels.jaccard]]): two merge walks over sorted
+    * sets, where the Column intersect and union built two `UTF8String`
+    * hash sets per pair. */
   def q16NgramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    val sh = graft.ops.TextAnalysis.shingleTable(docs(spark, dir), "doc_id", "text", 5)
+    val sh = TextAnalysis.shingleTable(docs(spark, dir), "doc_id", "text", 5)
       .localCheckpoint(eager = false)
-    val a = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
+    val a = sh.select(col("doc_id").as("id_a"), col("codes").as("codes_a"),
+      col("wide").as("wide_a"))
     val b = sh.select((col("doc_id") - 1).as("id_a"), col("doc_id").as("id_b"),
-      col("sh").as("sh_b"))
-    a.join(b, Seq("id_a"))
-      .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double")).as("jaccard"))
+      col("codes").as("codes_b"), col("wide").as("wide_b"))
+    TextAnalysis.shingleJaccard(a.join(b, Seq("id_a")))
   }
 
   /** Shingle-window cost cap for q17: signature + verify shingle only the

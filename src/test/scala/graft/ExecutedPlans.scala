@@ -4,8 +4,9 @@ import scala.collection.mutable
 
 import org.apache.spark.GraftTestBus
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The executed plans of the SQL executions a piece of code runs — for
@@ -37,10 +38,24 @@ object ExecutedPlans {
     seen.synchronized(seen.toList)
   }
 
-  /** Every node of an executed plan, through AQE query stages. */
+  /** Every node of an executed plan, through AQE query stages and into
+    * the plan an in-memory scan reads (a `.cache()`d frame's, which is not
+    * among the scan's children). */
   def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
     case q: QueryStageExec => q +: nodes(q.plan)
+    case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
     case o => o +: o.children.flatMap(nodes)
+  }
+
+  /** Rows that the parquet scans of `plans` output. A cached frame's plan
+    * is one object shared by every scan of the cache, so each node counts
+    * once however many plans reach it. */
+  def scannedRows(plans: Seq[SparkPlan]): Long = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    plans.flatMap(nodes).collect {
+      case f: FileSourceScanExec if seen.add(f) => f.metrics("numOutputRows").value
+    }.sum
   }
 }

@@ -109,6 +109,18 @@ class OpsSpec extends AnyFunSuite {
     (0L to 2L).foreach { qid => assert(bf(qid) == qd((qid, 1))) }
   }
 
+  test("quantized-dot ANN fails with a named error above its query-row bound") {
+    val vecs = (0 until 20).map(i => (i.toLong, Array.fill(4)(0.25f))).toDF("vec_id", "embedding")
+    val q = vecs.select($"vec_id".as("qid"), $"embedding".as("qvec"))
+    // at the bound it scores; one row above it, it names the count and the bound
+    assert(Similarity.quantizedDotTopK(vecs, "vec_id", "embedding", q.filter($"qid" < 4), 2,
+      maxQueryRows = 4).count() == 8)
+    val e = intercept[Similarity.QueryTableTooLargeException](
+      Similarity.quantizedDotTopK(vecs, "vec_id", "embedding", q, 2, maxQueryRows = 4))
+    assert(e.rows == 20 && e.bound == 4, e.getMessage)
+    assert(e.getMessage.contains("20") && e.getMessage.contains("4"), e.getMessage)
+  }
+
   test("LSH ANN returns same-bucket candidates with correct ranks") {
     val vecs = (0 until 100).map { i =>
       (i.toLong, Array.tabulate(16)(d => math.cos(i + d * 13).toFloat))
@@ -500,11 +512,12 @@ class OpsSpec extends AnyFunSuite {
       "caf\u00e9 na\u00efve r\u00e9sum\u00e9 touch\u00e9 fa\u00e7ade",
       "one two three four five six seven eight nine ten")
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
-    // shingle sets == array_distinct(transform(...)) value set
+    // packed shingle sets, decoded == array_distinct(transform(...)) value set
     val colSh = df.select($"id", TextAnalysisRef.shingles($"t", 5).as("sh"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
     val kerSh = TextAnalysis.shingleTable(df, "id", "t", 5)
-      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+      .collect().map(r => r.getLong(0) -> TextAnalysisRef.decodeShingles(
+        r.getSeq[Long](1), r.getSeq[String](2)).toSet).toMap
     assert(colSh == kerSh)
     // minhash signature == the conv(md5-hex)-lane Column form
     val colSig = df.select($"id", DedupRef.minhashSignature($"t", 5, 16).as("sg"))

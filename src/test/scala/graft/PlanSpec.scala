@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, ArrayUnion}
 import org.apache.spark.sql.catalyst.plans.LeftSemi
-import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec, SparkPlan}
+import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape assertions: the optimizations the queries rely on must
@@ -159,12 +161,38 @@ class PlanSpec extends AnyFunSuite {
         val plans = ExecutedPlans.of(s) {
           SparkEntry.queries(name)(s, dir).write.format("noop").mode("overwrite").save()
         }
-        val scanned = plans.flatMap(ExecutedPlans.nodes).collect {
-          case f: FileSourceScanExec => f.metrics("numOutputRows").value
-        }.sum
+        val scanned = ExecutedPlans.scannedRows(plans)
         val rows = spark.read.parquet(s"$dir/$table.parquet").count()
         assert(scanned == rows, s"$name scanned $scanned rows of $rows")
       }
+  }
+
+  test("scan counts reach a cached frame's plan and count it once") {
+    // both join sides read one cache: its plan sits behind each in-memory
+    // scan (not among the scan's children) and is one shared object
+    val s = spark.newSession()
+    val cached = s.read.parquet(s"$dir/documents.parquet").cache()
+    try {
+      val plans = ExecutedPlans.of(s) {
+        cached.join(cached.select(col("doc_id")), "doc_id")
+          .write.format("noop").mode("overwrite").save()
+      }
+      val rows = spark.read.parquet(s"$dir/documents.parquet").count()
+      assert(ExecutedPlans.scannedRows(plans) == rows, plans.mkString("\n"))
+    } finally cached.unpersist(blocking = true)
+  }
+
+  test("q16 and q17 run the Jaccard kernel, no array set operations") {
+    val s = spark.newSession()
+    val plans = q17plans ++ ExecutedPlans.of(s) {
+      SparkEntry.queries("q16_ngram_jaccard")(s, dir).write.format("noop").mode("overwrite").save()
+    }
+    plans.flatMap(ExecutedPlans.nodes).foreach { n =>
+      n.expressions.foreach { e =>
+        assert(!e.exists(x => x.isInstanceOf[ArrayIntersect] || x.isInstanceOf[ArrayUnion]),
+          s"array set operation in:\n$n")
+      }
+    }
   }
 
   test("q37: contamination join is an equi-join on gram digests, no cartesian") {

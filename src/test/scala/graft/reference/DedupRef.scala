@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Test-only reference forms of the dedup signatures: the Column
   * higher-order-function expressions that [[graft.ops.TextKernels]]
-  * replaced (`minhashSig`, `simhashHex`), plus a direct n-gram Jaccard.
+  * replaced (`minhashSig`, `simhashHex`), plus the Column Jaccard that
+  * `TextKernels.jaccard` replaced.
   * Kernel equivalence specs compare against them. */
 object DedupRef {
 
@@ -57,11 +58,15 @@ object DedupRef {
     when(text.isNull, lit(null)).otherwise(concat_ws("", nibbles))
   }
 
-  /** Direct n-gram Jaccard similarity between two text columns. */
-  def ngramJaccard(a: Column, b: Column, k: Int = 5): Column = {
-    val sa = TextAnalysisRef.shingles(a, k)
-    val sb = TextAnalysisRef.shingles(b, k)
+  /** Jaccard of two distinct-string-set columns — the expression
+    * `TextKernels.jaccard` replaced in q16 and q17's verify: NULL sets
+    * take the session's `size(NULL)` (NULL, or −1 without ANSI), and two
+    * empty sets divide 0 by 0. */
+  def jaccard(sa: Column, sb: Column): Column =
     size(array_intersect(sa, sb)).cast("double") /
       size(array_union(sa, sb)).cast("double")
-  }
+
+  /** Direct n-gram Jaccard similarity between two text columns. */
+  def ngramJaccard(a: Column, b: Column, k: Int = 5): Column =
+    jaccard(TextAnalysisRef.shingles(a, k), TextAnalysisRef.shingles(b, k))
 }

@@ -12,11 +12,23 @@ object TextAnalysisRef {
   def fingerprint64(text: Column): Column = substring(md5(text), 1, 16)
 
   /** Character k-gram shingles (distinct). `Column.substr(pos,len)` keeps
-    * this inside codegen. */
+    * this inside codegen. NULL text ⇒ NULL, as the kernel's shingle table
+    * (the bare transform would give `[NULL]`: `greatest` skips the NULL
+    * length). */
   def shingles(text: Column, k: Int = 5): Column =
-    array_distinct(transform(
+    when(text.isNotNull, array_distinct(transform(
       sequence(lit(1), greatest(length(text) - (k - 1), lit(1))),
-      i => text.substr(i, lit(k))))
+      i => text.substr(i, lit(k)))))
+
+  /** The shingles of one document in the kernel's packed layout
+    * (`TextKernels.shingleCodes`), decoded: each code's length sits in its
+    * low 3 bits and its chars in 12-bit slots above them, first char
+    * highest; `wide` holds the rest as they are. */
+  def decodeShingles(codes: Seq[Long], wide: Seq[String]): Seq[String] =
+    codes.map { c =>
+      val len = (c & 7).toInt
+      String.valueOf(Array.tabulate(len)(i => ((c >>> (3 + 12 * (4 - i))) & 0xfff).toChar))
+    } ++ wide
 
   /** Rolling/shingle fingerprint: minimum md5 over the k-gram set — the
     * MinHash(1) signature, engine-portable. */
