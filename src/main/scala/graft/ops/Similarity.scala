@@ -32,10 +32,10 @@ object Similarity {
 
   /** Top-k by quantized dot product (oracle-parity variant): ranking on
     * exact integers, ties broken by neighbor id. The query table is
-    * collected to the driver, at most `maxQueryRows` rows of it: a larger
+    * collected to the driver, at most [[MaxQueryRows]] rows of it: a larger
     * one fails with [[QueryTableTooLargeException]] before any scoring. */
   def quantizedDotTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, k: Int, maxQueryRows: Int = MaxQueryRows): DataFrame = {
+      queries: DataFrame, k: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // brute force is definitionally all-pairs, so score every query
@@ -47,17 +47,20 @@ object Similarity {
     // (OpsSpec equivalence + q19 oracle); ragged vectors and NULL query
     // vectors yield NULL dots like zip_with null-padding. NULL-qid rows are
     // dropped: the `neighbor_id =!= qid` join matched nothing for them.
-    // At most maxQueryRows + 1 rows reach the driver; one more row than
+    // At most MaxQueryRows + 1 rows reach the driver; one more row than
     // the bound fails with the table's count (a job run only then)
-    // instead of an OOM. Over a one-partition query table the limited
-    // collect is one job, as the unbounded collect was.
+    // instead of an OOM. The limited collect scans partitions in growing
+    // batches, one job each, until it has MaxQueryRows + 1 rows or has
+    // read every partition: one job over a one-partition query table
+    // (q19's), several over a table of many partitions and few rows, each
+    // running the query side's upstream on its own partitions.
     val qTable = queries.select(col("qid").cast("long").as("qid"), col("qvec"))
       .filter(col("qid").isNotNull)
     val qRows: Array[(Long, Array[Long])] = VectorKernels.withQuantized(qTable, "qvec", "qq")
-      .select(col("qid"), col("qq")).limit(maxQueryRows + 1).collect()
+      .select(col("qid"), col("qq")).limit(MaxQueryRows + 1).collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[Long](1).toArray))
-    if (qRows.length > maxQueryRows)
-      throw new QueryTableTooLargeException(qTable.count(), maxQueryRows)
+    if (qRows.length > MaxQueryRows)
+      throw new QueryTableTooLargeException(qTable.count(), MaxQueryRows)
     val joined = VectorKernels.withQuantized(
         corpus.select(col(idCol).cast("long").as("neighbor_id"),
           col(vecCol).as("_v")), "_v", "qv").drop("_v")

@@ -37,9 +37,11 @@ import java.security.MessageDigest
   * length); every other shingle (surrogates, CJK, k > 5) stays a string
   * in `wide`. The pack rule looks only at the shingle, so equal shingles
   * always take the same form, and the set is exactly the reference
-  * shingle set split in two. [[jaccard]] is then two merge walks, with
-  * the Column form's `size(NULL)` and 0/0 results under the session's
-  * ANSI setting. JaccardKernelSpec checks both against the Column forms
+  * shingle set split in two. Packed codes skip the `UTF8String`/`String`
+  * round trip and the char-wise compares a sorted `array<string>` alone
+  * would pay (measured in BENCH.md). [[jaccard]] is then two merge
+  * walks, with the Column form's `size(NULL)` and 0/0 results under the
+  * session's ANSI setting. JaccardKernelSpec checks both against the Column forms
   * over generated text (ASCII, Latin-1, the U+0FFF/U+1000 boundary,
   * surrogate pairs, CJK, blank and NULL), with ANSI on and off.
   */
@@ -118,13 +120,14 @@ private[graft] object TextKernels {
     * distinct. Whether a shingle packs depends only on the shingle, so
     * equal shingles of two documents always land in the same half. */
   def shingleCodes(s: String, k: Int): (Array[Long], Array[String]) = {
-    var codes = new Array[Long](math.max(s.length, 1))
+    // foreachShingleBounds visits max(cpLen − k + 1, 1) shingles, and
+    // cpLen <= s.length, so these slots always suffice
+    val codes = new Array[Long](math.max(s.length - k + 1, 1))
     var n = 0
     var wide: java.util.TreeSet[String] = null
     foreachShingleBounds(s, k) { (from, to) =>
       val c = packShingle(s, from, to)
       if (c >= 0) {
-        if (n == codes.length) codes = java.util.Arrays.copyOf(codes, 2 * n)
         codes(n) = c
         n += 1
       } else {

@@ -110,15 +110,19 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("quantized-dot ANN fails with a named error above its query-row bound") {
-    val vecs = (0 until 20).map(i => (i.toLong, Array.fill(4)(0.25f))).toDF("vec_id", "embedding")
-    val q = vecs.select($"vec_id".as("qid"), $"embedding".as("qvec"))
-    // at the bound it scores; one row above it, it names the count and the bound
-    assert(Similarity.quantizedDotTopK(vecs, "vec_id", "embedding", q.filter($"qid" < 4), 2,
-      maxQueryRows = 4).count() == 8)
+    val vecs = (0 until 3).map(i => (i.toLong, Array.fill(4)(0.25f))).toDF("vec_id", "embedding")
+    val bound = Similarity.MaxQueryRows
+    // four partitions, so the limited collect reads them in several jobs
+    val q = spark.range(0, bound + 1, 1, 4)
+      .select($"id".as("qid"), array(Seq.fill(4)(lit(0.25f)): _*).as("qvec"))
+    // at the bound it scores every query; one row above it, it names the
+    // count and the bound
+    val scored = Similarity.quantizedDotTopK(vecs, "vec_id", "embedding", q.filter($"qid" < bound), 2)
+    assert(scored.select($"qid").distinct().count() == bound)
     val e = intercept[Similarity.QueryTableTooLargeException](
-      Similarity.quantizedDotTopK(vecs, "vec_id", "embedding", q, 2, maxQueryRows = 4))
-    assert(e.rows == 20 && e.bound == 4, e.getMessage)
-    assert(e.getMessage.contains("20") && e.getMessage.contains("4"), e.getMessage)
+      Similarity.quantizedDotTopK(vecs, "vec_id", "embedding", q, 2))
+    assert(e.rows == bound + 1 && e.bound == bound, e.getMessage)
+    assert(e.getMessage.contains(s"${bound + 1}") && e.getMessage.contains(s"$bound"), e.getMessage)
   }
 
   test("LSH ANN returns same-bucket candidates with correct ranks") {
