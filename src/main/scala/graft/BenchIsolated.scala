@@ -71,7 +71,7 @@ object ScalingRunner {
         import spark.implicits._
         val t0 = System.nanoTime()
         val blobs = spark.read.parquet(path).select(col("blob")).as[String]
-        val (clean, _) = graft.validate.Validate.route(
+        val (clean, _) = graft.validate.Validate.routeObserved(
           CdcPipeline.resolveVariants(CdcPipeline.decode(blobs)))
         clean.count()
         (System.nanoTime() - t0) / 1e9

@@ -69,16 +69,14 @@ object CdcPipeline {
     // registry dispatch validates the RAW wire shape (variants reason
     // about commit_lang vs commit/lang); the global rule set validates
     // post-resolution, where `commit` is already coalesced. The global
-    // path observes per-rule violation counts in the batch's own jobs
-    // (zero extra passes) and commits them into the snapshot's lineage.
-    val (clean, dirty, obsOpt) = registry match {
+    // path observes per-rule violation counts in the batch's own plan
+    // (zero extra passes); `applyBatch` commits them into the snapshot's
+    // lineage.
+    val (clean, dirty) = registry match {
       case Some(reg) =>
         val (c, d) = Validate.routeByClass(raw, reg)
-        (resolveVariants(c), d, None)
-      case None =>
-        val (c, d, obs) = Validate.routeObserved(resolveVariants(raw),
-          name = s"validation-$batchId-${java.util.UUID.randomUUID()}")
-        (c, d, Some(obs))
+        (resolveVariants(c), d)
+      case None => Validate.routeObserved(resolveVariants(raw))
     }
     val events =
       if (promote.isEmpty)
@@ -93,10 +91,7 @@ object CdcPipeline {
           promote.map(f => col(s"payload.$f").as(f)): _*)
       }
     val applier = new CdcApplier(lake, spark, mergeOnRead = mergeOnRead)
-    val version = applier.applyBatch(events, batchId,
-      lineageExtras = () =>
-        obsOpt.map(o => Validate.observedLineage(o)).getOrElse(Map.empty))
-    (version, dirty)
+    (applier.applyBatch(events, batchId), dirty)
   }
 
   /** P6 flatten at reference fidelity (MICROONE_PRED's projection,

@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{NumericType, StructType}
 
 import graft.core.Model.Op
 import graft.lake.LakeTable
@@ -14,7 +14,11 @@ import graft.lake.LakeTable
   * parse → validate → repair (upstream) → offsets fence →
   * manifest-pruned copy-on-write MERGE (which subsumes the in-batch LWW
   * reduce) → atomic snapshot commit of (files dropped, files added)
-  * against the snapshot the batch read ([[LakeTable.commit]]).
+  * against the snapshot the batch read ([[LakeTable.commit]]). The
+  * commit's lineage holds the batch's row counters and every numeric
+  * metric observed in the batch's own plan (the per-rule validation
+  * counts of `Validate.routeObserved`), read from that plan once the
+  * fused stats job has scanned it — no listener, no extra pass.
   *
   * Scale design decisions (for the 1000-executor / 10^10-event case):
   *  - A small batch runs shuffle-free: when the merge input (batch
@@ -83,9 +87,10 @@ object CdcApplier {
   /** The offsets fence: drop the events at or below the `committed`
     * high-watermark of their source partition. An expression over a
     * literal map of the offsets, not a join: the fenced plan has no
-    * exchange, so caching the batch and the fused stats pass over it run
-    * as ONE Spark job. A NULL or unknown `part` has no watermark and is
-    * kept; a NULL `seq` under a known part compares NULL and is dropped.
+    * exchange, so filling the batch's checkpoint and the fused stats
+    * pass over it run as ONE Spark job. A NULL or unknown `part` has no
+    * watermark and is kept; a NULL `seq` under a known part compares NULL
+    * and is dropped.
     * The map reaches generated code as a reference object, so a new
     * watermark compiles no new class; its lookup probes the committed
     * partitions linearly, which a source's partition count keeps small. */
@@ -144,16 +149,15 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
 
   /** Apply one micro-batch of canonical change events. Expected columns:
     * repo, path, seq, op, part, commit, lang, content [+ promoted extras].
-    * `lineageExtras` is evaluated AFTER the merge write and folded into
-    * the snapshot's lineage map — the hook that lets `df.observe` metrics
-    * collected during this batch's own jobs (per-rule validation counts,
-    * `Validate.routeObserved`) land in the committed manifest with zero
-    * extra passes. Steps 0–6 read the snapshot, fence, stat, evolve the
-    * schema and write the merge mode's files; step 7 is the batch's one
+    * Metrics observed in the batch's own plan (`df.observe`, e.g. the
+    * per-rule validation counts of `Validate.routeObserved`) become
+    * lineage: once the fused stats job has scanned the batch, each
+    * numeric observed field is read from the plan and committed in the
+    * snapshot's lineage map under its own name — zero extra passes.
+    * Steps 0–6 read the snapshot, fence, stat, evolve the schema and
+    * write the merge mode's files; step 7 is the batch's one
     * [[LakeTable.commit]]. Returns the committed snapshot version. */
-  def applyBatch(events: DataFrame, batchId: String,
-      lineageExtras: () => Map[String, Long] = () => Map.empty): Long = {
-
+  def applyBatch(events: DataFrame, batchId: String): Long = {
     val snap = lake.currentSnapshot
     // ---- 0. rename canonicalization: a late producer may still emit a
     // column under its pre-rename name — fold it into the current name
@@ -170,92 +174,90 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
     // high-watermark of their source partition (exactly-once resume). ----
     val committed = snap.map(_.offsets).getOrElse(Map.empty)
     // micro-batch-sized by construction (O2's 500-file-cap analog) —
-    // cached because the jobs below consume it twice. A scoped cache, not a
-    // local checkpoint: `routeObserved`'s per-rule counts ride a
-    // CollectMetrics node under `events`. The fused-stats and write
-    // executions reach that node through a cached plan
-    // (`InMemoryTableScanExec.relation.cachedPlan`), and an observation
-    // completes only from an execution whose logical plan contains it. A
-    // checkpoint would hide the node from both, so the observation could
-    // complete only from the checkpoint's own execution, before any row is
-    // counted.
-    val fenced = CdcApplier.fence(canon, committed).cache()
-    try {
+    // checkpointed because the jobs below consume it twice: the fused
+    // stats job fills it, and its blocks go with the frame
+    val pre = CdcApplier.fence(canon, committed)
+    val fenced = pre.localCheckpoint(eager = false)
 
-      // ---- 2+4 fused: ONE job over the fenced batch computes BOTH the
-      // per-part offset stats AND the touched-file index set. Each task
-      // locally aggregates (part → max seq, delete/upsert counts) and
-      // matches its locally-deduped repos against the broadcast interval
-      // index ([[graft.lake.RepoIntervalIndex]] — the batch's repo set
-      // never reaches the driver); it emits one row per source partition
-      // plus one per touched file index, so the collect is
-      // metadata-scale and shuffle-free. Splitting these into separate
-      // stats + prune jobs (the r2 shape) paid one extra pass over the
-      // cached batch plus two tiny exchanges of per-batch fixed latency
-      // — at 10^6 micro-batches that fixed cost IS the throughput. ----
-      val idxBc = snap.filter(_.files.nonEmpty).map(s => spark.sparkContext.broadcast(
-        graft.lake.RepoIntervalIndex(s.files.map(f => (f.minRepo, f.maxRepo)))))
-      val opDelete = Op.Delete
-      // seq rides as Long.MinValue when NULL (a boxed-primitive encoder
-      // field would throw on null; the replaced aggregate job silently
-      // ignored null seqs, and MinValue can never win a max); a NULL op
-      // counts as a delete, because both merges delete a key whose
-      // winning event has one (its `=!= DELETE` is null, so no row
-      // survives); a null repo matches no file
-      val fusedRows = fenced
-        .select(col("part").cast("string"),
-          coalesce(col("seq").cast("long"), lit(Long.MinValue)),
-          col("op").cast("string"), col("repo").cast("string"))
-        .as[(String, Long, String, String)]
-        .mapPartitions { it =>
-          val stats = scala.collection.mutable.HashMap.empty[String, Array[Long]]
-          val ix = idxBc.map(_.value)
-          val seen = new java.util.HashSet[String]()
-          it.foreach { case (part, seq, op, repo) =>
-            val a = stats.getOrElseUpdate(part, Array(Long.MinValue, 0L, 0L))
-            if (seq > a(0)) a(0) = seq
-            if (op == null || op == opDelete) a(1) += 1 else a(2) += 1
-            if (repo != null && ix.isDefined) seen.add(repo)
-          }
-          val touchedIdx = ix.map(_.touched(seen.asScala)).getOrElse(Iterator.empty)
-          stats.iterator.map { case (p, a) => (false, p, a(0), a(1), a(2)) } ++
-            touchedIdx.map(i => (true, "", i.toLong, 0L, 0L))
-        }.collect()
-      idxBc.foreach(_.unpersist())
-      val statRows = fusedRows.filter(!_._1)
-      if (statRows.isEmpty) { // nothing new: idempotent no-op path
-        return snap.map(_.version).getOrElse(
-          lake.commit(batchId, committed, graft.core.Model.lakeSchemaV1, Nil, Nil, None))
-      }
-      val newOffsets = committed ++ statRows.groupBy(_._2).map { case (p, rs) =>
-        p -> math.max(rs.map(_._3).max, committed.getOrElse(p, Long.MinValue)) }
-      val deletes = statRows.map(_._4).sum
-      val upserts = statRows.map(_._5).sum
-      val touchedIdx = fusedRows.filter(_._1).map(_._3.toInt).toSet
+    // ---- 2+4 fused: ONE job over the fenced batch computes BOTH the
+    // per-part offset stats AND the touched-file index set. Each task
+    // locally aggregates (part → max seq, delete/upsert counts) and
+    // matches its locally-deduped repos against the broadcast interval
+    // index ([[graft.lake.RepoIntervalIndex]] — the batch's repo set
+    // never reaches the driver); it emits one row per source partition
+    // plus one per touched file index, so the collect is
+    // metadata-scale and shuffle-free. Splitting these into separate
+    // stats + prune jobs (the r2 shape) paid one extra pass over the
+    // checkpointed batch plus two tiny exchanges of per-batch fixed latency
+    // — at 10^6 micro-batches that fixed cost IS the throughput. ----
+    val idxBc = snap.filter(_.files.nonEmpty).map(s => spark.sparkContext.broadcast(
+      graft.lake.RepoIntervalIndex(s.files.map(f => (f.minRepo, f.maxRepo)))))
+    val opDelete = Op.Delete
+    // seq rides as Long.MinValue when NULL (a boxed-primitive encoder
+    // field would throw on null; the replaced aggregate job silently
+    // ignored null seqs, and MinValue can never win a max); a NULL op
+    // counts as a delete, because both merges delete a key whose
+    // winning event has one (its `=!= DELETE` is null, so no row
+    // survives); a null repo matches no file
+    val fusedRows = fenced
+      .select(col("part").cast("string"),
+        coalesce(col("seq").cast("long"), lit(Long.MinValue)),
+        col("op").cast("string"), col("repo").cast("string"))
+      .as[(String, Long, String, String)]
+      .mapPartitions { it =>
+        val stats = scala.collection.mutable.HashMap.empty[String, Array[Long]]
+        val ix = idxBc.map(_.value)
+        val seen = new java.util.HashSet[String]()
+        it.foreach { case (part, seq, op, repo) =>
+          val a = stats.getOrElseUpdate(part, Array(Long.MinValue, 0L, 0L))
+          if (seq > a(0)) a(0) = seq
+          if (op == null || op == opDelete) a(1) += 1 else a(2) += 1
+          if (repo != null && ix.isDefined) seen.add(repo)
+        }
+        val touchedIdx = ix.map(_.touched(seen.asScala)).getOrElse(Iterator.empty)
+        stats.iterator.map { case (p, a) => (false, p, a(0), a(1), a(2)) } ++
+          touchedIdx.map(i => (true, "", i.toLong, 0L, 0L))
+      }.collect()
+    idxBc.foreach(_.unpersist())
+    // that job ran every task of `pre`'s plan, so its observed metrics
+    // are final: the driver merges a task's accumulators before the job
+    // returns
+    val observed = for {
+      row <- pre.queryExecution.observedMetrics.values
+      (f, i) <- row.schema.fields.zipWithIndex if f.dataType.isInstanceOf[NumericType]
+    } yield f.name -> (if (row.isNullAt(i)) 0L else row.getAs[Number](i).longValue)
+    val statRows = fusedRows.filter(!_._1)
+    if (statRows.isEmpty) { // nothing new: idempotent no-op path
+      return snap.map(_.version).getOrElse(
+        lake.commit(batchId, committed, graft.core.Model.lakeSchemaV1, Nil, Nil, None))
+    }
+    val newOffsets = committed ++ statRows.groupBy(_._2).map { case (p, rs) =>
+      p -> math.max(rs.map(_._3).max, committed.getOrElse(p, Long.MinValue)) }
+    val deletes = statRows.map(_._4).sum
+    val upserts = statRows.map(_._5).sum
+    val touchedIdx = fusedRows.filter(_._1).map(_._3.toInt).toSet
 
-      // ---- 3. schema evolution: promote new value columns. ----
-      val curSchema = snap.map(_.schema).getOrElse(StructType(Nil))
-      val eventValueFields = fenced.schema.fields
-        .filterNot(f => metaCols.contains(f.name))
-      val evolved = StructType(
-        curSchema.fields.filterNot(f => metaCols.contains(f.name)) ++
-          eventValueFields.filterNot(f => curSchema.fieldNames.contains(f.name)))
+    // ---- 3. schema evolution: promote new value columns. ----
+    val curSchema = snap.map(_.schema).getOrElse(StructType(Nil))
+    val eventValueFields = fenced.schema.fields
+      .filterNot(f => metaCols.contains(f.name))
+    val evolved = StructType(
+      curSchema.fields.filterNot(f => metaCols.contains(f.name)) ++
+        eventValueFields.filterNot(f => curSchema.fieldNames.contains(f.name)))
 
-      // ---- touched files, from the fused index set. ----
-      val touched = snap.toSeq.flatMap(_.files.zipWithIndex
-        .collect { case (f, i) if touchedIdx(i) => f })
+    // ---- touched files, from the fused index set. ----
+    val touched = snap.toSeq.flatMap(_.files.zipWithIndex
+      .collect { case (f, i) if touchedIdx(i) => f })
 
-      // ---- 5+6. merge and write: each mode returns its intent. ----
-      val (dropped, added, rowsAfter) =
-        if (mergeOnRead) morMerge(fenced, snap, evolved, touched, batchId, upserts + deletes)
-        else cowMerge(fenced, snap, evolved, touched, batchId, upserts, upserts + deletes)
-      // ---- 7. commit: the batch's one durable effect. `lineageExtras`
-      // runs only now — its observation is filled by the write job. ----
-      lake.commit(batchId, newOffsets, evolved, dropped, added, snap, Map(
-        "upserts" -> upserts, "deletes" -> deletes,
-        "rowsBefore" -> snap.map(_.liveRows).getOrElse(0L),
-        "rowsAfter" -> rowsAfter) ++ lineageExtras())
-    } finally fenced.unpersist()
+    // ---- 5+6. merge and write: each mode returns its intent. ----
+    val (dropped, added, rowsAfter) =
+      if (mergeOnRead) morMerge(fenced, snap, evolved, touched, batchId, upserts + deletes)
+      else cowMerge(fenced, snap, evolved, touched, batchId, upserts, upserts + deletes)
+    // ---- 7. commit: the batch's one durable effect. ----
+    lake.commit(batchId, newOffsets, evolved, dropped, added, snap, Map(
+      "upserts" -> upserts, "deletes" -> deletes,
+      "rowsBefore" -> snap.map(_.liveRows).getOrElse(0L),
+      "rowsAfter" -> rowsAfter) ++ observed)
   }
 
   /** What a merge mode publishes: (files dropped, files added, live rows
@@ -347,7 +349,7 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
     // gathered input skips it too: its one task aggregates at most
     // [[CdcApplier.MorGatherRows]] rows, while the probe's two broadcast
     // jobs (one per key-column scan — AQE cannot reuse a broadcast across
-    // the two cache scans) are most of a small batch's fixed cost.
+    // the two checkpoint scans) are most of a small batch's fixed cost.
     val semiJoinBase = !gather &&
       events * 8 < snap.map(_.dataFiles.map(_.rows).sum).getOrElse(0L)
     def readKeyCols(fs: Seq[lake.FileEntry], isData: Boolean) = {

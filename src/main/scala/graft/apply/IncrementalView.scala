@@ -157,21 +157,19 @@ final class IncrementalView(
   def maintain(viewApplier: CdcApplier, feed: DataFrame,
       batchId: String, seq: Long): Long = {
     val viewLake = viewApplier.lake
-    // local persist, released before return: a long-running streaming
-    // maintainer calls this once per micro-batch, so a session-lifetime
-    // cache registry would grow without bound
-    val d = delta(feed).persist()
-    try {
-      val touched = d.select(viewKeyRepo.as("repo"), viewKeyPath.as("path"))
-      val current: DataFrame = viewLake.currentSnapshot match {
-        case Some(s) => viewLake.stateRestricted(s, touched).select(gcols ++ aggCols.map(col): _*)
-        case None => d.limit(0) // empty, same shape as a delta row set
-      }
-      val merged = regroup(current.unionByName(d))
-      val events = asViewEvents(merged,
-        when(col("n_rows") <= 0, lit(Op.Delete)).otherwise(lit(Op.Update)),
-        batchId, seq)
-      viewApplier.applyBatch(events, batchId)
-    } finally d.unpersist()
+    // read twice (touched keys, merge input); a local checkpoint, so a
+    // long-running streaming maintainer that calls this once per
+    // micro-batch registers nothing in the session's cache
+    val d = delta(feed).localCheckpoint(eager = false)
+    val touched = d.select(viewKeyRepo.as("repo"), viewKeyPath.as("path"))
+    val current: DataFrame = viewLake.currentSnapshot match {
+      case Some(s) => viewLake.stateRestricted(s, touched).select(gcols ++ aggCols.map(col): _*)
+      case None => d.limit(0) // empty, same shape as a delta row set
+    }
+    val merged = regroup(current.unionByName(d))
+    val events = asViewEvents(merged,
+      when(col("n_rows") <= 0, lit(Op.Delete)).otherwise(lit(Op.Update)),
+      batchId, seq)
+    viewApplier.applyBatch(events, batchId)
   }
 }

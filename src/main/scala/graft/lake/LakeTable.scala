@@ -639,26 +639,22 @@ class LakeTable(val root: String, spark: SparkSession,
     if (dels.size < minFiles) return None
     // delete-entry total is manifest-known, so a small consolidation is
     // gathered into one task (no exchange) and skips the range sampling
-    // pass
+    // pass. A range-clustered write SAMPLES its input: the checkpoint
+    // makes the delete aggregate run once, not once per pass
     val entries = dels.map(_.rows).sum
     val merged = LakeTable.gathered(readEntries(dels, LakeTable.deleteSchema), entries)
       .groupBy(col("repo"), col("path"))
       .agg(max(struct(col("seq").as("s"), col("commit").as("c"))).as("_m"))
       .select(col("repo"), col("path"),
         col("_m.s").as("seq"), col("_m.c").as("commit"))
-    // a range-clustered write SAMPLES its input — persist there so the
-    // delete aggregate runs once, not once per pass
-    val sampled = !LakeTable.isSmall(entries)
-    if (sampled) merged.persist()
-    try {
-      // Blooms off: like MoR micro-batch output, delete files are always
-      // scanned whole by resolveDeletes, never point-probed
-      val added = writeDataFiles(LakeTable.clustered(merged, entries),
-        s"deletes-v${snap.version + 1}", kind = "delete", blooms = false)
-      Some(commit(s"consolidate-deletes-${snap.version + 1}", Map.empty,
-        snap.schema, dels, added, Some(snap),
-        Map("consolidatedDeleteFiles" -> dels.size.toLong, "rowsAfter" -> snap.liveRows)))
-    } finally if (sampled) merged.unpersist()
+      .localCheckpoint(eager = false)
+    // Blooms off: like MoR micro-batch output, delete files are always
+    // scanned whole by resolveDeletes, never point-probed
+    val added = writeDataFiles(LakeTable.clustered(merged, entries),
+      s"deletes-v${snap.version + 1}", kind = "delete", blooms = false)
+    Some(commit(s"consolidate-deletes-${snap.version + 1}", Map.empty,
+      snap.schema, dels, added, Some(snap),
+      Map("consolidatedDeleteFiles" -> dels.size.toLong, "rowsAfter" -> snap.liveRows)))
   }
 
   /** Maintenance POLICY: decides WHEN the maintenance jobs run, so a
@@ -1199,9 +1195,10 @@ class LakeTable(val root: String, spark: SparkSession,
 
   /** Per-rule validation counters, one row per (version, batch, rule) —
     * the fine-grained companion of [[lineageTable]]. Counts are observed
-    * during the batch's OWN write job (`df.observe` CollectMetrics via a
-    * QueryExecutionListener — `Validate.routeObserved`), committed in the
-    * manifest under `rule.<name>` keys: the reference's per-event
+    * during the batch's OWN stats job (a `df.observe` CollectMetrics node
+    * in the batch plan — `Validate.routeObserved` — that
+    * `CdcApplier.applyBatch` reads from the plan once the job has run),
+    * committed in the manifest under `rule.<name>` keys: the reference's per-event
     * PROFILER → ES roll-up (`data_profiling.py:180-189`,
     * `process_logs.py:140-167`) as a queryable table with no second
     * pass over the data. */

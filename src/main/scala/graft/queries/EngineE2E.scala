@@ -214,12 +214,14 @@ object EngineE2E {
     }
 
   /** q32 — per-rule observability under the oracle gate (the VERDICT-r2
-    * `df.observe` + QueryExecutionListener ask): a 2-batch replay whose
-    * changelog deterministically violates two validation rules
-    * (wrong-source slice, missing content on upserts); the per-rule
-    * violation counts are observed inside each batch's own jobs
-    * ([[graft.validate.Validate.routeObserved]]) and committed into the
-    * snapshot lineage; output = the [[LakeTable.lineageRules]] side-table.
+    * `df.observe` ask): a 2-batch replay whose changelog
+    * deterministically violates two validation rules (wrong-source slice,
+    * missing content on upserts); the per-rule violation counts are a
+    * CollectMetrics node in each batch's own plan
+    * ([[graft.validate.Validate.routeObserved]]), which
+    * [[CdcApplier.applyBatch]] reads after its stats job and commits into
+    * the snapshot lineage; output = the [[LakeTable.lineageRules]]
+    * side-table.
     * The oracle recomputes every (batch, rule) count — including the
     * all-zero rules — independently in SQL. */
   def q32ObservedRules(spark: SparkSession, dir: String): DataFrame = {
@@ -249,10 +251,8 @@ object EngineE2E {
         val slice =
           if (b == 0) changes.filter(col("seq") <= mx / 2)
           else changes.filter(col("seq") > mx / 2)
-        val (clean, _, obs) = Validate.routeObserved(slice,
-          name = s"obs-$b-${java.util.UUID.randomUUID()}")
-        applier.applyBatch(clean.select(canonical: _*), s"obs-$b",
-          lineageExtras = () => Validate.observedLineage(obs))
+        val (clean, _) = Validate.routeObserved(slice)
+        applier.applyBatch(clean.select(canonical: _*), s"obs-$b")
       }
       lake.lineageRules()
         .select(col("batch_id"), col("rule"), col("violations"))

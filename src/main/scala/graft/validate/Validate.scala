@@ -177,35 +177,26 @@ object Validate {
   def annotate(df: DataFrame, rules: Seq[Rule] = changeEventRules): DataFrame =
     df.withColumn("errors", errorsColumn(rules))
 
-  /** Split into (clean, quarantined). Both are lazy views over one
-    * annotated plan; with whole-stage codegen the rule evaluation is a
-    * single projection reused by both sinks. */
-  def route(df: DataFrame, rules: Seq[Rule] = changeEventRules)
-      : (DataFrame, DataFrame) = {
-    cleanAndDirty(annotate(df, rules))
-  }
-
-  /** [[route]] plus per-rule observability (the reference's per-event
-    * PROFILER line, `data_profiling.py:180-189`, and its Kibana roll-up
-    * `process_logs.py:140-167`, folded into the batch's own jobs):
-    * a `df.observe` CollectMetrics node counts, per rule, how many events
-    * violated it, plus total and quarantined rows — the metrics ride the
-    * first job that scans the batch (Spark's `Observation` registers a
-    * QueryExecutionListener under the hood), so the counts cost ZERO
-    * extra passes. Read the result AFTER an action with
-    * `observation.getOrEmpty`; full per-event detail stays available in
-    * the quarantine output. `name` must be unique per query execution. */
+  /** Split into (clean, quarantined) with per-rule observability (the
+    * reference's per-event PROFILER line, `data_profiling.py:180-189`,
+    * and its Kibana roll-up `process_logs.py:140-167`, folded into the
+    * batch's own jobs). Both views share one annotated plan; with
+    * whole-stage codegen the rule evaluation is a single projection
+    * reused by both sinks. A `df.observe` CollectMetrics node named
+    * `name` counts, per rule, the events that violate it (`rule.<name>`),
+    * plus all rows (`parsed`) and quarantined rows (`quarantined`) — the
+    * lineage keys themselves. The counts ride the first job that scans
+    * the batch, at zero extra passes, and are read from that plan's
+    * `queryExecution.observedMetrics` ([[graft.apply.CdcApplier.applyBatch]]
+    * commits them); full per-event detail stays in the quarantine output.
+    * `name` must be unique among the observations of one plan. */
   def routeObserved(df: DataFrame, rules: Seq[Rule] = changeEventRules,
-      name: String = "validation")
-      : (DataFrame, DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation(name)
-    val annotated = annotate(df, rules)
+      name: String = "validation"): (DataFrame, DataFrame) = {
     val aggs = rules.map(r =>
-      sum(when(!coalesce(r.holds, lit(false)), 1L).otherwise(0L)).as(r.name)) ++ Seq(
+      sum(when(!coalesce(r.holds, lit(false)), 1L).otherwise(0L)).as(s"rule.${r.name}")) ++ Seq(
       count(lit(1)).as("parsed"),
       sum(when(size(col("errors")) > 0, 1L).otherwise(0L)).as("quarantined"))
-    val (clean, dirty) = cleanAndDirty(annotated.observe(obs, aggs.head, aggs.tail: _*))
-    (clean, dirty, obs)
+    cleanAndDirty(annotate(df, rules).observe(name, aggs.head, aggs.tail: _*))
   }
 
   /** (clean, quarantined) views of one annotated plan: clean rows drop the
@@ -214,27 +205,4 @@ object Validate {
     (annotated.filter(size(col("errors")) === 0).drop("errors", "_corrupt", "raw"),
       annotated.filter(size(col("errors")) > 0)
         .select(col("raw"), col("errors"), lit("validate").as("stage")))
-
-  /** Lineage-map entries from a completed observation: per-rule counts
-    * keyed `rule.<name>` plus `parsed` / `quarantined`.
-    *
-    * Spark delivers observed metrics on the ASYNC listener bus, so even
-    * after the materializing action has returned the future may complete
-    * a few ms later — a non-blocking read here silently dropped the
-    * rule counts from the committed (immutable) manifest under listener
-    * load. A bounded await closes the race; the timeout covers the
-    * pathological caller that never ran an action (future never
-    * completes), returning empty rather than hanging the commit path. */
-  def observedLineage(obs: org.apache.spark.sql.Observation,
-      timeout: scala.concurrent.duration.Duration =
-        scala.concurrent.duration.Duration(10, "s")): Map[String, Long] = {
-    scala.util.Try(scala.concurrent.Await.ready(obs.future, timeout))
-    obs.future.value.flatMap(_.toOption).map { row =>
-      row.schema.fieldNames.map { k =>
-        val n = Option(row.getAs[Any](k))
-          .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-        (if (k == "parsed" || k == "quarantined") k else s"rule.$k") -> n
-      }.toMap
-    }.getOrElse(Map.empty)
-  }
 }

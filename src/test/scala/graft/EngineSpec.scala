@@ -153,7 +153,7 @@ class EngineSpec extends AnyFunSuite {
   test("quarantine: wrong-source and corrupt rows are routed, not dropped silently") {
     val blobs = ChangeLogGen.blobs(spark, 1000, Seed).select($"blob").as[String]
     val parsed = CdcPipeline.resolveVariants(CdcPipeline.decode(blobs))
-    val (clean, dirty) = graft.validate.Validate.route(parsed)
+    val (clean, dirty) = graft.validate.Validate.routeObserved(parsed)
     val cleanN = clean.count()
     val dirtyN = dirty.count()
     assert(cleanN + dirtyN == 1000, s"clean=$cleanN dirty=$dirtyN")

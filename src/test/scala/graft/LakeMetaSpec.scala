@@ -218,7 +218,6 @@ class LakeMetaSpec extends AnyFunSuite {
         .toDF("op", "part", "repo", "path", "commit", "lang", "content", "seq")
     app.applyBatch(rows(0 until 50, "a", 0), "cc-0")
     app.applyBatch(rows(0 until 20, "b", 1000), "cc-1")
-    spark.catalog.clearCache()
     // a streaming CDF maintainer calls changeFeed once per micro-batch and
     // never releases a session registry: each call must leave nothing behind
     (1 to 3).foreach(_ => assert(lake.changeFeed(0L, 1L).collect().length == 20))
