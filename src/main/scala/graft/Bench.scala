@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.apply.CdcApplier
 import graft.gen.ChangeLogGen
 import graft.lake.LakeTable
+import graft.validate.Validate
 
 /** Benchmark harness (driver-run per round → BENCH_r{N}.json).
   *
@@ -67,7 +68,7 @@ object Bench {
         ev.filter(col("seq") >= b * per && col("seq") < (b + 1) * per), s"bench-$b")
     }
     val sec = (System.nanoTime() - t0) / 1e9
-    deleteRec(lakeDir)
+    LakeTable.deleteTree(lakeDir)
     sec
   }
 
@@ -89,14 +90,8 @@ object Bench {
         lake, s"wire-$b")
     }
     val sec = (System.nanoTime() - t0) / 1e9
-    deleteRec(lakeDir)
+    LakeTable.deleteTree(lakeDir)
     sec
-  }
-
-  private def deleteRec(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .iterator().asScala.foreach(f => scala.util.Try(java.nio.file.Files.delete(f)))
   }
 
   def main(args: Array[String]): Unit = {
@@ -151,7 +146,7 @@ object Bench {
         java.nio.file.Paths.get(blobDir, "_SUCCESS"))) {
       ChangeLogGen.events(spark, nEvents, seed = 42L, nRepos = nRepos,
           pathsPerRepo = 100, parts = 32)
-        .filter(lower(col("source")) === "app.change.log")
+        .filter(Validate.ownSource(col("source")))
         .select("op", "part", "repo", "path", "commit", "lang", "content", "seq")
         .write.mode("overwrite").parquet(evDir)
       ChangeLogGen.blobs(spark, nEvents, seed = 42L, nRepos = nRepos,
@@ -220,7 +215,7 @@ object Bench {
       val eff = epsHi / ((hi.toDouble / lo) * epsLo)
       f""","scaling":{"job":"$job%s_replay","cpus_lo":$lo,"cpus_hi":$hi,"batches":$batches,"sec_lo":$secLo%.3f,"sec_hi":$secHi%.3f,"events_per_sec_lo":$epsLo%.1f,"events_per_sec_hi":$epsHi%.1f,"efficiency":$eff%.3f}"""
     } else ""
-    if (keepDir.isEmpty) deleteRec(evPath)
+    if (keepDir.isEmpty) LakeTable.deleteTree(evPath)
 
     val qs = results.map { case (k, v, _) => "\"" + k + f"""\":$v%.3f""" }
       .mkString("{", ",", "}")

@@ -25,11 +25,6 @@ object CdcPipeline {
   /** Canonical value columns entering the lake (input_hint shape + seq). */
   private val canonical = Seq("repo", "path", "commit", "lang", "content", "seq")
 
-  /** Case-insensitive source check with a cheap exact-match fast path —
-    * `lower()` routes through ICU per row in Spark 4 and is expensive. */
-  private[graft] def sourceOk(c: org.apache.spark.sql.Column) =
-    (c === "app.change.log") || (lower(c) === "app.change.log")
-
   /** The wire prefix of every blob batch: fused typed decode
     * ([[ConcatJson.decodeTyped]]) with unparsable candidates' raw text in
     * `_corrupt` (what [[Validate]]'s `corrupt_json` rule reads). Columns
@@ -68,10 +63,9 @@ object CdcPipeline {
     val raw = decode(blobs)
     // registry dispatch validates the RAW wire shape (variants reason
     // about commit_lang vs commit/lang); the global rule set validates
-    // post-resolution, where `commit` is already coalesced. The global
-    // path observes per-rule violation counts in the batch's own plan
-    // (zero extra passes); `applyBatch` commits them into the snapshot's
-    // lineage.
+    // post-resolution, where `commit` is already coalesced. Both observe
+    // their counts in the batch's own plan (zero extra passes);
+    // `applyBatch` commits them into the snapshot's lineage.
     val (clean, dirty) = registry match {
       case Some(reg) =>
         val (c, d) = Validate.routeByClass(raw, reg)
@@ -116,7 +110,7 @@ object CdcPipeline {
   /** Process a batch already in canonical parquet shape (no codec stage). */
   def processEvents(spark: SparkSession, events: DataFrame, lake: LakeTable,
       batchId: String): Long = {
-    val cleanOnly = events.filter(sourceOk(col("source")))
+    val cleanOnly = events.filter(Validate.ownSource(col("source")))
     val applier = new CdcApplier(lake, spark)
     applier.applyBatch(
       cleanOnly.select((Seq("op", "part") ++ canonical).map(col): _*), batchId)

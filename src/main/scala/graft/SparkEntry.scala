@@ -14,9 +14,10 @@ object SparkEntry {
     * The engine itself: events-as-changelog replayed through fence →
     * LWW MERGE → snapshot commits → final-state read. */
   def entry(spark: SparkSession): DataFrame =
-    graft.queries.EngineE2E.q22CdcReplay(spark, "/root/testdata/sf0.001")
+    graft.queries.EngineE2E.all("q22_cdc_engine_replay")(spark, "/root/testdata/sf0.001")
 
-  /** One per implemented operator from SURVEY.md §2. */
+  /** One per implemented operator from SURVEY.md §2. Each evaluation is
+    * one run, whose queries share its fixtures with no other run. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     graft.queries.Relational.all ++
       graft.queries.TrainingData.all ++

@@ -11,7 +11,8 @@ import org.apache.spark.sql.Dataset
   *
   * [[decodeTyped]] splits and decodes in one pass per blob inside
   * `mapPartitions` — one task per input file blob, fully distributed, no
-  * driver loop — with the same cursor recovery.
+  * driver loop — with the same cursor recovery. A document that fails to
+  * parse is one `corrupt` row: counted, not lost.
   */
 object ConcatJson {
 
@@ -60,9 +61,11 @@ object ConcatJson {
     val arr = blob.toCharArray
     val n = arr.length
     var i = 0
+    var failedTo = 0 // end of the last corrupt row's span
     while (i < n) {
       if (arr(i) == '{') {
         var consumed = -1
+        var failedAt = -1
         var eventId, op, repo, path, commit, lang, commitLang: String = null
         var content, schemaVer, source, part, payloadJson: String = null
         var seq: java.lang.Long = null
@@ -125,7 +128,8 @@ object ConcatJson {
           }
           consumed = p.currentLocation().getCharOffset.toInt
         } catch {
-          case _: com.fasterxml.jackson.core.JacksonException => consumed = -1
+          case _: com.fasterxml.jackson.core.JacksonException =>
+            failedAt = p.currentLocation().getCharOffset.toInt
         } finally p.close()
         if (consumed > 0) {
           out += RawChange(
@@ -136,7 +140,17 @@ object ConcatJson {
             schema_ver = schemaVer, source = source, part = part,
             payload_json = payloadJson)
           i += consumed
-        } else i += 1 // corrupt stray '{': cursor+1 retry
+        } else {
+          // a failed parse from a '{' past the last corrupt span is one
+          // corrupt document: its text from the '{' to where the parser
+          // failed. Cursor+1 retry either way.
+          if (i >= failedTo) {
+            failedTo = i + math.min(math.max(failedAt, 1), n - i)
+            out += RawChange(new String(arr, i, failedTo - i), corrupt = true,
+              null, null, null, null, null, null, null, null, null, null, null, null, null)
+          }
+          i += 1
+        }
       } else i += 1
     }
     out.result()

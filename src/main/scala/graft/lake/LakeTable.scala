@@ -449,10 +449,7 @@ class LakeTable(val root: String, spark: SparkSession,
       (k, FileEntry(s"data/$name", rows, minR, maxR, minS, maxS, kindMap(k), bytes))
     }
     // clean tmp dir remnants (_SUCCESS etc.)
-    val w = Files.walk(tmp)
-    try w.sorted(java.util.Comparator.reverseOrder[Path]())
-      .iterator().asScala.foreach(p => Try(Files.delete(p)))
-    finally w.close()
+    LakeTable.deleteTree(tmp)
     entries.filter(_._2.rows > 0)
   }
 
@@ -1214,6 +1211,14 @@ class LakeTable(val root: String, spark: SparkSession,
 }
 
 object LakeTable {
+
+  /** Delete `dir` and everything under it, best effort. */
+  private[graft] def deleteTree(dir: Path): Unit = Try {
+    val w = Files.walk(dir)
+    try w.sorted(java.util.Comparator.reverseOrder[Path]())
+      .iterator().asScala.foreach(p => Try(Files.delete(p)))
+    finally w.close()
+  }
 
   /** Lost manifest-link race — retryable inside [[LakeTable.commit]]'s
     * optimistic loop (vs. `ConcurrentModificationException`, which marks

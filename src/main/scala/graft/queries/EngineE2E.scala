@@ -1,5 +1,9 @@
 package graft.queries
 
+import java.nio.file.{Files, Path}
+
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,87 +36,68 @@ object EngineE2E {
       col("props").as("content"),
       col("event_id").as("seq"))
 
-  /** Delete `dir` and everything under it, best effort. */
-  private def deleteTree(dir: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    scala.util.Try(java.nio.file.Files.walk(dir)
-      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .iterator().asScala.foreach(f => scala.util.Try(java.nio.file.Files.delete(f))))
-    ()
-  }
-
-  /** A fresh temp directory named `graft-<prefix>-…`, deleted when the
-    * JVM exits (`untilExit`) or as soon as `body` returns — so `body`
-    * must hand back nothing that still reads it (the per-query fixtures
-    * return a `localCheckpoint`). */
-  private def withTempDir[T](prefix: String, untilExit: Boolean = false)(
-      body: java.nio.file.Path => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-$prefix-")
-    if (untilExit) { sys.addShutdownHook(deleteTree(dir)); body(dir) }
-    else try body(dir) finally deleteTree(dir)
-  }
-
-  /** One shared replay per (session, dir, mode), living until JVM exit:
-    * the queries over a replay read different surfaces (final state /
-    * lineage / change feed / time travel / SQL source / view) of the same
-    * apply, so the engine replays once per Verify/Bench process instead
-    * of once per query.
-    *  - MERGE-ON-READ (`e2e-0..2`, cuts at max/3 and 2·max/3): the oracle
-    *    is mode-blind, so q22/q25/q27/q33/q35/q40 all-green here certifies
-    *    that MoR table state (winners + equality-delete resolution, across
-    *    multi-batch commits, time travel, change feeds and point lookups)
-    *    is indistinguishable from the plain LWW replay.
-    *  - COPY-ON-WRITE (`cow-0..1`, cut at max/2): leaves no delete files,
-    *    so `format("graft")` binds it to the vectorized parquet scan
-    *    ([[graft.sources.GraftDataSource]] bound path, q41) instead of the
-    *    resolving relation; q44/q49 diff its two snapshots. */
-  // keyed on the session OBJECT (not its identity hash, which can be
-  // reused after GC): entries pin their session, but the temp lakes are
-  // JVM-lifetime by design anyway
-  private val lakes = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Boolean), (LakeTable, Long)]
-
-  /** max(event_id) per (session, dir) — five fixture queries derive their
-    * batch cuts from it; one metadata-scale job per process, not five. */
-  private val maxSeqs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
-  private def maxSeqOf(spark: SparkSession, dir: String): Long =
-    maxSeqs.getOrElseUpdate((spark, dir),
-      spark.read.parquet(s"$dir/events.parquet")
-        .agg(max(col("event_id"))).head().getLong(0))
-
-  /** Replay the changelog into a fresh lake at `lakeDir`: merge-on-read
-    * in three batches `<prefix>-0..2` (cuts at max/3 and 2·max/3),
-    * copy-on-write in two, `<prefix>-0..1` (cut at max/2). */
-  private def replayInto(spark: SparkSession, dir: String, lakeDir: java.nio.file.Path,
-      mergeOnRead: Boolean, prefix: String): LakeTable = {
-    val changes = asChanges(spark.read.parquet(s"$dir/events.parquet"))
-    val maxSeq = maxSeqOf(spark, dir)
-    val cuts = if (mergeOnRead) Seq(maxSeq / 3, 2 * maxSeq / 3) else Seq(maxSeq / 2)
-    val lake = new LakeTable(lakeDir.toString, spark)
-    val applier = new CdcApplier(lake, spark, mergeOnRead = mergeOnRead)
-    // batch i takes the seqs in (cut i-1, cut i]
-    val edges = Long.MinValue +: cuts :+ Long.MaxValue
-    edges.zip(edges.tail).zipWithIndex.foreach { case ((lo, hi), i) =>
-      applier.applyBatch(changes.filter(col("seq") > lo && col("seq") <= hi), s"$prefix-$i")
+  /** One run: what the engine queries of one evaluation of [[all]]
+    * share. Only that map's functions reach it, so it lives as long as
+    * the map; keyed by dir alone, it serves the session it is called with.
+    *  - one temp root, deleted at JVM exit, holding every lake of the run;
+    *  - max(event_id) per dir, from which five queries cut batches;
+    *  - one replayed lake per (dir, merge mode): the queries over a replay
+    *    read different surfaces (final state / lineage / change feed /
+    *    time travel / SQL source / view) of the same apply.
+    *    - MERGE-ON-READ (`e2e-0..2`): the oracle is mode-blind, so
+    *      q22/q25/q27/q33/q35/q40 all-green certifies that MoR table state
+    *      (winners + equality-delete resolution, across multi-batch
+    *      commits, time travel, change feeds and point lookups) is
+    *      indistinguishable from the plain LWW replay.
+    *    - COPY-ON-WRITE (`cow-0..1`): leaves no delete files, so
+    *      `format("graft")` binds it to the vectorized parquet scan
+    *      ([[graft.sources.GraftDataSource]] bound path, q41) instead of
+    *      the resolving relation; q44/q49 diff its two snapshots. */
+  private final class Run {
+    private lazy val root = {
+      val d = Files.createTempDirectory("graft-e2e-")
+      sys.addShutdownHook(LakeTable.deleteTree(d))
+      d
     }
-    lake
-  }
+    private val maxSeqs = mutable.Map.empty[String, Long]
+    private val lakes = mutable.Map.empty[(String, Boolean), LakeTable]
 
-  private def replayed(spark: SparkSession, dir: String,
-      mergeOnRead: Boolean): (LakeTable, Long) =
-    lakes.getOrElseUpdate((spark, dir, mergeOnRead), {
-      val prefix = if (mergeOnRead) "e2e" else "cow"
-      withTempDir(s"$prefix-lake", untilExit = true) { lakeDir =>
-        (replayInto(spark, dir, lakeDir, mergeOnRead, prefix), maxSeqOf(spark, dir))
+    /** A fresh directory `<prefix>-…` under the run root. */
+    def dir(prefix: String): Path = Files.createTempDirectory(root, s"$prefix-")
+
+    def maxSeq(spark: SparkSession, dir: String): Long = synchronized {
+      maxSeqs.getOrElseUpdate(dir, spark.read.parquet(s"$dir/events.parquet")
+        .agg(max(col("event_id"))).head().getLong(0))
+    }
+
+    /** Replay the changelog into a fresh lake under the run root:
+      * merge-on-read in three batches `<prefix>-0..2` (cuts at max/3 and
+      * 2·max/3), copy-on-write in two, `<prefix>-0..1` (cut at max/2). */
+    def replay(spark: SparkSession, dir: String, mergeOnRead: Boolean,
+        prefix: String): LakeTable = {
+      val changes = asChanges(spark.read.parquet(s"$dir/events.parquet"))
+      val mx = maxSeq(spark, dir)
+      val cuts = if (mergeOnRead) Seq(mx / 3, 2 * mx / 3) else Seq(mx / 2)
+      val lake = new LakeTable(this.dir(s"$prefix-lake").toString, spark)
+      val applier = new CdcApplier(lake, spark, mergeOnRead = mergeOnRead)
+      // batch i takes the seqs in (cut i-1, cut i]
+      val edges = Long.MinValue +: cuts :+ Long.MaxValue
+      edges.zip(edges.tail).zipWithIndex.foreach { case ((lo, hi), i) =>
+        applier.applyBatch(changes.filter(col("seq") > lo && col("seq") <= hi), s"$prefix-$i")
       }
-    })
+      lake
+    }
+
+    /** The run's shared replay of `dir` in one merge mode. */
+    def replayed(spark: SparkSession, dir: String, mergeOnRead: Boolean): LakeTable =
+      synchronized(lakes.getOrElseUpdate((dir, mergeOnRead),
+        replay(spark, dir, mergeOnRead, if (mergeOnRead) "e2e" else "cow")))
+  }
 
   /** q22 — full engine replay; output = final lake state with content
     * digests. */
-  def q22CdcReplay(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, _) = replayed(spark, dir, mergeOnRead = true)
+  private def q22CdcReplay(run: Run)(spark: SparkSession, dir: String): DataFrame = {
+    val lake = run.replayed(spark, dir, mergeOnRead = true)
     lake.read().select(col("repo"), col("path"), col("commit"), col("lang"),
       sha2(col("content"), 256).as("content_sha"), col("seq"))
   }
@@ -122,8 +107,8 @@ object EngineE2E {
     * (upserts, deletes, rows-after-commit) from
     * [[LakeTable.lineageTable]]; the oracle recomputes every counter
     * independently in SQL. */
-  def q25Lineage(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, _) = replayed(spark, dir, mergeOnRead = true)
+  private def q25Lineage(run: Run)(spark: SparkSession, dir: String): DataFrame = {
+    val lake = run.replayed(spark, dir, mergeOnRead = true)
     lake.lineageTable()
       .select(col("batch_id"), col("upserts"), col("deletes"), col("rows_after"))
   }
@@ -132,9 +117,9 @@ object EngineE2E {
     * downstream CDC consumer polls after the second batch's watermark.
     * File-level seq-stats pruning keeps the scan proportional to churn;
     * the oracle is the LWW final state restricted to seq > cut2. */
-  def q27ChangesSince(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, maxSeq) = replayed(spark, dir, mergeOnRead = true)
-    val cut2 = 2 * maxSeq / 3
+  private def q27ChangesSince(run: Run)(spark: SparkSession, dir: String): DataFrame = {
+    val lake = run.replayed(spark, dir, mergeOnRead = true)
+    val cut2 = 2 * run.maxSeq(spark, dir) / 3
     val (feed, _, _) = lake.readSince(cut2)
     feed.select(col("repo"), col("path"), col("commit"), col("lang"),
       sha2(col("content"), 256).as("content_sha"), col("seq"))
@@ -149,8 +134,8 @@ object EngineE2E {
     * query certifies that historical snapshots are exact, not just the
     * head. Resolved by batchId (not a hardcoded version number) so an
     * empty batch's no-op commit cannot shift it. */
-  def q33TimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, _) = replayed(spark, dir, mergeOnRead = true)
+  private def q33TimeTravel(run: Run)(spark: SparkSession, dir: String): DataFrame = {
+    val lake = run.replayed(spark, dir, mergeOnRead = true)
     val v = lake.versions.find(v => lake.snapshot(v).batchId == "e2e-1")
       .getOrElse(sys.error("snapshot for batch e2e-1 not found"))
     lake.read(Some(v)).select(col("repo"), col("path"), col("commit"), col("lang"),
@@ -163,8 +148,8 @@ object EngineE2E {
     * files, parquet bloom filters + min/max prune row groups inside the
     * survivors; the oracle is the LWW final state restricted to the same
     * keys. Deleted keys return no row on either side. */
-  def q35PointLookup(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, _) = replayed(spark, dir, mergeOnRead = true)
+  private def q35PointLookup(run: Run)(spark: SparkSession, dir: String): DataFrame = {
+    val lake = run.replayed(spark, dir, mergeOnRead = true)
     val uids = spark.read.parquet(s"$dir/events.parquet")
       .filter(pmod(col("user_id"), lit(13)) === 0)
       .select(col("user_id")).distinct().collect()
@@ -180,7 +165,7 @@ object EngineE2E {
     * the north rule names) over the changelog, which must be
     * INDISTINGUISHABLE from a plain per-key LWW — the oracle knows
     * nothing about salt. */
-  def q28SaltedLww(spark: SparkSession, dir: String): DataFrame = {
+  private def q28SaltedLww(spark: SparkSession, dir: String): DataFrame = {
     val changes = asChanges(spark.read.parquet(s"$dir/events.parquet"))
       .select(col("repo"), col("path"), col("commit"), col("lang"),
         col("content"), col("seq"))
@@ -195,23 +180,21 @@ object EngineE2E {
     * snapshot. The table state must be byte-identical to the plain
     * replay (q22's oracle), proving compaction and vacuum are pure
     * maintenance. */
-  def q31CompactVacuum(spark: SparkSession, dir: String): DataFrame =
-    withTempDir("cv-lake") { lakeDir =>
-      // MoR replay → MAJOR compaction (folds the equality-delete files
-      // into a resolved rewrite and drops them) → expiry+vacuum:
-      // byte-identical to the plain replay under q22's oracle, proving the
-      // whole MoR maintenance cycle is pure
-      val lake = replayInto(spark, dir, lakeDir, mergeOnRead = true, "cv")
-      lake.compact(minRows = Long.MaxValue)
-      // require, not assert: this is a query-path invariant check and
-      // must survive -Xdisable-assertions
-      require(lake.currentSnapshot.exists(_.deleteFiles.isEmpty),
-        "major compaction must fold all delete files")
-      lake.expireSnapshots(keepLast = 1)
-      lake.read().select(col("repo"), col("path"), col("commit"), col("lang"),
-        sha2(col("content"), 256).as("content_sha"), col("seq"))
-        .localCheckpoint(true)
-    }
+  private def q31CompactVacuum(run: Run)(spark: SparkSession, dir: String): DataFrame = {
+    // MoR replay → MAJOR compaction (folds the equality-delete files
+    // into a resolved rewrite and drops them) → expiry+vacuum:
+    // byte-identical to the plain replay under q22's oracle, proving the
+    // whole MoR maintenance cycle is pure
+    val lake = run.replay(spark, dir, mergeOnRead = true, "cv")
+    lake.compact(minRows = Long.MaxValue)
+    // require, not assert: this is a query-path invariant check and
+    // must survive -Xdisable-assertions
+    require(lake.currentSnapshot.exists(_.deleteFiles.isEmpty),
+      "major compaction must fold all delete files")
+    lake.expireSnapshots(keepLast = 1)
+    lake.read().select(col("repo"), col("path"), col("commit"), col("lang"),
+      sha2(col("content"), 256).as("content_sha"), col("seq"))
+  }
 
   /** q32 — per-rule observability under the oracle gate (the VERDICT-r2
     * `df.observe` ask): a 2-batch replay whose changelog
@@ -224,10 +207,10 @@ object EngineE2E {
     * side-table.
     * The oracle recomputes every (batch, rule) count — including the
     * all-zero rules — independently in SQL. */
-  def q32ObservedRules(spark: SparkSession, dir: String): DataFrame = {
+  private def q32ObservedRules(run: Run)(spark: SparkSession, dir: String): DataFrame = {
     import graft.validate.Validate
     val ev = spark.read.parquet(s"$dir/events.parquet")
-    val mx = maxSeqOf(spark, dir)
+    val mx = run.maxSeq(spark, dir)
     // ONE source of truth for the event→changelog mapping: reuse
     // asChanges and derive the extra columns from its outputs
     // (seq = event_id, path = "p<user_id>" by construction)
@@ -242,22 +225,19 @@ object EngineE2E {
           .otherwise(lit("app.change.log")))
       .withColumn("_corrupt", lit(null).cast("string"))
       .withColumn("raw", lit("{}"))
-    withTempDir("obs-lake") { lakeDir =>
-      val lake = new LakeTable(lakeDir.toString, spark)
-      val applier = new CdcApplier(lake, spark)
-      val canonical = Seq("op", "part", "repo", "path", "commit", "lang",
-        "content", "seq").map(col)
-      Seq(0, 1).foreach { b =>
-        val slice =
-          if (b == 0) changes.filter(col("seq") <= mx / 2)
-          else changes.filter(col("seq") > mx / 2)
-        val (clean, _) = Validate.routeObserved(slice)
-        applier.applyBatch(clean.select(canonical: _*), s"obs-$b")
-      }
-      lake.lineageRules()
-        .select(col("batch_id"), col("rule"), col("violations"))
-        .localCheckpoint(true)
+    val lake = new LakeTable(run.dir("obs-lake").toString, spark)
+    val applier = new CdcApplier(lake, spark)
+    val canonical = Seq("op", "part", "repo", "path", "commit", "lang",
+      "content", "seq").map(col)
+    Seq(0, 1).foreach { b =>
+      val slice =
+        if (b == 0) changes.filter(col("seq") <= mx / 2)
+        else changes.filter(col("seq") > mx / 2)
+      val (clean, _) = Validate.routeObserved(slice)
+      applier.applyBatch(clean.select(canonical: _*), s"obs-$b")
     }
+    lake.lineageRules()
+      .select(col("batch_id"), col("rule"), col("violations"))
   }
 
   /** q40 — the SQL data source over a MERGE-ON-READ snapshot: read the
@@ -268,8 +248,8 @@ object EngineE2E {
     * the V1 `buildScan` otherwise), manifest file pruning from the
     * pushed-down predicate, and rename-free schema binding — against an
     * oracle that knows only the LWW final state. */
-  def q40SqlSourceMor(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, _) = replayed(spark, dir, mergeOnRead = true)
+  private def q40SqlSourceMor(run: Run)(spark: SparkSession, dir: String): DataFrame = {
+    val lake = run.replayed(spark, dir, mergeOnRead = true)
     spark.read.format("graft").load(lake.root)
       .filter(col("repo").isin("r0", "r5", "r11", "r23", "r36"))
       .select(col("repo"), col("path"), col("commit"), col("lang"),
@@ -282,9 +262,9 @@ object EngineE2E {
     * files via the manifest's seq stats at planning time and continues
     * into parquet row groups; the result must equal the LWW final state
     * past the watermark. */
-  def q41SqlSourcePruned(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, maxSeq) = replayed(spark, dir, mergeOnRead = false)
-    val cut2 = 2 * maxSeq / 3
+  private def q41SqlSourcePruned(run: Run)(spark: SparkSession, dir: String): DataFrame = {
+    val lake = run.replayed(spark, dir, mergeOnRead = false)
+    val cut2 = 2 * run.maxSeq(spark, dir) / 3
     spark.read.format("graft").load(lake.root)
       .filter(col("seq") > cut2)
       .select(col("repo"), col("path"), col("commit"), col("lang"),
@@ -298,8 +278,8 @@ object EngineE2E {
     * insert / update / delete with before/after images. The oracle
     * recomputes both LWW states from the raw events and diffs them —
     * mode- and layout-blind. */
-  def q44ChangeFeed(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, _) = replayed(spark, dir, mergeOnRead = false)
+  private def q44ChangeFeed(run: Run)(spark: SparkSession, dir: String): DataFrame = {
+    val lake = run.replayed(spark, dir, mergeOnRead = false)
     lake.changeFeed(0L, 1L)
       .select(col("repo"), col("path"), col("change_type"),
         col("before.seq").as("before_seq"),
@@ -315,27 +295,23 @@ object EngineE2E {
     * view (scan-time head resolution sees the second insert). SQL
     * inserts carry no `op`, so every event is an upsert — the oracle is
     * plain last-writer-wins with no delete filter. */
-  def q45SqlMergeFace(spark: SparkSession, dir: String): DataFrame = {
+  private def q45SqlMergeFace(run: Run)(spark: SparkSession, dir: String): DataFrame = {
     val changes = asChanges(spark.read.parquet(s"$dir/events.parquet"))
-    val maxSeq = maxSeqOf(spark, dir)
-    val cut = maxSeq / 2
-    withTempDir("sqlmerge-lake") { lakeDir =>
-      spark.sql(
-        s"""CREATE OR REPLACE TEMPORARY VIEW graft_merge_face
-           |USING graft OPTIONS (path '$lakeDir', merge 'true', mergeOnRead 'true')"""
-          .stripMargin)
-      changes.createOrReplaceTempView("graft_merge_face_src")
-      spark.sql("INSERT INTO graft_merge_face SELECT repo, path, commit, lang, " +
-        s"content, seq FROM graft_merge_face_src WHERE seq <= $cut")
-      spark.sql("INSERT INTO graft_merge_face SELECT repo, path, commit, lang, " +
-        s"content, seq FROM graft_merge_face_src WHERE seq > $cut")
-      val out = spark.sql("SELECT repo, path, commit, lang, " +
-        "sha2(content, 256) AS content_sha, seq FROM graft_merge_face")
-        .localCheckpoint(true)
-      spark.sql("DROP VIEW graft_merge_face")
-      spark.sql("DROP VIEW graft_merge_face_src")
-      out
-    }
+    val cut = run.maxSeq(spark, dir) / 2
+    spark.sql(
+      s"""CREATE OR REPLACE TEMPORARY VIEW graft_merge_face
+         |USING graft OPTIONS (path '${run.dir("sqlmerge-lake")}', merge 'true', mergeOnRead 'true')"""
+        .stripMargin)
+    changes.createOrReplaceTempView("graft_merge_face_src")
+    spark.sql("INSERT INTO graft_merge_face SELECT repo, path, commit, lang, " +
+      s"content, seq FROM graft_merge_face_src WHERE seq <= $cut")
+    spark.sql("INSERT INTO graft_merge_face SELECT repo, path, commit, lang, " +
+      s"content, seq FROM graft_merge_face_src WHERE seq > $cut")
+    val out = spark.sql("SELECT repo, path, commit, lang, " +
+      "sha2(content, 256) AS content_sha, seq FROM graft_merge_face")
+    spark.sql("DROP VIEW graft_merge_face")
+    spark.sql("DROP VIEW graft_merge_face_src")
+    out
   }
 
   /** q49 — incremental materialized-view maintenance from the row-level
@@ -350,33 +326,35 @@ object EngineE2E {
     * dropped retraction, a double-counted group move (an update that
     * changes `lang` moves its row BETWEEN groups) or a group that should
     * have emptied out all break the hash. */
-  def q49IncrementalView(spark: SparkSession, dir: String): DataFrame = {
-    val (lake, _) = replayed(spark, dir, mergeOnRead = false)
+  private def q49IncrementalView(run: Run)(spark: SparkSession, dir: String): DataFrame = {
+    val lake = run.replayed(spark, dir, mergeOnRead = false)
     val view = new graft.apply.IncrementalView(Seq("repo", "lang"),
       Seq("total_len" -> length(col("content")).cast("long")))
-    withTempDir("view-lake") { viewDir =>
-      val viewLake = new LakeTable(viewDir.toString, spark)
-      val viewApplier = new CdcApplier(viewLake, spark)
-      view.initialize(viewApplier, lake.read(Some(0L)), "view-0", seq = 1L)
-      view.maintain(viewApplier, lake.changeFeed(0L, 1L), "view-1", seq = 2L)
-      view.read(viewLake).localCheckpoint(true)
-    }
+    val viewLake = new LakeTable(run.dir("view-lake").toString, spark)
+    val viewApplier = new CdcApplier(viewLake, spark)
+    view.initialize(viewApplier, lake.read(Some(0L)), "view-0", seq = 1L)
+    view.maintain(viewApplier, lake.changeFeed(0L, 1L), "view-1", seq = 2L)
+    view.read(viewLake)
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q49_incremental_view" -> q49IncrementalView _,
-    "q45_sql_merge_face" -> q45SqlMergeFace _,
-    "q40_sql_source_mor" -> q40SqlSourceMor _,
-    "q41_sql_source_pruned" -> q41SqlSourcePruned _,
-    "q44_change_feed" -> q44ChangeFeed _,
-    "q32_observed_rules" -> q32ObservedRules _,
-    "q22_cdc_engine_replay" -> q22CdcReplay _,
-    "q25_lineage_metrics" -> q25Lineage _,
-    "q27_changes_since" -> q27ChangesSince _,
-    "q28_salted_lww" -> q28SaltedLww _,
-    "q31_compact_vacuum" -> q31CompactVacuum _,
-    "q33_time_travel" -> q33TimeTravel _,
-    "q35_point_lookup" -> q35PointLookup _)
+  /** The engine queries of one fresh [[Run]]. */
+  def all: Map[String, (SparkSession, String) => DataFrame] = {
+    val run = new Run
+    Map(
+      "q49_incremental_view" -> q49IncrementalView(run) _,
+      "q45_sql_merge_face" -> q45SqlMergeFace(run) _,
+      "q40_sql_source_mor" -> q40SqlSourceMor(run) _,
+      "q41_sql_source_pruned" -> q41SqlSourcePruned(run) _,
+      "q44_change_feed" -> q44ChangeFeed(run) _,
+      "q32_observed_rules" -> q32ObservedRules(run) _,
+      "q22_cdc_engine_replay" -> q22CdcReplay(run) _,
+      "q25_lineage_metrics" -> q25Lineage(run) _,
+      "q27_changes_since" -> q27ChangesSince(run) _,
+      "q28_salted_lww" -> q28SaltedLww _,
+      "q31_compact_vacuum" -> q31CompactVacuum(run) _,
+      "q33_time_travel" -> q33TimeTravel(run) _,
+      "q35_point_lookup" -> q35PointLookup(run) _)
+  }
 
   val oracles: Map[String, String] = Map(
     "q49_incremental_view" ->

@@ -47,12 +47,17 @@ object Validate {
   private val missingContent = Rule("missing_content",
     col("op").isNull || col("op") === Op.Delete || col("content").isNotNull)
   // wrong-source discard (P1, `data_profiling.py:154-157`) is modeled as
-  // a rule so discards are observable in the quarantine table;
-  // exact-match fast path first: ICU-backed lower() is per-row expensive
-  // in Spark 4, and virtually every row matches exactly
+  // a rule so discards are observable in the quarantine table; a NULL
+  // source passes it
   private val wrongSource = Rule("wrong_source",
-    col("source").isNull || col("source") === "app.change.log" ||
-      lower(col("source")) === "app.change.log")
+    col("source").isNull || ownSource(col("source")))
+
+  /** The engine's own source, case-insensitively; NULL for a NULL
+    * source, so a filter on it drops the row. The exact match comes
+    * first: ICU-backed `lower()` is per-row expensive in Spark 4, and
+    * virtually every row matches exactly. */
+  def ownSource(source: Column): Column =
+    source === "app.change.log" || lower(source) === "app.change.log"
 
   /** Rule set for parsed change events (the Cerberus-semantics analog:
     * required / nullable / enum / type / cross-field). */
@@ -166,12 +171,13 @@ object Validate {
   /** Registry-dispatched routing: envelope rules + the event's class
     * rules in ONE projection. Runs on the RAW decoded shape (before
     * commit/lang resolution), like the reference profiles before it
-    * flattens. */
+    * flattens. Observed like [[routeObserved]]: `parsed`, `quarantined`
+    * and the `rule.<name>` count of each envelope rule. */
   def routeByClass(df: DataFrame, registry: RuleRegistry = defaultRegistry(),
-      classCol: Column = classKey): (DataFrame, DataFrame) = {
-    cleanAndDirty(df.withColumn("errors",
-      concat(errorsColumn(envelopeRules), registry.errorsFor(classCol))))
-  }
+      classCol: Column = classKey): (DataFrame, DataFrame) =
+    observedSplit(df.withColumn("errors",
+      concat(errorsColumn(envelopeRules), registry.errorsFor(classCol))),
+      envelopeRules, "validation")
 
   /** Annotate with `errors`; clean ⇔ `size(errors)=0`. One pass. */
   def annotate(df: DataFrame, rules: Seq[Rule] = changeEventRules): DataFrame =
@@ -191,12 +197,18 @@ object Validate {
     * commits them); full per-event detail stays in the quarantine output.
     * `name` must be unique among the observations of one plan. */
   def routeObserved(df: DataFrame, rules: Seq[Rule] = changeEventRules,
-      name: String = "validation"): (DataFrame, DataFrame) = {
-    val aggs = rules.map(r =>
+      name: String = "validation"): (DataFrame, DataFrame) =
+    observedSplit(annotate(df, rules), rules, name)
+
+  /** [[cleanAndDirty]] of `annotated` under one observation `name` of
+    * `parsed`, `quarantined` and the violations of each of `counted`. */
+  private def observedSplit(annotated: DataFrame, counted: Seq[Rule],
+      name: String): (DataFrame, DataFrame) = {
+    val aggs = counted.map(r =>
       sum(when(!coalesce(r.holds, lit(false)), 1L).otherwise(0L)).as(s"rule.${r.name}")) ++ Seq(
       count(lit(1)).as("parsed"),
       sum(when(size(col("errors")) > 0, 1L).otherwise(0L)).as("quarantined"))
-    cleanAndDirty(annotate(df, rules).observe(name, aggs.head, aggs.tail: _*))
+    cleanAndDirty(annotated.observe(name, aggs.head, aggs.tail: _*))
   }
 
   /** (clean, quarantined) views of one annotated plan: clean rows drop the

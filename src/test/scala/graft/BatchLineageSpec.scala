@@ -10,7 +10,9 @@ import graft.validate.Validate
 
 /** A batch's validation counts come from its own plan: through the wire
   * path, each commit's `parsed`, `quarantined` and `rule.*` lineage equal
-  * a direct count over [[Validate.annotate]] of the same decoded input.
+  * a direct count over the same decoded input, annotated by
+  * [[Validate.annotate]] or, with a rule registry, as
+  * [[Validate.routeByClass]] annotates it.
   * And the apply path and the jobs that maintain a lake register nothing
   * in the session's cache. */
 class BatchLineageSpec extends AnyFunSuite {
@@ -45,16 +47,19 @@ class BatchLineageSpec extends AnyFunSuite {
   private def blobsOf(seqs: Seq[Long]): Dataset[String] =
     seqs.grouped(25).map(_.map(doc).mkString).toSeq.toDS()
 
-  /** The validation counters of a decoded batch, counted directly: no
-    * observation, one aggregate over the annotated rows. */
-  private def directCounts(blobs: Dataset[String]): Map[String, Long] = {
-    val annotated = Validate.annotate(CdcPipeline.resolveVariants(CdcPipeline.decode(blobs)))
-    val keys = Seq("parsed", "quarantined") ++ Validate.changeEventRules.map(r => s"rule.${r.name}")
+  /** The validation counters of annotated rows, counted directly: no
+    * observation, one aggregate over the rows' `errors`. */
+  private def countsOf(annotated: DataFrame, rules: Seq[Validate.Rule]): Map[String, Long] = {
+    val keys = Seq("parsed", "quarantined") ++ rules.map(r => s"rule.${r.name}")
     val row = annotated.agg(count(lit(1)), sum(when(size($"errors") > 0, 1L).otherwise(0L)) +:
-      Validate.changeEventRules.map(r =>
-        sum(when(array_contains($"errors", r.name), 1L).otherwise(0L))): _*).head()
+      rules.map(r => sum(when(array_contains($"errors", r.name), 1L).otherwise(0L))): _*).head()
     keys.zipWithIndex.map { case (k, i) => k -> row.getLong(i) }.toMap
   }
+
+  /** [[countsOf]] a decoded batch under the global rule set. */
+  private def directCounts(blobs: Dataset[String]): Map[String, Long] =
+    countsOf(Validate.annotate(CdcPipeline.resolveVariants(CdcPipeline.decode(blobs))),
+      Validate.changeEventRules)
 
   private def counters(s: LakeTable#Snapshot): Map[String, Long] = s.lineage.filter {
     case (k, _) => k == "parsed" || k == "quarantined" || k.startsWith("rule.") }
@@ -73,18 +78,37 @@ class BatchLineageSpec extends AnyFunSuite {
         assert(counters(lake.snapshot(v)) == directCounts(blobs), s"$id, mergeOnRead = $mor")
       }
       // the planted violations show, and a rule nothing violates commits
-      // a 0. The codec skips a corrupt document's bytes, so it counts as
-      // neither parsed nor `corrupt_json`.
+      // a 0. The codec emits a corrupt document as one corrupt row, so it
+      // counts both as parsed and as `corrupt_json`; the row carries no
+      // other field, so it also misses its event id.
       val c = counters(lake.currentSnapshot.get)
       Seq("missing_content", "wrong_source", "missing_part")
         .foreach(r => assert(c(s"rule.$r") > 0, r))
-      assert(c("parsed") == (401L to 700L).count(_ % 19 != 0))
-      assert(c("rule.negative_seq") == 0 && c("rule.missing_event_id") == 0)
+      assert(c("parsed") == 300L)
+      assert(c("rule.corrupt_json") == (401L to 700L).count(_ % 19 == 0))
+      assert(c("rule.negative_seq") == 0 && c("rule.missing_event_id") == c("rule.corrupt_json"))
       // a fenced re-delivery commits no version
       val v = lake.currentVersion
       CdcPipeline.processBlobs(spark, second, lake, "w-1-again", mergeOnRead = mor)
       assert(lake.currentVersion == v, s"mergeOnRead = $mor")
     }
+  }
+
+  test("registry wire path: each commit's validation counts equal a direct count over the same annotated input") {
+    val reg = Validate.defaultRegistry()
+    val lake = new LakeTable(TestSpark.tmpDir("lineagereg"), spark)
+    Seq("g-0" -> blobsOf(1L to 400L), "g-1" -> blobsOf(401L to 700L)).foreach { case (id, blobs) =>
+      CdcPipeline.processBlobs(spark, blobs, lake, id, registry = Some(reg))
+      // the registry validates the raw wire shape: envelope rules plus
+      // the event's class rules, as `Validate.routeByClass` annotates it
+      val annotated = CdcPipeline.decode(blobs).withColumn("errors", concat(
+        Validate.errorsColumn(Validate.envelopeRules), reg.errorsFor(Validate.classKey)))
+      assert(counters(lake.currentSnapshot.get) == countsOf(annotated, Validate.envelopeRules), id)
+    }
+    val c = counters(lake.currentSnapshot.get)
+    assert(c("parsed") == 300L && c("quarantined") > 0)
+    assert(c("rule.corrupt_json") == (401L to 700L).count(_ % 19 == 0))
+    assert(lake.lineageTable().filter($"parsed" < 0 || $"quarantined" < 0).isEmpty)
   }
 
   /** `n` upserts on part "0".."3" of distinct keys, seq from `seqBase`. */

@@ -7,7 +7,8 @@ import graft.reference.ConcatJsonRef
 /** Splitter parity with the reference's raw_decode cursor loop
   * (the reference pipeline's `ef_ingestion_etl/data_profiling.py:90-110`). Every
   * case runs against the test-side reference splitter AND the production
-  * fused codec, whose recovered documents are its rows' `raw` spans. */
+  * fused codec, whose recovered documents are its non-corrupt rows' `raw`
+  * spans (the reference splitter emits no span for a failed parse). */
 class ConcatJsonSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
@@ -15,7 +16,7 @@ class ConcatJsonSpec extends AnyFunSuite {
   private def typedDocs(blob: String): Seq[String] = {
     val session = spark
     import session.implicits._
-    ConcatJson.decodeTyped(Seq(blob).toDS()).collect().map(_.raw).toSeq
+    ConcatJson.decodeTyped(Seq(blob).toDS()).collect().filter(!_.corrupt).map(_.raw).toSeq
   }
 
   private val decoders: Seq[(String, String => Seq[String])] = Seq(

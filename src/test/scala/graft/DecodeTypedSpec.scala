@@ -30,12 +30,28 @@ class DecodeTypedSpec extends AnyFunSuite {
     assert(rows.filter(!_.corrupt).map(_.event_id).toSeq == Seq("a", "b"))
   }
 
-  test("non-object JSON values are quarantined as corrupt, not dropped") {
+  test("a top-level array before a document is skipped; the document survives alone") {
+    // the leading '[' is not an object start, so it is skipped at the
+    // char level: no row for it, corrupt or not
     val rows = decode("""[1,2,3]{"event_id":"a","seq":1}""")
-    // the leading '[' is not an object start, so it's skipped at the
-    // char level; but a parsable scalar/array starting with '{'? none —
-    // verify the real doc survives and nothing phantom appears
-    assert(rows.filter(!_.corrupt).map(_.event_id).toSeq == Seq("a"))
+    assert(rows.map(r => (r.event_id, r.corrupt)).toSeq == Seq(("a", false)))
+  }
+
+  test("a malformed document is one corrupt row; valid documents decode unchanged") {
+    val valid = Seq("""{"event_id":"a","seq":1}""", """{"event_id":"b","seq":2}""")
+    // a doubled comma, and the generator's 1% garbage prefix, whose '{'
+    // starts a failed parse
+    Seq("""{"event_id":"x",,"seq":9}""", "\u0000GARBAGE}{[not-json ").foreach { bad =>
+      val rows = decode(valid.head + bad + valid(1))
+      val corrupt = rows.filter(_.corrupt)
+      assert(corrupt.length == 1, bad)
+      // its text runs from the '{' to where the parser failed, and it
+      // carries no other field
+      val raw = corrupt.head.raw
+      assert(raw.startsWith("{") && bad.drop(bad.indexOf('{')).startsWith(raw), raw)
+      assert(corrupt.head.productIterator.drop(2).forall(_ == null), bad)
+      assert(rows.filter(!_.corrupt).toSeq == decode(valid.mkString).toSeq, bad)
+    }
   }
 
   test("typed decode ≡ split+from_json path on generated wire data") {

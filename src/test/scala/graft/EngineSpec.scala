@@ -156,10 +156,13 @@ class EngineSpec extends AnyFunSuite {
     val (clean, dirty) = graft.validate.Validate.routeObserved(parsed)
     val cleanN = clean.count()
     val dirtyN = dirty.count()
-    assert(cleanN + dirtyN == 1000, s"clean=$cleanN dirty=$dirtyN")
-    assert(dirtyN > 0)
-    val reasons = dirty.select(explode($"errors")).as[String].collect().toSet
+    // every event, plus one corrupt row per generated garbage prefix
+    val garbage = blobs.collect().map("GARBAGE".r.findAllIn(_).size).sum
+    assert(garbage > 0)
+    assert(cleanN + dirtyN == 1000 + garbage, s"clean=$cleanN dirty=$dirtyN garbage=$garbage")
+    val reasons = dirty.select(explode($"errors")).as[String].collect()
     assert(reasons.contains("wrong_source"))
+    assert(reasons.count(_ == "corrupt_json") == garbage)
   }
 
   test("schema evolution: promoted column appears, old rows read as null") {

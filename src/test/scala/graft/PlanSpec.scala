@@ -20,14 +20,15 @@ class PlanSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
   /** The executed plans of every SQL execution that one q17 call and its
-    * action run, final (AQE) plans as they ran. q17's registered query
-    * serves a cross-query localCheckpoint cache (shared with q36), and the
-    * operator checkpoints its own intermediates, so no single plan holds
-    * the pipeline: each checkpointed subtree is in the execution that
+    * action run, final (AQE) plans as they ran. The registered q17 of a
+    * fresh `SparkEntry.queries` holds its pair set as a lazy
+    * localCheckpoint (the run shares it with q36), and the operator
+    * checkpoints its own intermediates, so no single plan holds the
+    * pipeline: each checkpointed subtree is in the execution that
     * declared it. */
   private lazy val q17plans: Seq[SparkPlan] = {
     val s = spark.newSession()
-    ExecutedPlans.of(s)(graft.queries.TrainingData.q17PairsUncached(s, dir).collect())
+    ExecutedPlans.of(s)(SparkEntry.queries("q17_minhash_lsh")(s, dir).collect())
   }
 
   test("q02: predicate pushdown + column pruning reach the scan") {
