@@ -45,10 +45,12 @@ import graft.lake.LakeTable
   *  - Copy-on-write touches only data files whose manifest key-range
   *    intersects the batch's repos (file-level pruning); untouched files
   *    carry over by reference, zero IO.
-  *  - Hot-key skew: map-side combine already collapses per-partition
-  *    duplicates; for adversarial single-key floods [[saltedLwwReduce]]
-  *    pre-shrinks with a two-phase (key,salt) reduce, and AQE skew
-  *    handling stays on as backstop.
+  *  - Hot-key skew: the merge aggregate's map-side combine collapses a
+  *    hot key's duplicates within each partition before the exchange, so
+  *    a key sends at most one row per map partition; AQE's skew handling
+  *    stays on as backstop. (`applyBatch` never calls
+  *    [[CdcApplier.saltedLwwReduce]], the standalone two-phase reduce
+  *    q28 gates.)
   *  - Exactly-once: the offsets fence filters already-applied events
   *    (`seq <= committed[part]`), and the snapshot commit records
   *    `(batchId, offsets)` — replaying a committed batch is a metadata
@@ -62,8 +64,11 @@ import graft.lake.LakeTable
   *    order-insensitive — only the replay fence needs the contract.
   *  - Schema evolution: value columns present in the batch but not in the
   *    lake schema are promoted (appended) to the new snapshot's schema;
-  *    old files read them as null. Renames are canonicalized upstream
-  *    (Repair.canonicalizeRenames), so lake files are always v2-named.
+  *    old files read them as null. Wire-level field renames are
+  *    canonicalized upstream (Repair.canonicalizeRenames); a late
+  *    producer's column under a name [[LakeTable.renameColumn]] retired
+  *    is the lake's one rename rule: it is never promoted, and both
+  *    merges read it as its current name ([[LakeTable.conform]]).
   */
 object CdcApplier {
 
@@ -154,29 +159,18 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
     * lineage: once the fused stats job has scanned the batch, each
     * numeric observed field is read from the plan and committed in the
     * snapshot's lineage map under its own name — zero extra passes.
-    * Steps 0–6 read the snapshot, fence, stat, evolve the schema and
+    * Steps 1–6 read the snapshot, fence, stat, evolve the schema and
     * write the merge mode's files; step 7 is the batch's one
     * [[LakeTable.commit]]. Returns the committed snapshot version. */
   def applyBatch(events: DataFrame, batchId: String): Long = {
     val snap = lake.currentSnapshot
-    // ---- 0. rename canonicalization: a late producer may still emit a
-    // column under its pre-rename name — fold it into the current name
-    // (an explicit current-name value wins) so rename evolution never
-    // re-promotes a retired name as a fresh column. ----
-    val canon = snap.map(_.renames).getOrElse(Map.empty).foldLeft(events) {
-      case (df, (oldName, newName)) if df.columns.contains(oldName) =>
-        (if (df.columns.contains(newName))
-          df.withColumn(newName, coalesce(col(newName), col(oldName)))
-        else df.withColumn(newName, col(oldName))).drop(oldName)
-      case (df, _) => df
-    }
     // ---- 1. offsets fence: drop events at-or-below the committed
     // high-watermark of their source partition (exactly-once resume). ----
     val committed = snap.map(_.offsets).getOrElse(Map.empty)
     // micro-batch-sized by construction (O2's 500-file-cap analog) —
     // checkpointed because the jobs below consume it twice: the fused
     // stats job fills it, and its blocks go with the frame
-    val pre = CdcApplier.fence(canon, committed)
+    val pre = CdcApplier.fence(events, committed)
     val fenced = pre.localCheckpoint(eager = false)
 
     // ---- 2+4 fused: ONE job over the fenced batch computes BOTH the
@@ -237,13 +231,13 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
     val upserts = statRows.map(_._5).sum
     val touchedIdx = fusedRows.filter(_._1).map(_._3.toInt).toSet
 
-    // ---- 3. schema evolution: promote new value columns. ----
-    val curSchema = snap.map(_.schema).getOrElse(StructType(Nil))
-    val eventValueFields = fenced.schema.fields
-      .filterNot(f => metaCols.contains(f.name))
-    val evolved = StructType(
-      curSchema.fields.filterNot(f => metaCols.contains(f.name)) ++
-        eventValueFields.filterNot(f => curSchema.fieldNames.contains(f.name)))
+    // ---- 3. schema evolution: promote new value columns; a retired
+    // name is not new, it is its current name (the rename rule). ----
+    val renames = snap.map(_.renames).getOrElse(Map.empty[String, String])
+    def valueFields(t: StructType) = StructType(t.fields.filterNot(f => metaCols.contains(f.name)))
+    val evolved = LakeTable.unionSchemas(
+      valueFields(snap.map(_.schema).getOrElse(StructType(Nil))), valueFields(fenced.schema),
+      renames)
 
     // ---- touched files, from the fused index set. ----
     val touched = snap.toSeq.flatMap(_.files.zipWithIndex
@@ -251,8 +245,8 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
 
     // ---- 5+6. merge and write: each mode returns its intent. ----
     val (dropped, added, rowsAfter) =
-      if (mergeOnRead) morMerge(fenced, snap, evolved, touched, batchId, upserts + deletes)
-      else cowMerge(fenced, snap, evolved, touched, batchId, upserts, upserts + deletes)
+      if (mergeOnRead) morMerge(fenced, snap, evolved, renames, touched, batchId, upserts + deletes)
+      else cowMerge(fenced, snap, evolved, renames, touched, batchId, upserts, upserts + deletes)
     // ---- 7. commit: the batch's one durable effect. ----
     lake.commit(batchId, newOffsets, evolved, dropped, added, snap, Map(
       "upserts" -> upserts, "deletes" -> deletes,
@@ -269,14 +263,15 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
   // subsumes in-batch dedup), rewrite touched data files range-clustered
   // and drop them; everything else stays by reference. Touched
   // merge-on-read delete files are never rewritten here — they stay
-  // until a major compaction folds them. `events` = upserts + deletes. ----
+  // until a major compaction folds them. `events` = upserts + deletes;
+  // change rows read retired names through `renames`. ----
   private def cowMerge(fenced: DataFrame, snap: Option[lake.Snapshot],
-      evolved: StructType, touched: Seq[lake.FileEntry], batchId: String,
-      upserts: Long, events: Long): Intent = {
+      evolved: StructType, renames: Map[String, String], touched: Seq[lake.FileEntry],
+      batchId: String, upserts: Long, events: Long): Intent = {
     val touchedData = touched.filter(_.kind == "data")
     val baseRows = touchedData.map(_.rows).sum
     def conform(df: DataFrame, isChange: Boolean): DataFrame =
-      df.select(LakeTable.conform(df, evolved) ++ Seq(
+      df.select(LakeTable.conform(df, evolved, renames) ++ Seq(
         (if (isChange && df.columns.contains("op")) col("op") else lit(Op.Update)).as("_op"),
         lit(isChange).as("_isChange")): _*)
     // base rows resolve any merge-on-read deletes FIRST (a raw scan
@@ -317,15 +312,16 @@ class CdcApplier(val lake: LakeTable, spark: SparkSession,
   // rewritten, so the intent drops no file. Existing delete entries and
   // DELETE tombstones participate as base VERSIONS so a stale event can
   // neither resurrect a deleted key nor shadow a newer base row.
-  // `events` = the batch's upserts + deletes. ----
+  // `events` = the batch's upserts + deletes; change rows read retired
+  // names through `renames`. ----
   private def morMerge(fenced: DataFrame, snap: Option[lake.Snapshot],
-      evolved: StructType, touched: Seq[lake.FileEntry], batchId: String,
-      events: Long): Intent = {
+      evolved: StructType, renames: Map[String, String], touched: Seq[lake.FileEntry],
+      batchId: String, events: Long): Intent = {
     val valueNames = evolved.fieldNames.toSeq.filterNot(keyCols.contains)
     // change rows carry every value column; base rows are the key-column
     // scans ([[LakeTable.deleteSchema]]), so their value columns read null
     def conformed(df: DataFrame, markers: Column*): DataFrame =
-      df.select(LakeTable.conform(df, evolved) ++ markers: _*)
+      df.select(LakeTable.conform(df, evolved, renames) ++ markers: _*)
     val touchedData = touched.filter(_.kind == "data")
     val touchedDel = touched.filter(_.kind == "delete")
     // the merge input is bounded by the batch's events plus every row of

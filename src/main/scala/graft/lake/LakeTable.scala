@@ -57,10 +57,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
 class LakeTable(val root: String, spark: SparkSession,
     val appliedWindow: Int = 128, val chunkSize: Int = 512) {
 
+  // created by the first write ([[writeDataFilesKinded]], [[writeManifest]]):
+  // opening or reading a table never creates one
   private val metaDir = Paths.get(root, "meta")
   private val dataDir = Paths.get(root, "data")
-  Files.createDirectories(metaDir)
-  Files.createDirectories(dataDir)
 
   /** Parsed manifest CHUNKS by file name — chunk files are immutable, so
     * the cache is always valid. Bounded by live metadata size:
@@ -89,13 +89,15 @@ class LakeTable(val root: String, spark: SparkSession,
       minSeq: Long = Long.MinValue, maxSeq: Long = Long.MaxValue,
       kind: String = "data", bytes: Long)
 
-  /** `renames` is the cumulative column-rename mapping: STORED (old)
+  /** `renames` is the cumulative column-rename mapping: RETIRED (old)
     * name → CURRENT name, chain-collapsed (after a→b then b→c it holds
     * {a→c, b→c}). Data files are immutable, so files written before a
-    * rename physically carry the old column name; reads augment the scan
-    * schema with the old names and coalesce them into the current one
-    * ([[readDataFiles]]) — zero rewrite, the Iceberg name-mapping idea
-    * at manifest granularity. */
+    * rename physically carry the old column name, and so may late
+    * producers' rows. The one rename rule: a stored or late retired name
+    * reads as its current name ([[LakeTable.conform]]), and a retired
+    * name never becomes a column again ([[renameColumn]],
+    * [[LakeTable.unionSchemas]]) — zero rewrite, the Iceberg name-mapping
+    * idea at manifest granularity. */
   /** Reference to one immutable manifest chunk file plus aggregate stats
     * over its entries, recorded in the MANIFEST — so a reader can decide
     * whether a chunk is relevant without opening it. `kind` is `"data"`
@@ -154,8 +156,9 @@ class LakeTable(val root: String, spark: SparkSession,
   // ---- version log ----------------------------------------------------
 
   /** All manifest versions present on disk, ascending (after
-    * [[expireSnapshots]] this starts at the oldest KEPT version, not 0). */
-  def versions: Seq[Long] = {
+    * [[expireSnapshots]] this starts at the oldest KEPT version, not 0);
+    * empty for a root no write has created. */
+  def versions: Seq[Long] = if (!Files.isDirectory(metaDir)) Nil else {
     val s = Files.list(metaDir)
     try s.iterator().asScala
       .map(_.getFileName.toString)
@@ -189,11 +192,11 @@ class LakeTable(val root: String, spark: SparkSession,
     snap.map(_.schema).getOrElse(graft.core.Model.lakeSchemaV1)
 
   /** Whether a read of `s` under `schema` takes more than a plain scan of
-    * its data files: live merge-on-read delete files, or a rename whose
-    * stored old name files may still carry. Decided here only — [[scan]]
-    * and the `format("graft")` relation both ask. */
+    * its data files: live merge-on-read delete files, or a rename into a
+    * column of `schema` whose retired name files may still carry. Decided
+    * here only — [[scan]] and the `format("graft")` relation both ask. */
   def needsResolution(s: Snapshot, schema: StructType): Boolean =
-    s.deleteFiles.nonEmpty || renamedColumns(s.renames, schema).nonEmpty
+    s.deleteFiles.nonEmpty || s.renames.values.exists(schema.fieldNames.contains)
 
   /** THE read from snapshot to rows; every engine read and the
     * `format("graft")` relations go through it. `subset` (data entries of
@@ -221,41 +224,27 @@ class LakeTable(val root: String, spark: SparkSession,
   private def emptyFrame(schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  /** Live renames under `schema`, inverted: current name → stored old
-    * names, keeping only renames whose target is in `schema` and whose
-    * old name isn't itself a live column. */
-  private def renamedColumns(renames: Map[String, String], schema: StructType)
-      : Map[String, Seq[String]] =
-    renames.toSeq
-      .filter { case (o, n) => schema.fieldNames.contains(n) &&
-        !schema.fieldNames.contains(o) }
-      .groupBy(_._2).map { case (n, m) => n -> m.map(_._1).sorted }
-
   /** Scan a set of data files under `schema`, mapping RENAMED columns:
-    * for every rename (old → new) the scan schema is augmented with the
-    * old name (same type, nullable) and the projection folds
-    * `coalesce(new, old₁, old₂, …)` into the current name. Sound because
-    * any one file physically contains at most ONE of a rename chain's
-    * names (the name current at its write time), so the coalesce order
-    * across olds is irrelevant; files from after the rename fill `new`,
-    * files from before fill exactly one `old`. No-op (plain scan) when
-    * no renames exist. */
+    * the scan schema gains every retired name whose current name is in
+    * `schema` (same type, nullable), and [[LakeTable.conform]] folds them
+    * into the current name. Any one file physically contains at most ONE
+    * of a rename chain's names (the name current at its write time), or,
+    * for a late producer's append, the current name wins. A retired name
+    * that is also a column of `schema` is not added: `renameColumn` no
+    * longer produces one, but older manifests hold a rename back (a→b
+    * then b→a gave {a→a, b→a}), and they still read. A plain scan when
+    * no rename targets `schema`. */
   private def readDataFiles(files: Seq[FileEntry], schema: StructType,
       renames: Map[String, String]): DataFrame = {
-    val inv = renamedColumns(renames, schema)
-    val extras = inv.toSeq.sortBy(_._1).flatMap { case (n, olds) =>
-      val t = schema(n).dataType
-      olds.map(o => org.apache.spark.sql.types.StructField(o, t, nullable = true))
+    val extras = renames.toSeq.sorted.collect {
+      case (o, n) if schema.fieldNames.contains(n) && !schema.fieldNames.contains(o) =>
+        org.apache.spark.sql.types.StructField(o, schema(n).dataType, nullable = true)
     }
-    val scanSchema = StructType(schema.fields ++ extras)
-    val df = readEntries(files, scanSchema)
-    if (extras.isEmpty) df
-    else df.select(schema.fields.toSeq.map { f =>
-      inv.get(f.name) match {
-        case Some(olds) => coalesce((f.name +: olds).map(col): _*).as(f.name)
-        case None => col(f.name)
-      }
-    }: _*)
+    if (extras.isEmpty) readEntries(files, schema)
+    else {
+      val df = readEntries(files, StructType(schema.fields ++ extras))
+      df.select(LakeTable.conform(df, schema, renames): _*)
+    }
   }
 
   /** Scan an explicit manifest-entry subset under `schema` through the
@@ -318,22 +307,13 @@ class LakeTable(val root: String, spark: SparkSession,
     * partitions by key so per-file min/max stats are tight), returning
     * manifest entries with stats.
     *
-    * Stats come from the parquet FOOTERS (row counts + repo/path column
-    * min/max), not from re-reading the data \u2014 a metadata-only pass, the
-    * same trick Iceberg manifests use. The footer reads run as one small
-    * TASK-SIDE job over the file list (executors each open a handful of
-    * footers), so commit latency stays flat as the per-batch output-file
-    * count grows; the driver's only per-file work is the rename into
-    * `data/` (a metadata op). Iceberg collects stats in its write tasks
-    * for the same reason.
-    *
-    * Filesystem contract: the task-side footer job requires that
-    * EXECUTORS can open the staged files \u2014 true for any shared
-    * filesystem (HDFS/S3/NFS) and for local mode. When the table root is
-    * a bare `file:` path AND executors are remote (a real cluster
-    * without a shared mount), tasks could not see the driver's local
-    * disk, so the footer reads fall back to a driver-side loop \u2014 the
-    * same stats, collected where the files are visible. */
+    * Stats come from the parquet FOOTERS (row counts + repo/seq column
+    * min/max + file bytes), not from re-reading the data — a
+    * metadata-only pass, the same trick Iceberg manifests use. The driver
+    * reads them, one footer open per file, right before it moves the file
+    * into `data/`: the move already needs the driver to see the staged
+    * files, so the table needs no second filesystem contract, and the
+    * write runs no Spark job beyond its own. */
   def writeDataFiles(df: DataFrame, label: String, kind: String = "data",
       blooms: Boolean = true): Seq[FileEntry] =
     writeDataFilesKinded(df, label, kind, blooms).map(_._2)
@@ -406,41 +386,10 @@ class LakeTable(val root: String, spark: SparkSession,
           listParquet(d).map(p => (p, k))
         }
     }
-    val parts = partsKinded.map(_._1)
-    // local-path staging is only task-visible when executors share the
-    // driver's filesystem (local mode, or a mounted FS); remote
-    // executors + a plain file: root → collect stats driver-side.
-    // Small file counts also stay driver-side even when tasks could do
-    // it: a footer read is a few ms of metadata IO, and the distributed
-    // path pays a full Spark job (repartition + collect) of fixed
-    // latency per write — at micro-batch cadence that job IS the cost.
-    // The task-side path remains for wide writes (compactions, bulk
-    // batches producing many files).
-    val localOnlyStage = tmp.toUri.getScheme == "file" || tmp.toUri.getScheme == null
-    val taskSide = (spark.sparkContext.isLocal || !localOnlyStage) &&
-      parts.size > spark.sparkContext.defaultParallelism
-    val stats: Map[String, (Long, String, String, Long, Long, Long)] =
-      if (parts.isEmpty) Map.empty
-      else if (!taskSide) {
-        val conf = spark.sessionState.newHadoopConf()
-        parts.map(p => p.toString -> LakeTable.footerStats(p, conf)).toMap
-      } else {
-        import spark.implicits._
-        // ship the session's Hadoop conf (FS credentials) to the tasks
-        val confBc = spark.sparkContext.broadcast(new org.apache.spark.SerializableWritable(
-          spark.sessionState.newHadoopConf()))
-        val n = math.max(1, math.min(parts.size, spark.sparkContext.defaultParallelism))
-        val rows = spark.createDataset(parts.map(_.toString))
-          .repartition(n)
-          .mapPartitions { it =>
-            val conf = confBc.value.value
-            it.map(p => p -> LakeTable.footerStats(Paths.get(p), conf))
-          }.collect()
-        confBc.unpersist()
-        rows.toMap
-      }
+    val conf = spark.sessionState.newHadoopConf()
+    Files.createDirectories(dataDir)
     val entries = partsKinded.zipWithIndex.map { case ((src, k), i) =>
-      val (rows, minR, maxR, minS, maxS, bytes) = stats(src.toString)
+      val (rows, minR, maxR, minS, maxS, bytes) = LakeTable.footerStats(src, conf)
       // the public file name carries the MANIFEST kind (raw partition
       // values like dlive/dtomb are an internal counting detail)
       val name = s"$label-${kindMap(k)}-${"%05d".format(i)}-${src.getFileName.toString.stripPrefix("part-").take(41)}"
@@ -474,8 +423,10 @@ class LakeTable(val root: String, spark: SparkSession,
     *    cannot be auto-merged: both rewrites contain the rows);
     *  - no source partition this commit advances may have moved at the
     *    head (two appliers applying the same partitions is undefined);
-    *  - the schema rebases by name-union (concurrent additive promotion
-    *    merges; our column set survives).
+    *  - the schema rebases by name-union under the head's renames
+    *    ([[LakeTable.unionSchemas]]: concurrent additive promotion merges,
+    *    our column set survives, a name a concurrent rename retired does
+    *    not come back).
     * Losing the manifest-link race re-reads the head and runs the same
     * steps again, bounded by [[LakeTable.CommitRetries]] with small linear
     * backoff. */
@@ -505,7 +456,8 @@ class LakeTable(val root: String, spark: SparkSession,
                   "were advanced by a concurrent applier")
           }
           val newSchema =
-            if (moved) head.map(h => LakeTable.unionSchemas(h.schema, schema)).getOrElse(schema)
+            if (moved) head.map(h => LakeTable.unionSchemas(h.schema, schema, h.renames))
+              .getOrElse(schema)
             else schema
           val version = head.map(_.version + 1).getOrElse(0L)
           // sliding-window fence map: keep only the newest `appliedWindow`
@@ -549,18 +501,13 @@ class LakeTable(val root: String, spark: SparkSession,
     * snapshot. At 100 TB this is the job that keeps CoW MERGE cheap:
     * file count bounds both manifest size and merge read amplification.
     *
-    * Output sizing — always a RANGE repartition on (repo, path), the same
-    * clustering as the applier's write path, so compacted files keep
-    * tight disjoint key ranges and file pruning stays effective:
-    *  - `shufflePartitions = 0` (default): AQE sizes the range partitions
-    *    to its advisory byte target — a whole-table compact is a parallel
-    *    many-file rewrite, never a one-task funnel;
-    *  - `shufflePartitions > 0`: pinned output file count (AQE does not
-    *    coalesce a user-specified partition count);
-    *  - a rewrite of at most [[LakeTable.SmallWriteRows]] rows (known
-    *    from the manifest) takes `coalesce(1)` ([[LakeTable.clustered]]). */
-  def compact(minRows: Long, shufflePartitions: Int = 0,
-      minBytes: Long = 0L): Option[Long] = {
+    * Output sizing is [[LakeTable.clustered]], the applier's rule: a
+    * rewrite of at most [[LakeTable.SmallWriteRows]] rows (known from the
+    * manifest) takes `coalesce(1)`; a larger one range-partitions on
+    * (repo, path) under AQE's advisory byte target, so a whole-table
+    * compact is a parallel many-file rewrite with tight disjoint key
+    * ranges, never a one-task funnel. */
+  def compact(minRows: Long, minBytes: Long = 0L): Option[Long] = {
     val snap = currentSnapshot.getOrElse(return None)
     val major = snap.deleteFiles.nonEmpty
     // byte-targeted selection uses the manifest-recorded file sizes —
@@ -601,8 +548,7 @@ class LakeTable(val root: String, spark: SparkSession,
     val added =
       if (small.isEmpty) Nil
       else writeDataFiles(
-        LakeTable.clustered(scan(Some(snap), Some(small)), small.map(_.rows).sum,
-          shufflePartitions),
+        LakeTable.clustered(scan(Some(snap), Some(small)), small.map(_.rows).sum),
         s"compact-v${snap.version + 1}")
     // no delete file survives a compaction, so the data-row sum is exact
     Some(commit(s"compact-${snap.version + 1}", Map.empty, snap.schema, dropped, added,
@@ -701,9 +647,8 @@ class LakeTable(val root: String, spark: SparkSession,
     * so the scan cost tracks the churn since `afterSeq`, not table size —
     * the seq stats play the role of Iceberg's hidden time partitioning.
     * Returns (feed, filesScanned, filesTotal). */
-  def readSince(afterSeq: Long, version: Option[Long] = None)
-      : (DataFrame, Int, Int) = {
-    val snap = at(version)
+  def readSince(afterSeq: Long): (DataFrame, Int, Int) = {
+    val snap = currentSnapshot
     // chunk-level seq prune first: an incremental consumer never parses
     // chunk files whose aggregate maxSeq sits at or below its watermark
     // (steady state: only the chunks of recent commits)
@@ -735,14 +680,13 @@ class LakeTable(val root: String, spark: SparkSession,
     * EVERY key deleted since the last major compaction — as interval
     * churn, and the feed would state-read O(accumulated deletes)
     * instead of O(churn). Consolidation is state-identity-preserving by
-    * construction (max is associative), so when a consolidation commit
-    * sits inside the interval, the candidates are instead the delete
-    * files added by the interval's NON-maintenance commits (a
-    * metadata-scale manifest walk; files of dropped mid-interval
-    * versions still exist under the retention contract that already
-    * governs feed reads — expiry keeps a contiguous version suffix). If
-    * any interval manifest is missing, fall back to the naive set
-    * (correct, just not consolidation-pruned). */
+    * construction (max is associative), so once any delete file arrived
+    * in the interval, the candidates are the delete files added by the
+    * interval's NON-consolidation commits: a metadata-scale walk over
+    * the manifests in (`a`, `b`]. Every one of them exists: versions are
+    * contiguous and expiry deletes only a prefix, so when `a` is readable
+    * so is every later manifest, and the files those manifests reference
+    * are kept with them. */
   private[lake] def changeFeedCandidateFiles(a: Snapshot, b: Snapshot)
       : (Seq[FileEntry], Seq[FileEntry], Seq[FileEntry]) = {
     val aPaths = a.dataFiles.map(_.path).toSet
@@ -750,20 +694,17 @@ class LakeTable(val root: String, spark: SparkSession,
     val removed = a.dataFiles.filterNot(f => bPaths.contains(f.path))
     val added = b.dataFiles.filterNot(f => aPaths.contains(f.path))
     val aDel = a.deleteFiles.map(_.path).toSet
-    val addedDel0 = b.deleteFiles.filterNot(f => aDel.contains(f.path))
     val churnDel: Seq[FileEntry] =
-      if (addedDel0.isEmpty) addedDel0
-      else Try(((a.version + 1) to b.version).map(snapshot)).toOption match {
-        case Some(ss) if ss.exists(_.batchId.startsWith("consolidate-deletes-")) =>
-          var prevPaths = aDel
-          val out = Seq.newBuilder[FileEntry]
-          ss.foreach { s =>
-            if (!s.batchId.startsWith("consolidate-deletes-"))
-              out ++= s.deleteFiles.filterNot(f => prevPaths.contains(f.path))
-            prevPaths = s.deleteFiles.map(_.path).toSet
-          }
-          out.result().distinctBy(_.path)
-        case _ => addedDel0
+      if (b.deleteFiles.forall(f => aDel.contains(f.path))) Nil
+      else {
+        var prevPaths = aDel
+        val out = Seq.newBuilder[FileEntry]
+        ((a.version + 1) to b.version).map(snapshot).foreach { s =>
+          if (!s.batchId.startsWith("consolidate-deletes-"))
+            out ++= s.deleteFiles.filterNot(f => prevPaths.contains(f.path))
+          prevPaths = s.deleteFiles.map(_.path).toSet
+        }
+        out.result().distinctBy(_.path)
       }
     (added, removed, churnDel)
   }
@@ -843,9 +784,8 @@ class LakeTable(val root: String, spark: SparkSession,
     *     bulk sets become a BROADCAST LEFT-SEMI join against the key set
     *     instead — same result, hash-probe per row, no giant predicate.
     * Returns (rows, filesScanned, filesTotal). */
-  def lookupKeys(keys: Seq[(String, String)], version: Option[Long] = None)
-      : (DataFrame, Int, Int) = {
-    val snap = at(version)
+  def lookupKeys(keys: Seq[(String, String)]): (DataFrame, Int, Int) = {
+    val snap = currentSnapshot
     val repos = keys.map(_._1).distinct
     // two-stage manifest prune: chunk stats (in the manifest itself)
     // decide which chunk FILES to parse at all, then per-file stats
@@ -906,8 +846,10 @@ class LakeTable(val root: String, spark: SparkSession,
     val live: Set[String] = vs.filter(_ >= keepFrom)
       .flatMap(v => snapshot(v).files.map(_.path)).toSet
     var dataDeleted = 0
-    val ls = Files.list(dataDir)
-    val dataFiles = try ls.iterator().asScala.toSeq finally ls.close()
+    val dataFiles = if (!Files.isDirectory(dataDir)) Nil else {
+      val ls = Files.list(dataDir)
+      try ls.iterator().asScala.toSeq finally ls.close()
+    }
     dataFiles.foreach { p =>
       if (!live.contains(s"data/${p.getFileName}")) {
         if (Try(Files.deleteIfExists(p)).getOrElse(false)) dataDeleted += 1
@@ -948,14 +890,18 @@ class LakeTable(val root: String, spark: SparkSession,
   /** Rename a value column: a METADATA-ONLY commit (no file is touched)
     * that renames the schema field and records the old→new mapping in
     * the manifest, chain-collapsing prior renames (after a→b then b→c
-    * the map holds {a→c, b→c}). Files written before the rename keep
-    * their physical column name; every read path maps them through
-    * [[readDataFiles]], and the next compaction rewrite materializes the
-    * current name. Time travel is unaffected: old snapshots carry their
-    * own schema + mapping. Key/ordering columns (repo, path, seq,
-    * commit) are the engine's contract and cannot be renamed. Returns
-    * the committed version. Metadata-only ⇒ always rebase-safe, so the
-    * race loop needs no file/offset validation. */
+    * the map holds {a→c, b→c}). `oldName` is retired for good: files
+    * written before the rename keep their physical column name, and a
+    * late producer's rows or a sink append may still carry it; every
+    * read, both merges and the sink's schema map it to the current name
+    * (the one rename rule, [[LakeTable.conform]]), and the next
+    * compaction rewrite materializes the current name. So `newName` may
+    * not be a retired name: its old files' values would read under it.
+    * Time travel is unaffected: old snapshots carry their own schema +
+    * mapping. Key/ordering columns (repo, path, seq, commit) are the
+    * engine's contract and cannot be renamed. Returns the committed
+    * version. Metadata-only ⇒ always rebase-safe, so the race loop needs
+    * no file/offset validation. */
   def renameColumn(oldName: String, newName: String): Long = {
     require(!Set("repo", "path", "seq", "commit").contains(oldName),
       s"cannot rename engine key/ordering column $oldName")
@@ -965,6 +911,8 @@ class LakeTable(val root: String, spark: SparkSession,
       require(snap.schema.fieldNames.contains(oldName), s"no such column: $oldName")
       require(!snap.schema.fieldNames.contains(newName),
         s"column already exists: $newName")
+      require(!snap.renames.contains(newName),
+        s"$newName is a retired column name (renamed to ${snap.renames(newName)})")
       val newSchema = StructType(snap.schema.fields.map(f =>
         if (f.name == oldName) f.copy(name = newName) else f))
       val renames = snap.renames.map { case (o, n) =>
@@ -1046,6 +994,7 @@ class LakeTable(val root: String, spark: SparkSession,
       renames: Map[String, String] = Map.empty,
       prevChunks: Seq[ChunkRef] = Nil,
       saved: Map[String, String] = Map.empty): Unit = {
+    Files.createDirectories(metaDir)
     val byPath: Map[String, FileEntry] = files.map(f => f.path -> f).toMap
     val survivors = prevChunks.filter { c =>
       val es = readChunk(c.name)
@@ -1327,21 +1276,37 @@ object LakeTable {
     org.apache.spark.sql.types.StructField("seq", org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("commit", org.apache.spark.sql.types.StringType)))
 
-  /** `df`'s columns under `schema`, in its order: a present column is cast
-    * to the schema type, an absent one reads as a typed null — the lake's
-    * "missing columns read as null" rule, applied wherever change rows,
-    * base rows or feed images meet an evolved or pinned schema. */
-  private[graft] def conform(df: DataFrame, schema: StructType): Seq[Column] =
+  /** `df`'s columns under `schema`, in its order: each field reads its
+    * own column, else the first non-null of the retired names `renames`
+    * maps to it (a stored or late old name reads as its current name; a
+    * retired name that is itself a column of `schema`, which only older
+    * manifests hold, reads as that column alone); present columns are cast to the schema type, and a field with none
+    * reads as a typed null — the lake's "missing columns read as null"
+    * and rename rules, applied wherever files, change rows, base rows or
+    * feed images meet an evolved or pinned schema. */
+  private[graft] def conform(df: DataFrame, schema: StructType,
+      renames: Map[String, String] = Map.empty): Seq[Column] =
     schema.fields.toSeq.map { f =>
-      (if (df.columns.contains(f.name)) col(f.name).cast(f.dataType)
-      else lit(null).cast(f.dataType)).as(f.name)
+      val names = (f.name +: renames.toSeq.sorted.collect {
+        case (o, n) if n == f.name && !schema.fieldNames.contains(o) => o
+      }).filter(df.columns.contains)
+      (names match {
+        case Seq() => lit(null).cast(f.dataType)
+        case Seq(n) => col(n).cast(f.dataType)
+        case ns => coalesce(ns.map(n => col(n).cast(f.dataType)): _*)
+      }).as(f.name)
     }
 
-  /** Name-union of two schemas, `a`'s order first — the rebase rule for
-    * concurrent additive schema promotion (also the append-sink schema
-    * rule, [[graft.sources.GraftDataSource]]). */
-  private[graft] def unionSchemas(a: StructType, b: StructType): StructType =
-    StructType(a.fields ++ b.fields.filterNot(f => a.fieldNames.contains(f.name)))
+  /** Name-union of two schemas, `a`'s order first, under the rename rule:
+    * a field of `b` under a retired name of `renames` joins as its
+    * current name, so a retired name never becomes a column again. The
+    * schema rule of applier promotion ([[graft.apply.CdcApplier]]), the
+    * append sink ([[graft.sources.GraftDataSource]]) and the commit
+    * rebase. */
+  private[graft] def unionSchemas(a: StructType, b: StructType,
+      renames: Map[String, String]): StructType =
+    StructType(a.fields ++ b.fields.map(f => f.copy(name = renames.getOrElse(f.name, f.name)))
+      .filterNot(f => a.fieldNames.contains(f.name)).distinctBy(_.name))
 
   /** Output schema of [[LakeTable.changeFeed]] for a table schema `t`:
     * key columns, the change classification, and nullable before/after
@@ -1363,8 +1328,7 @@ object LakeTable {
 
   /** Row count + repo string min/max + seq long min/max + file
     * BYTES from a parquet footer open (the open already knows the length
-    * — no extra status call). Static so write-job TASKS can call it
-    * without capturing a table instance (executor-side stat collection). */
+    * — no extra status call). */
   private[lake] def footerStats(p: Path, conf: org.apache.hadoop.conf.Configuration)
       : (Long, String, String, Long, Long, Long) = {
     import org.apache.parquet.hadoop.ParquetFileReader

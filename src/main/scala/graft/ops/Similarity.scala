@@ -112,27 +112,21 @@ object Similarity {
   private def dimOf(df: DataFrame, vecCol: Column): Int =
     df.select(size(vecCol)).head().getInt(0)
 
-  /** Exact integer squared L2 distance between a quantized vector column
-    * and a driver-side centroid row. */
-  private[graft] def qdist2(qv: Column, centroid: Seq[Long]): Column =
-    aggregate(zip_with(qv, typedLit(centroid), (x, c) => (x - c) * (x - c)),
-      lit(0L), (acc, v) => acc + v)
-
-  /** Assign each quantized vector (`qv` column) to its nearest centroid:
-    * least of `nCells` (distance, cellId) structs against the
-    * driver-held, metadata-scale centroid table — exact integer L2, ties
-    * toward the lower cell id, no row explosion and no shuffle. Adds
-    * `cell`. */
-  private[ops] def ivfAssign(vecs: DataFrame,
-      cents: Seq[(Int, Seq[Long])]): DataFrame = {
-    // cents are dense (cell id = position, the seed rule); the kernel
-    // picks min (distance, cell) exactly like least(struct(d, c)) did,
-    // without nCells × dim interpreted lambda steps per row
-    val m = cents.sortBy(_._1).map(_._2.toArray).toArray
+  /** The driver-held, metadata-scale centroid table as the kernels'
+    * matrix: row = cell id. Cell ids must be dense (cell id = position,
+    * the seed rule). */
+  private def centroidMatrix(cents: Seq[(Int, Seq[Long])]): Array[Array[Long]] = {
     require(cents.sortBy(_._1).map(_._1) == cents.indices,
       "centroid ids must be dense 0..n-1")
-    VectorKernels.withCell(vecs, "qv", "cell", m)
+    cents.sortBy(_._1).map(_._2.toArray).toArray
   }
+
+  /** Assign each quantized vector (`qv` column) to its nearest centroid
+    * ([[VectorKernels.withCell]]: exact integer L2, ties toward the lower
+    * cell id, no row explosion and no shuffle). Adds `cell`. */
+  private[ops] def ivfAssign(vecs: DataFrame,
+      cents: Seq[(Int, Seq[Long])]): DataFrame =
+    VectorKernels.withCell(vecs, "qv", "cell", centroidMatrix(cents))
 
   /** One deterministic Lloyd (k-means) step over the quantized grid:
     * assign every vector to its nearest centroid, then recompute each
@@ -192,15 +186,13 @@ object Similarity {
     }
     val c = ivfAssign(qvecs.select(col("id").as("neighbor_id"), col("qv")), cents)
       .select(col("neighbor_id"), col("qv"), col("cell"))
-    // per-query probe list: the nProbe nearest centroids by the same
-    // integer distance, ties toward lower cell id
-    val probeOf = array_sort(array(cents.map { case (cid, cv) =>
-      struct(qdist2(col("qq"), cv).as("d"), lit(cid).as("c"))
-    }: _*))
-    val q = VectorKernels.withQuantized(
-        queries.select(col("qid"), col("qvec")), "qvec", "qq").drop("qvec")
-      .withColumn("cell",
-        explode(transform(slice(probeOf, 1, nProbe), p => p.getField("c"))))
+    // per-query probe list: the nProbe nearest centroids from the loop
+    // that assigned the corpus, ties toward lower cell id; a NULL or
+    // ragged query vector probes no cell
+    val q = VectorKernels.withProbes(VectorKernels.withQuantized(
+        queries.select(col("qid"), col("qvec")), "qvec", "qq").drop("qvec"),
+      "qq", "_probes", centroidMatrix(cents), nProbe)
+      .select(col("qid"), col("qq"), explode(col("_probes")).as("cell"))
     val joined = VectorKernels.withQdot(
       c.join(broadcast(q), Seq("cell"))
         .filter(col("neighbor_id") =!= col("qid")),

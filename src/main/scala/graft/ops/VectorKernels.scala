@@ -22,6 +22,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType, ArrayType, StructType}
   *  - quantization replicates Spark's `round(x·1000)` for doubles —
   *    `BigDecimal.valueOf` (decimal string) + HALF_UP, NOT the exact
   *    binary value, matching Catalyst's RoundBase;
+  *  - a vector with a NULL element quantizes to a NULL vector, so its
+  *    dot products, bucket, cell and probes are NULL, as for a ragged
+  *    vector (the Column form's `round(NULL)` element poisoned every sum
+  *    over it the same way);
   *  - integer dot/distance sums are exact longs, NULL when either side
   *    is NULL or lengths differ (zip_with null-padding semantics);
   *  - bucket/cell ties and packing mirror the Column forms bit-for-bit
@@ -42,8 +46,9 @@ private[graft] object VectorKernels {
   def roundHalfUp(v: Double): Long =
     java.math.BigDecimal.valueOf(v).setScale(0, RoundingMode.HALF_UP).longValue()
 
-  /** Append `out` = round(vec·1000) per element (array<long>); NULL vec
-    * ⇒ NULL. ≡ `transform(v, x => round(x.cast(double)*1000).cast(long))`. */
+  /** Append `out` = round(vec·1000) per element (array<long>); a NULL
+    * vec or a vec with a NULL element ⇒ NULL. On vectors without NULL
+    * elements ≡ `transform(v, x => round(x.cast(double)*1000).cast(long))`. */
   def withQuantized(df: DataFrame, vecCol: String, out: String): DataFrame = {
     val vi = df.schema.fieldIndex(vecCol)
     addCol(df, out, ArrayType(LongType)) { r =>
@@ -52,13 +57,11 @@ private[graft] object VectorKernels {
         val v = r.getSeq[Any](vi)
         val q = new Array[Long](v.length)
         var i = 0
-        while (i < v.length) {
-          val x = v(i)
-          if (x == null) sys.error(s"null element in $vecCol")
-          q(i) = roundHalfUp(x.asInstanceOf[Number].doubleValue() * 1000.0)
+        while (i < v.length && v(i) != null) {
+          q(i) = roundHalfUp(v(i).asInstanceOf[Number].doubleValue() * 1000.0)
           i += 1
         }
-        q
+        if (i < v.length) null else q
       }
     }
   }
@@ -115,35 +118,57 @@ private[graft] object VectorKernels {
     }
   }
 
-  /** Append `out` = nearest centroid id by exact integer squared L2,
-    * ties toward the lower cell id (the argmin of [[Similarity.qdist2]]).
-    * NULL for a vector whose length differs from a centroid's — its
-    * distance is NULL under zip_with null-padding, so it drops out of
-    * the cell equi-join like a ragged vector's NULL bucket. Centroids
-    * must be dense in cell order. */
-  def withCell(df: DataFrame, qvCol: String, out: String,
-      cents: Array[Array[Long]]): DataFrame = {
+  /** Exact integer squared L2: the one distance of cells and probes. */
+  private def dist2(v: Seq[Long], cv: Array[Long]): Long = {
+    var s = 0L
+    var i = 0
+    while (i < v.length) { val x = v(i) - cv(i); s += x * x; i += 1 }
+    s
+  }
+
+  /** Append `out` = `f(v)` for each vector `v` of `qvCol`; NULL for a
+    * NULL vector, with no centroid, or when `v`'s length differs from a
+    * centroid's (its distance is NULL under zip_with null-padding). */
+  private def byCells(df: DataFrame, qvCol: String, out: String,
+      t: org.apache.spark.sql.types.DataType, cents: Array[Array[Long]])(
+      f: Seq[Long] => Any): DataFrame = {
     val vi = df.schema.fieldIndex(qvCol)
-    addCol(df, out, IntegerType) { r =>
+    addCol(df, out, t) { r =>
       if (r.isNullAt(vi)) null
       else {
         val v = r.getSeq[Long](vi)
-        if (cents.exists(_.length != v.length)) null
-        else {
-          var best = Long.MaxValue
-          var bestC = -1
-          var c = 0
-          while (c < cents.length) {
-            val cv = cents(c)
-            var d = 0L
-            var i = 0
-            while (i < v.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
-            if (d < best) { best = d; bestC = c }
-            c += 1
-          }
-          bestC
-        }
+        if (cents.isEmpty || cents.exists(_.length != v.length)) null else f(v)
       }
     }
   }
+
+  /** Append `out` = nearest centroid id by [[dist2]], ties toward the
+    * lower cell id; a NULL cell ([[byCells]]) drops out of the cell
+    * equi-join like a ragged vector's NULL bucket. Centroids must be
+    * dense in cell order. */
+  def withCell(df: DataFrame, qvCol: String, out: String,
+      cents: Array[Array[Long]]): DataFrame =
+    byCells(df, qvCol, out, IntegerType, cents) { v =>
+      var best = Long.MaxValue
+      var bestC = -1
+      var c = 0
+      while (c < cents.length) {
+        val d = dist2(v, cents(c))
+        if (d < best) { best = d; bestC = c }
+        c += 1
+      }
+      bestC
+    }
+
+  /** Append `out` = the ids of the `nProbe` nearest centroids, nearest
+    * first, by the distance [[withCell]] assigns by, ties toward the
+    * lower cell id; a NULL or ragged query ([[byCells]]) probes no cell.
+    * Centroids must be dense in cell order. */
+  def withProbes(df: DataFrame, qvCol: String, out: String,
+      cents: Array[Array[Long]], nProbe: Int): DataFrame =
+    byCells(df, qvCol, out, ArrayType(IntegerType), cents) { v =>
+      val d = cents.map(dist2(v, _))
+      // a stable sort: of equally distant cells the lower comes first
+      cents.indices.sortBy(d(_)).take(nProbe).toArray
+    }
 }

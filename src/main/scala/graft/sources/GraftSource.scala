@@ -115,7 +115,12 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
     *    evolution: old files resolve missing columns as null at read);
     *    `Overwrite` drops every file of the snapshot it read and
     *    replaces the schema (files a concurrent writer committed
-    *    meanwhile survive the rebase).
+    *    meanwhile survive the rebase);
+    *  - either way a column under a name [[LakeTable.renameColumn]]
+    *    retired joins the schema as its current name, never as itself:
+    *    its files keep the physical old name and read under the current
+    *    one with no rewrite (the lake's one rename rule,
+    *    [[LakeTable.unionSchemas]]).
     *
     * This path writes ROWS, not CDC semantics: LWW merge stays the
     * applier's job. It is the hand-off for non-CDC producers (backfills,
@@ -149,13 +154,16 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
       if (!head.exists(_.committed(batchId, Map.empty))) {
         val added = lake.writeDataFiles(clustered, batchId)
         val addedRows = added.map(_.rows).sum
+        val renames = head.map(_.renames).getOrElse(Map.empty[String, String])
         mode match {
           case SaveMode.Overwrite =>
-            lake.commit(batchId, Map.empty, data.schema, head.toSeq.flatMap(_.files), added,
-              head, Map("rowsAfter" -> addedRows), sticky = sticky)
+            lake.commit(batchId, Map.empty,
+              LakeTable.unionSchemas(StructType(Nil), data.schema, renames),
+              head.toSeq.flatMap(_.files), added, head, Map("rowsAfter" -> addedRows),
+              sticky = sticky)
           case _ =>
-            val schema = head.map(h => LakeTable.unionSchemas(h.schema, data.schema))
-              .getOrElse(data.schema)
+            val schema = LakeTable.unionSchemas(
+              head.map(_.schema).getOrElse(StructType(Nil)), data.schema, renames)
             lake.commit(batchId, Map.empty, schema, Nil, added, head,
               Map("rowsAfter" -> (head.map(_.liveRows).getOrElse(0L) + addedRows)),
               sticky = sticky)

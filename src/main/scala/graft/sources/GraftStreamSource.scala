@@ -77,27 +77,23 @@ class GraftStreamSource(spark: SparkSession, root: String,
     val startV = start
       .map { case LongOffset(v) => v; case o => o.json().toLong }
       .orElse(startingVersion)
-    val feed = (startV, cdf) match {
-      case (None, false) =>
-        // no baseline: the existing table IS the first batch
-        lake.read(Some(endV))
-      case (Some(v), false) =>
-        // snapshot diff projected to after-images: exactly the keys whose
-        // winning state changed in (v, endV], at O(churn) scan cost
-        lake.changeFeed(v, endV)
-          .filter(col("change_type") =!= "delete")
-          .select(col("repo"), col("path"), col("after.*"))
-      case (Some(v), true) => lake.changeFeed(v, endV)
-      case (None, true) =>
-        // no baseline: the existing table IS the first batch, as inserts
+    // ONE change feed per interval: the snapshot diff over (v, endV], or,
+    // with no baseline, the existing table as inserts
+    val changes = startV match {
+      case Some(v) => lake.changeFeed(v, endV)
+      case None =>
         val t = lake.read(Some(endV))
-        val img = t.columns.toSeq.filterNot(c => c == "repo" || c == "path")
-        val imgT = org.apache.spark.sql.types.StructType(
-          t.schema.fields.filterNot(f => f.name == "repo" || f.name == "path"))
+        val img = t.schema.fields.filterNot(f => f.name == "repo" || f.name == "path")
         t.select(col("repo"), col("path"), lit("insert").as("change_type"),
-          lit(null).cast(imgT).as("before"),
-          struct(img.map(col): _*).as("after"))
+          lit(null).cast(StructType(img)).as("before"),
+          struct(img.map(f => col(f.name)).toIndexedSeq: _*).as("after"))
     }
+    // plain mode: the feed's after-images, exactly the keys whose winning
+    // state changed, at O(churn) scan cost
+    val feed =
+      if (cdf) changes
+      else changes.filter(col("change_type") =!= "delete")
+        .select(col("repo"), col("path"), col("after.*"))
     // conform to the pinned schema: later snapshots may be wider
     val conformed = feed.select(LakeTable.conform(feed, declaredSchema): _*)
     // MicroBatchExecution asserts isStreaming on the returned frame; the

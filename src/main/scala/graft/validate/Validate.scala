@@ -66,10 +66,22 @@ object Validate {
     negativeSeq, missingRepo, missingPath, unresolvableCommit, missingPart,
     missingContent, wrongSource)
 
-  /** Compile rules to a single `array<string>` errors column. */
+  /** Compile rules to a single `array<string>` errors column. With the
+    * `corrupt_json` rule among them, a corrupt row is [[corruptOnly]]. */
   def errorsColumn(rules: Seq[Rule]): Column =
+    if (rules.contains(corruptJson)) corruptOnly(violations(rules)) else violations(rules)
+
+  /** The names of the `rules` a row violates, in rule order. */
+  private def violations(rules: Seq[Rule]): Column =
     array_compact(array(rules.map(r =>
       when(!coalesce(r.holds, lit(false)), lit(r.name))): _*))
+
+  /** `errs`, except that a row with `_corrupt` set violates exactly
+    * `corrupt_json`: the codec's corrupt row carries no parsed field, so
+    * no field rule says anything about it, and each `rule.missing_*`
+    * counter counts parsed documents only. */
+  private def corruptOnly(errs: Column): Column =
+    when(col("_corrupt").isNotNull, array(lit(corruptJson.name))).otherwise(errs)
 
   // ---- per-(service, type) rule registry --------------------------------
 
@@ -107,15 +119,17 @@ object Validate {
           transform(e, m => concat(lit(s"v$i."), m)) }: _*))
     }
 
-    /** One dispatching Column: the class key selects its rule set; an
-      * unregistered class yields `unknown_event_class`. A when-chain over
-      * a driver-side-small registry — stays inside whole-stage codegen. */
+    /** One errors Column: the [[envelopeRules]] plus the rules of the
+      * event's class, which the class key selects; an unregistered class
+      * yields `unknown_event_class`. A corrupt row is [[corruptOnly]]. A
+      * when-chain over a driver-side-small registry — stays inside
+      * whole-stage codegen. */
     def errorsFor(classKey: Column): Column =
-      entries.foldRight(
+      corruptOnly(concat(violations(envelopeRules), entries.foldRight(
           array(lit("unknown_event_class")).cast("array<string>"): Column) {
         case ((cls, variants), els) =>
           when(classKey === cls.key, classErrors(variants)).otherwise(els)
-      }
+      }))
   }
 
   object RuleRegistry {
@@ -175,8 +189,7 @@ object Validate {
     * and the `rule.<name>` count of each envelope rule. */
   def routeByClass(df: DataFrame, registry: RuleRegistry = defaultRegistry(),
       classCol: Column = classKey): (DataFrame, DataFrame) =
-    observedSplit(df.withColumn("errors",
-      concat(errorsColumn(envelopeRules), registry.errorsFor(classCol))),
+    observedSplit(df.withColumn("errors", registry.errorsFor(classCol)),
       envelopeRules, "validation")
 
   /** Annotate with `errors`; clean ⇔ `size(errors)=0`. One pass. */
@@ -201,11 +214,13 @@ object Validate {
     observedSplit(annotate(df, rules), rules, name)
 
   /** [[cleanAndDirty]] of `annotated` under one observation `name` of
-    * `parsed`, `quarantined` and the violations of each of `counted`. */
+    * `parsed`, `quarantined` and, for each of `counted`, the rows whose
+    * `errors` name it. */
   private def observedSplit(annotated: DataFrame, counted: Seq[Rule],
       name: String): (DataFrame, DataFrame) = {
     val aggs = counted.map(r =>
-      sum(when(!coalesce(r.holds, lit(false)), 1L).otherwise(0L)).as(s"rule.${r.name}")) ++ Seq(
+      sum(when(array_contains(col("errors"), r.name), 1L).otherwise(0L))
+        .as(s"rule.${r.name}")) ++ Seq(
       count(lit(1)).as("parsed"),
       sum(when(size(col("errors")) > 0, 1L).otherwise(0L)).as("quarantined"))
     cleanAndDirty(annotated.observe(name, aggs.head, aggs.tail: _*))

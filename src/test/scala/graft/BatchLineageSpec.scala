@@ -79,14 +79,14 @@ class BatchLineageSpec extends AnyFunSuite {
       }
       // the planted violations show, and a rule nothing violates commits
       // a 0. The codec emits a corrupt document as one corrupt row, so it
-      // counts both as parsed and as `corrupt_json`; the row carries no
-      // other field, so it also misses its event id.
+      // counts both as parsed and as `corrupt_json`; it violates no other
+      // rule, so the field rules count parsed documents only.
       val c = counters(lake.currentSnapshot.get)
       Seq("missing_content", "wrong_source", "missing_part")
         .foreach(r => assert(c(s"rule.$r") > 0, r))
       assert(c("parsed") == 300L)
       assert(c("rule.corrupt_json") == (401L to 700L).count(_ % 19 == 0))
-      assert(c("rule.negative_seq") == 0 && c("rule.missing_event_id") == c("rule.corrupt_json"))
+      assert(c("rule.negative_seq") == 0 && c("rule.missing_event_id") == 0)
       // a fenced re-delivery commits no version
       val v = lake.currentVersion
       CdcPipeline.processBlobs(spark, second, lake, "w-1-again", mergeOnRead = mor)
@@ -101,13 +101,13 @@ class BatchLineageSpec extends AnyFunSuite {
       CdcPipeline.processBlobs(spark, blobs, lake, id, registry = Some(reg))
       // the registry validates the raw wire shape: envelope rules plus
       // the event's class rules, as `Validate.routeByClass` annotates it
-      val annotated = CdcPipeline.decode(blobs).withColumn("errors", concat(
-        Validate.errorsColumn(Validate.envelopeRules), reg.errorsFor(Validate.classKey)))
+      val annotated = CdcPipeline.decode(blobs).withColumn("errors", reg.errorsFor(Validate.classKey))
       assert(counters(lake.currentSnapshot.get) == countsOf(annotated, Validate.envelopeRules), id)
     }
     val c = counters(lake.currentSnapshot.get)
     assert(c("parsed") == 300L && c("quarantined") > 0)
     assert(c("rule.corrupt_json") == (401L to 700L).count(_ % 19 == 0))
+    assert(c("rule.missing_event_id") == 0)
     assert(lake.lineageTable().filter($"parsed" < 0 || $"quarantined" < 0).isEmpty)
   }
 

@@ -49,24 +49,25 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("whole-table compact is a parallel multi-file rewrite with disjoint key ranges") {
-    val lake = new LakeTable(TestSpark.tmpDir("lakecompactmulti"), spark)
-    val applier = new CdcApplier(lake, spark)
-    val ev = ChangeLogGen.events(spark, 2000, 29L)
-      .filter(lower($"source") === "app.change.log")
-      .withColumn("grp", (substring($"repo", 6, 4).cast("int") / 25).cast("long"))
-      .withColumn("part", concat($"grp", lit("-"), $"part"))
-      .select($"grp", $"op", $"part", $"repo", $"path", $"commit", $"lang",
-        $"content", $"seq")
-    (0 until 4).foreach { b =>
-      applier.applyBatch(ev.filter($"grp" === b).drop("grp"), s"m-$b")
+    // a rewrite above SmallWriteRows range-partitions under AQE sizing;
+    // the session's small advisory target stands in for a table of many
+    // target-sized files, so the assertion is about the PLAN SHAPE: a
+    // whole-table compact writes many files, never a forced one-task funnel
+    val root = TestSpark.tmpDir("lakecompactmulti")
+    val n = LakeTable.SmallWriteRows + 40000L
+    Seq(0L, n / 2).foreach { from =>
+      spark.range(from, from + n / 2)
+        .select(format_string("mr%05d", $"id" % 4099).as("repo"),
+          concat(lit("p"), $"id".cast("string")).as("path"), $"id".as("seq"),
+          lit("c").as("commit"), lit("x").as("content"))
+        .write.format("graft").mode("append").save(root)
     }
-    val before = lake.read().select($"repo", $"path", sha2($"content", 256))
-      .collect().map(_.toSeq).toSet
-    // pinned partition count stands in for AQE's byte-target sizing (the
-    // default), which would coalesce this tiny table to one partition —
-    // the assertion is about the PLAN SHAPE: a whole-table compact must
-    // be able to write many files, never a forced one-task funnel
-    assert(lake.compact(minRows = Long.MaxValue, shufflePartitions = 3).nonEmpty)
+    val session = spark.newSession()
+    session.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
+    val lake = new LakeTable(root, session)
+    assert(lake.currentSnapshot.get.files.size >= 2)
+    val vPre = lake.currentVersion.get
+    assert(lake.compact(minRows = Long.MaxValue).nonEmpty)
     val files = lake.currentSnapshot.get.files
     assert(files.size > 1, s"expected a multi-file compact, got ${files.size}")
     // range clustering ⇒ per-file REPO ranges are disjoint up to the
@@ -77,9 +78,9 @@ class CompactionSpec extends AnyFunSuite {
         s"overlapping compacted repo ranges: ${a.maxRepo} > ${b.minRepo}")
       case _ => ()
     }
-    val after = lake.read().select($"repo", $"path", sha2($"content", 256))
-      .collect().map(_.toSeq).toSet
-    assert(after == before)
+    def rows(v: Option[Long]) = lake.read(v).select($"repo", $"path", $"seq")
+    assert(rows(None).count() == n)
+    assert(rows(Some(vPre)).exceptAll(rows(None)).isEmpty)
   }
 
   test("major compaction is targeted: only delete-overlapping files are rewritten") {

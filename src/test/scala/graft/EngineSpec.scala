@@ -382,6 +382,52 @@ class EngineSpec extends AnyFunSuite {
     assert(ratingsOf(lake.read(), "score") == expect)
   }
 
+  test("rename into a retired name is refused; the retired name's files keep their values") {
+    val lake = new LakeTable(TestSpark.tmpDir("lakeretired"), spark)
+    val rows = (0 until 20).map { i =>
+      ("UPDATE", "a", f"rt-repo$i%03d", "p", s"c-$i", "scala", s"body-$i", i.toLong, i * 10L, i * 100L)
+    }.toDF("op", "part", "repo", "path", "commit", "lang", "content", "seq", "a", "c")
+    new CdcApplier(lake, spark).applyBatch(rows, "rt-0")
+    lake.renameColumn("a", "b")
+    val err = intercept[IllegalArgumentException](lake.renameColumn("c", "a"))
+    assert(err.getMessage.contains("retired"))
+    // nothing was committed: `b` still reads the pre-rename files' `a`
+    // values and `c` keeps its own
+    val back = lake.read()
+    assert(!back.columns.contains("a"))
+    assert(back.select($"repo", $"b", $"c").collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap ==
+      (0 until 20).map(i => f"rt-repo$i%03d" -> (i * 10L, i * 100L)).toMap)
+  }
+
+  test("a manifest holding a rename back (a→b then b→a) still reads") {
+    // renameColumn once accepted a retired target; a→b then b→a left
+    // {a→a, b→a} in the manifest, which reads must still resolve
+    val root = TestSpark.tmpDir("lakerenameback")
+    val lake = new LakeTable(root, spark)
+    val applier = new CdcApplier(lake, spark)
+    def rows(ids: Range, name: String): DataFrame = ids.map { i =>
+      ("UPDATE", "a", f"rb-repo$i%03d", "p", s"c-$i", "scala", s"body-$i", i.toLong, i * 10L)
+    }.toDF("op", "part", "repo", "path", "commit", "lang", "content", "seq", name)
+    applier.applyBatch(rows(0 until 10, "a"), "rb-0")
+    lake.renameColumn("a", "b")
+    applier.applyBatch(rows(10 until 20, "b"), "rb-1")
+    // rewrite the head manifest as the rename back left it
+    val path = java.nio.file.Paths.get(root, "meta", s"v${lake.currentVersion.get}.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val m = mapper.readValue(path.toFile, classOf[java.util.LinkedHashMap[String, Object]])
+    val schema = org.apache.spark.sql.types.DataType.fromJson(m.get("schema").asInstanceOf[String])
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    m.put("schema", org.apache.spark.sql.types.StructType(schema.fields.map(f =>
+      if (f.name == "b") f.copy(name = "a") else f)).json)
+    m.put("renames", java.util.Map.of("a", "a", "b", "a"))
+    java.nio.file.Files.writeString(path, mapper.writeValueAsString(m))
+    val back = new LakeTable(root, spark).read()
+    assert(back.columns.count(_ == "a") == 1 && !back.columns.contains("b"))
+    assert(back.select($"repo", $"a").collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      (0 until 20).map(i => f"rb-repo$i%03d" -> i * 10L).toMap)
+  }
+
   test("lineage counters are recorded per commit") {
     val lake = new LakeTable(TestSpark.tmpDir("lakelin"), spark)
     replayBlobs(lake, 2)

@@ -252,6 +252,33 @@ class GraftSourceSpec extends AnyFunSuite {
       lake.currentSnapshot.get.dataFiles.size)
   }
 
+  test("write path: an append under a retired name reads back under the current name") {
+    val root = TestSpark.tmpDir("srcretired")
+    Seq(("r1", "p1", 1L, 10L), ("r2", "p2", 2L, 20L)).toDF("repo", "path", "seq", "a")
+      .write.format("graft").save(root)
+    new LakeTable(root, spark).renameColumn("a", "b")
+    // a late producer still writes the retired name `a`
+    Seq(("r3", "p3", 3L, 30L)).toDF("repo", "path", "seq", "a")
+      .write.format("graft").mode("append").save(root)
+    val lake = new LakeTable(root, spark)
+    assert(lake.currentSnapshot.get.schema.fieldNames.toSeq == Seq("repo", "path", "seq", "b"),
+      "a retired name never becomes a column again")
+    Seq(lake.read(), readGraft(root)).foreach { df =>
+      assert(df.columns.toSeq == Seq("repo", "path", "seq", "b"))
+      assert(df.select($"repo", $"b").collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+        Map("r1" -> 10L, "r2" -> 20L, "r3" -> 30L))
+    }
+  }
+
+  test("a read of a missing root returns the empty engine-schema frame and creates nothing") {
+    val missing = java.nio.file.Paths.get(TestSpark.tmpDir("srcmissing"), "no-table")
+    val df = spark.read.format("graft").load(missing.toString)
+    assert(df.collect().isEmpty)
+    assert(df.schema == graft.core.Model.lakeSchemaV1)
+    assert(new LakeTable(missing.toString, spark).versions.isEmpty)
+    assert(!java.nio.file.Files.exists(missing), "a read must not create the table")
+  }
+
   test("write path: overwrite replaces data and schema; batchId makes saves idempotent") {
     val root = TestSpark.tmpDir("srcow")
     Seq(("r1", "p1", 1L)).toDF("repo", "path", "seq")

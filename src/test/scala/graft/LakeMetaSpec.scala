@@ -343,10 +343,10 @@ class LakeMetaSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("task-side file stats: 64-file write commits with exact per-file stats") {
+  test("file stats: 64-file write commits with exact per-file stats") {
     val lake = new LakeTable(TestSpark.tmpDir("lakestats64"), spark)
-    // pin 64 output files — stats for every file must come back from the
-    // executor-side footer job, not a per-file driver loop
+    // pin 64 output files — far more than local[4]'s parallelism; the
+    // driver reads every file's footer
     val applier = new CdcApplier(lake, spark, clusterPartitions = 64)
     val wide = (0 until 6400).map { i =>
       ("UPDATE", (i % 4).toString, f"repo-${(i * 131) % 320}%03d", s"p${i % 20}",
@@ -370,6 +370,22 @@ class LakeMetaSpec extends AnyFunSuite {
         java.nio.file.Paths.get(lake.root, f.path).toString): _*)
       .filter($"repo" === "repo-001").count()
     assert(inTouched == lake.read().filter($"repo" === "repo-001").count())
+  }
+
+  test("a write of more files than the parallelism runs no job beyond the write itself") {
+    val lake = new LakeTable(TestSpark.tmpDir("lakestatsjobs"), spark)
+    val parts = 2 * spark.sparkContext.defaultParallelism
+    // a plain range has `parts` partitions and no exchange: its parquet
+    // write is one job, and the footer stats add none
+    val df = spark.range(0, 40L * parts, 1, parts)
+      .select(format_string("sj%04d", $"id").as("repo"), lit("p").as("path"), $"id".as("seq"))
+    val plain = TestSpark.jobsOf(df.write.parquet(TestSpark.tmpDir("lakestatsplain") + "/out"))
+    var entries: Seq[LakeTable#FileEntry] = Nil
+    val withStats = TestSpark.jobsOf { entries = lake.writeDataFiles(df, "sj") }
+    assert(entries.size == parts)
+    assert(withStats == plain, s"footer stats ran ${withStats - plain} extra job(s)")
+    assert(entries.map(_.rows).sum == 40L * parts)
+    assert(entries.map(_.minSeq).min == 0L && entries.map(_.maxSeq).max == 40L * parts - 1)
   }
 
   test("range-clustered writes keep copy-on-write localized to touched repos") {

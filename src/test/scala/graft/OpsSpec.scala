@@ -587,11 +587,71 @@ class OpsSpec extends AnyFunSuite {
     val ker = graft.ops.VectorKernels.withCell(df, "qv", "cell", cents)
       .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     val nearest = element_at(array_sort(array(cents.toSeq.zipWithIndex.map { case (cv, c) =>
-      struct(Similarity.qdist2($"qv", cv.toSeq).as("d"), lit(c).as("c"))
+      struct(SimilarityRef.qdist2($"qv", cv.toSeq).as("d"), lit(c).as("c"))
     }: _*)), 1).getField("c")
     val ref = df.select($"id", nearest).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(ker == ref)
     assert(ker(1L) == 1 && ker(3L) == 0)
+  }
+
+  test("vector kernels: IVF probes are the qdist2 order, ties to the lower cell; a ragged query probes none") {
+    // same tie layout as the assignment case: cell 3 duplicates cell 1,
+    // and (5,0,0) is equidistant from cells 0, 1 and 4
+    val cents = Array(Array(0L, 0L, 0L), Array(10L, 0L, 0L), Array(0L, 10L, 0L),
+      Array(10L, 0L, 0L), Array(5L, 5L, 0L))
+    val df = Seq((0L, Seq(1L, 1L, 0L)), (1L, Seq(9L, 1L, 0L)), (2L, Seq(5L, 5L, 0L)),
+      (3L, Seq(5L, 0L, 0L)), (4L, Seq(-3L, 8L, 2L)), (5L, Seq(4L, 4L, 4L))).toDF("id", "qv")
+    Seq(1, 2, 3, 5, 7).foreach { nProbe =>
+      val ker = graft.ops.VectorKernels.withProbes(df, "qv", "p", cents, nProbe)
+        .collect().map(r => r.getLong(0) -> r.getSeq[Int](2)).toMap
+      val ref = df.select($"id", SimilarityRef.ivfProbes($"qv", cents.map(_.toSeq).toSeq, nProbe))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+      assert(ker == ref, s"nProbe = $nProbe")
+      // the first probe is the cell the corpus side is assigned to
+      val cells = graft.ops.VectorKernels.withCell(df, "qv", "cell", cents)
+        .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
+      assert(ker.map { case (id, ps) => id -> ps.head } == cells, s"nProbe = $nProbe")
+    }
+    assert(graft.ops.VectorKernels.withProbes(df, "qv", "p", cents, 3)
+      .filter($"id" === 3L).head().getSeq[Int](2) == Seq(0, 1, 3))
+    // a ragged query vector has no probe list, so it explodes to no cell
+    // (the Column form probed by NULL distances)
+    val ragged = Seq((9L, Seq(1L, 1L))).toDF("id", "qv")
+    assert(graft.ops.VectorKernels.withProbes(ragged, "qv", "p", cents, 2)
+      .head().isNullAt(2))
+  }
+
+  test("vector kernels: a NULL element quantizes to a NULL vector, whose qdot and cell are NULL") {
+    val df = Seq[(Long, Seq[java.lang.Float])]((0L, Seq(0.25f, null, 0.5f)),
+      (1L, Seq(0.25f, 0.125f, 0.5f)), (2L, null)).toDF("id", "v")
+    val q = graft.ops.VectorKernels.withQuantized(df, "v", "q").drop("v")
+    val byId = q.collect().map(r => r.getLong(0) -> Option(r.getSeq[Long](1))).toMap
+    assert(byId == Map(0L -> None, 1L -> Some(Seq(250L, 125L, 500L)), 2L -> None))
+    val ref = q.filter($"id" === 1L).select($"q".as("r"))
+    val dots = graft.ops.VectorKernels.withQdot(q.crossJoin(ref), "q", "r", "d")
+      .collect().map(r => r.getLong(0) -> Option(r.get(3))).toMap
+    assert(dots == Map(0L -> None, 1L -> Some(250L * 250 + 125L * 125 + 500L * 500), 2L -> None))
+    val cells = graft.ops.VectorKernels.withCell(q, "q", "cell", Array(Array(0L, 0L, 0L)))
+      .collect().map(r => r.getLong(0) -> Option(r.get(2))).toMap
+    assert(cells == Map(0L -> None, 1L -> Some(0), 2L -> None))
+  }
+
+  test("ANN through the kernels: a vector with a NULL element neither fails nor scores") {
+    val vecs = (0 until 20).map { i =>
+      (i.toLong, Array.tabulate(4)(d => java.lang.Float.valueOf(math.sin(i * 3 + d * 1.1).toFloat)))
+    } :+ ((99L, Array[java.lang.Float](0.5f, null, 0.5f, 0.5f)))
+    val df = vecs.toDF("vec_id", "embedding")
+    // q19's kernel: NULL query vectors and NULL corpus vectors score NULL
+    val q = df.filter($"vec_id" < 3L || $"vec_id" === 99L)
+      .select($"vec_id".as("qid"), $"embedding".as("qvec"))
+    val out = Similarity.quantizedDotTopK(df, "vec_id", "embedding", q, 25).collect()
+    assert(out.filter(_.getLong(0) == 99L).forall(_.isNullAt(3)))
+    assert(out.filter(_.getLong(1) == 99L).forall(_.isNullAt(3)))
+    assert(out.filter(_.getLong(0) < 3L).count(!_.isNullAt(3)) == 3 * 19)
+    // IVF: the NULL-element vector has no cell and probes none
+    val ivf = Similarity.ivfTopKQuantized(df, "vec_id", "embedding", q, 50,
+      nCells = 4, nProbe = 4).collect()
+    assert(ivf.nonEmpty && !ivf.exists(r => r.getLong(0) == 99L || r.getLong(1) == 99L))
   }
 
   test("IVF ANN: a ragged corpus vector drops out of the candidates without failing") {

@@ -160,6 +160,28 @@ class RepairValidateSpec extends AnyFunSuite {
     else dirty.select($"errors").head().getSeq[String](0).toSet
   }
 
+  test("a corrupt row violates exactly corrupt_json on both validators") {
+    // the codec's corrupt row carries no parsed field: no field or class
+    // rule may also fire on it, nor count it
+    val corrupt = wireDf("_corrupt" -> "{\"seq\":,,", "event_id" -> null, "op" -> null,
+      "seq" -> null, "repo" -> null, "path" -> null, "commit" -> null, "lang" -> null,
+      "content" -> null, "source" -> null, "part" -> null)
+    val (_, dirtyGlobal) = Validate.routeObserved(corrupt, name = "corrupt-global")
+    val (_, dirtyReg) = Validate.routeByClass(corrupt)
+    // collected as they are, so each plan's observation is filled
+    Seq(dirtyGlobal, dirtyReg).foreach { dirty =>
+      assert(dirty.collect().map(r => r.getSeq[String](r.fieldIndex("errors"))).toSeq ==
+        Seq(Seq("corrupt_json")))
+    }
+    // the observed counters: corrupt_json alone, over one parsed row
+    val observed = dirtyGlobal.queryExecution.observedMetrics("corrupt-global")
+    val counts = observed.schema.fieldNames.zip(observed.toSeq).toMap
+    assert(counts("parsed") == 1L && counts("quarantined") == 1L)
+    assert(counts("rule.corrupt_json") == 1L)
+    assert(counts.collect { case (k, n: Long) if k.startsWith("rule.") && n > 0 => k }.toSet ==
+      Set("rule.corrupt_json"))
+  }
+
   test("registry case 1: old-style event (composite commit_lang) passes its class") {
     // ≙ test_data_profiling.py:25-66 (v1 variant via prediction_id)
     assert(registryErrors("commit" -> null, "lang" -> null,

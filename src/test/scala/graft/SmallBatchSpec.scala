@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
@@ -24,28 +20,7 @@ class SmallBatchSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  /** Spark jobs started by `body` on this thread: jobs carry the local
-    * property set here, so jobs of suites running alongside are not
-    * counted. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.test.jobs") == tag))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.jobs", tag)
-    try body finally {
-      sc.setLocalProperty("graft.test.jobs", null)
-      GraftTestBus.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
+  import TestSpark.jobsOf
 
   /** Canonical events `(op, repo index, path index, seq)` on part "0". */
   private def events(evs: Seq[(String, Int, Int, Long)]): DataFrame = evs.map {

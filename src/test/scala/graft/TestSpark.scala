@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites. */
@@ -33,6 +37,28 @@ object TestSpark {
       "org.apache.spark.broadcast.TorrentBroadcast",
       org.apache.logging.log4j.Level.FATAL)
     s
+  }
+
+  /** Spark jobs started by `body` on this thread: jobs carry the local
+    * property set here, so jobs of suites running alongside are not
+    * counted. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.jobs") == tag))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.jobs", tag)
+    try body finally {
+      sc.setLocalProperty("graft.test.jobs", null)
+      GraftTestBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
   }
 
   def tmpDir(prefix: String): String =

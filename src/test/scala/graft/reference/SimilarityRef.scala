@@ -43,6 +43,22 @@ object SimilarityRef {
   def qdot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
 
+  /** Exact integer squared L2 distance between a quantized vector column
+    * and a driver-side centroid row (NULL for a length mismatch, under
+    * zip_with null-padding). */
+  def qdist2(qv: Column, centroid: Seq[Long]): Column =
+    aggregate(zip_with(qv, typedLit(centroid), (x, c) => (x - c) * (x - c)),
+      lit(0L), (acc, v) => acc + v)
+
+  /** The `nProbe` nearest cells of `qv` by [[qdist2]], nearest first,
+    * ties toward the lower cell id: the Column form of IVF probing that
+    * [[graft.ops.VectorKernels.withProbes]] replaced (`cents` row = cell
+    * id). */
+  def ivfProbes(qv: Column, cents: Seq[Seq[Long]], nProbe: Int): Column =
+    transform(slice(array_sort(array(cents.zipWithIndex.map { case (cv, c) =>
+      struct(qdist2(qv, cv).as("d"), lit(c).as("c"))
+    }: _*)), 1, nProbe), p => p.getField("c"))
+
   /** Integer-exact sign-random-projection bucket over the quantized
     * vector against the hyperplanes of
     * [[graft.ops.Similarity.lshTopKQuantized]]: the projection is an
